@@ -101,7 +101,7 @@ object Bench {
           // full operator, matching what Verify's parquet dump executes.
           // (Gate values re-recorded round 9 for the harness change.)
           try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case e: Throwable =>
+          catch { case scala.util.control.NonFatal(e) =>
             errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
             false
           }

@@ -13,11 +13,6 @@ import graft.operators.UniqueOps
   * independent (the events tables span ~30 days at every sf).
   */
 object SparkEntry {
-  // events columns, used to project helper columns away deterministically
-  // oracle output columns: ts cast to µs TIMESTAMP so the DuckDB side matches
-  // the engine's TimestampType (the source parquet is TIMESTAMP_NS)
-  private val EVSQL = "event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type, value, props"
-
   private val DAY = 86400000L
   private val WEEK = 7 * DAY
   private val H6 = 6 * 3600000L
@@ -2434,150 +2429,42 @@ object SparkEntry {
     * the same parquet tables. Omitted keys get a rows-only check.
     */
   def oracleSql: Map[String, String] = {
-    val everCurrentSql =
-      s"""SELECT $EVSQL FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
-         |  FROM events) WHERE rn = 1""".stripMargin
-    val timeCurrentSql =
-      s"""SELECT $EVSQL FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
-         |  FROM events) WHERE rn = 1
-         |  AND epoch_ms(ts) > (SELECT max(epoch_ms(ts)) FROM events) - $WEEK""".stripMargin
-    val lengthCurrentSql =
-      s"""SELECT $EVSQL FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
-         |  FROM events) WHERE rn = 1 ORDER BY event_id DESC LIMIT 100""".stripMargin
-    val everAllSql =
-      s"""SELECT $EVSQL,
-         |  CASE WHEN rn = 1 THEN 'insert' ELSE 'expire' END AS change FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
-         |  FROM events)""".stripMargin
-    val timebatchExpiredSql =
-      s"""SELECT $EVSQL, batch_start_ms FROM (
-         |  SELECT *, (epoch_ms(ts) // $DAY) * $DAY AS batch_start_ms,
-         |    row_number() OVER (PARTITION BY epoch_ms(ts) // $DAY, user_id ORDER BY event_id DESC) AS rn
-         |  FROM events) WHERE rn = 1
-         |  AND batch_start_ms < (SELECT max((epoch_ms(ts) // $DAY) * $DAY) FROM events)""".stripMargin
-    val firstCurrentSql =
-      s"""SELECT $EVSQL FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY event_id ASC) AS rn
-         |  FROM events) WHERE rn = 1""".stripMargin
-    val deduplicateSql =
-      s"""WITH RECURSIVE e AS (SELECT user_id, epoch_ms(ts) AS ms FROM events),
-         |kept AS (
-         |  SELECT user_id, min(ms) AS ms FROM e GROUP BY user_id
-         |  UNION ALL
-         |  SELECT e.user_id, min(e.ms) AS ms FROM e JOIN kept k
-         |    ON e.user_id = k.user_id AND e.ms > k.ms + $DAY GROUP BY e.user_id
-         |)
-         |SELECT $EVSQL FROM (
-         |  SELECT ev.*, row_number() OVER (PARTITION BY ev.user_id, epoch_ms(ev.ts) ORDER BY ev.event_id) AS rn
-         |  FROM events ev JOIN kept kp ON ev.user_id = kp.user_id AND epoch_ms(ev.ts) = kp.ms
-         |) WHERE rn = 1""".stripMargin
-    // deduplicateStreamBloom's epoch recurrence: the rotating banks hold
-    // the epochs {e, e-1} behind each event, so the next kept event is
-    // the first one ≥ 2 interval-epochs after the last kept
-    val deduplicateBloomSql =
-      s"""WITH RECURSIVE e AS (SELECT user_id, epoch_ms(ts) AS ms FROM events),
-         |kept AS (
-         |  SELECT user_id, min(ms) AS ms FROM e GROUP BY user_id
-         |  UNION ALL
-         |  SELECT e.user_id, min(e.ms) AS ms FROM e JOIN kept k
-         |    ON e.user_id = k.user_id AND e.ms // $DAY >= k.ms // $DAY + 2 GROUP BY e.user_id
-         |)
-         |SELECT $EVSQL FROM (
-         |  SELECT ev.*, row_number() OVER (PARTITION BY ev.user_id, epoch_ms(ev.ts) ORDER BY ev.event_id) AS rn
-         |  FROM events ev JOIN kept kp ON ev.user_id = kp.user_id AND epoch_ms(ev.ts) = kp.ms
-         |) WHERE rn = 1""".stripMargin
+    import UniqueOracles._
+    val user = Seq("user_id")
     Map(
-      "ever_current" -> everCurrentSql,
-      "ever_expired" ->
-        s"""SELECT $EVSQL FROM (
-           |  SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
-           |  FROM events) WHERE rn > 1""".stripMargin,
-      "ever_multikey" ->
-        s"""SELECT $EVSQL FROM (
-           |  SELECT *, row_number() OVER (PARTITION BY user_id, event_type ORDER BY event_id DESC) AS rn
-           |  FROM events) WHERE rn = 1""".stripMargin,
-      "ever_all" -> everAllSql,
-      "first_current" -> firstCurrentSql,
-      "time_current" -> timeCurrentSql,
-      "time_expired" ->
-        s"""SELECT $EVSQL FROM events WHERE event_id NOT IN (
-           |  SELECT event_id FROM ($timeCurrentSql))""".stripMargin,
+      "ever_current" -> everSql(user, "current"),
+      "ever_expired" -> everSql(user, "expired"),
+      "ever_multikey" -> everSql(Seq("user_id", "event_type"), "current"),
+      "ever_all" -> everSql(user, "all"),
+      "first_current" -> firstSql(user),
+      "time_current" -> timeSql(user, WEEK, "current"),
+      "time_expired" -> timeSql(user, WEEK, "expired"),
+      // timeBatch/firstTimeBatch anchor the epoch grid (start 0);
+      // externalTimeBatch anchors at min(ts) (start None)
       "timebatch_current" ->
-        s"""SELECT $EVSQL, batch_start_ms FROM (
-           |  SELECT *, (epoch_ms(ts) // $DAY) * $DAY AS batch_start_ms,
-           |    row_number() OVER (PARTITION BY epoch_ms(ts) // $DAY, user_id ORDER BY event_id DESC) AS rn
-           |  FROM events) WHERE rn = 1""".stripMargin,
-      "timebatch_expired" -> timebatchExpiredSql,
+        timeBatchSql(user, DAY, Some(0L), keepFirst = false, replaceTs = false, "current"),
+      "timebatch_expired" ->
+        timeBatchSql(user, DAY, Some(0L), keepFirst = false, replaceTs = false, "expired"),
       "firsttimebatch_current" ->
-        s"""SELECT $EVSQL, batch_start_ms FROM (
-           |  SELECT *, (epoch_ms(ts) // $DAY) * $DAY AS batch_start_ms,
-           |    row_number() OVER (PARTITION BY epoch_ms(ts) // $DAY, user_id ORDER BY event_id ASC) AS rn
-           |  FROM events) WHERE rn = 1""".stripMargin,
+        timeBatchSql(user, DAY, Some(0L), keepFirst = true, replaceTs = false, "current"),
       "firsttimebatch_expired" ->
-        s"""SELECT $EVSQL, batch_start_ms FROM (
-           |  SELECT *, (epoch_ms(ts) // $DAY) * $DAY AS batch_start_ms,
-           |    row_number() OVER (PARTITION BY epoch_ms(ts) // $DAY, user_id ORDER BY event_id ASC) AS rn
-           |  FROM events) WHERE rn = 1
-           |  AND batch_start_ms < (SELECT max((epoch_ms(ts) // $DAY) * $DAY) FROM events)""".stripMargin,
+        timeBatchSql(user, DAY, Some(0L), keepFirst = true, replaceTs = false, "expired"),
       "externaltimebatch_current" ->
-        s"""SELECT $EVSQL, batch_start_ms FROM (
-           |  SELECT e.*, ((epoch_ms(ts) - s.m) // $H6) * $H6 + s.m AS batch_start_ms,
-           |    row_number() OVER (PARTITION BY (epoch_ms(ts) - s.m) // $H6, user_id ORDER BY event_id DESC) AS rn
-           |  FROM events e CROSS JOIN (SELECT min(epoch_ms(ts)) AS m FROM events) s
-           |) WHERE rn = 1""".stripMargin,
+        timeBatchSql(user, H6, None, keepFirst = false, replaceTs = false, "current"),
       "externaltimebatch_replacets" ->
-        s"""SELECT event_id, make_timestamp((batch_start_ms + $H6) * 1000) AS ts,
-           |  user_id, event_type, value, props, batch_start_ms FROM (
-           |  SELECT e.*, ((epoch_ms(ts) - s.m) // $H6) * $H6 + s.m AS batch_start_ms,
-           |    row_number() OVER (PARTITION BY (epoch_ms(ts) - s.m) // $H6, user_id ORDER BY event_id DESC) AS rn
-           |  FROM events e CROSS JOIN (SELECT min(epoch_ms(ts)) AS m FROM events) s
-           |) WHERE rn = 1""".stripMargin,
+        timeBatchSql(user, H6, None, keepFirst = false, replaceTs = true, "current"),
       "externaltimebatch_expired" ->
-        s"""SELECT $EVSQL, batch_start_ms FROM (
-           |  SELECT e.*, ((epoch_ms(ts) - s.m) // $H6) * $H6 + s.m AS batch_start_ms,
-           |    (epoch_ms(ts) - s.m) // $H6 AS bid,
-           |    row_number() OVER (PARTITION BY (epoch_ms(ts) - s.m) // $H6, user_id ORDER BY event_id DESC) AS rn
-           |  FROM events e CROSS JOIN (SELECT min(epoch_ms(ts)) AS m FROM events) s
-           |) WHERE rn = 1 AND bid < (
-           |  SELECT max((epoch_ms(ts) - s2.m) // $H6)
-           |  FROM events CROSS JOIN (SELECT min(epoch_ms(ts)) AS m FROM events) s2)""".stripMargin,
-      "length_current" -> lengthCurrentSql,
-      "length_expired" ->
-        s"""SELECT $EVSQL FROM events WHERE event_id NOT IN (
-           |  SELECT event_id FROM ($lengthCurrentSql))""".stripMargin,
-      // lengthBatch boundary fold: next boundary after prev = first-occurrence
-      // seq of the 40th new distinct key (max of the 40 smallest first
-      // occurrences > prev); recursive CTE walks boundaries, then events are
-      // range-assigned to batches and reduced latest-per-(batch, key).
-      "lengthbatch_current" -> lengthBatchOracle(latest = true),
-      "lengthbatch_expired" -> lengthBatchOracle(latest = true, expiredOnly = true),
-      "firstlengthbatch_current" -> lengthBatchOracle(latest = false),
-      "firstlengthbatch_expired" -> lengthBatchOracle(latest = false, expiredOnly = true),
-      "timelengthbatch_current" ->
-        s"""WITH t AS (SELECT *, epoch_ms(ts) // $DAY AS b FROM events),
-           |f AS (SELECT *, CASE WHEN event_id = min(event_id) OVER (PARTITION BY b, user_id) THEN 1 ELSE 0 END AS isf FROM t),
-           |r AS (SELECT *, coalesce(sum(isf) OVER (PARTITION BY b ORDER BY event_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS bef FROM f)
-           |SELECT $EVSQL, batch_start_ms FROM (
-           |  SELECT *, b * $DAY AS batch_start_ms,
-           |    row_number() OVER (PARTITION BY b, user_id ORDER BY event_id DESC) AS rn
-           |  FROM r WHERE bef < 50) WHERE rn = 1""".stripMargin,
-      // expired = the latch-filtered batches strictly before the last batch
-      // id seen over ALL events (the Spark impl anchors __last on the tagged
-      // frame, UniqueOps.timeLengthBatch)
-      "timelengthbatch_expired" ->
-        s"""WITH t AS (SELECT *, epoch_ms(ts) // $DAY AS b FROM events),
-           |f AS (SELECT *, CASE WHEN event_id = min(event_id) OVER (PARTITION BY b, user_id) THEN 1 ELSE 0 END AS isf FROM t),
-           |r AS (SELECT *, coalesce(sum(isf) OVER (PARTITION BY b ORDER BY event_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS bef FROM f)
-           |SELECT $EVSQL, batch_start_ms FROM (
-           |  SELECT *, b * $DAY AS batch_start_ms,
-           |    row_number() OVER (PARTITION BY b, user_id ORDER BY event_id DESC) AS rn
-           |  FROM r WHERE bef < 50) WHERE rn = 1
-           |  AND batch_start_ms < (SELECT max((epoch_ms(ts) // $DAY) * $DAY) FROM events)""".stripMargin,
-      "deduplicate" -> deduplicateSql,
-      "deduplicate_salted" -> deduplicateSql,
+        timeBatchSql(user, H6, None, keepFirst = false, replaceTs = false, "expired"),
+      "length_current" -> lengthSql(user, 100, "current"),
+      "length_expired" -> lengthSql(user, 100, "expired"),
+      "lengthbatch_current" -> lengthBatchSql(user, 40, latest = true, expiredOnly = false),
+      "lengthbatch_expired" -> lengthBatchSql(user, 40, latest = true, expiredOnly = true),
+      "firstlengthbatch_current" -> lengthBatchSql(user, 40, latest = false, expiredOnly = false),
+      "firstlengthbatch_expired" -> lengthBatchSql(user, 40, latest = false, expiredOnly = true),
+      "timelengthbatch_current" -> timeLengthBatchSql(user, DAY, 50, "current"),
+      "timelengthbatch_expired" -> timeLengthBatchSql(user, DAY, 50, "expired"),
+      "deduplicate" -> deduplicateSql(user, DAY),
+      "deduplicate_salted" -> deduplicateSql(user, DAY),
       "join_windows" ->
         """SELECT c.c_custkey, c.c_name, o.o_orderkey, o.o_totalprice, o.o_orderdate FROM (
           |  SELECT * FROM (
@@ -2587,7 +2474,7 @@ object SparkEntry {
       "agg_over_window" ->
         s"""SELECT event_type, count(*) AS cnt, min(value) AS min_value,
            |  max(value) AS max_value, CAST(sum(event_id) AS BIGINT) AS sum_seq
-           |FROM ($everCurrentSql) GROUP BY event_type""".stripMargin,
+           |FROM (${everSql(user, "current")}) GROUP BY event_type""".stripMargin,
       "window_star_agg" ->
         """SELECT r_name, count(*) AS cnt, min(o_totalprice) AS min_price,
           |  max(o_totalprice) AS max_price
@@ -2939,31 +2826,11 @@ object SparkEntry {
       // ever_current/ever_expired split, log-shaped); lengthBatchStream's
       // inserts are exactly the flushed batches; timeBatchStream's append
       // output is every CLOSED window, i.e. timebatch_expired's row set.
-      "ever_stream_replay" ->
-        s"""SELECT $EVSQL, 'insert' AS change FROM events
-           |UNION ALL
-           |SELECT $EVSQL, 'expire' AS change FROM (
-           |  SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
-           |  FROM events) WHERE rn > 1""".stripMargin,
-      "ever_multikey_stream_replay" ->
-        s"""SELECT $EVSQL, 'insert' AS change FROM events
-           |UNION ALL
-           |SELECT $EVSQL, 'expire' AS change FROM (
-           |  SELECT *, row_number() OVER (PARTITION BY user_id, event_type ORDER BY event_id DESC) AS rn
-           |  FROM events) WHERE rn > 1""".stripMargin,
-      "ever_tws_stream_replay" ->
-        s"""SELECT $EVSQL, 'insert' AS change FROM events
-           |UNION ALL
-           |SELECT $EVSQL, 'expire' AS change FROM (
-           |  SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
-           |  FROM events) WHERE rn > 1""".stripMargin,
+      "ever_stream_replay" -> everStreamSql(user),
+      "ever_multikey_stream_replay" -> everStreamSql(Seq("user_id", "event_type")),
+      "ever_tws_stream_replay" -> everStreamSql(user),
       // restarted replay == uninterrupted replay (checkpoint recovery)
-      "ever_restart_stream_replay" ->
-        s"""SELECT $EVSQL, 'insert' AS change FROM events
-           |UNION ALL
-           |SELECT $EVSQL, 'expire' AS change FROM (
-           |  SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
-           |  FROM events) WHERE rn > 1""".stripMargin,
+      "ever_restart_stream_replay" -> everStreamSql(user),
       // everStreamTtl change log: every event 'insert'; a replaced row
       // 'expire' iff its key SURVIVED to the replacement — i.e. the
       // chunk-boundary watermark before the successor's chunk (the ts at
@@ -2982,31 +2849,25 @@ object SparkEntry {
            |WHERE event_id IN (SELECT event_id FROM exp)""".stripMargin,
       // full change log: every flushed batch 'insert'; every flushed batch
       // with a successor re-emitted 'expire' at the next flush
-      "lengthbatch_stream_replay" -> lengthBatchStreamOracle(latest = true),
-      "timebatch_stream_replay" -> timebatchExpiredSql,
+      "lengthbatch_stream_replay" -> lengthBatchStreamSql(user, 40, latest = true),
+      "timebatch_stream_replay" ->
+        timeBatchSql(user, DAY, Some(0L), keepFirst = false, replaceTs = false, "expired"),
       // bounded-disorder feed, same closed-window semantics → same oracle
-      "timebatch_ooo_stream_replay" -> timebatchExpiredSql,
-      "firstlengthbatch_stream_replay" -> lengthBatchStreamOracle(latest = false),
+      "timebatch_ooo_stream_replay" ->
+        timeBatchSql(user, DAY, Some(0L), keepFirst = false, replaceTs = false, "expired"),
+      "firstlengthbatch_stream_replay" -> lengthBatchStreamSql(user, 40, latest = false),
       // append output = closed windows only (the last window is still open)
       "firsttimebatch_stream_replay" ->
-        s"""SELECT $EVSQL, batch_start_ms FROM (
-           |  SELECT *, (epoch_ms(ts) // $DAY) * $DAY AS batch_start_ms,
-           |    row_number() OVER (PARTITION BY epoch_ms(ts) // $DAY, user_id ORDER BY event_id ASC) AS rn
-           |  FROM events) WHERE rn = 1
-           |  AND batch_start_ms < (SELECT max((epoch_ms(ts) // $DAY) * $DAY) FROM events)""".stripMargin,
+        timeBatchSql(user, DAY, Some(0L), keepFirst = true, replaceTs = false, "expired"),
       // firstStream emits exactly the first-per-key rows (state = seen flag)
-      "first_stream_replay" -> firstCurrentSql,
+      "first_stream_replay" -> firstSql(user),
       // Bloom-backed approximate first, generously sized: exact at gate
       // scales (deterministic seeds), so it shares the exact oracle
-      "first_bloom_stream_replay" -> firstCurrentSql,
+      "first_bloom_stream_replay" -> firstSql(user),
       // lengthStream's accumulated log: every event 'insert' once; every
       // event that left the window (replaced or LRU-evicted) 'expire' once
       // — i.e. everything outside the final window (= length_current).
-      "length_stream_replay" ->
-        s"""SELECT $EVSQL, 'insert' AS change FROM events
-           |UNION ALL
-           |SELECT $EVSQL, 'expire' AS change FROM events WHERE event_id NOT IN (
-           |  SELECT event_id FROM ($lengthCurrentSql))""".stripMargin,
+      "length_stream_replay" -> lengthStreamSql(user, 100),
       // timeStream's log: every event 'insert'; every replaced event
       // 'expire' (exactly once — replacement or prior eviction); plus the
       // latest-per-key rows whose event-time timeout (ts + window) fired,
@@ -3014,68 +2875,27 @@ object SparkEntry {
       // (FlatMapGroupsWithStateExec fires timeouts with
       // timeoutTimestamp < eviction watermark; the post-data no-data
       // micro-batch applies the last watermark).
-      "time_stream_replay" ->
-        s"""SELECT $EVSQL, 'insert' AS change FROM events
-           |UNION ALL
-           |SELECT $EVSQL, 'expire' AS change FROM (
-           |  SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
-           |  FROM events) WHERE rn > 1
-           |UNION ALL
-           |SELECT $EVSQL, 'expire' AS change FROM (
-           |  SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
-           |  FROM events) WHERE rn = 1
-           |  AND epoch_ms(ts) + $WEEK < (SELECT max(epoch_ms(ts)) FROM events)""".stripMargin,
+      "time_stream_replay" -> timeStreamSql(user, WEEK),
       // deduplicateStreamExact matches the batch fold bit-for-bit
-      "deduplicate_stream_replay" -> deduplicateSql,
-      "deduplicate_bloom_stream_replay" -> deduplicateBloomSql,
+      "deduplicate_stream_replay" -> deduplicateSql(user, DAY),
+      "deduplicate_bloom_stream_replay" -> deduplicateBloomSql(user, DAY),
       // timeLengthBatchStream emits a batch when a later event crosses its
       // time boundary (any batch before the last) or when the 50th distinct
       // key length-flushes it — the final batch appears iff length-flushed.
       // Full change log: every flushed batch 'insert'; every flushed batch
       // except the LAST FLUSHED re-emitted 'expire' (with its own
       // batch_start_ms) when the next flush happens.
-      "timelengthbatch_stream_replay" ->
-        s"""WITH t AS (SELECT *, epoch_ms(ts) // $DAY AS b FROM events),
-           |f AS (SELECT *, CASE WHEN event_id = min(event_id) OVER (PARTITION BY b, user_id) THEN 1 ELSE 0 END AS isf FROM t),
-           |r AS (SELECT *, coalesce(sum(isf) OVER (PARTITION BY b ORDER BY event_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS bef FROM f),
-           |k AS (SELECT * FROM r WHERE bef < 50),
-           |fl AS (SELECT b FROM k GROUP BY b
-           |  HAVING count(DISTINCT user_id) = 50 OR b < (SELECT max(b) FROM t)),
-           |w AS (SELECT $EVSQL, batch_start_ms FROM (
-           |  SELECT *, b * $DAY AS batch_start_ms,
-           |    row_number() OVER (PARTITION BY b, user_id ORDER BY event_id DESC) AS rn
-           |  FROM k WHERE b IN (SELECT b FROM fl)) WHERE rn = 1)
-           |SELECT *, 'insert' AS change FROM w
-           |UNION ALL
-           |SELECT *, 'expire' AS change FROM w
-           |WHERE batch_start_ms < (SELECT max(b) * $DAY FROM fl)""".stripMargin,
+      "timelengthbatch_stream_replay" -> tlbStreamSql(user, DAY, 50),
       // pure time batches (n unreachable), keepFirst: flushed = every
       // non-empty batch before the last (the final batch never flushes —
       // nothing crosses its boundary); expire = flushed minus the last
       // flushed batch
       "firsttimebatch_changelog_stream_replay" ->
-        s"""WITH t AS (SELECT *, epoch_ms(ts) // $DAY AS b FROM events),
-           |w AS (SELECT $EVSQL, batch_start_ms FROM (
-           |  SELECT *, b * $DAY AS batch_start_ms,
-           |    row_number() OVER (PARTITION BY b, user_id ORDER BY event_id ASC) AS rn
-           |  FROM t WHERE b < (SELECT max(b) FROM t)) WHERE rn = 1)
-           |SELECT *, 'insert' AS change FROM w
-           |UNION ALL
-           |SELECT *, 'expire' AS change FROM w
-           |WHERE batch_start_ms < (SELECT max(b) * $DAY FROM t
-           |  WHERE b < (SELECT max(b) FROM t))""".stripMargin,
+        tlbStreamSql(user, DAY, Int.MaxValue, keepFirst = true),
       // externalTimeBatchStream (no time.out): every non-final non-empty
       // batch closes when a later event crosses its end — exactly the
       // batch operator's expired set, tagged with the batch END time.
-      "externaltimebatch_stream_replay" ->
-        s"""SELECT $EVSQL, batch_start_ms + $H6 AS batch_end_ms FROM (
-           |  SELECT e.*, ((epoch_ms(ts) - s.m) // $H6) * $H6 + s.m AS batch_start_ms,
-           |    (epoch_ms(ts) - s.m) // $H6 AS bid,
-           |    row_number() OVER (PARTITION BY (epoch_ms(ts) - s.m) // $H6, user_id ORDER BY event_id DESC) AS rn
-           |  FROM events e CROSS JOIN (SELECT min(epoch_ms(ts)) AS m FROM events) s
-           |) WHERE rn = 1 AND bid < (
-           |  SELECT max((epoch_ms(ts) - s2.m) // $H6)
-           |  FROM events CROSS JOIN (SELECT min(epoch_ms(ts)) AS m FROM events) s2)""".stripMargin,
+      "externaltimebatch_stream_replay" -> etbStreamSql(user, H6),
       // everStream(orders by custkey) ⨝ customer change log: every order
       // 'insert' once; every replaced order (non-latest per custkey at end
       // of stream) 'expire' once — each joined to its customer row
@@ -5398,37 +5218,5 @@ SELECT doc_id, $bits AS ahash FROM m"""
        |SELECT doc_id, strlen(text)::BIGINT AS n_bytes,
        |  $lanes
        |FROM t""".stripMargin
-  }
-
-  /** The streaming count-batch operators' FULL change log: inserts are
-    * every flushed batch's rows; expires are every non-final flushed
-    * batch's rows, re-emitted when the next batch flushes (both tagged
-    * with their own batch_id — UniqueLengthBatchWindowProcessor
-    * .java:165-197's expiredEventChunk re-emission).
-    */
-  private def lengthBatchStreamOracle(latest: Boolean): String =
-    s"""SELECT *, 'insert' AS change FROM (${lengthBatchOracle(latest)})
-       |UNION ALL
-       |SELECT *, 'expire' AS change FROM (${lengthBatchOracle(latest, expiredOnly = true)})""".stripMargin
-
-  private def lengthBatchOracle(latest: Boolean, expiredOnly: Boolean = false): String = {
-    val ord = if (latest) "DESC" else "ASC"
-    val expFilter = if (expiredOnly) " AND bid < (SELECT max(bid) FROM bnd)" else ""
-    s"""WITH RECURSIVE bnd(bid, s) AS (
-       |  SELECT 0::BIGINT AS bid, t.nb AS s FROM (
-       |    SELECT CASE WHEN count(*) = 40 THEN max(fs) END AS nb FROM (
-       |      SELECT min(event_id) AS fs FROM events GROUP BY user_id ORDER BY fs LIMIT 40)
-       |  ) t WHERE t.nb IS NOT NULL
-       |  UNION ALL
-       |  SELECT bnd.bid + 1, t.nb FROM bnd, LATERAL (
-       |    SELECT CASE WHEN count(*) = 40 THEN max(fs) END AS nb FROM (
-       |      SELECT min(event_id) AS fs FROM events WHERE event_id > bnd.s GROUP BY user_id ORDER BY fs LIMIT 40)
-       |  ) t WHERE t.nb IS NOT NULL
-       |),
-       |iv AS (SELECT bid, coalesce(lag(s) OVER (ORDER BY bid), -1) AS lo, s AS hi FROM bnd),
-       |t AS (SELECT e.*, iv.bid FROM events e JOIN iv ON e.event_id > iv.lo AND e.event_id <= iv.hi)
-       |SELECT $EVSQL, bid AS batch_id FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY bid, user_id ORDER BY event_id $ord) AS rn
-       |  FROM t) WHERE rn = 1$expFilter""".stripMargin
   }
 }

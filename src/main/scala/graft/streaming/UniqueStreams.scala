@@ -74,6 +74,28 @@ object UniqueStreams {
   private def sortedBySeq(rows: Iterator[Row], i: Int): Iterator[Row] =
     rows.toSeq.sortBy(seqLong(_, i)).iterator
 
+  /** The change-log fold shared by the latest-per-key operators (`ever`
+    * and its TTL/TWS backends, `time`): rows in `seqCol` order when
+    * `sIdx` is set; each row replaces the current latest, which is
+    * emitted 'expire' before the row's own 'insert'. Output rows keep the
+    * first `n` input columns. Returns the new latest (null if none).
+    */
+  private def foldChangeLog(latest0: Row, rows: Iterator[Row], sIdx: Option[Int],
+                            n: Int, out: scala.collection.mutable.ArrayBuffer[Row]): Row = {
+    var latest = latest0
+    val ordered = sIdx match {
+      case Some(i) => sortedBySeq(rows, i)
+      case None => rows
+    }
+    ordered.foreach { r =>
+      if (latest != null)
+        out += Row.fromSeq(latest.toSeq.take(n) :+ "expire")
+      latest = r
+      out += Row.fromSeq(r.toSeq.take(n) :+ "insert")
+    }
+    latest
+  }
+
   /** Switch Structured Streaming state to the RocksDB backend: state
     * lives off-heap / on local disk instead of the executor heap — the
     * deployment knob for high-cardinality `ever` state. The reference
@@ -411,17 +433,7 @@ object UniqueStreams {
       .flatMapGroupsWithState[Row, Row](OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
         (_: String, rows: Iterator[Row], state: GroupState[Row]) =>
           val out = scala.collection.mutable.ArrayBuffer.empty[Row]
-          var latest = state.getOption.orNull
-          val ordered = sIdx match {
-            case Some(i) => sortedBySeq(rows, i)
-            case None => rows
-          }
-          ordered.foreach { r =>
-            if (latest != null)
-              out += Row.fromSeq(latest.toSeq.take(n) :+ "expire")
-            latest = r
-            out += Row.fromSeq(r.toSeq.take(n) :+ "insert")
-          }
+          val latest = foldChangeLog(state.getOption.orNull, rows, sIdx, n, out)
           if (latest != null) state.update(latest)
           out.iterator
       }(stateEnc, outEnc)
@@ -460,17 +472,7 @@ object UniqueStreams {
           if (state.hasTimedOut) {
             state.remove() // silent eviction — the key is simply forgotten
           } else {
-            var latest = state.getOption.orNull
-            val ordered = sIdx match {
-              case Some(i) => sortedBySeq(rows, i)
-              case None => rows
-            }
-            ordered.foreach { r =>
-              if (latest != null)
-                out += Row.fromSeq(latest.toSeq.take(n) :+ "expire")
-              latest = r
-              out += Row.fromSeq(r.toSeq.take(n) :+ "insert")
-            }
+            val latest = foldChangeLog(state.getOption.orNull, rows, sIdx, n, out)
             if (latest != null) {
               state.update(latest)
               // Clamp to just past the watermark: Spark feeds allowed-late
@@ -524,17 +526,7 @@ object UniqueStreams {
       override def handleInputRows(key: String, rows: Iterator[Row],
                                    timerValues: TimerValues): Iterator[Row] = {
         val out = scala.collection.mutable.ArrayBuffer.empty[Row]
-        var cur = if (latest.exists()) latest.get() else null
-        val ordered = sIdx match {
-          case Some(i) => sortedBySeq(rows, i)
-          case None => rows
-        }
-        ordered.foreach { r =>
-          if (cur != null)
-            out += Row.fromSeq(cur.toSeq.take(n) :+ "expire")
-          cur = r
-          out += Row.fromSeq(r.toSeq.take(n) :+ "insert")
-        }
+        val cur = foldChangeLog(if (latest.exists()) latest.get() else null, rows, sIdx, n, out)
         if (cur != null) latest.update(cur)
         out.iterator
       }
@@ -577,17 +569,7 @@ object UniqueStreams {
             state.getOption.foreach(r => out += Row.fromSeq(r.toSeq.take(n) :+ "expire"))
             state.remove()
           } else {
-            var latest = state.getOption.orNull
-            val ordered = sIdx match {
-              case Some(i) => sortedBySeq(rows, i)
-              case None => rows
-            }
-            ordered.foreach { r =>
-              if (latest != null)
-                out += Row.fromSeq(latest.toSeq.take(n) :+ "expire")
-              latest = r
-              out += Row.fromSeq(r.toSeq.take(n) :+ "insert")
-            }
+            val latest = foldChangeLog(state.getOption.orNull, rows, sIdx, n, out)
             if (latest != null) {
               state.update(latest)
               val expireAtMs = latest.getAs[java.sql.Timestamp](tsIdx).getTime + windowMs
