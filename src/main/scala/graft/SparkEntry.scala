@@ -180,10 +180,7 @@ object SparkEntry {
     // ... and its stream-static deployment twin (score the crawl as it
     // streams past the static model), sharing the batch mirror
     "doc_quality_clf_stream_replay" -> ((s, d) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      streaming.UniqueStreams.useRocksDBStateStore(s)
-      try {
+      streaming.UniqueStreams.withRocksDBStateStore(s) {
         val docs = Tables.documents(s, d)
         val model = llm.CorpusOps.qualityClfTrain(
           docs.filter(col("lang") === "en"),
@@ -194,9 +191,6 @@ object SparkEntry {
               "doc_id", model))
           .select("doc_id", "n_grams", "oov_pos", "oov_neg",
             "hit_pos", "hit_neg")
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     }),
     "doc_fingerprint_md5" -> ((s, d) =>
@@ -299,10 +293,7 @@ object SparkEntry {
     // ... and its INGEST-POINT streaming twin (one long of token state
     // per group; ordered feed == batch admission set, shared mirror)
     "doc_token_mix_stream_replay" -> ((s, d) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      streaming.UniqueStreams.useRocksDBStateStore(s)
-      try
+      streaming.UniqueStreams.withRocksDBStateStore(s) {
         streaming.Replay.replay(s, Tables.documents(s, d), "doc_id", 100,
           "append")(sdf =>
             streaming.QuotaStream.tokenBudgetStream(sdf, "source", "doc_id",
@@ -310,16 +301,10 @@ object SparkEntry {
               budgetByGroup = Map("src1" -> 700L, "src7" -> 100000L)))
           .select(col("doc_id"), col("source"),
             col("n_tok").cast("int").as("n_tok"), col("tok_before"))
-      finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     }),
     "doc_token_mix_restart_stream_replay" -> ((s, d) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      streaming.UniqueStreams.useRocksDBStateStore(s)
-      try
+      streaming.UniqueStreams.withRocksDBStateStore(s) {
         streaming.Replay.replayWithRestart(s, Tables.documents(s, d), "doc_id",
           100)(sdf =>
             streaming.QuotaStream.tokenBudgetStream(sdf, "source", "doc_id",
@@ -327,9 +312,6 @@ object SparkEntry {
               budgetByGroup = Map("src1" -> 700L, "src7" -> 100000L)))
           .select(col("doc_id"), col("source"),
             col("n_tok").cast("int").as("n_tok"), col("tok_before"))
-      finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     }),
     // STREAMING per-group quota admission — capPerGroup applied at the
@@ -337,33 +319,21 @@ object SparkEntry {
     // one long of state per group). Fed in doc_id order the admissions
     // equal the batch cap exactly, so the row shares its mirror.
     "doc_source_cap_stream_replay" -> ((s, d) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      streaming.UniqueStreams.useRocksDBStateStore(s)
-      try
+      streaming.UniqueStreams.withRocksDBStateStore(s) {
         streaming.Replay.replay(s, Tables.documents(s, d), "doc_id", 1000,
           "append")(sdf =>
             streaming.QuotaStream.capPerGroupStream(sdf, "source", "doc_id", 10)
               .select("doc_id", "source"))
-      finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     }),
     // ... and its kill/restart form (the admission counters restore from
     // RocksDB — a re-fed batch must not re-admit past the quota)
     "doc_source_cap_restart_stream_replay" -> ((s, d) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      streaming.UniqueStreams.useRocksDBStateStore(s)
-      try
+      streaming.UniqueStreams.withRocksDBStateStore(s) {
         streaming.Replay.replayWithRestart(s, Tables.documents(s, d), "doc_id",
           200)(sdf =>
             streaming.QuotaStream.capPerGroupStream(sdf, "source", "doc_id", 10)
               .select("doc_id", "source"))
-      finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     }),
     // KEY-SKEW profiling — exact heavy hitters via two-phase Misra-Gries
@@ -393,32 +363,20 @@ object SparkEntry {
     // the sf0.01 boundary in play: de's 70th (last) arrival fires exactly
     // at the threshold; fr (64 total) never fires
     "doc_hot_keys_stream_replay" -> ((s, d) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      streaming.UniqueStreams.useRocksDBStateStore(s)
-      try
+      streaming.UniqueStreams.withRocksDBStateStore(s) {
         streaming.Replay.replay(s, Tables.documents(s, d), "doc_id", 100,
           "append")(sdf =>
             streaming.HotKeyStream.hotKeyAlerts(sdf, "lang", "doc_id", 70L))
-      finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     }),
     // ... and its kill/restart form (the running counters restore from
     // RocksDB — a re-fed batch must re-emit its alerts identically and a
     // restored counter must not re-fire)
     "doc_hot_keys_restart_stream_replay" -> ((s, d) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      streaming.UniqueStreams.useRocksDBStateStore(s)
-      try
+      streaming.UniqueStreams.withRocksDBStateStore(s) {
         streaming.Replay.replayWithRestart(s, Tables.documents(s, d), "doc_id",
           100)(sdf =>
             streaming.HotKeyStream.hotKeyAlerts(sdf, "lang", "doc_id", 70L))
-      finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     }),
     "doc_simhash_md5" -> ((s, d) =>
@@ -463,10 +421,7 @@ object SparkEntry {
     // union-find change log as nearDupStreamMd5 with the exact-lev
     // verify; final survivors hash-match the batch CC oracle.
     "doc_editdist_stream_replay" -> ((s, d) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      streaming.UniqueStreams.useRocksDBStateStore(s)
-      try {
+      streaming.UniqueStreams.withRocksDBStateStore(s) {
         val docs = Tables.documents(s, d)
         val log = streaming.Replay.replay(s, docs, "doc_id", 1000, "update")(sdf =>
           streaming.NearDupStream.editNearDupStreamMd5(sdf, "doc_id", "text",
@@ -475,9 +430,6 @@ object SparkEntry {
           .agg(max_by(col("change"), col("upd_seq")).as("change"))
           .filter(col("change") === "keep")
         docs.join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     }),
     // BAND-SHARDED two-stage form — the scale path past the monolith's
@@ -488,10 +440,7 @@ object SparkEntry {
     // involve only earlier arrivals, fed after i's marker). Survivors
     // share the batch CC oracle, like the monolith row.
     "doc_editdist_sharded_stream_replay" -> ((s, d) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      streaming.UniqueStreams.useRocksDBStateStore(s)
-      try {
+      streaming.UniqueStreams.withRocksDBStateStore(s) {
         val docs = Tables.documents(s, d)
         val edges = streaming.Replay.replay(s, docs, "doc_id", 100, "append")(sdf =>
           streaming.NearDupStream.editShardedEdges(sdf, "doc_id", "text",
@@ -507,18 +456,12 @@ object SparkEntry {
           .agg(max_by(col("change"), col("upd_seq")).as("change"))
           .filter(col("change") === "keep")
         docs.join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     }),
     // ... and its kill/restart form (offset recovery + RocksDB restore
     // of the band index / text payloads / union-find / seq states)
     "doc_editdist_restart_stream_replay" -> ((s, d) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      streaming.UniqueStreams.useRocksDBStateStore(s)
-      try {
+      streaming.UniqueStreams.withRocksDBStateStore(s) {
         val docs = Tables.documents(s, d)
         val log = streaming.Replay.replayWithRestart(s, docs, "doc_id", 200)(sdf =>
           streaming.NearDupStream.editNearDupStreamMd5(sdf, "doc_id", "text",
@@ -527,9 +470,6 @@ object SparkEntry {
           .agg(max_by(col("change"), col("upd_seq")).as("change"))
           .filter(col("change") === "keep")
         docs.join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     }),
     "emb_knn_brute" -> ((s, d) => {
@@ -653,10 +593,7 @@ object SparkEntry {
     // log's final verdicts must reduce to EXACTLY the batch survivor
     // set, so this row shares the emb_semdedup DuckDB mirror.
     "emb_semdedup_stream_replay" -> ((s, d) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      streaming.UniqueStreams.useRocksDBStateStore(s)
-      try {
+      streaming.UniqueStreams.withRocksDBStateStore(s) {
         val emb = Tables.embeddings(s, d)
         val cents = llm.Similarity.semDedupCentroids(emb, "vec_id",
           "embedding", dim = 64, nCells = 16, lloydIters = 1)
@@ -667,9 +604,6 @@ object SparkEntry {
           .agg(max_by(col("change"), col("upd_seq")).as("change"))
           .filter(col("change") === "keep")
           .select("vec_id")
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     }),
     // ... the HOT-CELL-CAPPED stream at the cap-binding batch geometry
@@ -679,10 +613,7 @@ object SparkEntry {
     // telemetry row, retroactive re-promotion of dropped members, cell
     // state FREED — and still hash-matches the capped batch mirror.
     "emb_semdedup_capped_stream_replay" -> ((s, d) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      streaming.UniqueStreams.useRocksDBStateStore(s)
-      try {
+      streaming.UniqueStreams.withRocksDBStateStore(s) {
         val emb = Tables.embeddings(s, d)
         val cents = llm.Similarity.semDedupCentroids(emb, "vec_id",
           "embedding", dim = 64, nCells = 4, lloydIters = 1)
@@ -694,9 +625,6 @@ object SparkEntry {
           .agg(max_by(col("change"), col("upd_seq")).as("change"))
           .filter(col("change") === "keep")
           .select("vec_id")
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     }),
     // CHECKPOINT-RESTART for the streaming SemDeDup: killed at the
@@ -705,10 +633,7 @@ object SparkEntry {
     // union-find forest, keeper summaries, occupancy, seq) — and the
     // accumulated log must still reduce to the batch survivor set.
     "emb_semdedup_restart_stream_replay" -> ((s, d) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      streaming.UniqueStreams.useRocksDBStateStore(s)
-      try {
+      streaming.UniqueStreams.withRocksDBStateStore(s) {
         val emb = Tables.embeddings(s, d)
         val cents = llm.Similarity.semDedupCentroids(emb, "vec_id",
           "embedding", dim = 64, nCells = 16, lloydIters = 1)
@@ -719,9 +644,6 @@ object SparkEntry {
           .agg(max_by(col("change"), col("upd_seq")).as("change"))
           .filter(col("change") === "keep")
           .select("vec_id")
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     }),
     "mm_features" -> ((s, d) =>
@@ -894,10 +816,7 @@ object SparkEntry {
     // + the shared ids-only union-find stage B); survivors hash-match
     // the batch CC mirror
     "mm_image_dedup_stream_replay" -> ((s, d) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      streaming.UniqueStreams.useRocksDBStateStore(s)
-      try {
+      streaming.UniqueStreams.withRocksDBStateStore(s) {
         val docs = Tables.documents(s, d)
         val edges = streaming.Replay.replay(s, docs.select("doc_id"),
           "doc_id", 100, "append")(sdf =>
@@ -917,9 +836,6 @@ object SparkEntry {
           .filter(col("change") === "keep")
         docs.join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
           .select("doc_id")
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     }),
     // IMAGE-SemDeDup — the semantic rung beside the perceptual hashes:
@@ -984,10 +900,7 @@ object SparkEntry {
     // projection (imageTileKeys → the generic keySetShardedEdges +
     // shared union-find; same batch CC mirror)
     "mm_image_crop_dedup_stream_replay" -> ((s, d) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      streaming.UniqueStreams.useRocksDBStateStore(s)
-      try {
+      streaming.UniqueStreams.withRocksDBStateStore(s) {
         val docs = Tables.documents(s, d)
         val edges = streaming.Replay.replay(s, docs.select("doc_id"),
           "doc_id", 100, "append")(sdf =>
@@ -1006,9 +919,6 @@ object SparkEntry {
           .filter(col("change") === "keep")
         docs.join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
           .select("doc_id")
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     }),
     // VIDEO NEAR-DUP tier — the last rung of the modality ladder: REAL
@@ -1105,10 +1015,7 @@ object SparkEntry {
     // tier already runs); the shared ids-only union-find stage B
     // reduces to the batch CC survivors (same mirror)
     "mm_audio_seg_dedup_stream_replay" -> ((s, d) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      streaming.UniqueStreams.useRocksDBStateStore(s)
-      try {
+      streaming.UniqueStreams.withRocksDBStateStore(s) {
         val docs = Tables.documents(s, d)
         val edges = streaming.Replay.replay(s, docs.select("doc_id"),
           "doc_id", 100, "append")(sdf =>
@@ -1127,9 +1034,6 @@ object SparkEntry {
           .filter(col("change") === "keep")
         docs.join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
           .select("doc_id")
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     }),
     // STREAMING audio dedup — the sharded twin the image tier already
@@ -1138,10 +1042,7 @@ object SparkEntry {
     // edges + the shared ids-only union-find); survivors hash-match the
     // batch mm_audio_dedup CC mirror
     "mm_audio_dedup_stream_replay" -> ((s, d) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      streaming.UniqueStreams.useRocksDBStateStore(s)
-      try {
+      streaming.UniqueStreams.withRocksDBStateStore(s) {
         val docs = Tables.documents(s, d)
         val edges = streaming.Replay.replay(s, docs.select("doc_id"),
           "doc_id", 100, "append")(sdf =>
@@ -1160,9 +1061,6 @@ object SparkEntry {
           .filter(col("change") === "keep")
         docs.join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
           .select("doc_id")
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     }),
     // ... and the kill/restart row: the EDGE stage is killed at the
@@ -1170,10 +1068,7 @@ object SparkEntry {
     // recovery + RocksDB restore of the chunk-bucket member maps); the
     // accumulated edges must still reduce to the same batch survivors
     "mm_audio_dedup_restart_stream_replay" -> ((s, d) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      streaming.UniqueStreams.useRocksDBStateStore(s)
-      try {
+      streaming.UniqueStreams.withRocksDBStateStore(s) {
         val docs = Tables.documents(s, d)
         val edges = streaming.Replay.replayWithRestart(s, docs.select("doc_id"),
           "doc_id", 100)(sdf =>
@@ -1192,9 +1087,6 @@ object SparkEntry {
           .filter(col("change") === "keep")
         docs.join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
           .select("doc_id")
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     }),
     // STREAMING video dedup — the sharded two-stage bridge for the
@@ -1204,10 +1096,7 @@ object SparkEntry {
     // shared ids-only union-find stage B reduces to the batch CC
     // survivors (same mirror as mm_video_dedup)
     "mm_video_dedup_stream_replay" -> ((s, d) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      streaming.UniqueStreams.useRocksDBStateStore(s)
-      try {
+      streaming.UniqueStreams.withRocksDBStateStore(s) {
         val docs = Tables.documents(s, d)
         val edges = streaming.Replay.replay(s, docs.select("doc_id"),
           "doc_id", 100, "append")(sdf =>
@@ -1225,9 +1114,6 @@ object SparkEntry {
           .filter(col("change") === "keep")
         docs.join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
           .select("doc_id")
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     }),
     // ... and the video kill/restart row: the shingle-sharded EDGE stage
@@ -1236,10 +1122,7 @@ object SparkEntry {
     // maps, including every stored shingle-set payload); the accumulated
     // edges must still reduce to the same batch CC survivors
     "mm_video_dedup_restart_stream_replay" -> ((s, d) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      streaming.UniqueStreams.useRocksDBStateStore(s)
-      try {
+      streaming.UniqueStreams.withRocksDBStateStore(s) {
         val docs = Tables.documents(s, d)
         val edges = streaming.Replay.replayWithRestart(s, docs.select("doc_id"),
           "doc_id", 100)(sdf =>
@@ -1257,9 +1140,6 @@ object SparkEntry {
           .filter(col("change") === "keep")
         docs.join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
           .select("doc_id")
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     }),
     // ... kill/restart rows for the two key-set twins added this round
@@ -1269,10 +1149,7 @@ object SparkEntry {
     // maps, including every stored key-array payload); the accumulated
     // edges must still reduce to the same batch CC survivors
     "mm_audio_seg_dedup_restart_stream_replay" -> ((s, d) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      streaming.UniqueStreams.useRocksDBStateStore(s)
-      try {
+      streaming.UniqueStreams.withRocksDBStateStore(s) {
         val docs = Tables.documents(s, d)
         val edges = streaming.Replay.replayWithRestart(s, docs.select("doc_id"),
           "doc_id", 100)(sdf =>
@@ -1291,16 +1168,10 @@ object SparkEntry {
           .filter(col("change") === "keep")
         docs.join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
           .select("doc_id")
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     }),
     "mm_image_crop_dedup_restart_stream_replay" -> ((s, d) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      streaming.UniqueStreams.useRocksDBStateStore(s)
-      try {
+      streaming.UniqueStreams.withRocksDBStateStore(s) {
         val docs = Tables.documents(s, d)
         val edges = streaming.Replay.replayWithRestart(s, docs.select("doc_id"),
           "doc_id", 100)(sdf =>
@@ -1319,9 +1190,6 @@ object SparkEntry {
           .filter(col("change") === "keep")
         docs.join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
           .select("doc_id")
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     }),
     // ---- corpus-curation tier (llm.CorpusOps): the filter / packing /
@@ -1400,10 +1268,7 @@ object SparkEntry {
         llm.CorpusOps.withSyntheticLines(Tables.documents(s, d), "doc_id", "text"),
         "doc_id", "lines_text", minDf = 3)),
     "doc_dup_lines_stream_replay" -> ((s, d) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      streaming.UniqueStreams.useRocksDBStateStore(s)
-      try
+      streaming.UniqueStreams.withRocksDBStateStore(s) {
         streaming.Replay.replay(s,
           llm.CorpusOps.withSyntheticLines(Tables.documents(s, d), "doc_id", "text")
             .select("doc_id", "lines_text"),
@@ -1411,9 +1276,6 @@ object SparkEntry {
           streaming.LineDedupStream.lineDedupStream(sdf, "doc_id", "lines_text",
             minDf = 3))
           .select(col("doc_id"), col("pos"))
-      finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     }),
     // LINE-SHARDED streaming form (one stage, keyed by line content —
@@ -1421,10 +1283,7 @@ object SparkEntry {
     // accumulated insert-only log must equal the same dropped-line
     // relation, so it shares doc_dup_lines' oracle
     "doc_dup_lines_sharded_stream_replay" -> ((s, d) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      streaming.UniqueStreams.useRocksDBStateStore(s)
-      try
+      streaming.UniqueStreams.withRocksDBStateStore(s) {
         streaming.Replay.replay(s,
           llm.CorpusOps.withSyntheticLines(Tables.documents(s, d), "doc_id", "text")
             .select("doc_id", "lines_text"),
@@ -1432,9 +1291,6 @@ object SparkEntry {
           streaming.LineDedupStream.shardedLineDedupStream(sdf, "doc_id", "lines_text",
             minDf = 3))
           .select(col("doc_id"), col("pos"))
-      finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     }),
     // ---- duplicated-span detection/removal (ExactSubstr-style dedup,
@@ -1450,17 +1306,11 @@ object SparkEntry {
     // doc after replaying the corpus must hash-match the SAME DuckDB
     // oracle as the batch row — retroactive promotions included
     "doc_dup_spans_stream_replay" -> ((s, d) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      streaming.UniqueStreams.useRocksDBStateStore(s)
-      try {
+      streaming.UniqueStreams.withRocksDBStateStore(s) {
         val log = streaming.Replay.replay(s, Tables.documents(s, d), "doc_id",
           100, "update")(sdf =>
           streaming.DupSpanStream.dupSpanStream(sdf, "doc_id", "text", k = 5))
         streaming.DupSpanStream.latestSpans(log, "doc_id")
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     }),
     // GRAM-SHARDED two-stage streaming form: stage A (per-gram promotion,
@@ -1469,10 +1319,7 @@ object SparkEntry {
     // bridge the sharded pair documents, closed end-to-end at oracle
     // level. Final (max per-doc upd_seq) spans share the batch oracle.
     "doc_dup_spans_sharded_stream_replay" -> ((s, d) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      streaming.UniqueStreams.useRocksDBStateStore(s)
-      try {
+      streaming.UniqueStreams.withRocksDBStateStore(s) {
         val hits = streaming.Replay.replay(s, Tables.documents(s, d), "doc_id",
           100, "append")(sdf =>
           streaming.DupSpanStream.shardedGramHits(sdf, "doc_id", "text", k = 5))
@@ -1480,9 +1327,6 @@ object SparkEntry {
           5000, "update")(sdf =>
           streaming.DupSpanStream.spanMergeStage(sdf, "doc_id", k = 5))
         streaming.DupSpanStream.latestSpans(log, "doc_id")
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     }),
     // ---- streaming-vs-batch replay (graft.streaming) ----
@@ -1502,14 +1346,9 @@ object SparkEntry {
     // the transformWithState backend, same oracle as ever_stream_replay
     // (requires the RocksDB provider — set for the run, then restored)
     "ever_tws_stream_replay" -> ((s, d) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      streaming.UniqueStreams.useRocksDBStateStore(s)
-      try streaming.Replay.replay(s, ev(s, d), "event_id", 2000, "update")(sdf =>
-        streaming.UniqueStreams.everStreamTws(sdf, Seq("user_id"), Some("event_id")))
-      finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
+      streaming.UniqueStreams.withRocksDBStateStore(s) {
+        streaming.Replay.replay(s, ev(s, d), "event_id", 2000, "update")(sdf =>
+          streaming.UniqueStreams.everStreamTws(sdf, Seq("user_id"), Some("event_id")))
       }
     }),
     // CHECKPOINT-RESTART at oracle level: the same everStream replay,
@@ -1656,18 +1495,12 @@ object SparkEntry {
     // recursive-CTE closure oracle as doc_neardup_clusters_md5, closing
     // the canonical-at-emission-time asymmetry.
     "doc_neardup_clusters_stream_replay" -> ((s, d) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      streaming.UniqueStreams.useRocksDBStateStore(s)
-      try {
+      streaming.UniqueStreams.withRocksDBStateStore(s) {
         val log = streaming.Replay.replay(s, Tables.documents(s, d), "doc_id", 1000,
           "update")(sdf => streaming.NearDupStream.nearDupStreamMd5(sdf, "doc_id", "text"))
         val edges = log.filter(col("change") === "drop")
           .select(col("doc_id").as("id_a"), col("canonical").as("id_b"))
         llm.TextDedup.nearDupClusters(edges).withColumnRenamed("id", "doc_id")
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     }),
     // TWO STREAMING WINDOWS JOINED EVENT-BY-EVENT (reference everTest4,
@@ -1824,12 +1657,9 @@ object SparkEntry {
     // per-(query, doc) fold of the emitted per-token rows is the
     // consumer-side contract (as in doc_bm25_stream_replay's ranking).
     "doc_bm25_index_stream_replay" -> ((s, d) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      streaming.UniqueStreams.useRocksDBStateStore(s)
-      val tagged = Tables.documents(s, d).select(col("doc_id"), col("text"),
-        (col("doc_id") % 10 === 0).as("is_query"))
-      try
+      streaming.UniqueStreams.withRocksDBStateStore(s) {
+        val tagged = Tables.documents(s, d).select(col("doc_id"), col("text"),
+          (col("doc_id") % 10 === 0).as("is_query"))
         streaming.Replay.replay(s, tagged, "doc_id", 50, "append")(sdf =>
           streaming.Bm25IngestStream.bm25IngestStream(sdf, "doc_id", "text",
             "is_query", maxDf = 250))
@@ -1837,9 +1667,6 @@ object SparkEntry {
           .agg(count(lit(1)).as("n_match"), sum(col("tf")).as("tf_sum"),
             sum(col("tf") * col("df_p")).as("tfdf_sum"),
             min(col("dl")).as("dl"))
-      finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     }),
     // ... and the kill/restart form: stopped at the half-way chunk and
@@ -1847,12 +1674,9 @@ object SparkEntry {
     // restore exactly for the later queries' probes to match (append-mode
     // emissions are final, so the row shares the ingestion mirror).
     "doc_bm25_index_restart_stream_replay" -> ((s, d) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      streaming.UniqueStreams.useRocksDBStateStore(s)
-      val tagged = Tables.documents(s, d).select(col("doc_id"), col("text"),
-        (col("doc_id") % 10 === 0).as("is_query"))
-      try
+      streaming.UniqueStreams.withRocksDBStateStore(s) {
+        val tagged = Tables.documents(s, d).select(col("doc_id"), col("text"),
+          (col("doc_id") % 10 === 0).as("is_query"))
         streaming.Replay.replayWithRestart(s, tagged, "doc_id", 50)(sdf =>
           streaming.Bm25IngestStream.bm25IngestStream(sdf, "doc_id", "text",
             "is_query", maxDf = 250))
@@ -1860,9 +1684,6 @@ object SparkEntry {
           .agg(count(lit(1)).as("n_match"), sum(col("tf")).as("tf_sum"),
             sum(col("tf") * col("df_p")).as("tfdf_sum"),
             min(col("dl")).as("dl"))
-      finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     }),
     // WATERMARK-BOUNDED scoring streams (the windowed twins of the three
@@ -1933,11 +1754,11 @@ object SparkEntry {
         .select("doc_id", "n_grams", "oov_tgt", "oov_raw",
           "hit_tgt", "hit_raw")
     }),
-    "doc_pack_stream_replay" -> ((s, d) => {
-      streaming.UniqueStreams.useRocksDBStateStore(s)
-      streaming.Replay.replay(s, Tables.documents(s, d), "doc_id", 100, "update")(sdf =>
-        streaming.PackStream.packStream(sdf, "doc_id", "text", "source", budget = 512))
-    }),
+    "doc_pack_stream_replay" -> ((s, d) =>
+      streaming.UniqueStreams.withRocksDBStateStore(s) {
+        streaming.Replay.replay(s, Tables.documents(s, d), "doc_id", 100, "update")(sdf =>
+          streaming.PackStream.packStream(sdf, "doc_id", "text", "source", budget = 512))
+      }),
     // STREAMING INCREMENTAL NEAR-DUP DEDUP (graft.streaming.NearDupStream):
     // replay the documents table in doc_id order through the incremental
     // band-code-index operator; a doc's latest change-log row is its live
@@ -1957,15 +1778,9 @@ object SparkEntry {
     // result, not just a fixed query set. sim excluded like emb_ann_lsh
     // (ranks compared; the doubles are representation-sensitive).
     "emb_ann_stream_replay" -> ((s, d) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      streaming.UniqueStreams.useRocksDBStateStore(s)
-      try
+      streaming.UniqueStreams.withRocksDBStateStore(s) {
         streaming.Replay.replay(s, Tables.embeddings(s, d), "vec_id", 1000,
           "append")(sdf => streaming.AnnStream.annStream(sdf, "vec_id", "embedding"))
-      finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     }),
     // ... and its BUCKET-SHARDED two-stage twin (round 14 — the last
@@ -1974,18 +1789,12 @@ object SparkEntry {
     // is the query-keyed top-k merge; per-bucket candidates are disjoint
     // so the merged log equals the monolith's — same DuckDB mirror.
     "emb_ann_sharded_lsh_stream_replay" -> ((s, d) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      streaming.UniqueStreams.useRocksDBStateStore(s)
-      try {
+      streaming.UniqueStreams.withRocksDBStateStore(s) {
         val hits = streaming.Replay.replay(s, Tables.embeddings(s, d),
           "vec_id", 1000, "append")(sdf =>
           streaming.AnnStream.shardedLshBucketHits(sdf, "vec_id", "embedding"))
         streaming.Replay.replay(s, hits, "query_id", 1 << 20,
           "append")(sdf => streaming.AnnStream.annMergeStage(sdf, nProbe = 9))
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     }),
     // ... and the bridge under KILL/RESTART: stage A is stopped at the
@@ -1994,18 +1803,12 @@ object SparkEntry {
     // to match (append emissions are final, so the accumulated hit log —
     // and therefore the merged output — shares the monolith mirror)
     "emb_ann_sharded_lsh_restart_stream_replay" -> ((s, d) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      streaming.UniqueStreams.useRocksDBStateStore(s)
-      try {
+      streaming.UniqueStreams.withRocksDBStateStore(s) {
         val hits = streaming.Replay.replayWithRestart(s, Tables.embeddings(s, d),
           "vec_id", 1000)(sdf =>
           streaming.AnnStream.shardedLshBucketHits(sdf, "vec_id", "embedding"))
         streaming.Replay.replay(s, hits, "query_id", 1 << 20,
           "append")(sdf => streaming.AnnStream.annMergeStage(sdf, nProbe = 9))
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     }),
     // PQ-compressed continuous ANN: same feed and probe structure, but
@@ -2013,28 +1816,19 @@ object SparkEntry {
     // (32× smaller state); the mirror computes the identical ADC scores
     // over earlier arrivals, so the full retrieval log hash-matches
     "emb_ann_pq_stream_replay" -> ((s, d) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      streaming.UniqueStreams.useRocksDBStateStore(s)
-      try {
+      streaming.UniqueStreams.withRocksDBStateStore(s) {
         val (cb, _) = llm.Similarity.anchorCodebook(Tables.embeddings(s, d),
           "vec_id", "embedding", dim = 64, nSub = 8, codesPerSub = 16)
         streaming.Replay.replay(s, Tables.embeddings(s, d), "vec_id", 1000,
           "append")(sdf => streaming.AnnStream.pqAnnStream(sdf, "vec_id", "embedding",
             codebook = cb, codesPerSub = 16))
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     }),
     // ... bucket-sharded PQ twin: byte-packed-code state per LSH shard,
     // probe rows carry the arrival's ADC LUT — same mirror as the
     // pq monolith above (disjoint per-bucket candidates, exact merge)
     "emb_ann_pq_sharded_stream_replay" -> ((s, d) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      streaming.UniqueStreams.useRocksDBStateStore(s)
-      try {
+      streaming.UniqueStreams.withRocksDBStateStore(s) {
         val (cb, _) = llm.Similarity.anchorCodebook(Tables.embeddings(s, d),
           "vec_id", "embedding", dim = 64, nSub = 8, codesPerSub = 16)
         val hits = streaming.Replay.replay(s, Tables.embeddings(s, d),
@@ -2043,9 +1837,6 @@ object SparkEntry {
             codebook = Some((cb, 16))))
         streaming.Replay.replay(s, hits, "query_id", 1 << 20,
           "append")(sdf => streaming.AnnStream.annMergeStage(sdf, nProbe = 9))
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     }),
     // CELL-BUCKETED streaming IVF-PQ (the composed streaming ANN shape):
@@ -2056,10 +1847,7 @@ object SparkEntry {
     // and candidates restricted to earlier arrivals, so the full
     // retrieval log hash-matches.
     "emb_ann_ivfpq_stream_replay" -> ((s, d) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      streaming.UniqueStreams.useRocksDBStateStore(s)
-      try {
+      streaming.UniqueStreams.withRocksDBStateStore(s) {
         val emb = Tables.embeddings(s, d)
         val cent = llm.Similarity.anchorCentroids(emb, "vec_id", "embedding",
           dim = 64, nCells = 16)
@@ -2069,9 +1857,6 @@ object SparkEntry {
           "append")(sdf => streaming.AnnStream.ivfPqAnnStream(sdf, "vec_id",
             "embedding", centroids = cent, codebook = cb, codesPerSub = 16,
             nProbe = 4))
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     }),
     // ... and the CELL-SHARDED two-stage form (the scale-out twin: per-
@@ -2080,10 +1865,7 @@ object SparkEntry {
     // like doc_dup_spans_sharded_stream_replay) — same config, same
     // DuckDB mirror as the monolith row
     "emb_ann_ivfpq_sharded_stream_replay" -> ((s, d) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      streaming.UniqueStreams.useRocksDBStateStore(s)
-      try {
+      streaming.UniqueStreams.withRocksDBStateStore(s) {
         val emb = Tables.embeddings(s, d)
         val cent = llm.Similarity.anchorCentroids(emb, "vec_id", "embedding",
           dim = 64, nCells = 16)
@@ -2095,19 +1877,13 @@ object SparkEntry {
             codesPerSub = 16, nProbe = 4))
         streaming.Replay.replay(s, hits, "query_id", 1 << 20,
           "append")(sdf => streaming.AnnStream.annMergeStage(sdf, nProbe = 4))
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     }),
     // ... and its RESIDUAL form: state codes are v − centroid(own cell),
     // scored with the per-cell norm-correction tables — the streaming
     // analog of emb_ann_ivfpq_residual, same deployed-literal contract
     "emb_ann_ivfpq_residual_stream_replay" -> ((s, d) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      streaming.UniqueStreams.useRocksDBStateStore(s)
-      try {
+      streaming.UniqueStreams.withRocksDBStateStore(s) {
         val emb = Tables.embeddings(s, d)
         val model = llm.Similarity.residualPqModel(emb, "vec_id", "embedding",
           dim = 64, nCells = 16, nSub = 8, codesPerSub = 16)
@@ -2117,9 +1893,6 @@ object SparkEntry {
             centroids = model.cells.map { case (cell, c, _, _) => (cell, c) },
             codebook = model.codebook, codesPerSub = 16,
             nProbe = 4, residual = true))
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     }),
     // STREAMING fuzzy-contamination detection: train docs replayed
@@ -2168,10 +1941,7 @@ object SparkEntry {
     // restore from the checkpoint such that the accumulated retrieval
     // log equals the uninterrupted replay's (shared oracle)
     "emb_ann_ivfpq_residual_restart_stream_replay" -> ((s, d) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      streaming.UniqueStreams.useRocksDBStateStore(s)
-      try {
+      streaming.UniqueStreams.withRocksDBStateStore(s) {
         val emb = Tables.embeddings(s, d)
         val model = llm.Similarity.residualPqModel(emb, "vec_id", "embedding",
           dim = 64, nCells = 16, nSub = 8, codesPerSub = 16)
@@ -2180,9 +1950,6 @@ object SparkEntry {
             centroids = model.cells.map { case (cell, c, _, _) => (cell, c) },
             codebook = model.codebook, codesPerSub = 16,
             nProbe = 4, residual = true))
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     }),
     // ... and the embedding stream's final CLUSTER STRUCTURE (the vector
@@ -2192,19 +1959,13 @@ object SparkEntry {
     // — must equal the recursive-CTE closure over the emb_neardup_pairs
     // relation, min label per component.
     "emb_neardup_clusters_stream_replay" -> ((s, d) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      streaming.UniqueStreams.useRocksDBStateStore(s)
-      try {
+      streaming.UniqueStreams.withRocksDBStateStore(s) {
         val log = streaming.Replay.replay(s, Tables.embeddings(s, d), "vec_id", 1000,
           "update")(sdf => streaming.NearDupStream.embNearDupStream(sdf, "vec_id",
             "embedding", threshold = 0.4, groups = 8, planesPerGroup = 4))
         val edges = log.filter(col("change") === "drop")
           .select(col("vec_id").as("id_a"), col("canonical").as("id_b"))
         llm.TextDedup.nearDupClusters(edges).withColumnRenamed("id", "vec_id")
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     }),
     // STREAMING INCREMENTAL EMBEDDING NEAR-DUP DEDUP — the vector twin of
@@ -2217,10 +1978,7 @@ object SparkEntry {
     // threshold=0.4 — the low-similarity configuration this corpus
     // needs, see emb_neardup_pairs).
     "emb_neardup_stream_replay" -> ((s, d) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      streaming.UniqueStreams.useRocksDBStateStore(s)
-      try {
+      streaming.UniqueStreams.withRocksDBStateStore(s) {
         val emb = Tables.embeddings(s, d)
         val log = streaming.Replay.replay(s, emb, "vec_id", 1000, "update")(sdf =>
           streaming.NearDupStream.embNearDupStream(sdf, "vec_id", "embedding",
@@ -2229,16 +1987,10 @@ object SparkEntry {
           .agg(max_by(col("change"), col("upd_seq")).as("change"))
           .filter(col("change") === "keep")
           .select("vec_id")
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     }),
     "doc_neardup_stream_replay" -> ((s, d) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      streaming.UniqueStreams.useRocksDBStateStore(s) // transformWithState backend
-      try {
+      streaming.UniqueStreams.withRocksDBStateStore(s) { // transformWithState backend
         val docs = Tables.documents(s, d)
         val log = streaming.Replay.replay(s, docs, "doc_id", 1000, "update")(sdf =>
           streaming.NearDupStream.nearDupStreamMd5(sdf, "doc_id", "text"))
@@ -2246,9 +1998,6 @@ object SparkEntry {
           .agg(max_by(col("change"), col("upd_seq")).as("change"))
           .filter(col("change") === "keep")
         docs.join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     }),
     // CHECKPOINT-RESTART for the streaming near-dup operator (the
@@ -2260,10 +2009,7 @@ object SparkEntry {
     // counter) — and the accumulated change log must still reduce to the
     // batch survivor set (same closure oracle as the uninterrupted row).
     "doc_neardup_restart_stream_replay" -> ((s, d) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      streaming.UniqueStreams.useRocksDBStateStore(s)
-      try {
+      streaming.UniqueStreams.withRocksDBStateStore(s) {
         val docs = Tables.documents(s, d)
         val log = streaming.Replay.replayWithRestart(s, docs, "doc_id", 100)(sdf =>
           streaming.NearDupStream.nearDupStreamMd5(sdf, "doc_id", "text"))
@@ -2271,9 +2017,6 @@ object SparkEntry {
           .agg(max_by(col("change"), col("upd_seq")).as("change"))
           .filter(col("change") === "keep")
         docs.join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     }),
     "externaltimebatch_timeout_replay" -> ((s, d) => {

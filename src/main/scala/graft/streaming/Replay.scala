@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SQLContext, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
@@ -87,7 +88,10 @@ object Replay {
           q = start()   // ... and recover from the checkpoint
         }
       }
-    finally q.stop()
+    finally {
+      q.stop()
+      FileUtils.deleteQuietly(new java.io.File(ckpt))
+    }
     spark.createDataFrame(
       spark.sparkContext.parallelize(
         batches.toSeq.sortBy(_._1).flatMap(_._2.toSeq), 1),
@@ -111,10 +115,10 @@ object Replay {
     val stream = MemoryStream[Row]
     val out = build(stream.toDF())
     val rows = input.orderBy(col(seqCol)).collect()
+    val ckpt = java.nio.file.Files.createTempDirectory("ckpt_replay_fb").toString
     val q = out.writeStream
       .outputMode("update")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("ckpt_replay_fb").toString)
+      .option("checkpointLocation", ckpt)
       .foreachBatch((b: DataFrame, _: Long) =>
         handler(b.orderBy(col(seqCol)).collect().toSeq))
       .start()
@@ -123,6 +127,9 @@ object Replay {
         stream.addData(chunk.toSeq)
         q.processAllAvailable()
       }
-    finally q.stop()
+    finally {
+      q.stop()
+      FileUtils.deleteQuietly(new java.io.File(ckpt))
+    }
   }
 }

@@ -103,10 +103,41 @@ object UniqueStreams {
     * fix (UniqueEverWindowProcessor.java:66-69, "events... will not be
     * removed"); Spark's pluggable state store is the engine-level answer
     * (SURVEY.md §7.4.4). Call before starting queries.
+    *
+    * Two more settings cut the fixed cost every micro-batch pays for its
+    * checkpoint files (offsets and commit log on the driver, state on
+    * each partition):
+    *  - changelog checkpointing: each commit writes one small changelog
+    *    file per partition instead of uploading a snapshot zip of the
+    *    whole RocksDB instance; snapshots move to the maintenance thread
+    *    and recovery replays the changelogs after the latest snapshot;
+    *  - [[ForkFreeLocalFs]] for `file:` checkpoints: without libhadoop,
+    *    Hadoop's local `FileContext` forks a `chmod` per file created and
+    *    a `readlink` per link-status lookup, tens of milliseconds per
+    *    checkpoint file; the fork-free one leaves the same files,
+    *    checksums and permissions.
     */
   def useRocksDBStateStore(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    rocksDBStateStoreConf.foreach { case (k, v) => spark.conf.set(k, v) }
+
+  private val rocksDBStateStoreConf = Seq(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
+    "fs.AbstractFileSystem.file.impl" -> classOf[ForkFreeLocalFs].getName)
+
+  /** Run `body` under `useRocksDBStateStore`, then give every key it sets
+    * back its previous value, or unset it if it had none.
+    */
+  def withRocksDBStateStore[T](spark: org.apache.spark.sql.SparkSession)(body: => T): T = {
+    val prev = rocksDBStateStoreConf.map { case (k, _) => k -> spark.conf.getOption(k) }
+    useRocksDBStateStore(spark)
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 
   // ------------------------------------------------------------------
   // Tier 1 — Spark built-ins

@@ -44,8 +44,7 @@ object ScaleBench {
                             name: String): Unit = {
       import org.apache.spark.sql.{Encoders, Row}
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      graft.streaming.UniqueStreams.useRocksDBStateStore(spark)
       val src = src0.select(col("doc_id"), col("text"))
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
       implicit val encA: org.apache.spark.sql.Encoder[Row] = Encoders.row(src.schema)
@@ -754,8 +753,7 @@ object ScaleBench {
     if (wanted("fuzzy_stream_soak")) {
       import org.apache.spark.sql.{Encoders, Row}
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      graft.streaming.UniqueStreams.useRocksDBStateStore(spark)
       val baseDocs = graft.Tables.documents(spark,
         sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
       val evalSide = baseDocs.filter(col("doc_id") % 10 === 0)
@@ -984,8 +982,7 @@ object ScaleBench {
     if (wanted("incremental_neardup")) {
       import org.apache.spark.sql.{Encoders, Row}
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      graft.streaming.UniqueStreams.useRocksDBStateStore(spark)
       val src = docsSf1.select(col("doc_id"), col("text")).orderBy("doc_id")
       val rows = src.collect()
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -1037,8 +1034,7 @@ object ScaleBench {
     if (wanted("neardup_stream_soak")) {
       import org.apache.spark.sql.{Encoders, Row}
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      graft.streaming.UniqueStreams.useRocksDBStateStore(spark)
       val src = docsSf1.select(col("doc_id"), col("text"))
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
       implicit val enc: org.apache.spark.sql.Encoder[Row] = Encoders.row(src.schema)
@@ -1104,8 +1100,7 @@ object ScaleBench {
     if (wanted("dupspan_stream_soak")) {
       import org.apache.spark.sql.{Encoders, Row}
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      graft.streaming.UniqueStreams.useRocksDBStateStore(spark)
       val src = docsSf1.select(col("doc_id"), col("text"))
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
       implicit val enc: org.apache.spark.sql.Encoder[Row] = Encoders.row(src.schema)
@@ -1171,11 +1166,7 @@ object ScaleBench {
     if (wanted("dupspan_sharded")) {
       import org.apache.spark.sql.{Encoders, Row}
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      if (sys.env.getOrElse("SPARK_GRAFT_ROCKSDB_CHANGELOG", "true").toBoolean)
-        spark.conf.set(
-          "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
+      graft.streaming.UniqueStreams.useRocksDBStateStore(spark)
       val src = docsSf1.select(col("doc_id"), col("text"))
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
       val encA: org.apache.spark.sql.Encoder[Row] = Encoders.row(src.schema)
@@ -1269,11 +1260,7 @@ object ScaleBench {
     if (wanted("linededup_sharded")) {
       import org.apache.spark.sql.{Encoders, Row}
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      if (sys.env.getOrElse("SPARK_GRAFT_ROCKSDB_CHANGELOG", "true").toBoolean)
-        spark.conf.set(
-          "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
+      graft.streaming.UniqueStreams.useRocksDBStateStore(spark)
       val src = graft.llm.CorpusOps.withSyntheticLines(docsSf1, "doc_id", "text")
         .select(col("doc_id"), col("lines_text"))
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -1346,15 +1333,11 @@ object ScaleBench {
     if (wanted("neardup_sharded")) {
       import org.apache.spark.sql.{Encoders, Row}
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      graft.streaming.UniqueStreams.useRocksDBStateStore(spark)
       // stage A runs 32 RocksDB stores (one per shuffle partition) that
-      // each commit per micro-batch; changelog checkpointing replaces the
-      // per-commit full snapshot with a delta — the knob that matters
-      // when state per batch grows ×bands (toggle to measure its weight)
-      if (sys.env.getOrElse("SPARK_GRAFT_ROCKSDB_CHANGELOG", "true").toBoolean)
-        spark.conf.set(
-          "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
+      // each commit per micro-batch; the hook's changelog checkpointing
+      // replaces the per-commit full snapshot with a delta — what matters
+      // when state per batch grows ×bands
       val src = docsSf1.select(col("doc_id"), col("text"))
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
       implicit val encA: org.apache.spark.sql.Encoder[Row] = Encoders.row(src.schema)
@@ -1467,8 +1450,7 @@ object ScaleBench {
     if (wanted("neardup_stream_shuffled")) {
       import org.apache.spark.sql.{Encoders, Row}
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      graft.streaming.UniqueStreams.useRocksDBStateStore(spark)
       val src = docsSf1.select(col("doc_id"), col("text"))
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
       implicit val enc: org.apache.spark.sql.Encoder[Row] = Encoders.row(src.schema)
@@ -1524,8 +1506,7 @@ object ScaleBench {
         .split(",").map(_.trim.toInt).toSeq.foreach { ppg =>
       import org.apache.spark.sql.{Encoders, Row}
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      graft.streaming.UniqueStreams.useRocksDBStateStore(spark)
       val src = embSf1.select(col("vec_id"), col("embedding"))
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
       implicit val enc: org.apache.spark.sql.Encoder[Row] = Encoders.row(src.schema)
@@ -1590,8 +1571,7 @@ object ScaleBench {
         .split(",").map(_.trim.toInt).toSeq.foreach { nPlanes =>
       import org.apache.spark.sql.{Encoders, Row}
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      graft.streaming.UniqueStreams.useRocksDBStateStore(spark)
       val src = embSf1.select(col("vec_id"), col("embedding"))
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
       implicit val enc: org.apache.spark.sql.Encoder[Row] = Encoders.row(src.schema)
@@ -1632,8 +1612,7 @@ object ScaleBench {
     if (wanted("emb_ann_pq_stream_soak")) {
       import org.apache.spark.sql.{Encoders, Row}
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      graft.streaming.UniqueStreams.useRocksDBStateStore(spark)
       val src = embSf1.select(col("vec_id"), col("embedding"))
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
       implicit val enc: org.apache.spark.sql.Encoder[Row] = Encoders.row(src.schema)
@@ -1749,8 +1728,7 @@ object ScaleBench {
     if (wanted("bm25_ingest_scale")) {
       import org.apache.spark.sql.{Encoders, Row}
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      graft.streaming.UniqueStreams.useRocksDBStateStore(spark)
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
       val tagged = docsSf1.select(col("doc_id"), col("text"),
         (col("doc_id") % 1000 === 0).as("is_query"))
@@ -1802,8 +1780,7 @@ object ScaleBench {
     if (wanted("emb_ann_lsh_sharded_soak")) {
       import org.apache.spark.sql.{DataFrame, Encoders, Row}
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      graft.streaming.UniqueStreams.useRocksDBStateStore(spark)
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
       val src = embSf1.select(col("vec_id"), col("embedding"))
       val ids = embSf1.agg(min(col("vec_id")).cast("long"),
@@ -1909,8 +1886,7 @@ object ScaleBench {
     if (wanted("emb_ann_sharded_stream_soak")) {
       import org.apache.spark.sql.{DataFrame, Encoders, Row}
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      graft.streaming.UniqueStreams.useRocksDBStateStore(spark)
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
       val src = embSf1.select(col("vec_id"), col("embedding"))
       val (cb, _) = graft.llm.Similarity.anchorCodebook(embSf1, "vec_id", "embedding",

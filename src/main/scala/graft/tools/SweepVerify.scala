@@ -1772,10 +1772,7 @@ SELECT id_a, id_b, shared, n_a, n_b FROM vpairs"""
           val np = pick(Seq(4, 6, 8)); val kk = pick(Seq(5, 10))
           val form = pick(Seq("mono", "sharded"))
           val chunkA = pick(Seq(700, 1000))
-          val pKey = "spark.sql.streaming.stateStore.providerClass"
-          val prev = spark.conf.getOption(pKey)
-          graft.streaming.UniqueStreams.useRocksDBStateStore(spark)
-          val d = try {
+          val d = graft.streaming.UniqueStreams.withRocksDBStateStore(spark) {
             if (form == "mono")
               graft.streaming.Replay.replay(spark, emb, "vec_id", chunkA,
                 "append")(sdf => graft.streaming.AnnStream.annStream(sdf,
@@ -1790,9 +1787,6 @@ SELECT id_a, id_b, shared, n_a, n_b FROM vpairs"""
                   graft.streaming.AnnStream.annMergeStage(sdf,
                     nProbe = np + 1, k = kk))
             }
-          } finally prev match {
-            case Some(v) => spark.conf.set(pKey, v)
-            case None => spark.conf.unset(pKey)
           }
           (d.select("query_id", "corpus_id", "rank"),
             embAnnStreamSql(np, kk),
@@ -1811,10 +1805,7 @@ SELECT id_a, id_b, shared, n_a, n_b FROM vpairs"""
           val restart = rng.nextBoolean()
           val tagged = docs.select(col("doc_id"), col("text"),
             (col("doc_id") % mod === 0).as("is_query"))
-          val pKey = "spark.sql.streaming.stateStore.providerClass"
-          val prev = spark.conf.getOption(pKey)
-          graft.streaming.UniqueStreams.useRocksDBStateStore(spark)
-          val raw = try {
+          val raw = graft.streaming.UniqueStreams.withRocksDBStateStore(spark) {
             def build(sdf: DataFrame) = graft.streaming.Bm25IngestStream
               .bm25IngestStream(sdf, "doc_id", "text", "is_query", maxDf = maxDf)
             if (restart)
@@ -1822,9 +1813,6 @@ SELECT id_a, id_b, shared, n_a, n_b FROM vpairs"""
                 "doc_id", chunk)(build)
             else graft.streaming.Replay.replay(spark, tagged, "doc_id",
               chunk, "append")(build)
-          } finally prev match {
-            case Some(v) => spark.conf.set(pKey, v)
-            case None => spark.conf.unset(pKey)
           }
           (raw.groupBy("query_id", "doc_id")
             .agg(count(lit(1)).as("n_match"), sum(col("tf")).as("tf_sum"),
@@ -2220,10 +2208,7 @@ SELECT id_a, id_b, shared, n_a, n_b FROM tpr""",
           val thr = pick(thrGrid)
           val chunk2 = pick(Seq(50, 100, 500))
           val hkRestart = rng.nextBoolean()
-          val pKey2 = "spark.sql.streaming.stateStore.providerClass"
-          val prev2 = spark.conf.getOption(pKey2)
-          graft.streaming.UniqueStreams.useRocksDBStateStore(spark)
-          val hkOut = try {
+          val hkOut = graft.streaming.UniqueStreams.withRocksDBStateStore(spark) {
             if (hkRestart)
               graft.streaming.Replay.replayWithRestart(spark, docs, "doc_id",
                 chunk2)(sdf => graft.streaming.HotKeyStream.hotKeyAlerts(
@@ -2232,9 +2217,6 @@ SELECT id_a, id_b, shared, n_a, n_b FROM tpr""",
               graft.streaming.Replay.replay(spark, docs, "doc_id", chunk2,
                 "append")(sdf => graft.streaming.HotKeyStream.hotKeyAlerts(
                   sdf, kc2, "doc_id", thr, wc2))
-          } finally prev2 match {
-            case Some(v) => spark.conf.set(pKey2, v)
-            case None => spark.conf.unset(pKey2)
           }
           (hkOut,
             s"""WITH t AS (SELECT $kc2 AS key, doc_id AS o,
@@ -2255,10 +2237,7 @@ SELECT id_a, id_b, shared, n_a, n_b FROM tpr""",
           val epsQ = pick(Seq(0.25, 0.3125, 0.375))
           val mc = pick(Seq(25, 60, 1 << 20))
           val chunk = pick(Seq(300, 1000))
-          val pKey = "spark.sql.streaming.stateStore.providerClass"
-          val prev = spark.conf.getOption(pKey)
-          graft.streaming.UniqueStreams.useRocksDBStateStore(spark)
-          val d = try {
+          val d = graft.streaming.UniqueStreams.withRocksDBStateStore(spark) {
             val cents = graft.llm.Similarity.semDedupCentroids(emb, "vec_id",
               "embedding", dim = 64, nCells = nc, lloydIters = ll)
             graft.streaming.Replay.replay(spark, emb, "vec_id", chunk,
@@ -2270,9 +2249,6 @@ SELECT id_a, id_b, shared, n_a, n_b FROM tpr""",
               .agg(max_by(col("change"), col("upd_seq")).as("change"))
               .filter(col("change") === "keep")
               .select("vec_id")
-          } finally prev match {
-            case Some(v) => spark.conf.set(pKey, v)
-            case None => spark.conf.unset(pKey)
           }
           (d, embSemDedupSql(nc, ll, epsQ, mc),
             s"c${nc}_l${ll}_e${epsQ}_mc${mc}_ch$chunk")
@@ -2285,10 +2261,7 @@ SELECT id_a, id_b, shared, n_a, n_b FROM tpr""",
           val nc = pick(Seq(8, 16, 32)); val np = pick(Seq(2, 4))
           val ns = pick(Seq(4, 8)); val kk = pick(Seq(5, 10))
           val rs = pick(Seq(false, true))
-          val pKey = "spark.sql.streaming.stateStore.providerClass"
-          val prev = spark.conf.getOption(pKey)
-          graft.streaming.UniqueStreams.useRocksDBStateStore(spark)
-          val d = try {
+          val d = graft.streaming.UniqueStreams.withRocksDBStateStore(spark) {
             val (cent, cb) =
               if (rs) {
                 val model = graft.llm.Similarity.residualPqModel(emb, "vec_id",
@@ -2305,9 +2278,6 @@ SELECT id_a, id_b, shared, n_a, n_b FROM tpr""",
               "append")(sdf => graft.streaming.AnnStream.ivfPqAnnStream(sdf,
                 "vec_id", "embedding", centroids = cent, codebook = cb,
                 codesPerSub = 16, k = kk, nProbe = np, residual = rs))
-          } finally prev match {
-            case Some(v) => spark.conf.set(pKey, v)
-            case None => spark.conf.unset(pKey)
           }
           (d, if (rs) embIvfPqResidualSql(nc, np, ns, 16, kk, stream = true)
               else embIvfPqSql(nc, np, ns, 16, kk, stream = true),
@@ -2326,10 +2296,7 @@ SELECT id_a, id_b, shared, n_a, n_b FROM tpr""",
           val rs = pick(Seq(false, true))
           val chunkA = pick(Seq(700, 1000))
           val ll = if (rs) 0 else pick(Seq(0, 1, 2))
-          val pKey = "spark.sql.streaming.stateStore.providerClass"
-          val prev = spark.conf.getOption(pKey)
-          graft.streaming.UniqueStreams.useRocksDBStateStore(spark)
-          val d = try {
+          val d = graft.streaming.UniqueStreams.withRocksDBStateStore(spark) {
             val (cent, cb) =
               if (rs) {
                 val model = graft.llm.Similarity.residualPqModel(emb, "vec_id",
@@ -2351,9 +2318,6 @@ SELECT id_a, id_b, shared, n_a, n_b FROM tpr""",
             graft.streaming.Replay.replay(spark, hits, "query_id", 1 << 20,
               "append")(sdf =>
                 graft.streaming.AnnStream.annMergeStage(sdf, nProbe = np, k = kk))
-          } finally prev match {
-            case Some(v) => spark.conf.set(pKey, v)
-            case None => spark.conf.unset(pKey)
           }
           (d, if (rs) embIvfPqResidualSql(nc, np, ns, 16, kk, stream = true)
               else embIvfPqSql(nc, np, ns, 16, kk, stream = true, lloydIters = ll),

@@ -1,0 +1,176 @@
+package graft
+
+import java.nio.file.{Files, Path => JPath}
+import java.util.EnumSet
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{CreateFlag, FileContext, Options, Path}
+import org.apache.hadoop.fs.local.LocalFs
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.sql.execution.streaming.state.StateStore
+import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.streaming.{ForkFreeLocalFs, Replay, UniqueStreams}
+
+/** The state-store hook (`UniqueStreams.useRocksDBStateStore`): its fork-free
+  * local file system leaves exactly the files, bytes, `.crc` checksums and
+  * permissions Hadoop's `LocalFs` leaves; the save-and-restore helper puts
+  * every key back; and a changelog-checkpointed restart past a snapshot
+  * replays to the uninterrupted output.
+  */
+class StateStoreHookSpec extends AnyFunSuite with SparkTestSession {
+  import spark.implicits._
+
+  private val fsKey = "fs.AbstractFileSystem.file.impl"
+
+  private def fileContext(forkFree: Boolean): FileContext = {
+    val conf = new Configuration()
+    conf.set(fsKey, (if (forkFree) classOf[ForkFreeLocalFs] else classOf[LocalFs]).getName)
+    FileContext.getFileContext(new java.net.URI("file:///"), conf)
+  }
+
+  /** Every file under `root`: relative path -> (bytes, rwx permissions). */
+  private def tree(root: JPath): Map[String, (Seq[Byte], String)] =
+    Files.walk(root).iterator.asScala.filter(_ != root).map { p =>
+      val bytes = if (Files.isRegularFile(p)) Files.readAllBytes(p).toSeq else Seq.empty
+      root.relativize(p).toString ->
+        (bytes, java.nio.file.attribute.PosixFilePermissions.toString(
+          Files.getPosixFilePermissions(p)))
+    }.toMap
+
+  private def unixMode(p: JPath): Int = Files.getAttribute(p, "unix:mode").asInstanceOf[Int]
+
+  /** Run `ops` once through each file system in its own temp root. */
+  private def bothSides(ops: (FileContext, String => Path) => Unit): (JPath, JPath) = {
+    val roots = Seq(false, true).map { forkFree =>
+      val root = Files.createTempDirectory(if (forkFree) "ff_fs" else "stock_fs")
+      ops(fileContext(forkFree), rel => new Path(root.resolve(rel).toUri))
+      root
+    }
+    (roots(0), roots(1))
+  }
+
+  private def write(fc: FileContext, p: Path, text: String): Unit = {
+    val out = fc.create(p, EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE),
+      Options.CreateOpts.createParent())
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+  }
+
+  test("fork-free FileContext leaves the same files, bytes, .crc files and " +
+      "permissions as Hadoop's LocalFs") {
+    val (stock, forkFree) = bothSides { (fc, at) =>
+      // mkdir with parents, create+write+close, rename with overwrite, delete
+      fc.mkdir(at("a/b/c"), FsPermission.getDirDefault, true)
+      write(fc, at("a/b/c/data.tmp"), "version one\n")
+      write(fc, at("a/b/c/data"), "to be replaced\n")
+      fc.rename(at("a/b/c/data.tmp"), at("a/b/c/data"), Options.Rename.OVERWRITE)
+      write(fc, at("a/gone"), "deleted below\n")
+      assert(fc.delete(at("a/gone"), false))
+      fc.mkdir(at("m"), new FsPermission("750"), false)
+      write(fc, at("m/x"), "x" * 2000)
+      fc.setPermission(at("m/x"), new FsPermission("604"))
+    }
+    val (a, b) = (tree(stock), tree(forkFree))
+    assert(a.keySet === Set("a", "a/b", "a/b/c", "a/b/c/data", "a/b/c/.data.crc",
+      "m", "m/x", "m/.x.crc"), "fixture drift: unexpected stock layout")
+    assert(b === a)
+    assert(new String(b("a/b/c/data")._1.toArray, "UTF-8") === "version one\n")
+    assert(b("m")._2 === "rwxr-x---" && b("m/x")._2 === "rw----r--")
+  }
+
+  test("a symlink still reports isSymlink; a sticky bit takes Hadoop's own path") {
+    val (stock, forkFree) = bothSides { (fc, at) =>
+      write(fc, at("target"), "t")
+      Files.createSymbolicLink(java.nio.file.Paths.get(at("link").toUri),
+        java.nio.file.Paths.get(at("target").toUri))
+      fc.mkdir(at("shared"), FsPermission.getDirDefault, false)
+      fc.setPermission(at("shared"), new FsPermission("1777"))
+    }
+    Seq(stock, forkFree).foreach { root =>
+      val link = new Path(root.resolve("link").toString) // scheme-less, as readlink sees it
+      val fc = fileContext(root == forkFree)
+      val st = fc.getFileLinkStatus(link)
+      assert(st.isSymlink, s"$root: link lost its symlink status")
+      assert(st.getSymlink.toUri.getPath === root.resolve("target").toString)
+      assert(!fc.getFileLinkStatus(new Path(root.resolve("target").toString)).isSymlink)
+      assert(unixMode(root.resolve("shared")) % 0x1000 === Integer.parseInt("1777", 8),
+        s"$root: sticky directory mode lost")
+    }
+  }
+
+  test("useRocksDBStateStore sets all three keys; withRocksDBStateStore " +
+      "restores a pre-set value and unsets a key that had none") {
+    val keys = Seq("spark.sql.streaming.stateStore.providerClass",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", fsKey)
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    try {
+      val hdfs = "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+      spark.conf.set(keys(0), hdfs)
+      spark.conf.set(keys(1), "false")
+      spark.conf.unset(fsKey)
+      val inside = UniqueStreams.withRocksDBStateStore(spark) {
+        keys.map(k => spark.conf.getOption(k))
+      }
+      assert(inside === Seq(
+        Some("org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"),
+        Some("true"), Some(classOf[ForkFreeLocalFs].getName)))
+      assert(keys.map(k => spark.conf.getOption(k)) === Seq(Some(hdfs), Some("false"), None))
+      intercept[IllegalStateException](UniqueStreams.withRocksDBStateStore(spark) {
+        throw new IllegalStateException("body failed")
+      })
+      assert(keys.map(k => spark.conf.getOption(k)) === Seq(Some(hdfs), Some("false"), None))
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("everStream restarted past a snapshot (version 12 of 24, snapshot every " +
+      "10 deltas) replays to the uninterrupted change log") {
+    // 480 events over 37 keys, 20 per micro-batch: 24 batches, restart
+    // after version 12, so recovery loads the version-10 snapshot and
+    // replays changelog files 11 and 12
+    val events = (1 to 480).map(i => (i.toLong, s"k${(i * 7) % 37}")).toDF("seq", "key")
+    def log(df: org.apache.spark.sql.DataFrame) =
+      df.select("change", "seq", "key").as[(String, Long, String)].collect().toSeq.sorted
+    val replays = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new StreamingQueryListener {
+      def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+      def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        e.progress.stateOperators.foreach { op =>
+          Option(op.customMetrics.get("rocksdbNumReplayChangelogFiles"))
+            .foreach(n => replays.add(n.longValue))
+        }
+    }
+    val intervalKey = "spark.sql.streaming.stateStore.maintenanceInterval"
+    // the maintenance thread uploads queued snapshots; restart it on a short
+    // interval so the version-10 snapshot is on disk before the restart
+    StateStore.stopMaintenanceTask()
+    spark.conf.set(intervalKey, "100ms")
+    spark.streams.addListener(listener)
+    try UniqueStreams.withRocksDBStateStore(spark) {
+      val straight = log(Replay.replay(spark, events, "seq", 20, "update")(sdf =>
+        UniqueStreams.everStream(sdf, Seq("key"), Some("seq"))))
+      val restarted = log(Replay.replayWithRestart(spark, events, "seq", 20)(sdf =>
+        UniqueStreams.everStream(sdf, Seq("key"), Some("seq"))))
+      assert(straight.count(_._1 == "insert") === 480)
+      assert(straight.count(_._1 == "expire") === 480 - 37)
+      assert(restarted === straight)
+    } finally {
+      spark.streams.removeListener(listener)
+      StateStore.stopMaintenanceTask()
+      spark.conf.unset(intervalKey)
+    }
+    val deadline = System.nanoTime + 30e9.toLong
+    while (!replays.asScala.exists(_ > 0) && System.nanoTime < deadline) Thread.sleep(100)
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions").toLong
+    val replayed = replays.asScala.max
+    // from a snapshot: 2 changelog files a partition; without one: 12
+    assert(replayed > 0 && replayed < 12 * partitions,
+      s"recovery replayed $replayed changelog files over $partitions partitions")
+  }
+}
