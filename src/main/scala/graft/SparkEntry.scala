@@ -762,7 +762,7 @@ object SparkEntry {
     // alphabet, the id contract, and the min-rank encode in SQL.
     "doc_bpe_encode_bytes" -> ((s, d) => {
       val model = llm.Bpe.fromMergesByteLevel(
-        llm.Bpe.parseMergesLines(bpeBytesMergesLines), None,
+        llm.Bpe.parseMergesLines(TextOracles.bpeBytesMergesLines), None,
         pretokenize = false)
       Tables.documents(s, d).select(col("doc_id"),
           posexplode(llm.Bpe.encode(substring(col("text"), 1, 120), model)))
@@ -1578,7 +1578,7 @@ object SparkEntry {
     // STREAMING LM scoring: the corpus replays in doc_id order against a
     // STATIC pre-trained bigram model (stream-static joins + one updating
     // per-doc aggregation — the CCNet deployment shape). Same integer
-    // surface as the batch row, so it shares docLmPplOracle.
+    // surface as the batch row, so it shares its oracle (docLmPplSql).
     "doc_lm_ppl_stream_replay" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       val model = llm.CorpusOps.lmTrain(docs, "text")
@@ -1591,7 +1591,7 @@ object SparkEntry {
     // against a STATIC pre-trained bucket model (one stream-static join
     // + one updating per-doc aggregation — the data-selection deployment
     // shape). Same integer surface as the batch row, so it shares
-    // docDsirOracle. (The replay feeds whole docs per chunk, so each
+    // docDsirSql. (The replay feeds whole docs per chunk, so each
     // doc's gram rows land in one micro-batch; the updating aggregation
     // itself is straddle-safe by construction, like doc_lm_ppl's.)
     "doc_dsir_stream_replay" -> ((s, d) => {
@@ -1609,7 +1609,7 @@ object SparkEntry {
     // STREAMING BM25 retrieval: the eval-split queries replay against a
     // STATIC pre-built index (stateless stream-static joins + one
     // updating (query, doc) aggregation — the search deployment shape).
-    // Same integer surface as the batch row, so it shares docBm25Oracle.
+    // Same integer surface as the batch row, so it shares docBm25Sql.
     "doc_bm25_stream_replay" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       val idx0 = llm.TextSearch.bm25Index(
@@ -1630,7 +1630,7 @@ object SparkEntry {
     // ... and the kill+restart form: the query stream is stopped at the
     // half-way chunk and recovered from its checkpoint; the updating
     // (query, doc) aggregation restores to the pre-batch version, so the
-    // final statistics are identical and the row shares docBm25Oracle
+    // final statistics are identical and the row shares docBm25Sql
     // (the repo's standard restart coverage, like doc_neardup_restart).
     "doc_bm25_restart_stream_replay" -> ((s, d) => {
       val docs = Tables.documents(s, d)
@@ -2173,6 +2173,9 @@ object SparkEntry {
     */
   def oracleSql: Map[String, String] = {
     import UniqueOracles._
+    import TextOracles._
+    import EmbeddingOracles._
+    import MediaOracles._
     val user = Seq("user_id")
     Map(
       "ever_current" -> everSql(user, "current"),
@@ -2228,341 +2231,185 @@ object SparkEntry {
           |JOIN nation n ON c.c_nationkey = n.n_nationkey
           |JOIN region r ON n.n_regionkey = r.r_regionkey
           |GROUP BY r_name""".stripMargin,
-      "doc_exact_dedup" ->
-        """SELECT doc_id, text, lang, source, n_chars FROM (
-          |  SELECT *, row_number() OVER (PARTITION BY text ORDER BY doc_id) AS rn
-          |  FROM documents) WHERE rn = 1""".stripMargin,
+      "doc_exact_dedup" -> exactDedupSql,
       // firstStream keyed on text, fed in doc_id order = exactDedup
-      "doc_exact_dedup_stream_replay" ->
-        """SELECT doc_id, text, lang, source, n_chars FROM (
-          |  SELECT *, row_number() OVER (PARTITION BY text ORDER BY doc_id) AS rn
-          |  FROM documents) WHERE rn = 1""".stripMargin,
-      "doc_text_stats" ->
-        """SELECT doc_id,
-          |  CAST(len(list_filter(str_split(text, ' '), x -> x <> '')) AS INTEGER) AS ws_tokens,
-          |  CAST(len(regexp_extract_all(text, '\w+|[^\w\s]')) AS INTEGER) AS bpeish_tokens
-          |FROM documents""".stripMargin,
-      "doc_quality" -> docQualityOracle,
-      "doc_langid" -> docLangIdOracle,
-      "doc_lm_ppl" -> docLmPplOracle,
-      "doc_lm_ppl_stream_replay" -> docLmPplOracle,
-      "doc_lm_ppl_windowed_stream_replay" -> docLmPplOracle,
-      "doc_dsir_windowed_stream_replay" -> docDsirOracle,
-      "doc_dsir_windowed_restart_stream_replay" -> docDsirOracle,
-      "doc_bm25_windowed_stream_replay" -> docBm25Oracle,
-      "doc_quality_clf_md5" -> docQualityClfOracle,
-      "doc_quality_clf_stream_replay" -> docQualityClfOracle,
-      "doc_dsir_md5" -> docDsirOracle,
-      "doc_dsir_stream_replay" -> docDsirOracle,
-      "doc_bm25_stats" -> docBm25Oracle,
-      "doc_bm25_stream_replay" -> docBm25Oracle,
-      "doc_bm25_index_stream_replay" -> docBm25IngestOracle,
-      "doc_bm25_index_restart_stream_replay" -> docBm25IngestOracle,
-      "doc_bm25_restart_stream_replay" -> docBm25Oracle,
-      // ---- corpus-curation tier mirrors (llm.CorpusOps). Tokenization =
-      // the established str_split_regex idiom; word n-grams via 1-based
-      // inclusive list slices; ratios are single double divisions of
-      // integer counts so values are bit-exact across engines.
-      "doc_repetition" ->
-        """WITH t AS (SELECT doc_id,
-          |  list_filter(str_split_regex(lower(text), '[^\p{L}\p{Nd}]+'), x -> x <> '') AS toks
-          |  FROM documents),
-          |b AS (SELECT doc_id, CAST(len(toks) AS INTEGER) AS n_words,
-          |  len(list_distinct(toks)) AS n_distinct,
-          |  list_transform(generate_series(1, greatest(len(toks) - 1, 0)),
-          |    i -> array_to_string(toks[i:i+1], ' ')) AS grams
-          |  FROM t),
-          |w AS (SELECT doc_id, max(cnt) AS top_word_cnt FROM (
-          |  SELECT doc_id, w, count(*) AS cnt
-          |  FROM (SELECT doc_id, unnest(toks) AS w FROM t) GROUP BY doc_id, w)
-          |  GROUP BY doc_id),
-          |g AS (SELECT doc_id, max(cnt) AS top_bigram_cnt, sum(cnt) AS n_bigrams FROM (
-          |  SELECT doc_id, gr, count(*) AS cnt
-          |  FROM (SELECT doc_id, unnest(grams) AS gr FROM b) GROUP BY doc_id, gr)
-          |  GROUP BY doc_id)
-          |SELECT b.doc_id, n_words,
-          |  CASE WHEN n_words = 0 THEN 0.0
-          |    ELSE CAST(n_words - n_distinct AS DOUBLE) / n_words END AS dup_word_frac,
-          |  CASE WHEN n_words = 0 THEN 0.0
-          |    ELSE CAST(coalesce(top_word_cnt, 0) AS DOUBLE) / n_words END AS top_word_frac,
-          |  CASE WHEN coalesce(n_bigrams, 0) = 0 THEN 0.0
-          |    ELSE CAST(top_bigram_cnt AS DOUBLE) / n_bigrams END AS top_bigram_frac
-          |FROM b
-          |LEFT JOIN w ON b.doc_id = w.doc_id
-          |LEFT JOIN g ON b.doc_id = g.doc_id""".stripMargin,
-      "doc_boilerplate_phrases" ->
-        """WITH t AS (SELECT doc_id,
-          |  list_filter(str_split_regex(lower(text), '[^\p{L}\p{Nd}]+'), x -> x <> '') AS toks
-          |  FROM documents),
-          |g AS (SELECT doc_id, unnest(list_transform(
-          |    generate_series(1, greatest(len(toks) - 2, 0)),
-          |    i -> array_to_string(toks[i:i+2], ' '))) AS gram FROM t)
-          |SELECT gram, count(DISTINCT doc_id) AS doc_freq, count(*) AS total_cnt
-          |FROM g GROUP BY gram HAVING count(DISTINCT doc_id) >= 5""".stripMargin,
-      "doc_decontam" ->
-        """WITH t AS (SELECT doc_id,
-          |  list_filter(str_split_regex(lower(text), '[^\p{L}\p{Nd}]+'), x -> x <> '') AS toks
-          |  FROM documents),
-          |g AS (SELECT doc_id, unnest(list_distinct(list_transform(
-          |    generate_series(1, greatest(len(toks) - 4, 0)),
-          |    i -> array_to_string(toks[i:i+4], ' ')))) AS gram FROM t),
-          |e AS (SELECT DISTINCT gram, doc_id AS eval_id FROM g WHERE doc_id % 50 = 0),
-          |h AS (SELECT g.doc_id,
-          |    count(DISTINCT g.gram) AS n_hit_grams,
-          |    count(DISTINCT e.eval_id) AS n_eval_docs
-          |  FROM g JOIN e USING (gram) WHERE g.doc_id % 50 <> 0 GROUP BY g.doc_id)
-          |SELECT d.doc_id,
-          |  coalesce(n_hit_grams, 0) AS n_hit_grams,
-          |  coalesce(n_eval_docs, 0) AS n_eval_docs,
-          |  coalesce(n_hit_grams, 0) > 0 AS contaminated
-          |FROM documents d LEFT JOIN h ON d.doc_id = h.doc_id
-          |WHERE d.doc_id % 50 <> 0""".stripMargin,
-      "doc_pack" -> docPackOracle,
-      "doc_pack_stream_replay" -> docPackOracle,
+      "doc_exact_dedup_stream_replay" -> exactDedupSql,
+      "doc_text_stats" -> docTextStatsSql,
+      "doc_quality" -> docQualitySql,
+      "doc_langid" -> docLangIdSql,
+      // self-trained: the model's train split is every document
+      "doc_lm_ppl" -> docLmPplSql(None),
+      "doc_lm_ppl_stream_replay" -> docLmPplSql(None),
+      "doc_lm_ppl_windowed_stream_replay" -> docLmPplSql(None),
+      "doc_dsir_windowed_stream_replay" -> docDsirSql(10, 2, Seq(1, 2)),
+      "doc_dsir_windowed_restart_stream_replay" -> docDsirSql(10, 2, Seq(1, 2)),
+      "doc_bm25_windowed_stream_replay" -> docBm25Sql(10, 0.5),
+      "doc_quality_clf_md5" -> docQualityClfSql,
+      "doc_quality_clf_stream_replay" -> docQualityClfSql,
+      "doc_dsir_md5" -> docDsirSql(10, 2, Seq(1, 2)),
+      "doc_dsir_stream_replay" -> docDsirSql(10, 2, Seq(1, 2)),
+      "doc_bm25_stats" -> docBm25Sql(10, 0.5),
+      "doc_bm25_stream_replay" -> docBm25Sql(10, 0.5),
+      "doc_bm25_index_stream_replay" -> docBm25IngestSql(10, 250),
+      "doc_bm25_index_restart_stream_replay" -> docBm25IngestSql(10, 250),
+      "doc_bm25_restart_stream_replay" -> docBm25Sql(10, 0.5),
+      "doc_repetition" -> docRepetitionSql,
+      "doc_boilerplate_phrases" -> boilerplateSql(3, 5),
+      "doc_decontam" -> decontamSql(5, 50),
+      // the streaming operator's per-shard running fold in id order IS the
+      // batch window
+      "doc_pack" -> packSql(512),
+      "doc_pack_stream_replay" -> packSql(512),
       // the four-stage curation chain, mirrored end to end (each stage
       // consumes the previous stage's output)
-      "doc_curation_pipeline_md5" -> docCurationPipelineOracle,
-      "mm_curation_pipeline_md5" -> mmCurationPipelineOracle,
-      "doc_sample_md5" ->
-        """SELECT doc_id, text, lang, source, n_chars FROM documents
-          |WHERE substr(md5(CAST(doc_id AS VARCHAR) || ':' || text), 1, 4) <
-          |  CASE WHEN lang = 'en' THEN '1999' ELSE '3333' END""".stripMargin,
-      // dropped-line relation (and its streaming replay): 0-based (doc,
+      "doc_curation_pipeline_md5" -> curationPipelineSql(3, 4, 2, 0.2, 1000, 10, 10, 512),
+      "mm_curation_pipeline_md5" ->
+        mmCurationPipelineSql(3, 32, 3, 4, 2, 0.2, 1000, 10, 10, 512),
+      "doc_sample_md5" -> sampleSql("1999", "3333"),
+      // dropped-line relation (and its streaming replays): 0-based (doc,
       // pos) of every line appearing in >= 3 distinct docs
-      "doc_dup_lines" -> docDupLinesOracle,
-      "doc_dup_lines_stream_replay" -> docDupLinesOracle,
-      "doc_dup_lines_sharded_stream_replay" -> docDupLinesOracle,
-      // CCNet-style line dedup over the synthetic-lines corpus: drop lines
-      // appearing in >= 3 distinct docs; mirror reproduces the
-      // withSyntheticLines framing (header rotation + shared footer)
-      "doc_line_dedup" ->
-        """WITH t AS (SELECT doc_id,
-          |  list_filter(str_split_regex(lower(text), '[^\p{L}\p{Nd}]+'), x -> x <> '') AS toks
-          |  FROM documents),
-          |p AS (SELECT doc_id,
-          |  (['subscribe to our newsletter today', 'click here to read more',
-          |    'copyright acme corporation', 'share this article on social media'])[CAST(doc_id % 4 + 1 AS INT)]
-          |  || chr(10) ||
-          |  array_to_string(list_transform(
-          |    generate_series(1, greatest(CAST(ceil(len(toks) / 10.0) AS INT), 1)),
-          |    i -> array_to_string(toks[(i-1)*10+1:(i-1)*10+10], ' ')), chr(10))
-          |  || chr(10) || 'all rights reserved' AS lines_text
-          |  FROM t),
-          |s AS (SELECT doc_id, str_split(lines_text, chr(10)) AS ls FROM p),
-          |l AS (SELECT doc_id, j, ls[j] AS line FROM s, unnest(generate_series(1, len(ls))) AS u(j)),
-          |dup AS (SELECT line FROM l GROUP BY line HAVING count(DISTINCT doc_id) >= 3),
-          |dr AS (SELECT doc_id, count(*) AS n_dropped FROM l
-          |       WHERE line IN (SELECT line FROM dup) GROUP BY doc_id),
-          |kt AS (SELECT doc_id, string_agg(line, chr(10) ORDER BY j) AS clean_text FROM l
-          |       WHERE line NOT IN (SELECT line FROM dup) GROUP BY doc_id)
-          |SELECT s.doc_id, len(s.ls) AS n_lines, coalesce(dr.n_dropped, 0) AS n_dropped,
-          |  coalesce(kt.clean_text, '') AS clean_text
-          |FROM s LEFT JOIN dr ON s.doc_id = dr.doc_id
-          |       LEFT JOIN kt ON s.doc_id = kt.doc_id""".stripMargin,
-      // k=5 duplicated-span detection: every 5-token window occurring >=2
-      // times corpus-wide, overlapping windows merged per doc
-      // (gaps-and-islands on a running max of inclusive span ends).
-      // The streaming replay's final (max-upd_seq) spans share the oracle.
-      "doc_dup_spans" -> docDupSpansOracle,
-      "doc_dup_spans_stream_replay" -> docDupSpansOracle,
-      "doc_dup_spans_sharded_stream_replay" -> docDupSpansOracle,
-      "doc_dup_span_removal" ->
-        """WITH t AS (SELECT doc_id,
-          |  list_filter(str_split_regex(lower(text), '[^\p{L}\p{Nd}]+'), x -> x <> '') AS toks
-          |  FROM documents),
-          |g AS (SELECT doc_id, i, array_to_string(toks[i:i+4], ' ') AS gram
-          |      FROM t, unnest(generate_series(1, greatest(len(toks) - 4, 0))) AS u(i)),
-          |dup AS (SELECT gram FROM g GROUP BY gram HAVING count(*) >= 2),
-          |h AS (SELECT doc_id, i - 1 AS s, i + 3 AS e FROM g
-          |      WHERE gram IN (SELECT gram FROM dup)),
-          |m AS (SELECT doc_id, s, e,
-          |        CASE WHEN s > coalesce(max(e) OVER (PARTITION BY doc_id ORDER BY s
-          |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1) THEN 1 ELSE 0 END AS brk
-          |      FROM h),
-          |isl AS (SELECT doc_id, s, e, sum(brk) OVER (PARTITION BY doc_id ORDER BY s
-          |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island FROM m),
-          |sp AS (SELECT doc_id, min(s) AS ss, max(e) AS ee FROM isl GROUP BY doc_id, island),
-          |cov AS (SELECT DISTINCT doc_id, p FROM sp, unnest(generate_series(ss, ee)) AS v(p)),
-          |tok AS (SELECT doc_id, j, toks[j] AS w FROM t, unnest(generate_series(1, len(toks))) AS u(j)),
-          |kept AS (SELECT tok.doc_id, j, w FROM tok LEFT JOIN cov
-          |           ON tok.doc_id = cov.doc_id AND tok.j - 1 = cov.p WHERE cov.p IS NULL),
-          |ktxt AS (SELECT doc_id, string_agg(w, ' ' ORDER BY j) AS clean_text FROM kept GROUP BY doc_id),
-          |ndup AS (SELECT doc_id, count(*) AS n_dup_tokens FROM cov GROUP BY doc_id)
-          |SELECT t.doc_id, len(t.toks) AS n_tokens,
-          |  coalesce(ndup.n_dup_tokens, 0) AS n_dup_tokens,
-          |  coalesce(ktxt.clean_text, '') AS clean_text
-          |FROM t LEFT JOIN ndup ON t.doc_id = ndup.doc_id
-          |       LEFT JOIN ktxt ON t.doc_id = ktxt.doc_id""".stripMargin,
-      "doc_pii_redact" ->
-        """WITH p AS (SELECT doc_id,
-          |  text || ' contact user' || CAST(doc_id AS VARCHAR)
-          |    || '@mail.example.com or call +1-555-'
-          |    || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') || ' today' AS pii_text
-          |  FROM documents)
-          |SELECT doc_id,
-          |  regexp_replace(regexp_replace(pii_text,
-          |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-          |    '\+\d{1,3}-\d{3}-\d{4}', '<PHONE>', 'g') AS redacted,
-          |  CAST(len(regexp_extract_all(pii_text,
-          |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS INTEGER) AS n_emails,
-          |  CAST(len(regexp_extract_all(pii_text,
-          |    '\+\d{1,3}-\d{3}-\d{4}')) AS INTEGER) AS n_phones
-          |FROM p""".stripMargin,
-      "doc_minhash_pairs_md5" -> docMinhashMd5Oracle,
-      "doc_fuzzy_pairs_md5" -> docFuzzyPairsOracle,
-      "doc_fuzzy_decontam_md5" -> docFuzzyDecontamOracle,
+      "doc_dup_lines" -> dupLinesSql(3),
+      "doc_dup_lines_stream_replay" -> dupLinesSql(3),
+      "doc_dup_lines_sharded_stream_replay" -> dupLinesSql(3),
+      "doc_line_dedup" -> lineDedupSql(3),
+      // the streaming replays' final (max-upd_seq) spans share the oracle
+      "doc_dup_spans" -> dupSpansSql(5, 2),
+      "doc_dup_spans_stream_replay" -> dupSpansSql(5, 2),
+      "doc_dup_spans_sharded_stream_replay" -> dupSpansSql(5, 2),
+      "doc_dup_span_removal" -> spanRemovalSql(5, 2),
+      "doc_pii_redact" -> docPiiRedactSql,
+      "doc_minhash_pairs_md5" -> minhashPairsSql(3, 4, 2, 0.2, 1000),
+      "doc_fuzzy_pairs_md5" -> crossPairsSql(3, 4, 2, 0.2, 1000, 10),
+      "doc_fuzzy_decontam_md5" -> fuzzyDecontamSql(3, 4, 2, 0.2, 1000, 10),
       // stream-static replay shares the batch cross-pairs mirror: with
       // neither cap binding (50 eval docs, cap 1000) the admitted bucket
       // sets coincide, and the replay feeds every train doc
-      "doc_fuzzy_pairs_stream_replay" -> docFuzzyPairsOracle,
-      // cap-BINDING geometry: the two cap policies diverge by design, so
-      // each row gets its OWN mirror — combined-occupancy (batch) vs
-      // eval-side-only (stream)
-      "doc_fuzzy_pairs_capped_md5" -> docFuzzyCappedOracle(evalSideOnly = false),
-      "doc_fuzzy_pairs_capped_stream_replay" -> docFuzzyCappedOracle(evalSideOnly = true),
-      "doc_source_cap" ->
-        """SELECT doc_id, source FROM (
-          |  SELECT doc_id, source,
-          |    row_number() OVER (PARTITION BY source ORDER BY doc_id) AS rk
-          |  FROM documents) WHERE rk <= 10""".stripMargin,
+      "doc_fuzzy_pairs_stream_replay" -> crossPairsSql(3, 4, 2, 0.2, 1000, 10),
+      // cap-BINDING geometry (at sf0.01 the hottest shared bucket holds
+      // ~355 train + ~41 eval members): the two cap policies diverge by
+      // design, so each row gets its OWN mirror — combined occupancy
+      // (batch) vs eval-side only (stream)
+      "doc_fuzzy_pairs_capped_md5" -> crossPairsSql(1, 2, 1, 0.1, 40, 10),
+      "doc_fuzzy_pairs_capped_stream_replay" -> crossPairsStreamSql(1, 2, 1, 0.1, 40, 10),
+      "doc_source_cap" -> sourceCapSql("source", 10),
       // token-budget mixing: the per-source running-sum cut, greedy fill
-      // (the crossing doc is admitted); all three rows share it
-      "doc_token_mix" -> docTokenMixOracle,
-      "doc_token_mix_segmented" -> docTokenMixOracle,
-      "doc_token_mix_stream_replay" -> docTokenMixOracle,
-      "doc_token_mix_restart_stream_replay" -> docTokenMixOracle,
+      // (the crossing doc is admitted); all four rows share it
+      "doc_token_mix" -> tokenMixSql(500, Seq("src1" -> 700, "src7" -> 100000)),
+      "doc_token_mix_segmented" -> tokenMixSql(500, Seq("src1" -> 700, "src7" -> 100000)),
+      "doc_token_mix_stream_replay" -> tokenMixSql(500, Seq("src1" -> 700, "src7" -> 100000)),
+      "doc_token_mix_restart_stream_replay" ->
+        tokenMixSql(500, Seq("src1" -> 700, "src7" -> 100000)),
       // ordered-feed admissions equal the batch cap, so both stream rows
       // share the batch mirror
-      "doc_source_cap_stream_replay" ->
-        """SELECT doc_id, source FROM (
-          |  SELECT doc_id, source,
-          |    row_number() OVER (PARTITION BY source ORDER BY doc_id) AS rk
-          |  FROM documents) WHERE rk <= 10""".stripMargin,
-      "doc_source_cap_restart_stream_replay" ->
-        """SELECT doc_id, source FROM (
-          |  SELECT doc_id, source,
-          |    row_number() OVER (PARTITION BY source ORDER BY doc_id) AS rk
-          |  FROM documents) WHERE rk <= 10""".stripMargin,
-      // exact heavy hitters: the strict w*(k+1) > W threshold in integer
-      // arithmetic on both engines (no float share in the contract)
-      "doc_heavy_hitters" ->
-        """WITH t AS (SELECT lang AS key, CAST(1 AS BIGINT) AS w FROM documents),
-          |a AS (SELECT key, CAST(sum(w) AS BIGINT) AS w FROM t GROUP BY key),
-          |tot AS (SELECT CAST(coalesce(sum(w), 0) AS BIGINT) AS total_w FROM t)
-          |SELECT a.key, a.w, tot.total_w FROM a, tot
-          |WHERE a.w * 7 > tot.total_w""".stripMargin,
-      "doc_heavy_hitters_weighted" ->
-        """WITH t AS (SELECT source AS key,
-          |    CAST(coalesce(n_chars, 0) AS BIGINT) AS w FROM documents),
-          |a AS (SELECT key, CAST(sum(w) AS BIGINT) AS w FROM t GROUP BY key),
-          |tot AS (SELECT CAST(coalesce(sum(w), 0) AS BIGINT) AS total_w FROM t)
-          |SELECT a.key, a.w, tot.total_w FROM a, tot
-          |WHERE a.w * 20 > tot.total_w""".stripMargin,
-      // hot-key alerts: the first running-sum crossing per key (ordered
-      // feed == the batch window computation; the batch twin and both
-      // stream rows share it)
-      "doc_hot_keys" -> docHotKeysOracle,
-      "doc_hot_keys_stream_replay" -> docHotKeysOracle,
-      "doc_hot_keys_restart_stream_replay" -> docHotKeysOracle,
-      "doc_neardup_clusters_md5" -> docNeardupClustersOracle,
-      "doc_neardup_dedup_md5" -> docNeardupDedupOracle,
-      "doc_editdist_pairs_md5" -> docEditPairsOracle,
-      "doc_editdist_dedup_md5" -> docEditDedupOracle,
-      "doc_editdist_decontam_md5" -> docEditDecontamOracle,
+      "doc_source_cap_stream_replay" -> sourceCapSql("source", 10),
+      "doc_source_cap_restart_stream_replay" -> sourceCapSql("source", 10),
+      "doc_heavy_hitters" -> heavyHittersSql("lang", "1", 6),
+      "doc_heavy_hitters_weighted" -> heavyHittersSql("source", "coalesce(n_chars, 0)", 19),
+      // hot-key alerts at threshold 70: the batch twin and both stream
+      // rows share the first running-sum crossing per key
+      "doc_hot_keys" -> hotKeysSql("lang", "1", 70),
+      "doc_hot_keys_stream_replay" -> hotKeysSql("lang", "1", 70),
+      "doc_hot_keys_restart_stream_replay" -> hotKeysSql("lang", "1", 70),
+      "doc_neardup_clusters_md5" -> clustersSql(3, 4, 2, 0.2, 1000),
+      "doc_neardup_dedup_md5" -> dedupIdsSql(3, 4, 2, 0.2, 1000, cols = DOCSQL),
+      "doc_editdist_pairs_md5" -> editPairsSql(5, 4, 4, 5, 1000),
+      "doc_editdist_dedup_md5" -> editDedupSql(5, 4, 4, 5, 1000, cols = DOCSQL),
+      "doc_editdist_decontam_md5" -> editDecontamSql(5, 4, 4, 5, 1000),
       // the stream converges to the same min-id CC survivor set
-      "doc_editdist_stream_replay" -> docEditDedupOracle,
-      "doc_editdist_restart_stream_replay" -> docEditDedupOracle,
-      "doc_editdist_sharded_stream_replay" -> docEditDedupOracle,
+      "doc_editdist_stream_replay" -> editDedupSql(5, 4, 4, 5, 1000, cols = DOCSQL),
+      "doc_editdist_restart_stream_replay" -> editDedupSql(5, 4, 4, 5, 1000, cols = DOCSQL),
+      "doc_editdist_sharded_stream_replay" -> editDedupSql(5, 4, 4, 5, 1000, cols = DOCSQL),
       // the streaming operator's final survivors = the batch CC survivors
-      "doc_neardup_stream_replay" -> docNeardupDedupOracle,
-      "doc_neardup_restart_stream_replay" -> docNeardupDedupOracle,
+      "doc_neardup_stream_replay" -> dedupIdsSql(3, 4, 2, 0.2, 1000, cols = DOCSQL),
+      "doc_neardup_restart_stream_replay" -> dedupIdsSql(3, 4, 2, 0.2, 1000, cols = DOCSQL),
       // ... and its emitted union-find edges reproduce the batch clusters
-      "doc_neardup_clusters_stream_replay" -> docNeardupClustersOracle,
-      "doc_simhash_md5" -> docSimhashMd5Oracle,
-      "doc_ngram_pairs_md5" -> docNgramMd5Oracle,
-      "doc_simhash_pairs_md5" -> docSimhashPairsMd5Oracle,
-      "emb_ann_lsh" -> embAnnOracle,
-      "emb_ann_ivf" -> embIvfOracle,
-      "emb_ann_pq" -> embPqOracle,
-      "emb_ann_pq_trained" -> embPqOracleSql(lloydIters = 1),
-      "emb_ann_ivfpq" -> embIvfPqOracle,
-      "emb_ann_ivfpq_residual" -> embIvfPqResidualOracle,
-      "emb_neardup_pairs" -> embNearDupOracle,
+      "doc_neardup_clusters_stream_replay" -> clustersSql(3, 4, 2, 0.2, 1000),
+      "doc_simhash_md5" -> simhashSql,
+      "doc_ngram_pairs_md5" -> ngramPairsSql(3, 0.1, 200),
+      "doc_simhash_pairs_md5" -> simhashPairsSql(3, 1000),
+      "emb_ann_lsh" -> embAnnStreamSql(8, 10, stream = false),
+      "emb_ann_ivf" -> embIvfSql,
+      "emb_ann_pq" -> embPqSql(8, 16, 10, 0),
+      "emb_ann_pq_trained" -> embPqSql(8, 16, 10, 0, lloydIters = 1),
+      "emb_ann_ivfpq" -> embIvfPqSql(16, 4, 8, 16, 10, stream = false),
+      "emb_ann_ivfpq_residual" -> embIvfPqResidualSql(16, 4, 8, 16, 10),
+      "emb_neardup_pairs" -> embPairsSql(0.4, 8, 4),
       // batch clusters/dedup share the stream rows' closure oracles: the
       // batch CC and the streaming union-find must reduce to the same sets
-      "emb_neardup_clusters" -> embNearDupClustersOracle,
-      "emb_neardup_dedup" -> embNearDupStreamOracle,
-      "emb_semdedup" -> embSemDedupOracle,
-      "emb_semdedup_capped" -> embSemDedupCappedOracle,
-      "emb_semdedup_dropped_cells" -> embSemDedupDroppedCellsOracle,
+      "emb_neardup_clusters" -> embClustersSql(0.4, 8, 4),
+      "emb_neardup_dedup" -> embDedupSql(0.4, 8, 4),
+      "emb_semdedup" -> embSemDedupSql(16, 1, 0.3),
+      "emb_semdedup_capped" -> embSemDedupSql(4, 1, 0.3125, 130),
+      "emb_semdedup_dropped_cells" -> embSemDedupDroppedCellsSql(4, 1, 130),
       // the streaming twin converges to the batch survivor set (same
       // centroid chain, same ε-relation, same keep policy), so all three
       // stream rows share the batch mirrors
-      "emb_semdedup_stream_replay" -> embSemDedupOracle,
-      "emb_semdedup_capped_stream_replay" -> embSemDedupCappedOracle,
-      "emb_semdedup_restart_stream_replay" -> embSemDedupOracle,
-      "emb_neardup_stream_replay" -> embNearDupStreamOracle,
-      "emb_neardup_clusters_stream_replay" -> embNearDupClustersOracle,
-      "emb_ann_stream_replay" -> embAnnStreamOracle,
-      "emb_ann_sharded_lsh_stream_replay" -> embAnnStreamOracle,
-      "emb_ann_sharded_lsh_restart_stream_replay" -> embAnnStreamOracle,
-      "emb_ann_pq_stream_replay" -> embPqStreamOracle,
-      "emb_ann_pq_sharded_stream_replay" -> embPqStreamOracle,
-      "emb_ann_ivfpq_stream_replay" -> embIvfPqStreamOracle,
+      "emb_semdedup_stream_replay" -> embSemDedupSql(16, 1, 0.3),
+      "emb_semdedup_capped_stream_replay" -> embSemDedupSql(4, 1, 0.3125, 130),
+      "emb_semdedup_restart_stream_replay" -> embSemDedupSql(16, 1, 0.3),
+      "emb_neardup_stream_replay" -> embDedupSql(0.4, 8, 4),
+      "emb_neardup_clusters_stream_replay" -> embClustersSql(0.4, 8, 4),
+      "emb_ann_stream_replay" -> embAnnStreamSql(8, 10),
+      "emb_ann_sharded_lsh_stream_replay" -> embAnnStreamSql(8, 10),
+      "emb_ann_sharded_lsh_restart_stream_replay" -> embAnnStreamSql(8, 10),
+      "emb_ann_pq_stream_replay" -> embPqStreamSql,
+      "emb_ann_pq_sharded_stream_replay" -> embPqStreamSql,
+      "emb_ann_ivfpq_stream_replay" -> embIvfPqSql(16, 4, 8, 16, 10, stream = true),
       // the cell-sharded two-stage bridge computes the same retrieval
       // log as the monolith, so it shares the monolith's mirror
-      "emb_ann_ivfpq_sharded_stream_replay" -> embIvfPqStreamOracle,
-      "emb_ann_ivfpq_residual_stream_replay" -> embIvfPqResidualStreamOracle,
-      "emb_ann_ivfpq_residual_restart_stream_replay" -> embIvfPqResidualStreamOracle,
-      "mm_features" -> mmFeaturesOracle,
-      "doc_bpe_encode" -> docBpeEncodeOracle,
-      "doc_bpe_encode_dist" -> docBpeEncodeDistOracle,
-      "doc_bpe_encode_bytes" -> docBpeEncodeBytesOracle,
+      "emb_ann_ivfpq_sharded_stream_replay" -> embIvfPqSql(16, 4, 8, 16, 10, stream = true),
+      "emb_ann_ivfpq_residual_stream_replay" ->
+        embIvfPqResidualSql(16, 4, 8, 16, 10, stream = true),
+      "emb_ann_ivfpq_residual_restart_stream_replay" ->
+        embIvfPqResidualSql(16, 4, 8, 16, 10, stream = true),
+      "mm_features" -> featuresSql,
+      "doc_bpe_encode" -> docBpeEncodeOracleFor(4, 240, 16, 120),
+      "doc_bpe_encode_dist" -> docBpeEncodeDistOracleFor(64, 240, 16, 120),
+      "doc_bpe_encode_bytes" -> docBpeEncodeBytesOracleFor(bpeBytesMergesLines, 120),
       "doc_bpe_train_bytes" ->
         docBpeEncodeDistOracleFor(64, 240, 12, 120, byteLevel = true),
-      "doc_token_mix_bpe" -> docTokenMixBpeOracle,
-      "mm_phash" -> mmPhashOracle,
-      "mm_ahash" -> mmAhashOracle,
-      "mm_audio_hash" -> mmAudioHashOracle,
-      "mm_audio_neardup_pairs" -> mmAudioPairsOracle,
-      "mm_audio_dedup" -> mmAudioDedupOracle,
-      "mm_image_neardup_pairs" -> mmImagePairsOracle,
-      "mm_image_dedup" -> mmImageDedupOracle,
-      "mm_image_dedup_stream_replay" -> mmImageDedupOracle,
-      "mm_image_semdedup" -> mmImageSemDedupOracle,
-      "mm_image_tile_hash" -> mmImageTileHashOracle,
-      "mm_image_crop_pairs" -> mmImageCropPairsOracle,
-      "mm_image_crop_dedup" -> mmImageCropDedupOracle,
-      "mm_image_crop_dedup_stream_replay" -> mmImageCropDedupOracle,
-      "mm_image_crop_dedup_restart_stream_replay" -> mmImageCropDedupOracle,
-      "mm_video_hash" -> mmVideoHashOracle,
-      "mm_video_dedup_stream_replay" -> mmVideoDedupOracle,
-      "mm_video_dedup_restart_stream_replay" -> mmVideoDedupOracle,
-      "mm_video_neardup_pairs" -> mmVideoPairsOracle,
-      "mm_video_dedup" -> mmVideoDedupOracle,
-      "mm_audio_seg_hash" -> mmAudioSegHashOracle,
-      "mm_audio_offset_pairs" -> mmAudioOffsetPairsOracle,
-      "mm_audio_offset_pairs_capped" -> mmAudioOffsetPairsCappedOracle,
-      "mm_audio_seg_dropped_buckets" -> mmAudioSegDroppedOracle,
-      "mm_audio_seg_dedup" -> mmAudioSegDedupOracle,
-      "mm_audio_seg_dedup_stream_replay" -> mmAudioSegDedupOracle,
-      "mm_audio_seg_dedup_restart_stream_replay" -> mmAudioSegDedupOracle,
-      "mm_audio_dedup_stream_replay" -> mmAudioDedupOracle,
-      "mm_audio_dedup_restart_stream_replay" -> mmAudioDedupOracle,
-      // solid-color resize round-trip: target dims, one color, the color
-      "mm_resize" ->
-        """SELECT doc_id, 16::BIGINT AS out_w, 16::BIGINT AS out_h,
-          |  1::BIGINT AS n_colors,
-          |  (doc_id % 256)::BIGINT AS r0,
-          |  ((doc_id * 7) % 256)::BIGINT AS g0,
-          |  ((doc_id * 13) % 256)::BIGINT AS b0
-          |FROM documents""".stripMargin,
-      // inclusive stepped frame grid per doc: 0, 7, 14, … ≤ doc_id % 40
-      // (list-valued range + unnest — the table-function form rejects
-      // lateral column arguments)
-      "mm_frames" ->
-        """SELECT doc_id, CAST(f AS BIGINT) AS frame_idx FROM (
-          |  SELECT doc_id, unnest(range(0, (doc_id % 40) + 1, 7)) AS f FROM documents)""".stripMargin,
+      "doc_token_mix_bpe" -> docTokenMixBpeSql,
+      "mm_phash" -> phashSql,
+      "mm_ahash" -> ahashSql,
+      "mm_audio_hash" -> audioHashSql,
+      "mm_audio_neardup_pairs" -> audioHashPairsSql(2, 1000, 32),
+      "mm_audio_dedup" -> ccSurvivorsSql(audioHashPairsCtes(2, 1000, 32), "apairs", "a"),
+      "mm_image_neardup_pairs" -> imageHashPairsSql(3, 1000),
+      "mm_image_dedup" -> ccSurvivorsSql(imageHashPairsCtes(3, 1000, 32), "pairs"),
+      "mm_image_dedup_stream_replay" -> ccSurvivorsSql(imageHashPairsCtes(3, 1000, 32), "pairs"),
+      // imageLumaFeatures over the 8×8 pattern → semDedup at eps 0.94
+      "mm_image_semdedup" -> embSemDedupSql(8, 1, 0.94, srcSql = patternVectorSql(32),
+        finalRel = "documents", finalIdCol = "doc_id"),
+      "mm_image_tile_hash" -> imageTileHashSql,
+      "mm_image_crop_pairs" -> imageTilePairsSql(32, 10, 1000),
+      "mm_image_crop_dedup" -> ccSurvivorsSql(imageTilePairsCtes(32, 10, 1000), "tpr", "tl"),
+      "mm_image_crop_dedup_stream_replay" ->
+        ccSurvivorsSql(imageTilePairsCtes(32, 10, 1000), "tpr", "tl"),
+      "mm_image_crop_dedup_restart_stream_replay" ->
+        ccSurvivorsSql(imageTilePairsCtes(32, 10, 1000), "tpr", "tl"),
+      "mm_video_hash" -> videoHashSql,
+      "mm_video_dedup_stream_replay" ->
+        ccSurvivorsSql(videoSeqPairsCtes(32, 2, 0.5, 1000), "vpairs", "v"),
+      "mm_video_dedup_restart_stream_replay" ->
+        ccSurvivorsSql(videoSeqPairsCtes(32, 2, 0.5, 1000), "vpairs", "v"),
+      "mm_video_neardup_pairs" -> videoSeqPairsSql(32, 2, 0.5, 1000),
+      "mm_video_dedup" -> ccSurvivorsSql(videoSeqPairsCtes(32, 2, 0.5, 1000), "vpairs", "v"),
+      "mm_audio_seg_hash" -> audioSegHashSql,
+      "mm_audio_offset_pairs" -> audioSegPairsSql(32, 256, 3, 1000),
+      // cap-BINDING geometry: maxBucket 16 drops segment-hash buckets
+      "mm_audio_offset_pairs_capped" -> audioSegPairsSql(32, 256, 3, 16),
+      "mm_audio_seg_dropped_buckets" -> audioSegDroppedSql(32, 256, 16),
+      "mm_audio_seg_dedup" -> ccSurvivorsSql(audioSegPairsCtes(32, 256, 3, 1000), "apr"),
+      "mm_audio_seg_dedup_stream_replay" ->
+        ccSurvivorsSql(audioSegPairsCtes(32, 256, 3, 1000), "apr"),
+      "mm_audio_seg_dedup_restart_stream_replay" ->
+        ccSurvivorsSql(audioSegPairsCtes(32, 256, 3, 1000), "apr"),
+      "mm_audio_dedup_stream_replay" ->
+        ccSurvivorsSql(audioHashPairsCtes(2, 1000, 32), "apairs", "a"),
+      "mm_audio_dedup_restart_stream_replay" ->
+        ccSurvivorsSql(audioHashPairsCtes(2, 1000, 32), "apairs", "a"),
+      "mm_resize" -> resizeSql,
+      "mm_frames" -> framesSql,
       // streaming replays verify against the batch twins' semantics:
       // everStream's accumulated CHANGE LOG holds every event once as
       // 'insert' plus every replaced event again as 'expire' (the batch
@@ -2707,2259 +2554,8 @@ object SparkEntry {
            |SELECT $EVSQL, fk AS flush_kind, (w + 1) * $H6 AS batch_end_ms FROM me WHERE rn = 1
            |UNION ALL
            |SELECT $EVSQL, fk AS flush_kind, (w + 1) * $H6 AS batch_end_ms FROM ce WHERE rn = 1""".stripMargin,
-      "doc_fingerprint_md5" ->
-        """WITH t AS (SELECT doc_id,
-          |  trim(regexp_replace(lower(text), '[^\p{L}\p{Nd}]+', ' ', 'g')) AS norm FROM documents)
-          |SELECT doc_id,
-          |  list_min(list_transform(generate_series(1, greatest(len(norm)-7, 1)),
-          |    i -> md5(substr(norm, i, 8)))) AS fp_min_gram_md5,
-          |  md5(norm) AS fp_full_md5
-          |FROM t""".stripMargin,
-      "emb_knn_brute" ->
-        """WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 20),
-          |s AS (SELECT query_id, vec_id AS corpus_id,
-          |        list_sum(list_transform(list_zip(qv, embedding), p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-          |        / (sqrt(list_sum(list_transform(qv, x -> CAST(x AS DOUBLE) * x)))
-          |           * sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * x)))) AS sim
-          |      FROM embeddings CROSS JOIN q WHERE vec_id <> query_id)
-          |SELECT query_id, corpus_id,
-          |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, corpus_id) AS INTEGER) AS rank
-          |FROM s QUALIFY rank <= 10""".stripMargin,
+      "doc_fingerprint_md5" -> docFingerprintSql,
+      "emb_knn_brute" -> embKnnBruteSql,
     )
-  }
-
-  /** DuckDB mirror of CorpusOps.mixByTokenBudget (default 500, src1 →
-    * 700, src7 → 100000): the shared BPE-ish token count, the per-source
-    * running sum EXCLUSIVE of the current row, and the greedy-fill cut
-    * (admit while tok_before < budget). Shared by the batch row and both
-    * streaming replay rows — the stream's per-group token counter in
-    * doc_id order IS this window.
-    */
-  private def docTokenMixOracle: String =
-    """WITH t AS (SELECT doc_id, source,
-      |  CAST(len(regexp_extract_all(text, '\w+|[^\w\s]')) AS INTEGER) AS n_tok
-      |  FROM documents),
-      |c AS (SELECT doc_id, source, n_tok,
-      |  CAST(coalesce(sum(n_tok) OVER (PARTITION BY source ORDER BY doc_id
-      |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS tok_before
-      |  FROM t)
-      |SELECT doc_id, source, n_tok, tok_before FROM c
-      |WHERE tok_before < (CASE source WHEN 'src1' THEN 700
-      |  WHEN 'src7' THEN 100000 ELSE 500 END)""".stripMargin
-
-  /** DuckDB mirror of streaming.HotKeyStream.hotKeyAlerts over lang at
-    * threshold 70: the first arrival whose running count carries the key
-    * from below the threshold to at-or-above it (prev < T AND rs >= T —
-    * exactly the processor's crossing test, so zero-weight arrivals at
-    * the boundary cannot fire). Shared by the plain and restart replay
-    * rows: an ordered feed makes the stream's per-key counter this
-    * window.
-    */
-  private def docHotKeysOracle: String =
-    """WITH t AS (SELECT lang AS key, doc_id AS o, CAST(1 AS BIGINT) AS w
-      |  FROM documents),
-      |r AS (SELECT key, o, w,
-      |  CAST(sum(w) OVER (PARTITION BY key ORDER BY o) AS BIGINT) AS rs
-      |  FROM t)
-      |SELECT key, o AS at_order, rs AS running_w FROM r
-      |WHERE rs - w < 70 AND rs >= 70""".stripMargin
-
-  /** DuckDB mirror of llm.CorpusOps.packSequences (budget 512, sharded by
-    * `source`): the same BPE-ish token count as doc_text_stats, a
-    * per-shard cumulative-sum window, and floor-division bin assignment.
-    * Shared by the batch row and the streaming replay row — the streaming
-    * operator's per-shard running fold in id order IS this window.
-    */
-  private def docPackOracle: String =
-    """WITH t AS (SELECT doc_id, source,
-      |  CAST(len(regexp_extract_all(text, '\w+|[^\w\s]')) AS INTEGER) AS n_tok
-      |  FROM documents)
-      |SELECT doc_id, source, n_tok,
-      |  CAST(coalesce(sum(n_tok) OVER w, 0) AS BIGINT) AS tok_offset,
-      |  CAST(floor(CAST(coalesce(sum(n_tok) OVER w, 0) AS BIGINT) / 512) AS BIGINT) AS bin_id
-      |FROM t
-      |WINDOW w AS (PARTITION BY source ORDER BY doc_id
-      |  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)""".stripMargin
-
-  /** DuckDB mirror of llm.TextAnalysis.qualityColumns: same stopword list
-    * (embedded as a SQL array literal), same left-associated arithmetic so
-    * IEEE doubles match bit-for-bit; DuckDB regexp_replace needs the 'g'
-    * flag for replace-all (Spark's default).
-    */
-  private def docQualityOracle: String = {
-    val stops = llm.TextAnalysis.stopwords.values.flatten.toSeq.distinct
-      .map(w => s"'$w'").mkString("[", ", ", "]")
-    s"""WITH t AS (
-       |  SELECT doc_id, text,
-       |    list_filter(str_split_regex(lower(text), '[^\\p{L}\\p{Nd}]+'), x -> x <> '') AS toks
-       |  FROM documents),
-       |f AS (
-       |  SELECT doc_id, text, toks,
-       |    CAST(len(toks) AS INTEGER) AS n_tokens,
-       |    CASE WHEN len(text) = 0 THEN 0.0
-       |      ELSE CAST(len(regexp_replace(text, '[^\\p{L}]', '', 'g')) AS DOUBLE) / len(text) END AS alpha_ratio,
-       |    CASE WHEN len(text) = 0 THEN 0.0
-       |      ELSE CAST(len(regexp_replace(text, '[\\p{L}\\p{Nd}\\s]', '', 'g')) AS DOUBLE) / len(text) END AS punct_ratio,
-       |    CASE WHEN len(toks) = 0 THEN 0.0
-       |      ELSE CAST(len(list_filter(toks, t -> list_contains($stops, t))) AS DOUBLE) / len(toks) END AS stopword_ratio,
-       |    CASE WHEN len(toks) = 0 THEN 0.0
-       |      ELSE CAST(list_sum(list_transform(toks, t -> len(t))) AS DOUBLE) / len(toks) END AS mean_token_len
-       |  FROM t)
-       |SELECT doc_id, n_tokens, alpha_ratio, punct_ratio, stopword_ratio, mean_token_len,
-       |  least(1.0, least(CAST(n_tokens AS DOUBLE) / 20, 1.0) * 0.3
-       |    + alpha_ratio * 0.3
-       |    + (1.0 - least(punct_ratio * 4, 1.0)) * 0.2
-       |    + least(stopword_ratio * 3, 1.0) * 0.2) AS quality_score
-       |FROM f""".stripMargin
-  }
-
-  /** DuckDB mirror of CorpusOps.duplicateLines over withSyntheticLines
-    * (minDf=3): the 0-based dropped-line positions. Shared by the batch
-    * row and the streaming replay row.
-    */
-  private val docDupLinesOracle: String =
-    """WITH t AS (SELECT doc_id,
-      |  list_filter(str_split_regex(lower(text), '[^\p{L}\p{Nd}]+'), x -> x <> '') AS toks
-      |  FROM documents),
-      |p AS (SELECT doc_id,
-      |  (['subscribe to our newsletter today', 'click here to read more',
-      |    'copyright acme corporation', 'share this article on social media'])[CAST(doc_id % 4 + 1 AS INT)]
-      |  || chr(10) ||
-      |  array_to_string(list_transform(
-      |    generate_series(1, greatest(CAST(ceil(len(toks) / 10.0) AS INT), 1)),
-      |    i -> array_to_string(toks[(i-1)*10+1:(i-1)*10+10], ' ')), chr(10))
-      |  || chr(10) || 'all rights reserved' AS lines_text
-      |  FROM t),
-      |s AS (SELECT doc_id, str_split(lines_text, chr(10)) AS ls FROM p),
-      |l AS (SELECT doc_id, j, ls[j] AS line FROM s, unnest(generate_series(1, len(ls))) AS u(j)),
-      |dup AS (SELECT line FROM l GROUP BY line HAVING count(DISTINCT doc_id) >= 3)
-      |SELECT doc_id, j - 1 AS pos FROM l WHERE line IN (SELECT line FROM dup)""".stripMargin
-
-  /** DuckDB mirror of TextDedup.duplicateSpans (k=5, minCount=2): window
-    * occurrences → corpus-wide dup filter → per-doc gaps-and-islands
-    * merge. Shared by the batch row and the streaming replay row.
-    */
-  private val docDupSpansOracle: String =
-    """WITH t AS (SELECT doc_id,
-      |  list_filter(str_split_regex(lower(text), '[^\p{L}\p{Nd}]+'), x -> x <> '') AS toks
-      |  FROM documents),
-      |g AS (SELECT doc_id, i, array_to_string(toks[i:i+4], ' ') AS gram
-      |      FROM t, unnest(generate_series(1, greatest(len(toks) - 4, 0))) AS u(i)),
-      |dup AS (SELECT gram FROM g GROUP BY gram HAVING count(*) >= 2),
-      |h AS (SELECT doc_id, i - 1 AS s, i + 3 AS e FROM g
-      |      WHERE gram IN (SELECT gram FROM dup)),
-      |m AS (SELECT doc_id, s, e,
-      |        CASE WHEN s > coalesce(max(e) OVER (PARTITION BY doc_id ORDER BY s
-      |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1) THEN 1 ELSE 0 END AS brk
-      |      FROM h),
-      |isl AS (SELECT doc_id, s, e, sum(brk) OVER (PARTITION BY doc_id ORDER BY s
-      |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island FROM m)
-      |SELECT doc_id, min(s) AS span_start, max(e) AS span_end,
-      |  max(e) - min(s) + 1 AS span_tokens
-      |FROM isl GROUP BY doc_id, island""".stripMargin
-
-  /** DuckDB mirror of llm.TextAnalysis.langId: per-language stopword hit
-    * counts (same lists, multiset semantics) and the same fold order —
-    * languages scanned alphabetically, later language wins only on a
-    * STRICTLY greater score; cjk ratio > 0.25 short-circuits to zh.
-    */
-  private def docLangIdOracle: String = {
-    val langs = llm.TextAnalysis.stopwords.toSeq.sortBy(_._1)
-    val hitCols = langs.map { case (l, ws) =>
-      val arr = ws.map(w => s"'$w'").mkString("[", ", ", "]")
-      s"CAST(len(list_filter(toks, t -> list_contains($arr, t))) AS INTEGER) AS h_$l"
-    }.mkString(",\n    ")
-    // fold: best = first lang; each later lang wins iff strictly greater
-    val fold = langs.tail.foldLeft((s"'${langs.head._1}'", s"h_${langs.head._1}")) {
-      case ((bestExpr, scoreExpr), (l, _)) =>
-        (s"CASE WHEN h_$l > $scoreExpr THEN '$l' ELSE $bestExpr END",
-          s"greatest(h_$l, $scoreExpr)")
-    }._1
-    s"""WITH t AS (
-       |  SELECT doc_id, lang, text,
-       |    list_filter(str_split_regex(lower(text), '[^\\p{L}\\p{Nd}]+'), x -> x <> '') AS toks
-       |  FROM documents),
-       |f AS (
-       |  SELECT doc_id, lang, text,
-       |    $hitCols,
-       |    CASE WHEN len(text) = 0 THEN 0.0
-       |      ELSE CAST(len(regexp_replace(text, '[^\\p{Han}]', '', 'g')) AS DOUBLE) / len(text) END AS cjk
-       |  FROM t)
-       |SELECT doc_id, lang,
-       |  CASE WHEN cjk > 0.25 THEN 'zh' ELSE $fold END AS pred_lang
-       |FROM f""".stripMargin
-  }
-
-  // Shared DuckDB fragments for the md5-family near-dup mirrors: tokenize
-  // exactly like TextDedup.tokenize, hash tokens with md5, build 3-gram
-  // shingle hashes with the same left fold (combine(x,y) = md5(x || y)),
-  // distinct, drop empty docs. Mirrors TextDedup.shingleHashes(_, 3, Md5Hash).
-  private val md5ShingleCtes =
-    """tk AS (SELECT doc_id,
-      |  list_transform(list_filter(str_split_regex(lower(text), '[^\p{L}\p{Nd}]+'), x -> x <> ''),
-      |    t -> md5(t)) AS th FROM documents),
-      |sh0 AS (SELECT doc_id, list_distinct(list_transform(
-      |  generate_series(1, greatest(len(th) - 2, 0)),
-      |  i -> md5(md5(th[i] || th[i+1]) || th[i+2]))) AS sh FROM tk),
-      |s2 AS (SELECT doc_id, sh FROM sh0 WHERE len(sh) > 0)""".stripMargin
-
-  // set-Jaccard over the (already distinct) shingle arrays; single double
-  // division so the value is bit-exact across engines
-  private def md5JaccardExpr(a: String, b: String): String =
-    s"len(list_filter($a, x -> list_contains($b, x)))::DOUBLE" +
-      s" / (len($a) + len($b) - len(list_filter($a, x -> list_contains($b, x))))"
-
-  /** DuckDB mirror of TextDedup.minhashPairsMd5 (shingleN=3, bands=4,
-    * rowsPerBand=2, threshold=0.2, maxBucket=1000): signature = per-seed
-    * min of md5(h || '#i'); band hash = md5(sig_slice joined by '|' plus
-    * '#band'); bucket-capped band self-join; distinct pairs; one exact
-    * Jaccard verify.
-    */
-  private def docMinhashMd5Oracle: String =
-    s"""WITH $docMinhashMd5PairsCtes
-       |SELECT id_a, id_b, jaccard FROM mp""".stripMargin
-
-  /** The minhashPairsMd5 mirror as a reusable CTE chain ending in
-    * `mp(id_a, id_b, jaccard)` — shared by the pairs oracle and the
-    * connected-components oracles built on top of it.
-    */
-  private def docMinhashMd5PairsCtes: String = {
-    val bands = 4; val r = 2; val k = bands * r
-    val sigItems = (0 until k).map(i =>
-      s"list_min(list_transform(sh, h -> md5(h || '#$i')))").mkString(",\n    ")
-    val bandCase = (0 until bands).map { b =>
-      val parts = (1 to r).map(j => s"sig[${b * r + j}]").mkString(" || '|' || ")
-      s"WHEN $b THEN md5($parts || '#$b')"
-    }.mkString(" ")
-    s"""$md5ShingleCtes,
-       |sig AS (SELECT doc_id, [$sigItems] AS sig FROM s2),
-       |banded AS (SELECT doc_id, band, CASE band $bandCase END AS bh
-       |  FROM sig CROSS JOIN (SELECT unnest([${(0 until bands).mkString(", ")}]) AS band) b),
-       |ok AS (SELECT band, bh FROM banded GROUP BY band, bh
-       |  HAVING count(*) <= 1000 AND count(*) > 1),
-       |ib AS (SELECT banded.* FROM banded JOIN ok USING (band, bh)),
-       |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-       |  FROM ib a JOIN ib b ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id),
-       |j AS (SELECT id_a, id_b, ${md5JaccardExpr("sa.sh", "sb.sh")} AS jaccard
-       |  FROM cand JOIN s2 sa ON sa.doc_id = cand.id_a
-       |            JOIN s2 sb ON sb.doc_id = cand.id_b),
-       |mp AS (SELECT id_a, id_b, jaccard FROM j WHERE jaccard >= 0.2)""".stripMargin
-  }
-
-  /** The crossMinhashPairsMd5 mirror (train = doc_id % 10 <> 0, eval =
-    * doc_id % 10 = 0, shingleN=3, bands=4, rowsPerBand=2, threshold=0.2,
-    * maxBucket=1000) as a CTE chain ending in `mp(id_a, id_b, jaccard)`:
-    * both sides derive the same md5 signatures and band hashes as the
-    * self-join mirror; a (band, bucket) is admitted iff both sides
-    * appear AND the combined occupancy is ≤ maxBucket; candidates are
-    * the bipartite bucket product, verified with one exact Jaccard.
-    */
-  private def docCrossMd5PairsCtes: String =
-    docCrossMd5PairsCtes("trn AS (SELECT * FROM s2 WHERE doc_id % 10 <> 0)")
-
-  /** The cross-pairs CTE chain with a caller-supplied `trn` CTE (the
-    * composition oracle restricts the train side to the exact-dedup
-    * survivors; the standalone rows use the plain %10 split above).
-    */
-  private def docCrossMd5PairsCtes(trnCte: String): String = {
-    val bands = 4; val r = 2; val k = bands * r
-    val sigItems = (0 until k).map(i =>
-      s"list_min(list_transform(sh, h -> md5(h || '#$i')))").mkString(",\n    ")
-    val bandCase = (0 until bands).map { b =>
-      val parts = (1 to r).map(j => s"sig[${b * r + j}]").mkString(" || '|' || ")
-      s"WHEN $b THEN md5($parts || '#$b')"
-    }.mkString(" ")
-    s"""$md5ShingleCtes,
-       |$trnCte,
-       |evl AS (SELECT * FROM s2 WHERE doc_id % 10 = 0),
-       |sigT AS (SELECT doc_id, [$sigItems] AS sig FROM trn),
-       |sigE AS (SELECT doc_id, [$sigItems] AS sig FROM evl),
-       |bT AS (SELECT doc_id, band, CASE band $bandCase END AS bh
-       |  FROM sigT CROSS JOIN (SELECT unnest([${(0 until bands).mkString(", ")}]) AS band) b),
-       |bE AS (SELECT doc_id, band, CASE band $bandCase END AS bh
-       |  FROM sigE CROSS JOIN (SELECT unnest([${(0 until bands).mkString(", ")}]) AS band) b),
-       |cnt AS (SELECT ct.band, ct.bh, ct.cl, ce.cr FROM
-       |  (SELECT band, bh, count(*) AS cl FROM bT GROUP BY band, bh) ct
-       |  JOIN (SELECT band, bh, count(*) AS cr FROM bE GROUP BY band, bh) ce
-       |    ON ce.band = ct.band AND ce.bh = ct.bh),
-       |ok AS (SELECT band, bh FROM cnt WHERE cl + cr <= 1000),
-       |cand AS (SELECT DISTINCT a.doc_id AS id_a, e.doc_id AS id_b
-       |  FROM bT a JOIN ok USING (band, bh)
-       |       JOIN bE e ON e.band = a.band AND e.bh = a.bh),
-       |j AS (SELECT id_a, id_b, ${md5JaccardExpr("sa.sh", "sb.sh")} AS jaccard
-       |  FROM cand JOIN trn sa ON sa.doc_id = cand.id_a
-       |            JOIN evl sb ON sb.doc_id = cand.id_b),
-       |mp AS (SELECT id_a, id_b, jaccard FROM j WHERE jaccard >= 0.2)""".stripMargin
-  }
-
-  private def docFuzzyPairsOracle: String =
-    s"""WITH $docCrossMd5PairsCtes
-       |SELECT id_a, id_b, jaccard FROM mp""".stripMargin
-
-  /** The CAP-BINDING-geometry cross-pairs mirror (shingleN=1, bands=2,
-    * rowsPerBand=1, threshold=0.1, maxBucket=40): coarse enough that at
-    * sf0.01 the hottest shared band bucket holds ~355 train + ~41 eval
-    * members, so the bucket cap genuinely drops buckets and the two cap
-    * POLICIES diverge. `evalSideOnly = false` mirrors the batch
-    * operator (a bucket is admitted iff its combined train+eval
-    * occupancy ≤ 40); `evalSideOnly = true` mirrors the streaming
-    * operator (only eval-side occupancy ≤ 40 — the stream side's
-    * occupancy is unknowable online, FuzzyDecontamStream's documented
-    * cap semantics).
-    */
-  private def docFuzzyCappedOracle(evalSideOnly: Boolean): String = {
-    val okCte =
-      if (evalSideOnly)
-        """ok AS (SELECT band, bh FROM
-          |  (SELECT band, bh, count(*) AS cr FROM bE GROUP BY band, bh)
-          |  WHERE cr <= 40)""".stripMargin
-      else
-        """ok AS (SELECT ct.band, ct.bh FROM
-          |  (SELECT band, bh, count(*) AS cl FROM bT GROUP BY band, bh) ct
-          |  JOIN (SELECT band, bh, count(*) AS cr FROM bE GROUP BY band, bh) ce
-          |    ON ce.band = ct.band AND ce.bh = ct.bh
-          |  WHERE ct.cl + ce.cr <= 40)""".stripMargin
-    s"""WITH tk AS (SELECT doc_id,
-       |  list_transform(list_filter(str_split_regex(lower(text), '[^\\p{L}\\p{Nd}]+'), x -> x <> ''),
-       |    t -> md5(t)) AS th FROM documents),
-       |sh0 AS (SELECT doc_id, list_distinct(th) AS sh FROM tk),
-       |s2 AS (SELECT doc_id, sh FROM sh0 WHERE len(sh) > 0),
-       |trn AS (SELECT * FROM s2 WHERE doc_id % 10 <> 0),
-       |evl AS (SELECT * FROM s2 WHERE doc_id % 10 = 0),
-       |sigT AS (SELECT doc_id, [list_min(list_transform(sh, h -> md5(h || '#0'))),
-       |  list_min(list_transform(sh, h -> md5(h || '#1')))] AS sig FROM trn),
-       |sigE AS (SELECT doc_id, [list_min(list_transform(sh, h -> md5(h || '#0'))),
-       |  list_min(list_transform(sh, h -> md5(h || '#1')))] AS sig FROM evl),
-       |bT AS (SELECT doc_id, band,
-       |  CASE band WHEN 0 THEN md5(sig[1] || '#0') WHEN 1 THEN md5(sig[2] || '#1') END AS bh
-       |  FROM sigT CROSS JOIN (SELECT unnest([0, 1]) AS band) b),
-       |bE AS (SELECT doc_id, band,
-       |  CASE band WHEN 0 THEN md5(sig[1] || '#0') WHEN 1 THEN md5(sig[2] || '#1') END AS bh
-       |  FROM sigE CROSS JOIN (SELECT unnest([0, 1]) AS band) b),
-       |$okCte,
-       |cand AS (SELECT DISTINCT a.doc_id AS id_a, e.doc_id AS id_b
-       |  FROM bT a JOIN ok USING (band, bh)
-       |       JOIN bE e ON e.band = a.band AND e.bh = a.bh),
-       |j AS (SELECT id_a, id_b, ${md5JaccardExpr("sa.sh", "sb.sh")} AS jaccard
-       |  FROM cand JOIN trn sa ON sa.doc_id = cand.id_a
-       |            JOIN evl sb ON sb.doc_id = cand.id_b)
-       |SELECT id_a, id_b, jaccard FROM j WHERE jaccard >= 0.1""".stripMargin
-  }
-
-  private def docFuzzyDecontamOracle: String =
-    s"""WITH $docCrossMd5PairsCtes
-       |SELECT doc_id FROM documents
-       |WHERE doc_id % 10 <> 0 AND doc_id NOT IN (SELECT id_a FROM mp)""".stripMargin
-
-  /** End-to-end mirror of the `doc_curation_pipeline` composition:
-    * exact dedup (min doc_id per text) → the cross-pairs chain with the
-    * TRAIN SIDE restricted to dedup survivors (caps unbound at this
-    * geometry) → anti-join the contaminated ids → per-source cap 10 →
-    * the packSequences window — each stage consuming the previous
-    * stage's output exactly as the Spark chain does.
-    */
-  private def docCurationPipelineOracle: String = {
-    val cross = docCrossMd5PairsCtes(
-      "trn AS (SELECT s2.* FROM s2 JOIN dd ON dd.doc_id = s2.doc_id WHERE s2.doc_id % 10 <> 0)")
-    s"""WITH dd AS (SELECT doc_id, text, source FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY text ORDER BY doc_id) AS rn
-       |    FROM documents) WHERE rn = 1),
-       |$cross,
-       |surv AS (SELECT dd.* FROM dd
-       |  WHERE dd.doc_id % 10 <> 0 AND dd.doc_id NOT IN (SELECT id_a FROM mp)),
-       |capped AS (SELECT doc_id, text, source FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY source ORDER BY doc_id) AS rk
-       |    FROM surv) WHERE rk <= 10),
-       |pt AS (SELECT doc_id, source,
-       |  CAST(len(regexp_extract_all(text, '\\w+|[^\\w\\s]')) AS INTEGER) AS n_tok
-       |  FROM capped)
-       |SELECT doc_id, source, n_tok,
-       |  CAST(coalesce(sum(n_tok) OVER w, 0) AS BIGINT) AS tok_offset,
-       |  CAST(floor(CAST(coalesce(sum(n_tok) OVER w, 0) AS BIGINT) / 512) AS BIGINT) AS bin_id
-       |FROM pt
-       |WINDOW w AS (PARTITION BY source ORDER BY doc_id
-       |  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)""".stripMargin
-  }
-
-  /** The cross-modal pipeline mirror: the image hamming-pair CC survivor
-    * gate (mmImagePairsCtes → recursive closure → ikept) prepended to
-    * the doc_curation_pipeline_md5 chain — exact text dedup runs over
-    * the IMAGE survivors, decontamination still screens against the
-    * full eval split.
-    */
-  private def mmCurationPipelineOracle: String = {
-    val cross = docCrossMd5PairsCtes(
-      "trn AS (SELECT s2.* FROM s2 JOIN dd ON dd.doc_id = s2.doc_id WHERE s2.doc_id % 10 <> 0)")
-    s"""WITH RECURSIVE $mmImagePairsCtes,
-inodes AS (SELECT DISTINCT id FROM (
-  SELECT id_a AS id FROM pairs UNION ALL SELECT id_b AS id FROM pairs)),
-ieg AS (SELECT id_a AS a, id_b AS b FROM pairs
-  UNION ALL SELECT id_b AS a, id_a AS b FROM pairs),
-ireach AS (
-  SELECT id, id AS r FROM inodes
-  UNION
-  SELECT ieg.a AS id, ireach.r FROM ieg JOIN ireach ON ireach.id = ieg.b),
-icc AS (SELECT id, min(r) AS cluster_id FROM ireach GROUP BY id),
-ikept AS (SELECT * FROM documents
-  WHERE doc_id NOT IN (SELECT id FROM icc WHERE id <> cluster_id)),
-dd AS (SELECT doc_id, text, source FROM (
-    SELECT *, row_number() OVER (PARTITION BY text ORDER BY doc_id) AS rn
-    FROM ikept) WHERE rn = 1),
-$cross,
-surv AS (SELECT dd.* FROM dd
-  WHERE dd.doc_id % 10 <> 0 AND dd.doc_id NOT IN (SELECT id_a FROM mp)),
-capped AS (SELECT doc_id, text, source FROM (
-    SELECT *, row_number() OVER (PARTITION BY source ORDER BY doc_id) AS rk
-    FROM surv) WHERE rk <= 10),
-pt AS (SELECT doc_id, source,
-  CAST(len(regexp_extract_all(text, '\\w+|[^\\w\\s]')) AS INTEGER) AS n_tok
-  FROM capped)
-SELECT doc_id, source, n_tok,
-  CAST(coalesce(sum(n_tok) OVER w, 0) AS BIGINT) AS tok_offset,
-  CAST(floor(CAST(coalesce(sum(n_tok) OVER w, 0) AS BIGINT) / 512) AS BIGINT) AS bin_id
-FROM pt
-WINDOW w AS (PARTITION BY source ORDER BY doc_id
-  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)"""
-  }
-
-  /** Connected components of the md5 minhash pairs as a recursive-CTE
-    * transitive closure (feasible at oracle scale: closure size is
-    * Σ component-size², and near-dup components are tiny): every member
-    * id labeled with the minimum reachable id — the DuckDB ground truth
-    * for TextDedup.nearDupClusters's min-label propagation.
-    */
-  private def docNeardupClusterCtes: String =
-    s"""$docMinhashMd5PairsCtes,
-       |nodes AS (SELECT DISTINCT id FROM (
-       |  SELECT id_a AS id FROM mp UNION ALL SELECT id_b AS id FROM mp)),
-       |eg AS (SELECT id_a AS a, id_b AS b FROM mp
-       |  UNION ALL SELECT id_b AS a, id_a AS b FROM mp),
-       |reach AS (
-       |  SELECT id, id AS r FROM nodes
-       |  UNION
-       |  SELECT eg.a AS id, reach.r FROM eg JOIN reach ON reach.id = eg.b),
-       |cc AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id)""".stripMargin
-
-  private def docNeardupClustersOracle: String =
-    s"""WITH RECURSIVE $docNeardupClusterCtes
-       |SELECT id AS doc_id, cluster_id FROM cc""".stripMargin
-
-  private def docNeardupDedupOracle: String =
-    s"""WITH RECURSIVE $docNeardupClusterCtes
-       |SELECT doc_id, text, lang, source, n_chars FROM documents
-       |WHERE doc_id NOT IN (SELECT id FROM cc WHERE id <> cluster_id)""".stripMargin
-
-  /** DuckDB mirror of TextDedup.editDistancePairsMd5 (maxDist=5,
-    * shingleN=5, bands=4, rowsPerBand=4, maxBucket=1000) as a CTE chain
-    * ending in `ep(id_a, id_b, dist)`: char tokens → md5 5-gram fold →
-    * minhash signature → band hashes → capped buckets → distinct
-    * candidates → EXACT integer levenshtein ≤ 5 (DuckDB computes the
-    * full distance; Spark's thresholded form returns the same integer
-    * whenever it is ≤ the threshold, and the filter keeps only those).
-    */
-  private def docEditPairsCtes: String = {
-    val n = 5; val bands = 4; val r = 4; val k = bands * r
-    val fold = (1 until n).foldLeft("th[i]")((acc, j) => s"md5($acc || th[i+$j])")
-    val sigItems = (0 until k).map(i =>
-      s"list_min(list_transform(sh, h -> md5(h || '#$i')))").mkString(",\n    ")
-    val bandCase = (0 until bands).map { b =>
-      val parts = (1 to r).map(j => s"sig[${b * r + j}]").mkString(" || '|' || ")
-      s"WHEN $b THEN md5($parts || '#$b')"
-    }.mkString(" ")
-    s"""tk AS (SELECT doc_id, text,
-       |  list_transform(generate_series(1, length(text)), i -> md5(text[i])) AS th
-       |  FROM documents),
-       |sh0 AS (SELECT doc_id, text, list_distinct(list_transform(
-       |  generate_series(1, greatest(len(th) - ${n - 1}, 0)),
-       |  i -> $fold)) AS sh FROM tk),
-       |s2e AS (SELECT doc_id, text, sh FROM sh0 WHERE len(sh) > 0),
-       |sige AS (SELECT doc_id, [$sigItems] AS sig FROM s2e),
-       |bde AS (SELECT doc_id, band, CASE band $bandCase END AS bh
-       |  FROM sige CROSS JOIN (SELECT unnest([${(0 until bands).mkString(", ")}]) AS band) b),
-       |oke AS (SELECT band, bh FROM bde GROUP BY band, bh
-       |  HAVING count(*) <= 1000 AND count(*) > 1),
-       |ibe AS (SELECT bde.* FROM bde JOIN oke USING (band, bh)),
-       |cde AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-       |  FROM ibe a JOIN ibe b ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id),
-       |ep AS (SELECT id_a, id_b, dist FROM (
-       |  SELECT id_a, id_b,
-       |    CAST(levenshtein(ta.text, tb.text) AS INTEGER) AS dist
-       |  FROM cde JOIN s2e ta ON ta.doc_id = cde.id_a
-       |           JOIN s2e tb ON tb.doc_id = cde.id_b)
-       |  WHERE dist <= 5)""".stripMargin
-  }
-
-  /** Self-contained DuckDB mirror of the BPE tier (llm.Bpe): re-derives
-    * TRAINING (recursive choose/apply state machine over the bounded
-    * sample — best pair by (max count, code-point lex), repeated
-    * leftmost single merges) and ENCODING (greedy min-rank leftmost, one
-    * merge per recursion step) from the raw table, per the determinism
-    * contract on Bpe's scaladoc — no Spark-side literal reaches the
-    * mirror (the lloyd-centroid re-derivation pattern). Built by plain
-    * concatenation, NOT stripMargin: the SQL is full of `||` operators
-    * that stripMargin would eat at line starts. Ends with
-    * done(doc_id, toks), tok2id(tok, id).
-    */
-  private[graft] def docBpeCtes(sampleDocs: Int, sampleChars: Int, numMerges: Int,
-                         encChars: Int, docsRel: String = "documents"): String =
-    s"""smp AS (SELECT string_agg(substr(text, 1, $sampleChars), chr(10) ORDER BY doc_id) AS s
-FROM (SELECT doc_id, text FROM $docsRel WHERE text IS NOT NULL ORDER BY doc_id LIMIT $sampleDocs)),
-ini AS (SELECT list_transform(generate_series(1, length(s)), i -> s[i]) AS toks FROM smp),
-tr AS (
-  SELECT toks, 0 AS round, 0 AS step, CAST(NULL AS VARCHAR) AS cl,
-         CAST(NULL AS VARCHAR) AS cr,
-         CAST([] AS VARCHAR[]) AS ml, CAST([] AS VARCHAR[]) AS mr
-  FROM ini
-  UNION ALL
-  SELECT * FROM (
-    WITH cur AS (SELECT * FROM tr),
-    choose AS (
-      SELECT c.toks, c.round + 1, c.step + 1, b.l, b.r,
-             list_append(c.ml, b.l), list_append(c.mr, b.r)
-      FROM cur c, LATERAL (
-        SELECT u.l, u.r FROM (
-          SELECT toks[i] AS l, toks[i + 1] AS r, count(*) AS n
-          FROM (SELECT unnest(generate_series(1, len(c.toks) - 1)) AS i)
-          GROUP BY 1, 2) u
-        WHERE u.n >= 2
-        ORDER BY u.n DESC, u.l, u.r LIMIT 1) b
-      WHERE c.cl IS NULL AND c.round < $numMerges
-    ),
-    apply AS (
-      SELECT CASE WHEN p.pos IS NULL THEN c.toks
-                  ELSE c.toks[1:p.pos - 1] || [c.cl || c.cr] || c.toks[p.pos + 2:len(c.toks)]
-             END,
-             c.round, c.step + 1,
-             CASE WHEN p.pos IS NULL THEN NULL ELSE c.cl END,
-             CASE WHEN p.pos IS NULL THEN NULL ELSE c.cr END,
-             c.ml, c.mr
-      FROM cur c, LATERAL (
-        SELECT list_filter(generate_series(1, len(c.toks) - 1),
-                 i -> c.toks[i] = c.cl AND c.toks[i + 1] = c.cr)[1] AS pos) p
-      WHERE c.cl IS NOT NULL
-    )
-    SELECT * FROM choose UNION ALL SELECT * FROM apply)
-),
-fin AS (SELECT ml, mr FROM tr ORDER BY step DESC LIMIT 1),
-basev AS (SELECT list_sort(list_distinct(toks)) AS bv FROM ini),
-base_ids AS (SELECT unnest(bv) AS tok, unnest(generate_series(1, len(bv))) AS id FROM basev),
-merge_toks AS (
-  SELECT tok, min(ord) AS ord FROM (
-    SELECT unnest(list_transform(generate_series(1, len(ml)), k -> ml[k] || mr[k])) AS tok,
-           unnest(generate_series(1, len(ml))) AS ord
-    FROM fin)
-  WHERE tok NOT IN (SELECT tok FROM base_ids)
-  GROUP BY tok),
-tok2id AS (
-  SELECT tok, id FROM base_ids
-  UNION ALL
-  SELECT tok, (SELECT len(bv) FROM basev) + row_number() OVER (ORDER BY ord) AS id
-  FROM merge_toks),
-dini AS (SELECT doc_id,
-    list_transform(generate_series(1, length(substr(text, 1, $encChars))),
-      i -> substr(text, 1, $encChars)[i]) AS toks,
-    (SELECT ml FROM fin) AS ml, (SELECT mr FROM fin) AS mr
-  FROM $docsRel),
-enc AS (
-  SELECT doc_id, toks, ml, mr, 0 AS step FROM dini
-  UNION ALL
-  SELECT e.doc_id,
-         e.toks[1:b.pos - 1] || [e.ml[b.rk] || e.mr[b.rk]] || e.toks[b.pos + 2:len(e.toks)],
-         e.ml, e.mr, e.step + 1
-  FROM enc e, LATERAL (
-    SELECT rks.rk, list_position(rks.rkl, rks.rk) AS pos FROM (
-      SELECT rkl, list_min(list_filter(rkl, x -> x IS NOT NULL)) AS rk FROM (
-        SELECT list_transform(generate_series(1, len(e.toks) - 1),
-          i -> list_filter(generate_series(1, len(e.ml)),
-                 k -> e.ml[k] = e.toks[i] AND e.mr[k] = e.toks[i + 1])[1]) AS rkl) ) rks
-    WHERE rks.rk IS NOT NULL) b
-),
-done AS (
-  SELECT doc_id, toks FROM (
-    SELECT doc_id, toks, row_number() OVER (PARTITION BY doc_id ORDER BY step DESC) AS rn
-    FROM enc) WHERE rn = 1)"""
-
-  /** DuckDB mirror of Bpe.trainDistributed + encode: the recursive
-    * choose/apply state machine of docBpeCtes lifted to PER-DOC rows —
-    * the choose step takes the GLOBAL argmax over within-doc adjacent
-    * pairs (count desc, then code-point lex), the apply step merges one
-    * leftmost occurrence in EVERY doc that still has one and stays in
-    * apply mode while any doc does (the bool_or over the post-apply
-    * rows). No '\n' joining — the document is the pre-tokenization
-    * boundary, exactly the trainer's contract. Ends with
-    * ddone(doc_id, toks), dtok2id(tok, id). Plain concatenation (the
-    * lambdas are full of `||`).
-    */
-  private[graft] def docBpeDistCtes(sampleDocs: Int, sampleChars: Int,
-                                    numMerges: Int, encChars: Int,
-                                    docsRel: String = "documents",
-                                    byteLevel: Boolean = false): String = {
-    // byte-level mode: the ASCII corpus's UTF-8 bytes map through the
-    // GPT-2 alphabet as the identity except space -> 'G-dot' (U+0120),
-    // and the base vocabulary is the FULL 256-token alphabet (ascending
-    // concat = code-point-sorted) instead of the sample's distincts
-    val sampleExpr =
-      if (byteLevel) s"replace(substr(text, 1, $sampleChars), ' ', 'Ġ')"
-      else s"substr(text, 1, $sampleChars)"
-    val encExpr =
-      if (byteLevel) s"replace(substr(text, 1, $encChars), ' ', 'Ġ')"
-      else s"substr(text, 1, $encChars)"
-    val basevCte =
-      if (byteLevel)
-        """dbasev AS (SELECT list_transform(
-  generate_series(33, 126) || generate_series(161, 172) ||
-  generate_series(174, 255) || generate_series(256, 323),
-  c -> chr(CAST(c AS INTEGER))) AS bv)"""
-      else "dbasev AS (SELECT list_sort(list_distinct(flatten(list(toks)))) AS bv FROM dinit)"
-    s"""sdocs AS (SELECT doc_id, $sampleExpr AS s
-  FROM $docsRel WHERE text IS NOT NULL ORDER BY doc_id LIMIT $sampleDocs),
-dinit AS (SELECT doc_id, list_transform(generate_series(1, length(s)), i -> s[i]) AS toks
-  FROM sdocs),
-dtr AS (
-  SELECT doc_id, toks, 0 AS round, 0 AS step,
-         CAST(NULL AS VARCHAR) AS cl, CAST(NULL AS VARCHAR) AS cr,
-         CAST([] AS VARCHAR[]) AS ml, CAST([] AS VARCHAR[]) AS mr
-  FROM dinit
-  UNION ALL
-  SELECT * FROM (
-    WITH cur AS (SELECT * FROM dtr),
-    best AS (
-      SELECT u.l, u.r FROM (
-        SELECT toks[i] AS l, toks[i + 1] AS r, count(*) AS n
-        FROM cur c, LATERAL (SELECT unnest(generate_series(1, len(c.toks) - 1)) AS i) t
-        WHERE c.cl IS NULL AND c.round < $numMerges
-        GROUP BY 1, 2) u
-      WHERE u.n >= 2
-      ORDER BY u.n DESC, u.l, u.r LIMIT 1),
-    choose AS (
-      SELECT c.doc_id, c.toks, c.round + 1, c.step + 1, b.l, b.r,
-             list_append(c.ml, b.l), list_append(c.mr, b.r)
-      FROM cur c JOIN best b ON true
-      WHERE c.cl IS NULL AND c.round < $numMerges),
-    app AS (
-      SELECT c.doc_id,
-        CASE WHEN p.pos IS NULL THEN c.toks
-             ELSE c.toks[1:p.pos - 1] || [c.cl || c.cr] || c.toks[p.pos + 2:len(c.toks)]
-        END AS toks,
-        c.round, c.step + 1 AS step, c.cl, c.cr, c.ml, c.mr
-      FROM cur c, LATERAL (
-        SELECT list_filter(generate_series(1, len(c.toks) - 1),
-                 i -> c.toks[i] = c.cl AND c.toks[i + 1] = c.cr)[1] AS pos) p
-      WHERE c.cl IS NOT NULL),
-    appmore AS (
-      SELECT coalesce(bool_or(len(list_filter(generate_series(1, len(a.toks) - 1),
-          i -> a.toks[i] = a.cl AND a.toks[i + 1] = a.cr)) > 0), false) AS more
-      FROM app a),
-    apply2 AS (
-      SELECT a.doc_id, a.toks, a.round, a.step,
-        CASE WHEN m.more THEN a.cl ELSE NULL END,
-        CASE WHEN m.more THEN a.cr ELSE NULL END,
-        a.ml, a.mr
-      FROM app a CROSS JOIN appmore m)
-    SELECT * FROM choose UNION ALL SELECT * FROM apply2)
-),
-dfin AS (SELECT ml, mr FROM dtr ORDER BY step DESC LIMIT 1),
-$basevCte,
-dbase_ids AS (SELECT unnest(bv) AS tok, unnest(generate_series(1, len(bv))) AS id FROM dbasev),
-dmerge_toks AS (
-  SELECT tok, min(ord) AS ord FROM (
-    SELECT unnest(list_transform(generate_series(1, len(ml)), k -> ml[k] || mr[k])) AS tok,
-           unnest(generate_series(1, len(ml))) AS ord
-    FROM dfin)
-  WHERE tok NOT IN (SELECT tok FROM dbase_ids)
-  GROUP BY tok),
-dtok2id AS (
-  SELECT tok, id FROM dbase_ids
-  UNION ALL
-  SELECT tok, (SELECT len(bv) FROM dbasev) + row_number() OVER (ORDER BY ord) AS id
-  FROM dmerge_toks),
-ddini AS (SELECT doc_id,
-    list_transform(generate_series(1, length($encExpr)),
-      i -> ($encExpr)[i]) AS toks,
-    (SELECT ml FROM dfin) AS ml, (SELECT mr FROM dfin) AS mr
-  FROM $docsRel),
-denc AS (
-  SELECT doc_id, toks, ml, mr, 0 AS step FROM ddini
-  UNION ALL
-  SELECT e.doc_id,
-         e.toks[1:b.pos - 1] || [e.ml[b.rk] || e.mr[b.rk]] || e.toks[b.pos + 2:len(e.toks)],
-         e.ml, e.mr, e.step + 1
-  FROM denc e, LATERAL (
-    SELECT rks.rk, list_position(rks.rkl, rks.rk) AS pos FROM (
-      SELECT rkl, list_min(list_filter(rkl, x -> x IS NOT NULL)) AS rk FROM (
-        SELECT list_transform(generate_series(1, len(e.toks) - 1),
-          i -> list_filter(generate_series(1, len(e.ml)),
-                 k -> e.ml[k] = e.toks[i] AND e.mr[k] = e.toks[i + 1])[1]) AS rkl) ) rks
-    WHERE rks.rk IS NOT NULL) b
-),
-ddone AS (
-  SELECT doc_id, toks FROM (
-    SELECT doc_id, toks, row_number() OVER (PARTITION BY doc_id ORDER BY step DESC) AS rn
-    FROM denc) WHERE rn = 1)"""
-  }
-
-  private[graft] def docBpeEncodeDistOracleFor(sampleDocs: Int, sampleChars: Int,
-                                               numMerges: Int, encChars: Int,
-                                               docsRel: String = "documents",
-                                               byteLevel: Boolean = false): String =
-    "WITH RECURSIVE\n" +
-      docBpeDistCtes(sampleDocs, sampleChars, numMerges, encChars, docsRel,
-        byteLevel) + """
-SELECT u.doc_id, u.pos, CAST(coalesce(t.id, 0) AS BIGINT) AS token_id
-FROM (SELECT doc_id, unnest(toks) AS tok,
-        CAST(unnest(generate_series(1, len(toks))) AS BIGINT) AS pos FROM ddone) u
-LEFT JOIN dtok2id t ON u.tok = t.tok"""
-
-  private def docBpeEncodeDistOracle: String =
-    docBpeEncodeDistOracleFor(64, 240, 16, 120)
-
-  private[graft] def docBpeEncodeOracleFor(sampleDocs: Int, sampleChars: Int,
-                                           numMerges: Int, encChars: Int,
-                                           docsRel: String = "documents"): String =
-    "WITH RECURSIVE\n" +
-      docBpeCtes(sampleDocs, sampleChars, numMerges, encChars, docsRel) + """
-SELECT u.doc_id, u.pos, CAST(coalesce(t.id, 0) AS BIGINT) AS token_id
-FROM (SELECT doc_id, unnest(toks) AS tok,
-        CAST(unnest(generate_series(1, len(toks))) AS BIGINT) AS pos FROM done) u
-LEFT JOIN tok2id t ON u.tok = t.tok"""
-
-  private def docBpeEncodeOracle: String =
-    docBpeEncodeOracleFor(4, 240, 16, 120)
-
-  /** The fixture merges.txt content for the byte-level load row (and the
-    * bpe_bytes sweep family): corpus-relevant merges over the
-    * lowercase+space charset in the deployed GPT-2 file format —
-    * including the space-crossing "s Ġ" rule that only global-merge
-    * mode applies and the rank-ordered "an d" that needs "a n" first.
-    */
-  private[graft] val bpeBytesMergesLines: Seq[String] =
-    "#version: graft byte-level fixture" +: Seq(
-      "Ġ t", "h e", "Ġt he", "i n", "a n", "r e", "e r", "s Ġ",
-      "an d", "t he")
-
-  /** DuckDB mirror of the byte-level LOAD path (fromMergesByteLevel with
-    * the library id contract, global-merge mode): the 256-token
-    * bytes→unicode alphabet as chr() lists (33..126, 161..172, 174..255
-    * map to themselves, the displaced bytes to 256..323 — ascending, so
-    * positional ids ARE the code-point-sorted contract), literal ml/mr
-    * merge arrays, the docBpeCtes min-rank encode state machine over the
-    * byte-mapped text (the corpus is ASCII+space, so the mapping is
-    * exactly space→Ġ).
-    */
-  private[graft] def docBpeEncodeBytesOracleFor(
-      mergesLines: Seq[String], encChars: Int,
-      docsRel: String = "documents"): String = {
-    val merges = llm.Bpe.parseMergesLines(mergesLines)
-    val ml = merges.map(p => s"'${p._1}'").mkString("[", ", ", "]")
-    val mr = merges.map(p => s"'${p._2}'").mkString("[", ", ", "]")
-    s"""WITH RECURSIVE
-balpha AS (SELECT list_transform(
-  generate_series(33, 126) || generate_series(161, 172) ||
-  generate_series(174, 255) || generate_series(256, 323),
-  c -> chr(CAST(c AS INTEGER))) AS bv),
-base_ids AS (SELECT unnest(bv) AS tok, unnest(generate_series(1, len(bv))) AS id FROM balpha),
-bfin AS (SELECT $ml AS ml, $mr AS mr),
-merge_toks AS (
-  SELECT tok, min(ord) AS ord FROM (
-    SELECT unnest(list_transform(generate_series(1, len(ml)), k -> ml[k] || mr[k])) AS tok,
-           unnest(generate_series(1, len(ml))) AS ord
-    FROM bfin)
-  WHERE tok NOT IN (SELECT tok FROM base_ids)
-  GROUP BY tok),
-tok2id AS (
-  SELECT tok, id FROM base_ids
-  UNION ALL
-  SELECT tok, 256 + row_number() OVER (ORDER BY ord) AS id FROM merge_toks),
-dini AS (SELECT doc_id,
-    list_transform(generate_series(1, length(s)), i -> s[i]) AS toks,
-    (SELECT ml FROM bfin) AS ml, (SELECT mr FROM bfin) AS mr
-  FROM (SELECT doc_id, replace(substr(text, 1, $encChars), ' ', 'Ġ') AS s
-        FROM $docsRel)),
-enc AS (
-  SELECT doc_id, toks, ml, mr, 0 AS step FROM dini
-  UNION ALL
-  SELECT e.doc_id,
-         e.toks[1:b.pos - 1] || [e.ml[b.rk] || e.mr[b.rk]] || e.toks[b.pos + 2:len(e.toks)],
-         e.ml, e.mr, e.step + 1
-  FROM enc e, LATERAL (
-    SELECT rks.rk, list_position(rks.rkl, rks.rk) AS pos FROM (
-      SELECT rkl, list_min(list_filter(rkl, x -> x IS NOT NULL)) AS rk FROM (
-        SELECT list_transform(generate_series(1, len(e.toks) - 1),
-          i -> list_filter(generate_series(1, len(e.ml)),
-                 k -> e.ml[k] = e.toks[i] AND e.mr[k] = e.toks[i + 1])[1]) AS rkl) ) rks
-    WHERE rks.rk IS NOT NULL) b
-),
-done AS (
-  SELECT doc_id, toks FROM (
-    SELECT doc_id, toks, row_number() OVER (PARTITION BY doc_id ORDER BY step DESC) AS rn
-    FROM enc) WHERE rn = 1)
-SELECT u.doc_id, u.pos, CAST(coalesce(t.id, 0) AS BIGINT) AS token_id
-FROM (SELECT doc_id, unnest(toks) AS tok,
-        CAST(unnest(generate_series(1, len(toks))) AS BIGINT) AS pos FROM done) u
-LEFT JOIN tok2id t ON u.tok = t.tok"""
-  }
-
-  private def docBpeEncodeBytesOracle: String =
-    docBpeEncodeBytesOracleFor(bpeBytesMergesLines, 120)
-
-  private def docTokenMixBpeOracle: String =
-    "WITH RECURSIVE\n" + docBpeCtes(4, 240, 16, 120) + """,
-cntb AS (SELECT d.doc_id, d.source, CAST(len(done.toks) AS INTEGER) AS n_tok
-  FROM done JOIN documents d ON d.doc_id = done.doc_id),
-cb AS (SELECT doc_id, source, n_tok,
-  CAST(coalesce(sum(n_tok) OVER (PARTITION BY source ORDER BY doc_id
-    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS tok_before
-  FROM cntb)
-SELECT doc_id, source, n_tok, tok_before FROM cb
-WHERE tok_before < (CASE source WHEN 'src1' THEN 500 ELSE 300 END)"""
-
-  /** CTE chain mirroring Multimodal.audioHashes over the synthetic-WAV
-    * fixture (withSyntheticWavs: nSamples=2048, win=32, baseMod=32):
-    * per-(doc, window) integer sample sums from the formula + the
-    * variant bumps, adjacent-window comparisons → 63-bit hash (no sign
-    * bit, so a plain SUM of distinct powers is safe). Ends with
-    * ah(doc_id, whash).
-    */
-  private def mmAudioHashCtes: String =
-    """aw AS (
-      |  SELECT doc_id, k,
-      |    list_sum(list_transform(generate_series(k * 32, k * 32 + 31),
-      |      i -> ((((doc_id % 32) + 1) * (i * 7 + 3)) % 251) - 125))
-      |    + CASE WHEN ((doc_id // 32) % 3 >= 1 AND k = 5)
-      |             OR ((doc_id // 32) % 3 = 2 AND k = 11)
-      |           THEN 40 * 32 ELSE 0 END AS s
-      |  FROM documents CROSS JOIN (SELECT unnest(generate_series(0, 63)) AS k) t),
-      |ah AS (
-      |  SELECT a.doc_id,
-      |    CAST(sum(CASE WHEN b.s > a.s THEN (1::BIGINT << a.k) ELSE 0::BIGINT END) AS BIGINT) AS whash
-      |  FROM aw a JOIN aw b ON b.doc_id = a.doc_id AND b.k = a.k + 1
-      |  WHERE a.k < 63 GROUP BY a.doc_id)""".stripMargin
-
-  private def mmAudioHashOracle: String =
-    s"""WITH $mmAudioHashCtes
-       |SELECT doc_id, whash FROM ah""".stripMargin
-
-  /** hammingHashPairs mirror over the waveform hash (chunkBits=16,
-    * maxHamming=2, maxBucket=1000) — identical construction to the
-    * image-pairs mirror, different hash CTE.
-    */
-  private def mmAudioPairsCtes: String =
-    s"""$mmAudioHashCtes,
-       |achp AS (SELECT doc_id, whash, c AS chunk, (whash >> (c * 16)) & 65535 AS cv
-       |  FROM ah CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS c) t2),
-       |aokp AS (SELECT chunk, cv FROM achp GROUP BY chunk, cv
-       |  HAVING count(*) <= 1000 AND count(*) > 1),
-       |aibp AS (SELECT achp.* FROM achp JOIN aokp USING (chunk, cv)),
-       |apairs AS (SELECT id_a, id_b, min(hamming) AS hamming FROM (
-       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       |    CAST(bit_count(xor(a.whash, b.whash)) AS INTEGER) AS hamming
-       |  FROM aibp a JOIN aibp b ON a.chunk = b.chunk AND a.cv = b.cv
-       |    AND a.doc_id < b.doc_id)
-       |  WHERE hamming <= 2 GROUP BY id_a, id_b)""".stripMargin
-
-  private def mmAudioPairsOracle: String =
-    s"""WITH $mmAudioPairsCtes
-       |SELECT id_a, id_b, hamming FROM apairs""".stripMargin
-
-  private def mmAudioDedupOracle: String =
-    s"""WITH RECURSIVE $mmAudioPairsCtes,
-       |anodes AS (SELECT DISTINCT id FROM (
-       |  SELECT id_a AS id FROM apairs UNION ALL SELECT id_b AS id FROM apairs)),
-       |aeg AS (SELECT id_a AS a, id_b AS b FROM apairs
-       |  UNION ALL SELECT id_b AS a, id_a AS b FROM apairs),
-       |areach AS (
-       |  SELECT id, id AS r FROM anodes
-       |  UNION
-       |  SELECT aeg.a AS id, areach.r FROM aeg JOIN areach ON areach.id = aeg.b),
-       |acc AS (SELECT id, min(r) AS cluster_id FROM areach GROUP BY id)
-       |SELECT doc_id FROM documents
-       |WHERE doc_id NOT IN (SELECT id FROM acc WHERE id <> cluster_id)""".stripMargin
-
-  /** DuckDB mirror of the IMAGE-SemDeDup composition (imageLumaFeatures
-    * over the 8×8 pattern fixture → Similarity.semDedup at dim=64,
-    * eps=0.94, nCells=8, lloydIters=1): the 64 per-pixel luma integers
-    * as a DOUBLE vector (row-major, identical to the decode path on the
-    * identity-resize fixture), then the embSemDedupOracle chain
-    * verbatim — anchor init from the first 8 docs, one quantized-mean
-    * Lloyd pass, within-cell ε-pairs, min-label closure, keep rank
-    * (csim ASC, id ASC).
-    */
-  private def mmImageSemDedupOracle: String = {
-    val vec = (for (y <- 0 until 8; x <- 0 until 8)
-      yield s"CAST(${mmPatternLuma(x, y)} AS DOUBLE)").mkString(",\n    ")
-    s"""WITH RECURSIVE imgc AS (SELECT doc_id AS corpus_id, [
-    $vec] AS cv FROM documents),
-cent0 AS (SELECT corpus_id::BIGINT AS cell, cv AS centroid
-    FROM imgc ORDER BY corpus_id LIMIT 8),
-asg0 AS (SELECT corpus_id, cv, cell FROM (
-  SELECT corpus_id, cv, cell,
-    row_number() OVER (PARTITION BY corpus_id ORDER BY csim DESC, cell) AS rn
-  FROM (SELECT corpus_id, cv, cell, ${duckCosine("cv", "centroid")} AS csim
-        FROM imgc CROSS JOIN cent0)) WHERE rn = 1),
-el AS (SELECT cell, generate_subscripts(cv, 1) AS pos, unnest(cv) AS x FROM asg0),
-cm AS (SELECT cell, pos,
-    CAST(sum(CAST(floor(CAST(x AS DOUBLE) * 1048576.0) AS BIGINT)) AS DOUBLE)
-      / (count(*) * 1048576.0) AS m
-  FROM el GROUP BY cell, pos),
-cent AS (SELECT cell, list(m ORDER BY pos) AS centroid FROM cm GROUP BY cell),
-asg AS (SELECT corpus_id, cv, cell, csim FROM (
-  SELECT corpus_id, cv, cell, csim,
-    row_number() OVER (PARTITION BY corpus_id ORDER BY csim DESC, cell) AS rn
-  FROM (SELECT corpus_id, cv, cell, ${duckCosine("cv", "centroid")} AS csim
-        FROM imgc CROSS JOIN cent)) WHERE rn = 1),
-ep AS (SELECT a.corpus_id AS id_a, b.corpus_id AS id_b
-  FROM asg a JOIN asg b ON a.cell = b.cell AND a.corpus_id < b.corpus_id
-  WHERE ${duckCosine("a.cv", "b.cv")} >= 0.94),
-nodes AS (SELECT DISTINCT id FROM (
-  SELECT id_a AS id FROM ep UNION ALL SELECT id_b AS id FROM ep)),
-eg AS (SELECT id_a AS a, id_b AS b FROM ep
-  UNION ALL SELECT id_b AS a, id_a AS b FROM ep),
-reach AS (
-  SELECT id, id AS r FROM nodes
-  UNION
-  SELECT eg.a AS id, reach.r FROM eg JOIN reach ON reach.id = eg.b),
-cc AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
-rk AS (SELECT cc.cluster_id, cc.id,
-    row_number() OVER (PARTITION BY cc.cluster_id ORDER BY asg.csim ASC, cc.id) AS rn
-  FROM cc JOIN asg ON cc.id = asg.corpus_id)
-SELECT doc_id FROM documents
-WHERE doc_id NOT IN (SELECT id FROM rk WHERE rn > 1)"""
-  }
-
-  /** The crop-fixture luma of tile-local pixel (px, py) as a DuckDB
-    * expression over tile-index columns (tx, ty) — the exact formula of
-    * Multimodal.withSyntheticCropImages composed with
-    * imageTileHashes' absolute grid (tilePx=8, hopPx=4): global
-    * x = tx*4+px, global y = ty*4+py (+8 source-scroll for v=2), raw
-    * luma + the v=1 uniform +4.
-    */
-  private def mmTileLuma(px: Int, py: Int): String = {
-    val k = px * 7 + py * 13 + 3
-    val raw = s"((((doc_id % 32) + 1) * (tx*28 + ty*52 + $k + " +
-      s"CASE WHEN (doc_id // 32) % 3 = 2 THEN 104 ELSE 0 END)) % 251)"
-    s"($raw + CASE WHEN (doc_id // 32) % 3 = 1 THEN 4 ELSE 0 END)"
-  }
-
-  /** CTE chain mirroring imageTileHashes over the crop fixture: 7×7
-    * tile grid per doc, integer tile mean (floor of the 64-luma sum),
-    * aHash bits OR-folded (INT64_MIN literal for bit 63). Ends with
-    * th(doc_id, tile_x, tile_y, thash).
-    */
-  private def mmImageTileCtes: String = {
-    val lsum = (for (py <- 0 until 8; px <- 0 until 8)
-      yield mmTileLuma(px, py)).mkString(" + ")
-    val bits = (for (py <- 0 until 8; px <- 0 until 8) yield {
-      val bit = py * 8 + px
-      val mask = if (bit == 63) "(-9223372036854775807 - 1)"
-                 else s"(1::BIGINT << $bit)"
-      s"(CASE WHEN ${mmTileLuma(px, py)} > lmean THEN $mask ELSE 0::BIGINT END)"
-    }).mkString(" |\n  ")
-    s"""tg AS (SELECT doc_id, tx, ty FROM documents
-  CROSS JOIN (SELECT unnest(generate_series(0, 6)) AS tx) a
-  CROSS JOIN (SELECT unnest(generate_series(0, 6)) AS ty) b),
-tm AS (SELECT doc_id, tx, ty, ($lsum) // 64 AS lmean FROM tg),
-th AS (SELECT doc_id, CAST(tx AS BIGINT) AS tile_x, CAST(ty AS BIGINT) AS tile_y,
-  $bits AS thash FROM tm)"""
-  }
-
-  private def mmImageTileHashOracle: String =
-    s"""WITH $mmImageTileCtes
-SELECT doc_id, tile_x, tile_y, thash FROM th"""
-
-  /** sharedKeyPairs mirror over the tile hashes (minShared=10,
-    * maxBucket=1000), ending with tpr(id_a, id_b, shared, n_a, n_b).
-    */
-  private def mmImageTilePairCtes: String =
-    s"""$mmImageTileCtes,
-tkeys AS (SELECT DISTINCT doc_id, thash FROM th),
-tnk AS (SELECT doc_id, count(*) AS nk FROM tkeys GROUP BY doc_id),
-tok AS (SELECT thash FROM tkeys GROUP BY thash
-  HAVING count(*) <= 1000 AND count(*) > 1),
-tib AS (SELECT tkeys.* FROM tkeys JOIN tok USING (thash)),
-tcand AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-    CAST(count(DISTINCT a.thash) AS BIGINT) AS shared
-  FROM tib a JOIN tib b ON a.thash = b.thash AND a.doc_id < b.doc_id
-  GROUP BY 1, 2),
-tpr AS (SELECT id_a, id_b, shared, na.nk AS n_a, nb.nk AS n_b
-  FROM tcand JOIN tnk na ON na.doc_id = tcand.id_a
-             JOIN tnk nb ON nb.doc_id = tcand.id_b
-  WHERE shared >= 10)"""
-
-  private def mmImageCropPairsOracle: String =
-    s"""WITH $mmImageTilePairCtes
-SELECT id_a, id_b, shared, n_a, n_b FROM tpr"""
-
-  /** Min-id CC dedup over the crop-tolerant tile pair relation — the
-    * mmVideoDedupOracle recursive-closure pattern on tpr.
-    */
-  private def mmImageCropDedupOracle: String =
-    s"""WITH RECURSIVE $mmImageTilePairCtes,
-tlnodes AS (SELECT DISTINCT id FROM (
-  SELECT id_a AS id FROM tpr UNION ALL SELECT id_b AS id FROM tpr)),
-tleg AS (SELECT id_a AS a, id_b AS b FROM tpr
-  UNION ALL SELECT id_b AS a, id_a AS b FROM tpr),
-tlreach AS (
-  SELECT id, id AS r FROM tlnodes
-  UNION
-  SELECT tleg.a AS id, tlreach.r FROM tleg JOIN tlreach ON tlreach.id = tleg.b),
-tlcc AS (SELECT id, min(r) AS cluster_id FROM tlreach GROUP BY id)
-SELECT doc_id FROM documents
-WHERE doc_id NOT IN (SELECT id FROM tlcc WHERE id <> cluster_id)"""
-
-  /** The synthetic-VIDEO-pattern luma L(x,y) of container frame `f` as
-    * a DuckDB integer expression — the exact formula of
-    * Multimodal.withSyntheticVideoClips (x, y compile-time constants;
-    * `f` = container frame index and `fe` = f + trim-skip are columns):
-    * raw = (base * (x*7 + y*13 + 3 + 29*fe)) % 251, flipped to 250-raw
-    * at pixel (2,3) of frame 0 for the v=1 variant.
-    */
-  private def mmVideoLuma(x: Int, y: Int): String = {
-    val k = x * 7 + y * 13 + 3
-    val raw = s"(((doc_id % 32) + 1) * ($k + 29 * fe)) % 251"
-    if (x == 2 && y == 3)
-      s"(CASE WHEN (doc_id // 32) % 3 = 1 AND f = 0 THEN 250 - ($raw) ELSE ($raw) END)"
-    else s"($raw)"
-  }
-
-  /** Per-frame 64-bit dHash of the video fixture (same construction as
-    * mmDhashExpr, frame-parametrized; OR-folded with the INT64_MIN
-    * literal for bit 63 — see mmDhashExpr's overflow note).
-    */
-  private def mmVideoDhashExpr: String =
-    (for (y <- 0 until 8; x <- 0 until 8) yield {
-      val bit = y * 8 + x
-      val mask = if (bit == 63) "(-9223372036854775807 - 1)"
-                 else s"(1::BIGINT << $bit)"
-      s"(CASE WHEN ${mmVideoLuma(x + 1, y)} > ${mmVideoLuma(x, y)} " +
-        s"THEN $mask ELSE 0::BIGINT END)"
-    }).mkString(" |\n  ")
-
-  /** CTE chain mirroring Multimodal.videoFrameHashes over the packed-
-    * frame fixture (withSyntheticVideoClips, baseMod=32): per-doc frame
-    * count nf = base%4+5 minus 1 for the trimmed v=2 variant, container
-    * frame f = 0..nf-1 rendering source frame fe = f + skip. Ends with
-    * vh(doc_id, frame_idx, fhash). Built by plain concatenation (the
-    * OR-folded hash would trip stripMargin).
-    */
-  private def mmVideoHashCtes: String =
-    s"""vdocs AS (SELECT doc_id,
-  ((doc_id % 32) + 1) % 4 + 5
-    - CASE WHEN (doc_id // 32) % 3 = 2 THEN 1 ELSE 0 END AS nf,
-  CASE WHEN (doc_id // 32) % 3 = 2 THEN 1 ELSE 0 END AS skip
-  FROM documents),
-vfr AS (SELECT doc_id, f, f + skip AS fe
-  FROM vdocs, LATERAL (SELECT unnest(generate_series(0, nf - 1)) AS f) t),
-vh AS (SELECT doc_id, CAST(f AS BIGINT) AS frame_idx, $mmVideoDhashExpr AS fhash FROM vfr)"""
-
-  private def mmVideoHashOracle: String =
-    s"""WITH $mmVideoHashCtes
-SELECT doc_id, frame_idx, fhash FROM vh"""
-
-  /** frameSequencePairs mirror over the per-frame hashes (shingleK=2,
-    * threshold=0.5, minShared=1, maxBucket=1000): distinct 2-frame
-    * shingles as VARCHAR keys (BIGINT→VARCHAR matches Long.toString
-    * including negatives), bucket count in (1, maxBucket], distinct-
-    * shingle Jaccard verify. Ends with vpairs(id_a, id_b, shared, n_a,
-    * n_b).
-    */
-  private def mmVideoPairsCtes: String =
-    s"""$mmVideoHashCtes,
-vsh AS (SELECT DISTINCT a.doc_id,
-  CAST(a.fhash AS VARCHAR) || ':' || CAST(b.fhash AS VARCHAR) AS sh
-  FROM vh a JOIN vh b ON b.doc_id = a.doc_id AND b.frame_idx = a.frame_idx + 1),
-vnk AS (SELECT doc_id, count(*) AS nk FROM vsh GROUP BY doc_id),
-vok AS (SELECT sh FROM vsh GROUP BY sh HAVING count(*) <= 1000 AND count(*) > 1),
-vib AS (SELECT vsh.* FROM vsh JOIN vok USING (sh)),
-vcand AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-  CAST(count(DISTINCT a.sh) AS BIGINT) AS shared
-  FROM vib a JOIN vib b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2),
-vpairs AS (SELECT id_a, id_b, shared, na.nk AS n_a, nb.nk AS n_b
-  FROM vcand JOIN vnk na ON na.doc_id = vcand.id_a
-             JOIN vnk nb ON nb.doc_id = vcand.id_b
-  WHERE shared >= 1
-    AND CAST(shared AS DOUBLE) / (na.nk + nb.nk - shared) >= 0.5)"""
-
-  private def mmVideoPairsOracle: String =
-    s"""WITH $mmVideoPairsCtes
-SELECT id_a, id_b, shared, n_a, n_b FROM vpairs"""
-
-  private def mmVideoDedupOracle: String =
-    s"""WITH RECURSIVE $mmVideoPairsCtes,
-vnodes AS (SELECT DISTINCT id FROM (
-  SELECT id_a AS id FROM vpairs UNION ALL SELECT id_b AS id FROM vpairs)),
-veg AS (SELECT id_a AS a, id_b AS b FROM vpairs
-  UNION ALL SELECT id_b AS a, id_a AS b FROM vpairs),
-vreach AS (
-  SELECT id, id AS r FROM vnodes
-  UNION
-  SELECT veg.a AS id, vreach.r FROM veg JOIN vreach ON vreach.id = veg.b),
-vcc AS (SELECT id, min(r) AS cluster_id FROM vreach GROUP BY id)
-SELECT doc_id FROM documents
-WHERE doc_id NOT IN (SELECT id FROM vcc WHERE id <> cluster_id)"""
-
-  /** CTE chain mirroring Multimodal.audioSegmentHashes over the
-    * OFFSET-WAV fixture (withSyntheticOffsetWavs: nSamples=2048,
-    * offsetSamples=256, baseMod=32; hash params winSamples=32,
-    * segWindows=16, hopWindows=8 → 64 windows, 7 segments, 15-bit
-    * hashes): per-(doc, window) integer sums of the variant-adjusted
-    * sample formula, per-segment adjacent-window gradient bits. Ends
-    * with aseg(doc_id, seg_idx, shash).
-    */
-  private def mmAudioSegCtes: String =
-    """asg AS (
-      |  SELECT doc_id, k,
-      |    list_sum(list_transform(generate_series(k * 32, k * 32 + 31), i ->
-      |      CASE WHEN (doc_id // 32) % 3 = 2 THEN
-      |        CASE WHEN i < 256 THEN 0
-      |             ELSE ((((doc_id % 32) + 1) * ((i - 256) * 7 + 3)) % 251) - 125 END
-      |      WHEN (doc_id // 32) % 3 = 1 THEN
-      |        ((((doc_id % 32) + 1) * (i * 7 + 3)) % 251) - 125 + 7
-      |      ELSE ((((doc_id % 32) + 1) * (i * 7 + 3)) % 251) - 125 END)) AS s
-      |  FROM documents CROSS JOIN (SELECT unnest(generate_series(0, 63)) AS k) t),
-      |aseg AS (
-      |  SELECT a.doc_id, CAST(g.seg AS BIGINT) AS seg_idx,
-      |    CAST(coalesce(sum(CASE WHEN b.s > a.s THEN (1::BIGINT << g.bit) ELSE 0::BIGINT END),
-      |      0) AS BIGINT) AS shash
-      |  FROM (SELECT s.seg, b.bit FROM (SELECT unnest(generate_series(0, 6)) AS seg) s
-      |        CROSS JOIN (SELECT unnest(generate_series(0, 14)) AS bit) b) g
-      |  JOIN asg a ON a.k = g.seg * 8 + g.bit
-      |  JOIN asg b ON b.doc_id = a.doc_id AND b.k = g.seg * 8 + g.bit + 1
-      |  GROUP BY a.doc_id, g.seg)""".stripMargin
-
-  private def mmAudioSegHashOracle: String =
-    s"""WITH $mmAudioSegCtes
-       |SELECT doc_id, seg_idx, shash FROM aseg""".stripMargin
-
-  /** sharedKeyPairs mirror over the segment hashes (minShared=3,
-    * threshold=0, maxBucket parameterized — 1000 for the default row,
-    * 16 for the cap-BINDING row): distinct (doc, hash-value) keys,
-    * bucket cap, ≥ 3 shared distinct values. Ends with apr(id_a, id_b,
-    * shared, n_a, n_b).
-    */
-  private def mmAudioSegPairCtes(maxBucket: Int): String =
-    s"""$mmAudioSegCtes,
-       |akeys AS (SELECT DISTINCT doc_id, shash FROM aseg),
-       |ank AS (SELECT doc_id, count(*) AS nk FROM akeys GROUP BY doc_id),
-       |aok AS (SELECT shash FROM akeys GROUP BY shash
-       |  HAVING count(*) <= $maxBucket AND count(*) > 1),
-       |aib AS (SELECT akeys.* FROM akeys JOIN aok USING (shash)),
-       |acand AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       |    CAST(count(DISTINCT a.shash) AS BIGINT) AS shared
-       |  FROM aib a JOIN aib b ON a.shash = b.shash AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2),
-       |apr AS (SELECT id_a, id_b, shared, na.nk AS n_a, nb.nk AS n_b
-       |  FROM acand JOIN ank na ON na.doc_id = acand.id_a
-       |             JOIN ank nb ON nb.doc_id = acand.id_b
-       |  WHERE shared >= 3)""".stripMargin
-
-  private def mmAudioOffsetPairsOracle: String =
-    s"""WITH ${mmAudioSegPairCtes(1000)}
-       |SELECT id_a, id_b, shared, n_a, n_b FROM apr""".stripMargin
-
-  private def mmAudioOffsetPairsCappedOracle: String =
-    s"""WITH ${mmAudioSegPairCtes(16)}
-       |SELECT id_a, id_b, shared, n_a, n_b FROM apr""".stripMargin
-
-  /** sharedKeyPairsWithStats' droppedBuckets mirror at the cap-binding
-    * geometry (maxBucket=16): one (bucket = the key value as VARCHAR,
-    * size) row per over-cap segment-hash bucket — BIGINT→VARCHAR
-    * matches the core's cast-to-string key.
-    */
-  private def mmAudioSegDroppedOracle: String =
-    s"""WITH $mmAudioSegCtes,
-       |akeys AS (SELECT DISTINCT doc_id, shash FROM aseg)
-       |SELECT CAST(shash AS VARCHAR) AS bucket, count(*) AS size
-       |FROM akeys GROUP BY shash HAVING count(*) > 16""".stripMargin
-
-  /** Min-id CC dedup over the shift-tolerant pair relation — the
-    * mmVideoDedupOracle recursive-closure pattern on apr.
-    */
-  private def mmAudioSegDedupOracle: String =
-    s"""WITH RECURSIVE ${mmAudioSegPairCtes(1000)},
-       |asnodes AS (SELECT DISTINCT id FROM (
-       |  SELECT id_a AS id FROM apr UNION ALL SELECT id_b AS id FROM apr)),
-       |aseg_eg AS (SELECT id_a AS a, id_b AS b FROM apr
-       |  UNION ALL SELECT id_b AS a, id_a AS b FROM apr),
-       |asreach AS (
-       |  SELECT id, id AS r FROM asnodes
-       |  UNION
-       |  SELECT aseg_eg.a AS id, asreach.r
-       |  FROM aseg_eg JOIN asreach ON asreach.id = aseg_eg.b),
-       |ascc AS (SELECT id, min(r) AS cluster_id FROM asreach GROUP BY id)
-       |SELECT doc_id FROM documents
-       |WHERE doc_id NOT IN (SELECT id FROM ascc WHERE id <> cluster_id)""".stripMargin
-
-  /** The synthetic-pattern luma L(x,y) as a DuckDB integer expression —
-    * the exact formula of Multimodal.withSyntheticPatternImages (gray
-    * BMP at 9×8 = the dHash grid, so Spark's REAL decode→scale→hash
-    * pipeline and this arithmetic meet bit-for-bit).
-    */
-  private def mmPatternLuma(x: Int, y: Int): String = {
-    val k = x * 7 + y * 13 + 3
-    val raw = s"(((doc_id % 32) + 1) * $k) % 251"
-    if (x == 2 && y == 3) s"(CASE WHEN (doc_id // 32) % 3 >= 1 THEN 250 - ($raw) ELSE $raw END)"
-    else if (x == 5 && y == 1) s"(CASE WHEN (doc_id // 32) % 3 = 2 THEN 250 - ($raw) ELSE $raw END)"
-    else s"($raw)"
-  }
-
-  /** 64-bit dHash of the pattern fixture: bit (y*8+x) set iff
-    * L(x+1,y) > L(x,y); folded with bitwise OR (a SUM would overflow
-    * DuckDB's checked BIGINT when bit 63 participates — and so does
-    * `1::BIGINT << 63` itself, hence the INT64_MIN literal for the
-    * sign bit).
-    */
-  private def mmDhashExpr: String =
-    (for (y <- 0 until 8; x <- 0 until 8) yield {
-      val bit = y * 8 + x
-      val mask = if (bit == 63) "(-9223372036854775807 - 1)"
-                 else s"(1::BIGINT << $bit)"
-      s"(CASE WHEN ${mmPatternLuma(x + 1, y)} > ${mmPatternLuma(x, y)} " +
-        s"THEN $mask ELSE 0::BIGINT END)"
-    }).mkString(" |\n  ")
-
-  private def mmPhashOracle: String =
-    s"""SELECT doc_id, $mmDhashExpr AS dhash FROM documents"""
-
-  /** aHash of the 8×8 pattern fixture: integer mean (sum of the 64
-    * lumas, floor-divided by 64), bit (y*8+x) set iff L(x,y) > mean.
-    */
-  private def mmAhashOracle: String = {
-    val lumSum = (for (y <- 0 until 8; x <- 0 until 8)
-      yield mmPatternLuma(x, y)).mkString(" +\n  ")
-    val bits = (for (y <- 0 until 8; x <- 0 until 8) yield {
-      val bit = y * 8 + x
-      val mask = if (bit == 63) "(-9223372036854775807 - 1)"
-                 else s"(1::BIGINT << $bit)"
-      s"(CASE WHEN ${mmPatternLuma(x, y)} > lmean THEN $mask ELSE 0::BIGINT END)"
-    }).mkString(" |\n  ")
-    s"""WITH m AS (SELECT doc_id, ($lumSum) // 64 AS lmean FROM documents)
-SELECT doc_id, $bits AS ahash FROM m"""
-  }
-
-  /** CTE chain mirroring TextDedup.hammingHashPairs over the pattern
-    * dhash (chunkBits=16, maxHamming=3, maxBucket=1000), ending in
-    * `pairs(id_a, id_b, hamming)`: arithmetic >> then 16-bit mask (sign
-    * bits masked identically on both engines), bucket count in (1,
-    * maxBucket], bit_count(xor) verify.
-    */
-  private def mmImagePairsCtes: String =
-    s"""h AS (SELECT doc_id, $mmDhashExpr AS dhash FROM documents),
-       |chp AS (SELECT doc_id, dhash, c AS chunk, (dhash >> (c * 16)) & 65535 AS cv
-       |  FROM h CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS c) t),
-       |okp AS (SELECT chunk, cv FROM chp GROUP BY chunk, cv
-       |  HAVING count(*) <= 1000 AND count(*) > 1),
-       |ibp AS (SELECT chp.* FROM chp JOIN okp USING (chunk, cv)),
-       |pairs AS (SELECT id_a, id_b, min(hamming) AS hamming FROM (
-       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       |    CAST(bit_count(xor(a.dhash, b.dhash)) AS INTEGER) AS hamming
-       |  FROM ibp a JOIN ibp b ON a.chunk = b.chunk AND a.cv = b.cv
-       |    AND a.doc_id < b.doc_id)
-       |  WHERE hamming <= 3 GROUP BY id_a, id_b)""".stripMargin
-
-  private def mmImagePairsOracle: String =
-    s"""WITH $mmImagePairsCtes
-       |SELECT id_a, id_b, hamming FROM pairs""".stripMargin
-
-  private def mmImageDedupOracle: String =
-    s"""WITH RECURSIVE $mmImagePairsCtes,
-       |nodes AS (SELECT DISTINCT id FROM (
-       |  SELECT id_a AS id FROM pairs UNION ALL SELECT id_b AS id FROM pairs)),
-       |eg AS (SELECT id_a AS a, id_b AS b FROM pairs
-       |  UNION ALL SELECT id_b AS a, id_a AS b FROM pairs),
-       |reach AS (
-       |  SELECT id, id AS r FROM nodes
-       |  UNION
-       |  SELECT eg.a AS id, reach.r FROM eg JOIN reach ON reach.id = eg.b),
-       |cc AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id)
-       |SELECT doc_id FROM documents
-       |WHERE doc_id NOT IN (SELECT id FROM cc WHERE id <> cluster_id)""".stripMargin
-
-  private def docEditPairsOracle: String =
-    s"""WITH $docEditPairsCtes
-       |SELECT id_a, id_b, dist FROM ep""".stripMargin
-
-  /** DuckDB mirror of TextDedup.editDecontaminateMd5 over the doc_id%10
-    * train/eval split (maxDist=5, shingleN=5, bands=4, rowsPerBand=4,
-    * maxBucket=1000): the docEditPairsCtes hash construction verbatim,
-    * but candidates are generated ONLY across the split (train × eval
-    * sharing a band bucket) under the combined-occupancy cap (admitted
-    * iff both sides appear and cl + cr ≤ maxBucket — no per-side > 1
-    * floor: a 1+1 bucket is a legitimate bipartite candidate), then the
-    * exact integer levenshtein ≤ 5 verify and the anti-join.
-    */
-  private def docEditDecontamOracle: String = {
-    val n = 5; val bands = 4; val r = 4; val k = bands * r
-    val fold = (1 until n).foldLeft("th[i]")((acc, j) => s"md5($acc || th[i+$j])")
-    val sigItems = (0 until k).map(i =>
-      s"list_min(list_transform(sh, h -> md5(h || '#$i')))").mkString(",\n    ")
-    val bandCase = (0 until bands).map { b =>
-      val parts = (1 to r).map(j => s"sig[${b * r + j}]").mkString(" || '|' || ")
-      s"WHEN $b THEN md5($parts || '#$b')"
-    }.mkString(" ")
-    s"""WITH tk AS (SELECT doc_id, text,
-       |  list_transform(generate_series(1, length(text)), i -> md5(text[i])) AS th
-       |  FROM documents),
-       |sh0 AS (SELECT doc_id, text, list_distinct(list_transform(
-       |  generate_series(1, greatest(len(th) - ${n - 1}, 0)),
-       |  i -> $fold)) AS sh FROM tk),
-       |s2e AS (SELECT doc_id, text, sh FROM sh0 WHERE len(sh) > 0),
-       |sige AS (SELECT doc_id, [$sigItems] AS sig FROM s2e),
-       |bde AS (SELECT doc_id, band, CASE band $bandCase END AS bh
-       |  FROM sige CROSS JOIN (SELECT unnest([${(0 until bands).mkString(", ")}]) AS band) b),
-       |cnt AS (SELECT band, bh,
-       |    count(*) FILTER (WHERE doc_id % 10 <> 0) AS cl,
-       |    count(*) FILTER (WHERE doc_id % 10 = 0) AS cr
-       |  FROM bde GROUP BY band, bh),
-       |oke AS (SELECT band, bh FROM cnt
-       |  WHERE cl >= 1 AND cr >= 1 AND cl + cr <= 1000),
-       |cde AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-       |  FROM bde a JOIN oke ON a.band = oke.band AND a.bh = oke.bh
-       |  JOIN bde b ON a.band = b.band AND a.bh = b.bh
-       |  WHERE a.doc_id % 10 <> 0 AND b.doc_id % 10 = 0),
-       |ep AS (SELECT id_a, id_b, dist FROM (
-       |  SELECT id_a, id_b,
-       |    CAST(levenshtein(ta.text, tb.text) AS INTEGER) AS dist
-       |  FROM cde JOIN s2e ta ON ta.doc_id = cde.id_a
-       |           JOIN s2e tb ON tb.doc_id = cde.id_b)
-       |  WHERE dist <= 5)
-       |SELECT doc_id FROM documents
-       |WHERE doc_id % 10 <> 0
-       |  AND doc_id NOT IN (SELECT DISTINCT id_a FROM ep)""".stripMargin
-  }
-
-  private def docEditDedupOracle: String =
-    s"""WITH RECURSIVE $docEditPairsCtes,
-       |nodes AS (SELECT DISTINCT id FROM (
-       |  SELECT id_a AS id FROM ep UNION ALL SELECT id_b AS id FROM ep)),
-       |eg AS (SELECT id_a AS a, id_b AS b FROM ep
-       |  UNION ALL SELECT id_b AS a, id_a AS b FROM ep),
-       |reach AS (
-       |  SELECT id, id AS r FROM nodes
-       |  UNION
-       |  SELECT eg.a AS id, reach.r FROM eg JOIN reach ON reach.id = eg.b),
-       |cc AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id)
-       |SELECT doc_id, text, lang, source, n_chars FROM documents
-       |WHERE doc_id NOT IN (SELECT id FROM cc WHERE id <> cluster_id)""".stripMargin
-
-  /** DuckDB mirror of TextDedup.ngramJaccardPairsMd5 (shingleN=3,
-    * threshold=0.1, maxBucket=200): block on the min shingle hash, cap
-    * blocks, verify with exact Jaccard.
-    */
-  private def docNgramMd5Oracle: String =
-    s"""WITH $md5ShingleCtes,
-       |blk AS (SELECT doc_id, sh, list_min(sh) AS block FROM s2),
-       |ok AS (SELECT block FROM blk GROUP BY block
-       |  HAVING count(*) <= 200 AND count(*) > 1),
-       |ib AS (SELECT blk.* FROM blk JOIN ok USING (block)),
-       |j AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       |    ${md5JaccardExpr("a.sh", "b.sh")} AS jaccard
-       |  FROM ib a JOIN ib b ON a.block = b.block AND a.doc_id < b.doc_id)
-       |SELECT id_a, id_b, jaccard FROM j WHERE jaccard >= 0.1""".stripMargin
-
-  /** DuckDB mirror of TextDedup.simhashDfMd5: per-token 60-bit hash =
-    * first 15 hex chars of md5 (hex digits decoded via strpos, exactly
-    * Spark's conv(_,16,10)); bit b of the simhash is set iff more than
-    * half the token hashes have bit b set.
-    */
-  private def docSimhashMd5Oracle: String = {
-    val sums = (0 until 60).map(b => s"sum((hv >> $b) & 1)::BIGINT AS c$b").mkString(", ")
-    val terms = (0 until 60).map(b =>
-      s"CASE WHEN 2*c$b > n THEN (1::BIGINT << $b) ELSE 0::BIGINT END").mkString("\n  + ")
-    s"""WITH t AS (SELECT doc_id,
-       |    list_filter(str_split_regex(lower(text), '[^\\p{L}\\p{Nd}]+'), x -> x <> '') AS toks
-       |  FROM documents),
-       |u AS (SELECT doc_id, unnest(toks) AS tok FROM t),
-       |m AS (SELECT doc_id, md5(tok) AS mh FROM u),
-       |h AS (SELECT doc_id, list_sum(list_transform(generate_series(1, 15),
-       |    i -> (strpos('0123456789abcdef', substr(mh, i, 1)) - 1)::BIGINT * (1::BIGINT << (4*(15-i)))))::BIGINT AS hv
-       |  FROM m),
-       |c AS (SELECT doc_id, count(*)::BIGINT AS n, $sums FROM h GROUP BY doc_id)
-       |SELECT doc_id, $terms AS simhash_md5 FROM c""".stripMargin
-  }
-
-  /** DuckDB mirror of Similarity.annTopK (nPlanes=8, dim=64, seed=42,
-    * probeHamming=1, k=10): the deterministic hyperplane constants are
-    * embedded verbatim (Double.toString round-trips exactly), bucket sign
-    * uses the same left-fold double accumulation (list_reduce), and the
-    * scoring/rank stage is the emb_knn_brute mirror restricted to
-    * same-bucket candidates.
-    */
-  private def embAnnOracle: String = {
-    val ps = llm.Similarity.planes(8, 64)
-    def bucketExpr(v: String): String = ps.zipWithIndex.map { case (p, i) =>
-      val arr = p.map(java.lang.Double.toString).mkString("[", ", ", "]")
-      s"""CASE WHEN list_reduce(list_transform(list_zip($v, $arr::DOUBLE[]),
-         |    p -> CAST(p[1] AS DOUBLE) * p[2]), (x, y) -> x + y) >= 0
-         |  THEN (1::BIGINT << $i) ELSE 0::BIGINT END""".stripMargin
-    }.mkString("\n + ")
-    val probes = "b0" +: (0 until 8).map(i => s"xor(b0, ${1L << i}::BIGINT)")
-    s"""WITH c AS (SELECT vec_id AS corpus_id, embedding AS cv,
-       |    ${bucketExpr("embedding")} AS bucket FROM embeddings),
-       |q0 AS (SELECT vec_id AS query_id, embedding AS qv,
-       |    ${bucketExpr("embedding")} AS b0 FROM embeddings WHERE vec_id < 20),
-       |pr AS (SELECT query_id, qv, unnest([${probes.mkString(", ")}]) AS bucket FROM q0),
-       |s AS (SELECT query_id, corpus_id,
-       |    list_sum(list_transform(list_zip(qv, cv), p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-       |    / (sqrt(list_sum(list_transform(qv, x -> CAST(x AS DOUBLE) * x)))
-       |       * sqrt(list_sum(list_transform(cv, x -> CAST(x AS DOUBLE) * x)))) AS sim
-       |  FROM c JOIN pr USING (bucket) WHERE corpus_id <> query_id)
-       |SELECT query_id, corpus_id,
-       |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, corpus_id) AS INTEGER) AS rank
-       |FROM s QUALIFY rank <= 10""".stripMargin
-  }
-
-  /** DuckDB mirror of AnnStream.annStream (nPlanes=8, dim=64, seed=42,
-    * k=10): the embAnnOracle formulation with EVERY vector as a query
-    * and the corpus restricted to earlier arrivals
-    * (corpus_id < query_id) — the id-ordered replay's "arrived so far".
-    */
-  private def embAnnStreamOracle: String = {
-    val ps = llm.Similarity.planes(8, 64)
-    def bucketExpr(v: String): String = ps.zipWithIndex.map { case (p, i) =>
-      val arr = p.map(java.lang.Double.toString).mkString("[", ", ", "]")
-      s"""CASE WHEN list_reduce(list_transform(list_zip($v, $arr::DOUBLE[]),
-         |    p -> CAST(p[1] AS DOUBLE) * p[2]), (x, y) -> x + y) >= 0
-         |  THEN (1::BIGINT << $i) ELSE 0::BIGINT END""".stripMargin
-    }.mkString("\n + ")
-    val probes = "b0" +: (0 until 8).map(i => s"xor(b0, ${1L << i}::BIGINT)")
-    s"""WITH c AS (SELECT vec_id AS corpus_id, embedding AS cv,
-       |    ${bucketExpr("embedding")} AS bucket FROM embeddings),
-       |q0 AS (SELECT vec_id AS query_id, embedding AS qv,
-       |    ${bucketExpr("embedding")} AS b0 FROM embeddings),
-       |pr AS (SELECT query_id, qv, unnest([${probes.mkString(", ")}]) AS bucket FROM q0),
-       |s AS (SELECT query_id, corpus_id,
-       |    list_sum(list_transform(list_zip(qv, cv), p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-       |    / (sqrt(list_sum(list_transform(qv, x -> CAST(x AS DOUBLE) * x)))
-       |       * sqrt(list_sum(list_transform(cv, x -> CAST(x AS DOUBLE) * x)))) AS sim
-       |  FROM c JOIN pr USING (bucket) WHERE corpus_id < query_id)
-       |SELECT query_id, corpus_id,
-       |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, corpus_id) AS INTEGER) AS rank
-       |FROM s QUALIFY rank <= 10""".stripMargin
-  }
-
-  /** DuckDB mirror of TextDedup.simhashPairsMd5 (maxHamming=3,
-    * maxBucket=1000): the docSimhashMd5Oracle fingerprint, split into 4
-    * 15-bit chunks; candidates share a (chunk, value) bucket (pigeonhole-
-    * complete at hamming ≤ 3); bucket cap; min hamming per distinct pair.
-    */
-  private def docSimhashPairsMd5Oracle: String = {
-    val sums = (0 until 60).map(b => s"sum((hv >> $b) & 1)::BIGINT AS c$b").mkString(", ")
-    val terms = (0 until 60).map(b =>
-      s"CASE WHEN 2*c$b > n THEN (1::BIGINT << $b) ELSE 0::BIGINT END").mkString("\n  + ")
-    s"""WITH t AS (SELECT doc_id,
-       |    list_filter(str_split_regex(lower(text), '[^\\p{L}\\p{Nd}]+'), x -> x <> '') AS toks
-       |  FROM documents),
-       |u AS (SELECT doc_id, unnest(toks) AS tok FROM t),
-       |m AS (SELECT doc_id, md5(tok) AS mh FROM u),
-       |h AS (SELECT doc_id, list_sum(list_transform(generate_series(1, 15),
-       |    i -> (strpos('0123456789abcdef', substr(mh, i, 1)) - 1)::BIGINT * (1::BIGINT << (4*(15-i)))))::BIGINT AS hv
-       |  FROM m),
-       |cc AS (SELECT doc_id, count(*)::BIGINT AS n, $sums FROM h GROUP BY doc_id),
-       |sh AS (SELECT doc_id, $terms AS sim FROM cc),
-       |ch AS (SELECT doc_id, sim, c, (sim >> (c * 15)) & ${(1L << 15) - 1} AS cv
-       |  FROM sh CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS c)),
-       |ok AS (SELECT c, cv FROM ch GROUP BY c, cv
-       |  HAVING count(*) <= 1000 AND count(*) > 1),
-       |ib AS (SELECT ch.* FROM ch JOIN ok USING (c, cv)),
-       |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       |    CAST(bit_count(xor(a.sim, b.sim)) AS INTEGER) AS hd
-       |  FROM ib a JOIN ib b ON a.c = b.c AND a.cv = b.cv AND a.doc_id < b.doc_id)
-       |SELECT id_a, id_b, CAST(min(hd) AS INTEGER) AS hamming
-       |FROM p WHERE hd <= 3 GROUP BY id_a, id_b""".stripMargin
-  }
-
-  /** Shared DuckDB cosine fragment (the emb_knn_brute formulation): dot
-    * and norms via list_sum over double products — hash-matches the
-    * engine's native VecCosine double loop.
-    */
-  private def duckCosine(a: String, b: String): String =
-    s"""list_sum(list_transform(list_zip($a, $b), z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)))
-       |    / (sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * x)))
-       |       * sqrt(list_sum(list_transform($b, x -> CAST(x AS DOUBLE) * x))))""".stripMargin
-
-  /** DuckDB mirror of Similarity.embeddingNearDupPairs (groups=8,
-    * planesPerGroup=4, threshold=0.4, maxBucket=1000, seed=42): the same
-    * 32 hyperplane constants embedded verbatim, sliced 4 per band; band
-    * codes via the left-fold sign test; bucket-capped band self-join;
-    * distinct pairs; one exact cosine verify. Output ids only (the cosine
-    * double is representation-sensitive, like knn's sim).
-    */
-  private def embNearDupPairCtes: String = {
-    val groups = 8; val ppg = 4
-    val ps = llm.Similarity.planes(groups * ppg, 64)
-    def codeExpr(g: Int): String = (0 until ppg).map { i =>
-      val arr = ps(g * ppg + i).map(java.lang.Double.toString).mkString("[", ", ", "]")
-      s"""CASE WHEN list_reduce(list_transform(list_zip(v, $arr::DOUBLE[]),
-         |    z -> CAST(z[1] AS DOUBLE) * z[2]), (x, y) -> x + y) >= 0
-         |  THEN ${1L << i}::BIGINT ELSE 0::BIGINT END""".stripMargin
-    }.mkString("\n + ")
-    val codeCase = (0 until groups).map(g => s"WHEN $g THEN ${codeExpr(g)}").mkString("\n  ")
-    s"""e AS (SELECT vec_id AS id, embedding AS v FROM embeddings),
-       |b AS (SELECT id, band, CASE band $codeCase END AS code
-       |  FROM e CROSS JOIN (SELECT unnest([${(0 until groups).mkString(", ")}]) AS band) g),
-       |ok AS (SELECT band, code FROM b GROUP BY band, code
-       |  HAVING count(*) <= 1000 AND count(*) > 1),
-       |ib AS (SELECT b.* FROM b JOIN ok USING (band, code)),
-       |cand AS (SELECT DISTINCT a.id AS id_a, b2.id AS id_b
-       |  FROM ib a JOIN ib b2 ON a.band = b2.band AND a.code = b2.code AND a.id < b2.id),
-       |s AS (SELECT id_a, id_b, ${duckCosine("pa.v", "pb.v")} AS cos
-       |  FROM cand JOIN e pa ON pa.id = cand.id_a JOIN e pb ON pb.id = cand.id_b),
-       |ep AS (SELECT id_a, id_b FROM s WHERE cos >= 0.4)""".stripMargin
-  }
-
-  private def embNearDupOracle: String =
-    s"""WITH $embNearDupPairCtes
-       |SELECT id_a, id_b FROM ep""".stripMargin
-
-  /** Survivors of the STREAMING embedding near-dup operator: the same
-    * recursive-CTE closure as docNeardupDedupOracle, over the
-    * emb_neardup_pairs relation — survivors = min id per connected
-    * component + isolated vectors.
-    */
-  /** Min-label connected components over the emb_neardup_pairs relation
-    * (pair members only, like docNeardupClustersOracle).
-    */
-  private def embNearDupClustersOracle: String =
-    s"""WITH RECURSIVE $embNearDupPairCtes,
-       |nodes AS (SELECT DISTINCT id FROM (
-       |  SELECT id_a AS id FROM ep UNION ALL SELECT id_b AS id FROM ep)),
-       |eg AS (SELECT id_a AS a, id_b AS b FROM ep
-       |  UNION ALL SELECT id_b AS a, id_a AS b FROM ep),
-       |reach AS (
-       |  SELECT id, id AS r FROM nodes
-       |  UNION
-       |  SELECT eg.a AS id, reach.r FROM eg JOIN reach ON reach.id = eg.b),
-       |cc AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id)
-       |SELECT id AS vec_id, cluster_id FROM cc""".stripMargin
-
-  private def embNearDupStreamOracle: String =
-    s"""WITH RECURSIVE $embNearDupPairCtes,
-       |nodes AS (SELECT DISTINCT id FROM (
-       |  SELECT id_a AS id FROM ep UNION ALL SELECT id_b AS id FROM ep)),
-       |eg AS (SELECT id_a AS a, id_b AS b FROM ep
-       |  UNION ALL SELECT id_b AS a, id_a AS b FROM ep),
-       |reach AS (
-       |  SELECT id, id AS r FROM nodes
-       |  UNION
-       |  SELECT eg.a AS id, reach.r FROM eg JOIN reach ON reach.id = eg.b),
-       |cc AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id)
-       |SELECT vec_id FROM embeddings
-       |WHERE vec_id NOT IN (SELECT id FROM cc WHERE id <> cluster_id)""".stripMargin
-
-  /** DuckDB mirror of Similarity.pqTopK (dim=64, nSub=8, codesPerSub=16,
-    * k=10): the codebook is derived IN SQL exactly as the engine builds
-    * it — subspace slices of the 16 lowest-vec_id rows — then each
-    * corpus row is PQ-encoded (argmin squared L2 per subspace, ties to
-    * the smallest code), each query gets its subspace-dot lookup table,
-    * and candidates rank by ADC-dot / (‖q‖ · reconstructed ‖x‖). Every
-    * double accumulates left-fold (list_reduce / list(.. ORDER BY m)),
-    * matching PqEncode/PqLut/PqScore's loop order bit-for-bit, so ranks
-    * agree across engines; the sim double itself is excluded like the
-    * other ANN rows.
-    */
-  private def embPqOracle: String = embPqOracleSql(lloydIters = 0)
-
-  /** PQ mirror with `lloydIters` per-subspace Lloyd passes unrolled as
-    * CTE chains (Similarity.trainedCodebook): each pass assigns the
-    * `sampleN` lowest-vec_id sample subvectors by the same left-fold
-    * squared-diff argmin the encoder uses (ties → smallest code), then
-    * recomputes each (m, j) centroid as the floor(x·2^20)-quantized
-    * element-wise mean — bit-identical across engines because the sums
-    * are exact integer adds. Codes with no members keep the previous
-    * centroid (the LEFT JOIN + coalesce).
-    */
-  private def embPqOracleSql(lloydIters: Int, sampleN: Int = 512): String = {
-    val sub = "(SELECT unnest(generate_series(0, 7)) AS m)"
-    val train = (0 until lloydIters).map { i =>
-      val prev = if (i == 0) "cb0" else s"cb$i"
-      s"""sd$i AS (SELECT s.vec_id, p.m, p.j,
-         |    list_reduce(list_transform(list_zip(s.embedding[p.m*8+1 : p.m*8+8], p.cent),
-         |      z -> (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE)) * (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE))),
-         |      (x, y) -> x + y) AS d
-         |  FROM samp s CROSS JOIN $prev p),
-         |sasg$i AS (SELECT vec_id, m, j FROM (
-         |  SELECT vec_id, m, j, row_number() OVER (PARTITION BY vec_id, m ORDER BY d ASC, j) AS rn
-         |  FROM sd$i) WHERE rn = 1),
-         |supd$i AS (SELECT m, j, pos,
-         |    CAST(sum(CAST(floor(CAST(x AS DOUBLE) * 1048576.0) AS BIGINT)) AS DOUBLE)
-         |      / (count(*) * 1048576.0) AS mean
-         |  FROM (SELECT g.m, g.j,
-         |      generate_subscripts(s.embedding[g.m*8+1 : g.m*8+8], 1) AS pos,
-         |      unnest(s.embedding[g.m*8+1 : g.m*8+8]) AS x
-         |    FROM sasg$i g JOIN samp s USING (vec_id))
-         |  GROUP BY m, j, pos),
-         |cbu$i AS (SELECT m, j, list(mean ORDER BY pos) AS cent FROM supd$i GROUP BY m, j),
-         |cb${i + 1} AS (SELECT p.m, p.j, coalesce(u.cent, p.cent) AS cent
-         |  FROM $prev p LEFT JOIN cbu$i u ON u.m = p.m AND u.j = p.j),""".stripMargin
-    }.mkString("\n")
-    val sampCte =
-      if (lloydIters > 0)
-        s"\nsamp AS (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT $sampleN),"
-      else ""
-    val finalCb = s"cb$lloydIters"
-    s"""WITH a0 AS (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 16),
-       |a AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INTEGER) AS j, embedding AS av FROM a0),
-       |cb0 AS (SELECT m, j, av[m*8+1 : m*8+8] AS cent FROM a CROSS JOIN $sub),$sampCte
-       |$train
-       |cbn AS (SELECT m, j, cent,
-       |    list_reduce(list_transform(cent, x -> CAST(x AS DOUBLE) * x), (x, y) -> x + y) AS n2
-       |  FROM $finalCb),
-       |c AS (SELECT vec_id AS corpus_id, embedding AS cv FROM embeddings),
-       |enc0 AS (SELECT corpus_id, m, j,
-       |    list_reduce(list_transform(list_zip(cv[m*8+1 : m*8+8], cent),
-       |      z -> (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE)) * (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE))),
-       |      (x, y) -> x + y) AS d
-       |  FROM c CROSS JOIN cbn),
-       |codes AS (SELECT corpus_id, m, j AS code FROM (
-       |  SELECT corpus_id, m, j, row_number() OVER (PARTITION BY corpus_id, m ORDER BY d ASC, j) AS rn
-       |  FROM enc0) WHERE rn = 1),
-       |q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 20),
-       |qn AS (SELECT query_id,
-       |    sqrt(list_reduce(list_transform(qv, x -> CAST(x AS DOUBLE) * x), (x, y) -> x + y)) AS qn
-       |  FROM q),
-       |lut AS (SELECT query_id, m, j,
-       |    list_reduce(list_transform(list_zip(qv[m*8+1 : m*8+8], cent),
-       |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (x, y) -> x + y) AS dot,
-       |    n2
-       |  FROM q CROSS JOIN cbn),
-       |s0 AS (SELECT query_id, corpus_id,
-       |    list_reduce(list(dot ORDER BY lut.m), (x, y) -> x + y) AS adc,
-       |    list_reduce(list(n2 ORDER BY lut.m), (x, y) -> x + y) AS cn2
-       |  FROM codes JOIN lut ON lut.m = codes.m AND lut.j = codes.code
-       |  GROUP BY query_id, corpus_id),
-       |s AS (SELECT s0.query_id, corpus_id,
-       |    (CASE WHEN cn2 = 0 THEN 0.0 ELSE adc / sqrt(cn2) END) / qn.qn AS sim
-       |  FROM s0 JOIN qn ON qn.query_id = s0.query_id
-       |  WHERE corpus_id <> s0.query_id)
-       |SELECT query_id, corpus_id,
-       |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, corpus_id) AS INTEGER) AS rank
-       |FROM s QUALIFY rank <= 10""".stripMargin
-  }
-
-  /** DuckDB mirror of Similarity.ivfPqTopK (nCells=16, nProbe=4, dim=64,
-    * nSub=8, codesPerSub=16, k=10, no refine): anchor cells (the 16
-    * lowest-vec_id rows, Lloyd omitted) assign by argmax cosine (ties →
-    * smallest cell); the PQ codebook comes from the SAME anchors;
-    * candidates = probed cells' members, scored by ADC with the engine's
-    * division order.
-    */
-  private def embIvfPqOracle: String = {
-    val sub = "(SELECT unnest(generate_series(0, 7)) AS m)"
-    s"""WITH a0 AS (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 16),
-       |a AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INTEGER) AS j, embedding AS av FROM a0),
-       |cb AS (SELECT m, j, av[m*8+1 : m*8+8] AS cent FROM a CROSS JOIN $sub),
-       |cbn AS (SELECT m, j, cent,
-       |    list_reduce(list_transform(cent, x -> CAST(x AS DOUBLE) * x), (x, y) -> x + y) AS n2
-       |  FROM cb),
-       |centt AS (SELECT vec_id::BIGINT AS cell, embedding AS centroid
-       |    FROM embeddings ORDER BY vec_id LIMIT 16),
-       |c AS (SELECT vec_id AS corpus_id, embedding AS cv FROM embeddings),
-       |asg AS (SELECT corpus_id, cell FROM (
-       |  SELECT corpus_id, cell,
-       |    row_number() OVER (PARTITION BY corpus_id ORDER BY csim DESC, cell) AS rn
-       |  FROM (SELECT corpus_id, cell, ${duckCosine("cv", "centroid")} AS csim
-       |        FROM c CROSS JOIN centt)) WHERE rn = 1),
-       |enc0 AS (SELECT corpus_id, m, j,
-       |    list_reduce(list_transform(list_zip(cv[m*8+1 : m*8+8], cent),
-       |      z -> (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE)) * (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE))),
-       |      (x, y) -> x + y) AS d
-       |  FROM c CROSS JOIN cbn),
-       |codes AS (SELECT corpus_id, m, j AS code FROM (
-       |  SELECT corpus_id, m, j, row_number() OVER (PARTITION BY corpus_id, m ORDER BY d ASC, j) AS rn
-       |  FROM enc0) WHERE rn = 1),
-       |q0 AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 20),
-       |pr AS (SELECT query_id, cell FROM (
-       |  SELECT query_id, cell,
-       |    row_number() OVER (PARTITION BY query_id ORDER BY csim DESC, cell) AS rn
-       |  FROM (SELECT query_id, cell, ${duckCosine("qv", "centroid")} AS csim
-       |        FROM q0 CROSS JOIN centt)) WHERE rn <= 4),
-       |cand AS (SELECT pr.query_id, asg.corpus_id FROM asg JOIN pr USING (cell)
-       |  WHERE asg.corpus_id <> pr.query_id),
-       |qn AS (SELECT query_id,
-       |    sqrt(list_reduce(list_transform(qv, x -> CAST(x AS DOUBLE) * x), (x, y) -> x + y)) AS qn
-       |  FROM q0),
-       |lut AS (SELECT query_id, m, j,
-       |    list_reduce(list_transform(list_zip(qv[m*8+1 : m*8+8], cent),
-       |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (x, y) -> x + y) AS dot,
-       |    n2
-       |  FROM q0 CROSS JOIN cbn),
-       |s0 AS (SELECT cand.query_id, cand.corpus_id,
-       |    list_reduce(list(lut.dot ORDER BY lut.m), (x, y) -> x + y) AS adc,
-       |    list_reduce(list(lut.n2 ORDER BY lut.m), (x, y) -> x + y) AS cn2
-       |  FROM cand JOIN codes ON codes.corpus_id = cand.corpus_id
-       |            JOIN lut ON lut.query_id = cand.query_id AND lut.m = codes.m AND lut.j = codes.code
-       |  GROUP BY cand.query_id, cand.corpus_id),
-       |s AS (SELECT s0.query_id, corpus_id,
-       |    (CASE WHEN cn2 = 0 THEN 0.0 ELSE adc / sqrt(cn2) END) / qn.qn AS sim
-       |  FROM s0 JOIN qn ON qn.query_id = s0.query_id)
-       |SELECT query_id, corpus_id,
-       |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, corpus_id) AS INTEGER) AS rank
-       |FROM s QUALIFY rank <= 10""".stripMargin
-  }
-
-  /** DuckDB mirror of Similarity.ivfPqTopK(residual = true) (nCells=16,
-    * nProbe=4, dim=64, nSub=8, codesPerSub=16, k=10, lloydIters=0):
-    * Faiss-IndexIVFPQ-style — each corpus row PQ-encodes its RESIDUAL
-    * against its assigned cell's centroid. The mirror re-derives every
-    * deployed literal in SQL: the 16 anchor centroids; the residual
-    * anchors (rows 17–32 by id, argmax-cosine-assigned, centroid-
-    * subtracted); the residual codebook (subspace slices of those
-    * residuals); the per-(m, j) ‖cb‖² and the per-cell norm-correction
-    * table w(cell, m, j) = 2·dot(centroidₘ, cb(m, j)) + ‖cb(m, j)‖².
-    * Scoring reassembles cosine exactly like the engine:
-    * (q·c + Σ lut) / (√(‖c‖² + Σ w) · ‖q‖), 0 when the reconstructed
-    * norm² ≤ 0. sim itself is excluded from the compared columns (rank
-    * only), the same policy as every ANN row.
-    */
-  private def embIvfPqResidualOracle: String =
-    embIvfPqResidualOracleSql(stream = false)
-
-  /** The stream variant (`AnnStream.ivfPqAnnStream(residual = true)`
-    * through the id-ordered replay): every vector is a query, candidates
-    * are earlier arrivals (corpus_id < query_id) — same full-set deployed
-    * literals, so no prefix-model divergence exists to account for.
-    */
-  private def embIvfPqResidualStreamOracle: String =
-    embIvfPqResidualOracleSql(stream = true)
-
-  private def embIvfPqResidualOracleSql(stream: Boolean): String = {
-    val sub = "(SELECT unnest(generate_series(0, 7)) AS m)"
-    val qFilter = if (stream) "" else " WHERE vec_id < 20"
-    val candRestrict = if (stream) "<" else "<>"
-    s"""WITH centt AS (SELECT vec_id::BIGINT AS cell, embedding AS centroid
-       |    FROM embeddings ORDER BY vec_id LIMIT 16),
-       |cn2 AS (SELECT cell,
-       |    list_reduce(list_transform(centroid, x -> CAST(x AS DOUBLE) * x), (x, y) -> x + y) AS cn2
-       |  FROM centt),
-       |ra AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INTEGER) AS j, embedding AS av
-       |  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 16 OFFSET 16)),
-       |rasg AS (SELECT j, av, centroid FROM (
-       |  SELECT j, av, centroid,
-       |    row_number() OVER (PARTITION BY j ORDER BY csim DESC, cell) AS rn
-       |  FROM (SELECT ra.j, ra.av, centt.cell, centt.centroid,
-       |          ${duckCosine("av", "centroid")} AS csim
-       |        FROM ra CROSS JOIN centt)) WHERE rn = 1),
-       |rv AS (SELECT j, list_transform(list_zip(av, centroid),
-       |    z -> CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE)) AS resid FROM rasg),
-       |cb AS (SELECT m, j, resid[m*8+1 : m*8+8] AS cent FROM rv CROSS JOIN $sub),
-       |rn2 AS (SELECT m, j,
-       |    list_reduce(list_transform(cent, x -> CAST(x AS DOUBLE) * x), (x, y) -> x + y) AS n2
-       |  FROM cb),
-       |w AS (SELECT centt.cell, cb.m, cb.j,
-       |    2.0 * list_reduce(list_transform(list_zip(centt.centroid[cb.m*8+1 : cb.m*8+8], cb.cent),
-       |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (x, y) -> x + y) + rn2.n2 AS w
-       |  FROM centt CROSS JOIN cb JOIN rn2 ON rn2.m = cb.m AND rn2.j = cb.j),
-       |c AS (SELECT vec_id AS corpus_id, embedding AS cv FROM embeddings),
-       |asg AS (SELECT corpus_id, cell, cv, centroid FROM (
-       |  SELECT corpus_id, cell, cv, centroid,
-       |    row_number() OVER (PARTITION BY corpus_id ORDER BY csim DESC, cell) AS rn
-       |  FROM (SELECT corpus_id, cell, cv, centroid, ${duckCosine("cv", "centroid")} AS csim
-       |        FROM c CROSS JOIN centt)) WHERE rn = 1),
-       |crv AS (SELECT corpus_id, cell, list_transform(list_zip(cv, centroid),
-       |    z -> CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE)) AS rvv FROM asg),
-       |enc0 AS (SELECT corpus_id, cell, cb.m, cb.j,
-       |    list_reduce(list_transform(list_zip(rvv[cb.m*8+1 : cb.m*8+8], cb.cent),
-       |      z -> (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE)) * (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE))),
-       |      (x, y) -> x + y) AS d
-       |  FROM crv CROSS JOIN cb),
-       |codes AS (SELECT corpus_id, cell, m, j AS code FROM (
-       |  SELECT corpus_id, cell, m, j, row_number() OVER (PARTITION BY corpus_id, m ORDER BY d ASC, j) AS rn
-       |  FROM enc0) WHERE rn = 1),
-       |q0 AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings$qFilter),
-       |qn AS (SELECT query_id,
-       |    sqrt(list_reduce(list_transform(qv, x -> CAST(x AS DOUBLE) * x), (x, y) -> x + y)) AS qn
-       |  FROM q0),
-       |pr AS (SELECT query_id, cell, qdotc FROM (
-       |  SELECT query_id, cell, qdotc,
-       |    row_number() OVER (PARTITION BY query_id ORDER BY csim DESC, cell) AS rn
-       |  FROM (SELECT query_id, cell, ${duckCosine("qv", "centroid")} AS csim,
-       |          list_reduce(list_transform(list_zip(qv, centroid),
-       |            z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (x, y) -> x + y) AS qdotc
-       |        FROM q0 CROSS JOIN centt)) WHERE rn <= 4),
-       |lut AS (SELECT query_id, m, j,
-       |    list_reduce(list_transform(list_zip(qv[m*8+1 : m*8+8], cent),
-       |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (x, y) -> x + y) AS dot
-       |  FROM q0 CROSS JOIN cb),
-       |s0 AS (SELECT pr.query_id, codes.corpus_id, pr.cell, pr.qdotc,
-       |    list_reduce(list(lut.dot ORDER BY lut.m), (x, y) -> x + y) AS adc,
-       |    list_reduce(list(w.w ORDER BY w.m), (x, y) -> x + y) AS cw
-       |  FROM pr JOIN codes USING (cell)
-       |       JOIN lut ON lut.query_id = pr.query_id AND lut.m = codes.m AND lut.j = codes.code
-       |       JOIN w ON w.cell = pr.cell AND w.m = codes.m AND w.j = codes.code
-       |  WHERE codes.corpus_id $candRestrict pr.query_id
-       |  GROUP BY pr.query_id, codes.corpus_id, pr.cell, pr.qdotc),
-       |s AS (SELECT s0.query_id, corpus_id,
-       |    CASE WHEN (cn2.cn2 + cw) <= 0 THEN 0.0
-       |         ELSE (qdotc + adc) / (sqrt(cn2.cn2 + cw) * qn.qn) END AS sim
-       |  FROM s0 JOIN qn ON qn.query_id = s0.query_id
-       |          JOIN cn2 ON cn2.cell = s0.cell)
-       |SELECT query_id, corpus_id,
-       |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, corpus_id) AS INTEGER) AS rank
-       |FROM s QUALIFY rank <= 10""".stripMargin
-  }
-
-  /** DuckDB mirror of AnnStream.ivfPqAnnStream (nCells=16, nProbe=4,
-    * dim=64, nSub=8, codesPerSub=16, k=10): the embIvfPqOracle machinery
-    * with EVERY vector as a query and candidates restricted to earlier
-    * arrivals (corpus_id < query_id — the id-ordered replay's "arrived
-    * so far"), scores divided in the engine's exact order.
-    */
-  private def embIvfPqStreamOracle: String = {
-    val sub = "(SELECT unnest(generate_series(0, 7)) AS m)"
-    s"""WITH a0 AS (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 16),
-       |a AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INTEGER) AS j, embedding AS av FROM a0),
-       |cb AS (SELECT m, j, av[m*8+1 : m*8+8] AS cent FROM a CROSS JOIN $sub),
-       |cbn AS (SELECT m, j, cent,
-       |    list_reduce(list_transform(cent, x -> CAST(x AS DOUBLE) * x), (x, y) -> x + y) AS n2
-       |  FROM cb),
-       |centt AS (SELECT vec_id::BIGINT AS cell, embedding AS centroid
-       |    FROM embeddings ORDER BY vec_id LIMIT 16),
-       |c AS (SELECT vec_id AS corpus_id, embedding AS cv FROM embeddings),
-       |asg AS (SELECT corpus_id, cell FROM (
-       |  SELECT corpus_id, cell,
-       |    row_number() OVER (PARTITION BY corpus_id ORDER BY csim DESC, cell) AS rn
-       |  FROM (SELECT corpus_id, cell, ${duckCosine("cv", "centroid")} AS csim
-       |        FROM c CROSS JOIN centt)) WHERE rn = 1),
-       |enc0 AS (SELECT corpus_id, m, j,
-       |    list_reduce(list_transform(list_zip(cv[m*8+1 : m*8+8], cent),
-       |      z -> (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE)) * (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE))),
-       |      (x, y) -> x + y) AS d
-       |  FROM c CROSS JOIN cbn),
-       |codes AS (SELECT corpus_id, m, j AS code FROM (
-       |  SELECT corpus_id, m, j, row_number() OVER (PARTITION BY corpus_id, m ORDER BY d ASC, j) AS rn
-       |  FROM enc0) WHERE rn = 1),
-       |q0 AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings),
-       |pr AS (SELECT query_id, cell FROM (
-       |  SELECT query_id, cell,
-       |    row_number() OVER (PARTITION BY query_id ORDER BY csim DESC, cell) AS rn
-       |  FROM (SELECT query_id, cell, ${duckCosine("qv", "centroid")} AS csim
-       |        FROM q0 CROSS JOIN centt)) WHERE rn <= 4),
-       |cand AS (SELECT pr.query_id, asg.corpus_id FROM asg JOIN pr USING (cell)
-       |  WHERE asg.corpus_id < pr.query_id),
-       |qn AS (SELECT query_id,
-       |    sqrt(list_reduce(list_transform(qv, x -> CAST(x AS DOUBLE) * x), (x, y) -> x + y)) AS qn
-       |  FROM q0),
-       |lut AS (SELECT query_id, m, j,
-       |    list_reduce(list_transform(list_zip(qv[m*8+1 : m*8+8], cent),
-       |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (x, y) -> x + y) AS dot,
-       |    n2
-       |  FROM q0 CROSS JOIN cbn),
-       |s0 AS (SELECT cand.query_id, cand.corpus_id,
-       |    list_reduce(list(lut.dot ORDER BY lut.m), (x, y) -> x + y) AS adc,
-       |    list_reduce(list(lut.n2 ORDER BY lut.m), (x, y) -> x + y) AS cn2
-       |  FROM cand JOIN codes ON codes.corpus_id = cand.corpus_id
-       |            JOIN lut ON lut.query_id = cand.query_id AND lut.m = codes.m AND lut.j = codes.code
-       |  GROUP BY cand.query_id, cand.corpus_id),
-       |s AS (SELECT s0.query_id, corpus_id,
-       |    (CASE WHEN cn2 = 0 THEN 0.0 ELSE adc / sqrt(cn2) END) / qn.qn AS sim
-       |  FROM s0 JOIN qn ON qn.query_id = s0.query_id)
-       |SELECT query_id, corpus_id,
-       |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, corpus_id) AS INTEGER) AS rank
-       |FROM s QUALIFY rank <= 10""".stripMargin
-  }
-
-  /** DuckDB mirror of AnnStream.pqAnnStream (dim=64, nSub=8,
-    * codesPerSub=16, nPlanes=8, k=10): the embPqOracle codebook/encode/
-    * LUT machinery with EVERY vector as a query, candidates restricted
-    * to the query's 9 probe buckets AND earlier arrivals
-    * (corpus_id < query_id — the id-ordered replay's "arrived so far"),
-    * scores divided in the engine's exact order ((adc/√cn2)/‖q‖).
-    */
-  private def embPqStreamOracle: String = {
-    val ps = llm.Similarity.planes(8, 64)
-    def bucketExpr(v: String): String = ps.zipWithIndex.map { case (p, i) =>
-      val arr = p.map(java.lang.Double.toString).mkString("[", ", ", "]")
-      s"""CASE WHEN list_reduce(list_transform(list_zip($v, $arr::DOUBLE[]),
-         |    p -> CAST(p[1] AS DOUBLE) * p[2]), (x, y) -> x + y) >= 0
-         |  THEN (1::BIGINT << $i) ELSE 0::BIGINT END""".stripMargin
-    }.mkString("\n + ")
-    val probes = "b0" +: (0 until 8).map(i => s"xor(b0, ${1L << i}::BIGINT)")
-    val sub = "(SELECT unnest(generate_series(0, 7)) AS m)"
-    s"""WITH a0 AS (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 16),
-       |a AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INTEGER) AS j, embedding AS av FROM a0),
-       |cb AS (SELECT m, j, av[m*8+1 : m*8+8] AS cent FROM a CROSS JOIN $sub),
-       |cbn AS (SELECT m, j, cent,
-       |    list_reduce(list_transform(cent, x -> CAST(x AS DOUBLE) * x), (x, y) -> x + y) AS n2
-       |  FROM cb),
-       |c AS (SELECT vec_id AS corpus_id, embedding AS cv,
-       |    ${bucketExpr("embedding")} AS bucket FROM embeddings),
-       |enc0 AS (SELECT corpus_id, m, j,
-       |    list_reduce(list_transform(list_zip(cv[m*8+1 : m*8+8], cent),
-       |      z -> (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE)) * (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE))),
-       |      (x, y) -> x + y) AS d
-       |  FROM c CROSS JOIN cbn),
-       |codes AS (SELECT corpus_id, m, j AS code FROM (
-       |  SELECT corpus_id, m, j, row_number() OVER (PARTITION BY corpus_id, m ORDER BY d ASC, j) AS rn
-       |  FROM enc0) WHERE rn = 1),
-       |q0 AS (SELECT vec_id AS query_id, embedding AS qv,
-       |    ${bucketExpr("embedding")} AS b0 FROM embeddings),
-       |pr AS (SELECT query_id, unnest([${probes.mkString(", ")}]) AS bucket FROM q0),
-       |cand AS (SELECT pr.query_id, c.corpus_id FROM c JOIN pr USING (bucket)
-       |  WHERE c.corpus_id < pr.query_id),
-       |qn AS (SELECT query_id,
-       |    sqrt(list_reduce(list_transform(qv, x -> CAST(x AS DOUBLE) * x), (x, y) -> x + y)) AS qn
-       |  FROM q0),
-       |lut AS (SELECT query_id, m, j,
-       |    list_reduce(list_transform(list_zip(qv[m*8+1 : m*8+8], cent),
-       |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (x, y) -> x + y) AS dot,
-       |    n2
-       |  FROM q0 CROSS JOIN cbn),
-       |s0 AS (SELECT cand.query_id, cand.corpus_id,
-       |    list_reduce(list(lut.dot ORDER BY lut.m), (x, y) -> x + y) AS adc,
-       |    list_reduce(list(lut.n2 ORDER BY lut.m), (x, y) -> x + y) AS cn2
-       |  FROM cand JOIN codes ON codes.corpus_id = cand.corpus_id
-       |            JOIN lut ON lut.query_id = cand.query_id AND lut.m = codes.m AND lut.j = codes.code
-       |  GROUP BY cand.query_id, cand.corpus_id),
-       |s AS (SELECT s0.query_id, corpus_id,
-       |    (CASE WHEN cn2 = 0 THEN 0.0 ELSE adc / sqrt(cn2) END) / qn.qn AS sim
-       |  FROM s0 JOIN qn ON qn.query_id = s0.query_id)
-       |SELECT query_id, corpus_id,
-       |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, corpus_id) AS INTEGER) AS rank
-       |FROM s QUALIFY rank <= 10""".stripMargin
-  }
-
-  /** DuckDB mirror of Similarity.ivfTopK (nCells=16, nProbe=4, k=10,
-    * lloydIters=1): anchor centroids = the 16 lowest-vec_id rows; corpus
-    * assigned to the argmax-cosine cell (ties to the smallest cell,
-    * matching the engine's (csim, -cell) max_by); ONE Lloyd pass
-    * recomputes each centroid as its cell's element-wise mean on
-    * floor(x·2^20) longs (exact order-free sums — the cross-engine
-    * determinism trick, see ivfTopK's scaladoc) and reassigns; queries
-    * probe the 4 nearest refined cells; rank-compared like emb_knn_brute.
-    */
-  /** DuckDB mirror of CorpusOps.lmPerplexity's integer sufficient
-    * statistics (self-trained, α irrelevant to the hashed columns):
-    * unigram/bigram train counts, the per-(doc, bigram-type)
-    * multiplicity relation, both probe lookups, and the per-doc sums.
-    * Bigrams = the doc_repetition mirror's inclusive-slice idiom;
-    * HUGEINT sums cast back to BIGINT for schema parity.
-    */
-  private def docLmPplOracle: String =
-    """WITH t AS (SELECT doc_id,
-      |  list_filter(str_split_regex(lower(text), '[^\p{L}\p{Nd}]+'), x -> x <> '') AS toks
-      |  FROM documents),
-      |uni AS (SELECT tok, count(*) AS c1
-      |  FROM (SELECT unnest(toks) AS tok FROM t) GROUP BY tok),
-      |bg AS (SELECT doc_id, toks,
-      |  list_transform(generate_series(1, greatest(len(toks) - 1, 0)),
-      |    i -> array_to_string(toks[i:i+1], ' ')) AS grams
-      |  FROM t),
-      |bi AS (SELECT gr, count(*) AS c12
-      |  FROM (SELECT unnest(grams) AS gr FROM bg) GROUP BY gr),
-      |db AS (SELECT doc_id, gr, count(*) AS m
-      |  FROM (SELECT doc_id, unnest(grams) AS gr FROM bg) GROUP BY doc_id, gr),
-      |j AS (SELECT db.doc_id, db.m,
-      |    coalesce(bi.c12, 0) AS c12, coalesce(uni.c1, 0) AS c1
-      |  FROM db LEFT JOIN bi ON db.gr = bi.gr
-      |    LEFT JOIN uni ON str_split(db.gr, ' ')[1] = uni.tok),
-      |a AS (SELECT doc_id, sum(m) AS n_bigrams,
-      |    sum(CASE WHEN c12 = 0 THEN m ELSE 0 END) AS oov_bigrams,
-      |    sum(c1 * m) AS hit_prev, sum(c12 * m) AS hit_bigram
-      |  FROM j GROUP BY doc_id)
-      |SELECT t.doc_id, CAST(len(t.toks) AS BIGINT) AS n_tokens,
-      |  CAST(coalesce(a.n_bigrams, 0) AS BIGINT) AS n_bigrams,
-      |  CAST(coalesce(a.oov_bigrams, 0) AS BIGINT) AS oov_bigrams,
-      |  CAST(coalesce(a.hit_prev, 0) AS BIGINT) AS hit_prev,
-      |  CAST(coalesce(a.hit_bigram, 0) AS BIGINT) AS hit_bigram
-      |FROM t LEFT JOIN a ON t.doc_id = a.doc_id""".stripMargin
-
-  /** DuckDB mirror of CorpusOps.dsirWeights' integer surface (target =
-    * doc_id%10=0, raw pool = the rest, gramNs = (1,2), hexChars = 2):
-    * re-derives the tokenize → unigram+bigram → md5-prefix bucket chain,
-    * both corpus bucket-count relations, the per-(doc, bucket)
-    * multiplicities, the probe joins, and the per-doc integer folds. The
-    * ln-based `logw` is excluded like doc_lm_ppl's `ppl` (doubles are
-    * not correctly-rounded across engines; fixture-pinned in sbt).
-    */
-  /** DuckDB mirror of CorpusOps.qualityClfScore's integer surface over
-    * the lang='en'-vs-rest labeled split (gramNs = 1,2, hexChars = 2,
-    * md5 family): re-derives tokenize, the unigram+bigram md5 feature
-    * buckets, both class count relations, and the per-doc probe-join
-    * folds. The NB log-odds score + pred are closed forms of these
-    * integers and the class totals — pinned by the plain-Scala
-    * re-derivation in LlmOpsSpec, not hashed (doubles).
-    */
-  private def docQualityClfOracle: String =
-    """WITH t AS (SELECT doc_id, lang,
-      |  list_filter(str_split_regex(lower(text), '[^\p{L}\p{Nd}]+'), x -> x <> '') AS toks
-      |  FROM documents),
-      |g AS (SELECT doc_id, lang, list_concat(toks,
-      |    list_transform(generate_series(1, greatest(len(toks) - 1, 0)),
-      |      i -> array_to_string(toks[i:i+1], ' '))) AS grams
-      |  FROM t),
-      |occ AS (SELECT doc_id, lang, substr(md5(gr), 1, 2) AS bucket
-      |  FROM (SELECT doc_id, lang, unnest(grams) AS gr FROM g)),
-      |cpos AS (SELECT bucket, count(*) AS c_pos FROM occ
-      |  WHERE lang = 'en' GROUP BY bucket),
-      |cneg AS (SELECT bucket, count(*) AS c_neg FROM occ
-      |  WHERE lang <> 'en' GROUP BY bucket),
-      |db AS (SELECT doc_id, bucket, count(*) AS m FROM occ
-      |  GROUP BY doc_id, bucket),
-      |j AS (SELECT db.doc_id, db.m,
-      |    coalesce(cpos.c_pos, 0) AS c_pos, coalesce(cneg.c_neg, 0) AS c_neg
-      |  FROM db LEFT JOIN cpos ON db.bucket = cpos.bucket
-      |    LEFT JOIN cneg ON db.bucket = cneg.bucket),
-      |a AS (SELECT doc_id, sum(m) AS n_grams,
-      |    sum(CASE WHEN c_pos = 0 THEN m ELSE 0 END) AS oov_pos,
-      |    sum(CASE WHEN c_neg = 0 THEN m ELSE 0 END) AS oov_neg,
-      |    sum(c_pos * m) AS hit_pos, sum(c_neg * m) AS hit_neg
-      |  FROM j GROUP BY doc_id)
-      |SELECT t.doc_id,
-      |  CAST(coalesce(a.n_grams, 0) AS BIGINT) AS n_grams,
-      |  CAST(coalesce(a.oov_pos, 0) AS BIGINT) AS oov_pos,
-      |  CAST(coalesce(a.oov_neg, 0) AS BIGINT) AS oov_neg,
-      |  CAST(coalesce(a.hit_pos, 0) AS BIGINT) AS hit_pos,
-      |  CAST(coalesce(a.hit_neg, 0) AS BIGINT) AS hit_neg
-      |FROM t LEFT JOIN a ON t.doc_id = a.doc_id""".stripMargin
-
-  private def docDsirOracle: String =
-    """WITH t AS (SELECT doc_id,
-      |  list_filter(str_split_regex(lower(text), '[^\p{L}\p{Nd}]+'), x -> x <> '') AS toks
-      |  FROM documents),
-      |g AS (SELECT doc_id, list_concat(toks,
-      |    list_transform(generate_series(1, greatest(len(toks) - 1, 0)),
-      |      i -> array_to_string(toks[i:i+1], ' '))) AS grams
-      |  FROM t),
-      |occ AS (SELECT doc_id, substr(md5(gr), 1, 2) AS bucket
-      |  FROM (SELECT doc_id, unnest(grams) AS gr FROM g)),
-      |tgt AS (SELECT bucket, count(*) AS c_tgt FROM occ
-      |  WHERE doc_id % 10 = 0 GROUP BY bucket),
-      |raw AS (SELECT bucket, count(*) AS c_raw FROM occ
-      |  WHERE doc_id % 10 <> 0 GROUP BY bucket),
-      |db AS (SELECT doc_id, bucket, count(*) AS m FROM occ
-      |  WHERE doc_id % 10 <> 0 GROUP BY doc_id, bucket),
-      |j AS (SELECT db.doc_id, db.m,
-      |    coalesce(tgt.c_tgt, 0) AS c_tgt, coalesce(raw.c_raw, 0) AS c_raw
-      |  FROM db LEFT JOIN tgt ON db.bucket = tgt.bucket
-      |    LEFT JOIN raw ON db.bucket = raw.bucket),
-      |a AS (SELECT doc_id, sum(m) AS n_grams,
-      |    sum(CASE WHEN c_tgt = 0 THEN m ELSE 0 END) AS oov_tgt,
-      |    sum(CASE WHEN c_raw = 0 THEN m ELSE 0 END) AS oov_raw,
-      |    sum(c_tgt * m) AS hit_tgt, sum(c_raw * m) AS hit_raw
-      |  FROM j GROUP BY doc_id)
-      |SELECT t.doc_id,
-      |  CAST(coalesce(a.n_grams, 0) AS BIGINT) AS n_grams,
-      |  CAST(coalesce(a.oov_tgt, 0) AS BIGINT) AS oov_tgt,
-      |  CAST(coalesce(a.oov_raw, 0) AS BIGINT) AS oov_raw,
-      |  CAST(coalesce(a.hit_tgt, 0) AS BIGINT) AS hit_tgt,
-      |  CAST(coalesce(a.hit_raw, 0) AS BIGINT) AS hit_raw
-      |FROM t LEFT JOIN a ON t.doc_id = a.doc_id
-      |WHERE t.doc_id % 10 <> 0""".stripMargin
-
-  /** DuckDB mirror of TextSearch.bm25Stats' integer surface (corpus =
-    * doc_id%10<>0, queries = the eval split, maxDfFrac = 0.5):
-    * re-derives tokenize, the (term, doc) postings with doc length, the
-    * document-frequency relation with the stopword pruning HAVING, the
-    * distinct query terms, and both probe joins + the per-(query, doc)
-    * integer folds. The ln-based idf/score/rank live in bm25TopK and are
-    * spec-pinned (doubles aren't correctly-rounded across engines).
-    */
-  private def docBm25Oracle: String =
-    """WITH t AS (SELECT doc_id,
-      |  list_filter(str_split_regex(lower(text), '[^\p{L}\p{Nd}]+'), x -> x <> '') AS toks
-      |  FROM documents),
-      |corp AS (SELECT doc_id, len(toks) AS dl, toks FROM t WHERE doc_id % 10 <> 0),
-      |post0 AS (SELECT tok, doc_id, dl, count(*) AS tf
-      |  FROM (SELECT doc_id, dl, unnest(toks) AS tok FROM corp)
-      |  GROUP BY tok, doc_id, dl),
-      |dfa AS (SELECT tok, count(*) AS df_t FROM post0 GROUP BY tok
-      |  HAVING count(*) <= 0.5 * (SELECT count(*) FROM corp)),
-      |qt AS (SELECT DISTINCT doc_id AS query_id, unnest(toks) AS tok
-      |  FROM t WHERE doc_id % 10 = 0),
-      |qtd AS (SELECT qt.query_id, qt.tok, dfa.df_t FROM qt
-      |  JOIN dfa ON qt.tok = dfa.tok)
-      |SELECT qtd.query_id, post0.doc_id,
-      |  CAST(count(*) AS BIGINT) AS n_match,
-      |  CAST(sum(post0.tf) AS BIGINT) AS tf_sum,
-      |  CAST(sum(post0.tf * qtd.df_t) AS BIGINT) AS tfdf_sum,
-      |  CAST(min(post0.dl) AS BIGINT) AS dl
-      |FROM qtd JOIN post0 ON qtd.tok = post0.tok
-      |GROUP BY qtd.query_id, post0.doc_id""".stripMargin
-
-  /** DuckDB mirror of Bm25IngestStream's earlier-arrivals retrieval
-    * (tagged id-ordered feed: corpus = doc_id%10<>0, queries = %10=0,
-    * maxDf = 250): the STORED postings are each term's first-by-id
-    * maxDf docs (`rnk <= 250` — the online Zipf-head saturation), a
-    * query sees exactly the stored postings with doc_id < query_id, and
-    * the at-probe df counts those same rows; the per-(query, doc) fold
-    * matches the consumer-side fold in the SparkEntry row.
-    */
-  private def docBm25IngestOracle: String =
-    """WITH t AS (SELECT doc_id,
-      |  list_filter(str_split_regex(lower(text), '[^\p{L}\p{Nd}]+'), x -> x <> '') AS toks
-      |  FROM documents),
-      |corp AS (SELECT doc_id, len(toks) AS dl, toks FROM t WHERE doc_id % 10 <> 0),
-      |post0 AS (SELECT tok, doc_id, dl, count(*) AS tf
-      |  FROM (SELECT doc_id, dl, unnest(toks) AS tok FROM corp)
-      |  GROUP BY tok, doc_id, dl),
-      |kept AS (SELECT * FROM (
-      |  SELECT tok, doc_id, dl, tf,
-      |    row_number() OVER (PARTITION BY tok ORDER BY doc_id) AS rnk
-      |  FROM post0) WHERE rnk <= 250),
-      |qt AS (SELECT DISTINCT doc_id AS query_id, unnest(toks) AS tok
-      |  FROM t WHERE doc_id % 10 = 0),
-      |probe AS (SELECT qt.query_id, k.doc_id, k.tok, k.tf, k.dl,
-      |    count(*) OVER (PARTITION BY qt.query_id, k.tok) AS df_p
-      |  FROM qt JOIN kept k ON k.tok = qt.tok AND k.doc_id < qt.query_id)
-      |SELECT query_id, doc_id,
-      |  CAST(count(*) AS BIGINT) AS n_match,
-      |  CAST(sum(tf) AS BIGINT) AS tf_sum,
-      |  CAST(sum(tf * df_p) AS BIGINT) AS tfdf_sum,
-      |  CAST(min(dl) AS BIGINT) AS dl
-      |FROM probe GROUP BY query_id, doc_id""".stripMargin
-
-  /** DuckDB mirror of Similarity.semDedup (dim=64, eps=0.3, nCells=16,
-    * lloydIters=1): the emb_ann_ivf centroid chain (anchor init + one
-    * quantized-mean Lloyd pass — bit-identical across engines), the
-    * final assignment KEEPING each row's winning csim, the within-cell
-    * ε-pair self-join, the min-label closure (recursive CTE, same
-    * pattern as the near-dup cluster oracles), and the keep rank
-    * (csim ASC, id ASC per component; rn > 1 members are dropped).
-    */
-  private def embSemDedupOracle: String =
-    s"""WITH RECURSIVE cent0 AS (SELECT vec_id::BIGINT AS cell, embedding AS centroid
-       |    FROM embeddings ORDER BY vec_id LIMIT 16),
-       |c AS (SELECT vec_id AS corpus_id, embedding AS cv FROM embeddings),
-       |asg0 AS (SELECT corpus_id, cv, cell FROM (
-       |  SELECT corpus_id, cv, cell,
-       |    row_number() OVER (PARTITION BY corpus_id ORDER BY csim DESC, cell) AS rn
-       |  FROM (SELECT corpus_id, cv, cell, ${duckCosine("cv", "centroid")} AS csim
-       |        FROM c CROSS JOIN cent0)) WHERE rn = 1),
-       |el AS (SELECT cell, generate_subscripts(cv, 1) AS pos, unnest(cv) AS x FROM asg0),
-       |cm AS (SELECT cell, pos,
-       |    CAST(sum(CAST(floor(CAST(x AS DOUBLE) * 1048576.0) AS BIGINT)) AS DOUBLE)
-       |      / (count(*) * 1048576.0) AS m
-       |  FROM el GROUP BY cell, pos),
-       |cent AS (SELECT cell, list(m ORDER BY pos) AS centroid FROM cm GROUP BY cell),
-       |asg AS (SELECT corpus_id, cv, cell, csim FROM (
-       |  SELECT corpus_id, cv, cell, csim,
-       |    row_number() OVER (PARTITION BY corpus_id ORDER BY csim DESC, cell) AS rn
-       |  FROM (SELECT corpus_id, cv, cell, ${duckCosine("cv", "centroid")} AS csim
-       |        FROM c CROSS JOIN cent)) WHERE rn = 1),
-       |ep AS (SELECT a.corpus_id AS id_a, b.corpus_id AS id_b
-       |  FROM asg a JOIN asg b ON a.cell = b.cell AND a.corpus_id < b.corpus_id
-       |  WHERE ${duckCosine("a.cv", "b.cv")} >= 0.3),
-       |nodes AS (SELECT DISTINCT id FROM (
-       |  SELECT id_a AS id FROM ep UNION ALL SELECT id_b AS id FROM ep)),
-       |eg AS (SELECT id_a AS a, id_b AS b FROM ep
-       |  UNION ALL SELECT id_b AS a, id_a AS b FROM ep),
-       |reach AS (
-       |  SELECT id, id AS r FROM nodes
-       |  UNION
-       |  SELECT eg.a AS id, reach.r FROM eg JOIN reach ON reach.id = eg.b),
-       |cc AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
-       |rk AS (SELECT cc.cluster_id, cc.id,
-       |    row_number() OVER (PARTITION BY cc.cluster_id ORDER BY asg.csim ASC, cc.id) AS rn
-       |  FROM cc JOIN asg ON cc.id = asg.corpus_id)
-       |SELECT vec_id FROM embeddings
-       |WHERE vec_id NOT IN (SELECT id FROM rk WHERE rn > 1)""".stripMargin
-
-  /** The HOT-CELL-CAPPED mirror (nCells=4, eps=0.3125, lloydIters=1,
-    * maxCell=130): identical chain, plus the occupancy relation `csz`
-    * and the ok-cell filter on the ε-pair scan — cells above the cap
-    * produce no pairs, so their members all survive. The shared WITH
-    * prefix also serves the dropped-cells telemetry row.
-    */
-  private def embSemDedupCappedWith: String =
-    s"""WITH RECURSIVE cent0 AS (SELECT vec_id::BIGINT AS cell, embedding AS centroid
-       |    FROM embeddings ORDER BY vec_id LIMIT 4),
-       |c AS (SELECT vec_id AS corpus_id, embedding AS cv FROM embeddings),
-       |asg0 AS (SELECT corpus_id, cv, cell FROM (
-       |  SELECT corpus_id, cv, cell,
-       |    row_number() OVER (PARTITION BY corpus_id ORDER BY csim DESC, cell) AS rn
-       |  FROM (SELECT corpus_id, cv, cell, ${duckCosine("cv", "centroid")} AS csim
-       |        FROM c CROSS JOIN cent0)) WHERE rn = 1),
-       |el AS (SELECT cell, generate_subscripts(cv, 1) AS pos, unnest(cv) AS x FROM asg0),
-       |cm AS (SELECT cell, pos,
-       |    CAST(sum(CAST(floor(CAST(x AS DOUBLE) * 1048576.0) AS BIGINT)) AS DOUBLE)
-       |      / (count(*) * 1048576.0) AS m
-       |  FROM el GROUP BY cell, pos),
-       |cent AS (SELECT cell, list(m ORDER BY pos) AS centroid FROM cm GROUP BY cell),
-       |asg AS (SELECT corpus_id, cv, cell, csim FROM (
-       |  SELECT corpus_id, cv, cell, csim,
-       |    row_number() OVER (PARTITION BY corpus_id ORDER BY csim DESC, cell) AS rn
-       |  FROM (SELECT corpus_id, cv, cell, ${duckCosine("cv", "centroid")} AS csim
-       |        FROM c CROSS JOIN cent)) WHERE rn = 1),
-       |csz AS (SELECT cell, count(*) AS n FROM asg GROUP BY cell)""".stripMargin
-
-  private def embSemDedupCappedOracle: String =
-    s"""$embSemDedupCappedWith,
-       |ok AS (SELECT cell FROM csz WHERE n <= 130),
-       |ep AS (SELECT a.corpus_id AS id_a, b.corpus_id AS id_b
-       |  FROM asg a JOIN asg b ON a.cell = b.cell AND a.corpus_id < b.corpus_id
-       |  JOIN ok ON ok.cell = a.cell
-       |  WHERE ${duckCosine("a.cv", "b.cv")} >= 0.3125),
-       |nodes AS (SELECT DISTINCT id FROM (
-       |  SELECT id_a AS id FROM ep UNION ALL SELECT id_b AS id FROM ep)),
-       |eg AS (SELECT id_a AS a, id_b AS b FROM ep
-       |  UNION ALL SELECT id_b AS a, id_a AS b FROM ep),
-       |reach AS (
-       |  SELECT id, id AS r FROM nodes
-       |  UNION
-       |  SELECT eg.a AS id, reach.r FROM eg JOIN reach ON reach.id = eg.b),
-       |cc AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
-       |rk AS (SELECT cc.cluster_id, cc.id,
-       |    row_number() OVER (PARTITION BY cc.cluster_id ORDER BY asg.csim ASC, cc.id) AS rn
-       |  FROM cc JOIN asg ON cc.id = asg.corpus_id)
-       |SELECT vec_id FROM embeddings
-       |WHERE vec_id NOT IN (SELECT id FROM rk WHERE rn > 1)""".stripMargin
-
-  private def embSemDedupDroppedCellsOracle: String =
-    s"""$embSemDedupCappedWith
-       |SELECT CAST(cell AS BIGINT) AS cell, CAST(n AS BIGINT) AS size
-       |FROM csz WHERE n > 130""".stripMargin
-
-  private def embIvfOracle: String =
-    s"""WITH cent0 AS (SELECT vec_id::BIGINT AS cell, embedding AS centroid
-       |    FROM embeddings ORDER BY vec_id LIMIT 16),
-       |c AS (SELECT vec_id AS corpus_id, embedding AS cv FROM embeddings),
-       |asg0 AS (SELECT corpus_id, cv, cell FROM (
-       |  SELECT corpus_id, cv, cell,
-       |    row_number() OVER (PARTITION BY corpus_id ORDER BY csim DESC, cell) AS rn
-       |  FROM (SELECT corpus_id, cv, cell, ${duckCosine("cv", "centroid")} AS csim
-       |        FROM c CROSS JOIN cent0)) WHERE rn = 1),
-       |el AS (SELECT cell, generate_subscripts(cv, 1) AS pos, unnest(cv) AS x FROM asg0),
-       |cm AS (SELECT cell, pos,
-       |    CAST(sum(CAST(floor(CAST(x AS DOUBLE) * 1048576.0) AS BIGINT)) AS DOUBLE)
-       |      / (count(*) * 1048576.0) AS m
-       |  FROM el GROUP BY cell, pos),
-       |cent AS (SELECT cell, list(m ORDER BY pos) AS centroid FROM cm GROUP BY cell),
-       |asg AS (SELECT corpus_id, cv, cell FROM (
-       |  SELECT corpus_id, cv, cell,
-       |    row_number() OVER (PARTITION BY corpus_id ORDER BY csim DESC, cell) AS rn
-       |  FROM (SELECT corpus_id, cv, cell, ${duckCosine("cv", "centroid")} AS csim
-       |        FROM c CROSS JOIN cent)) WHERE rn = 1),
-       |q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 20),
-       |pr AS (SELECT query_id, qv, cell FROM (
-       |  SELECT query_id, qv, cell,
-       |    row_number() OVER (PARTITION BY query_id ORDER BY csim DESC, cell) AS rn
-       |  FROM (SELECT query_id, qv, cell, ${duckCosine("qv", "centroid")} AS csim
-       |        FROM q CROSS JOIN cent)) WHERE rn <= 4),
-       |s AS (SELECT query_id, corpus_id, ${duckCosine("qv", "cv")} AS sim
-       |  FROM asg JOIN pr USING (cell) WHERE corpus_id <> query_id)
-       |SELECT query_id, corpus_id,
-       |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, corpus_id) AS INTEGER) AS rank
-       |FROM s QUALIFY rank <= 10""".stripMargin
-
-  /** DuckDB mirror of Multimodal.extractFeaturesChecked over media built
-    * with mirrorableDims: payload = UTF-8 bytes of text, so n_bytes =
-    * strlen(text); lane j sums the code points at 1-based char positions
-    * j+1, j+9, ... (unicode(ch)); width = len %% 512 + 32 folds into f0,
-    * height = (len*7) %% 512 + 32 into f1.
-    */
-  private def mmFeaturesOracle: String = {
-    val lanes = (0 until 8).map { j =>
-      val extra = j match {
-        case 0 => " + (n % 512) + 32"
-        case 1 => " + ((n * 7) % 512) + 32"
-        case _ => ""
-      }
-      s"(COALESCE(list_sum(list_transform(generate_series(${j + 1}, n, 8)," +
-        s" i -> unicode(text[i]))), 0)$extra)::BIGINT AS f$j"
-    }.mkString(",\n  ")
-    s"""WITH t AS (SELECT doc_id, text, len(text) AS n FROM documents)
-       |SELECT doc_id, strlen(text)::BIGINT AS n_bytes,
-       |  $lanes
-       |FROM t""".stripMargin
   }
 }

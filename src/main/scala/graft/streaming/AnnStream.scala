@@ -757,8 +757,8 @@ object AnnStream {
     *    log, like every sharded pair here.
     *
     * Output hash-matches the monolith's mirror
-    * (`emb_ann_sharded_lsh_stream_replay` shares embAnnStreamOracle,
-    * the pq row shares embPqStreamOracle) and AnnStreamSpec pins
+    * (`emb_ann_sharded_lsh_stream_replay` shares embAnnStreamSql,
+    * the pq row shares embPqStreamSql) and AnnStreamSpec pins
     * sym-diff-0 against both monoliths. State per shard is the bucket's
     * members only (corpus/2^nPlanes expected), and shards spread over
     * all cores — lookup rate scales with bucket count instead of one

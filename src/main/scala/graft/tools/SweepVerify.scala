@@ -3,6 +3,9 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit, max_by, min, sum, timestamp_seconds}
 import graft.UniqueOracles._
+import graft.TextOracles._
+import graft.EmbeddingOracles._
+import graft.MediaOracles._
 import graft.operators.{UniqueOps, UniqueResult}
 import java.nio.file.{Files, Paths}
 
@@ -18,9 +21,12 @@ import java.nio.file.{Files, Paths}
   * draws (keys, window, n, start, variant) from the grids below, runs
   * the engine, writes the result parquet AND a DuckDB oracle SQL
   * GENERATED FROM THE SAME PARAMETERS — the same layout `graft.Verify`
-  * produces, so the standard compare closes the loop. The unique-window
-  * oracles come from `graft.UniqueOracles`, the one definition the fixed
-  * registry rows in `SparkEntry.oracleSql` also call:
+  * produces, so the standard compare closes the loop. The oracles come
+  * from the one definition per tier that the fixed registry rows in
+  * `SparkEntry.oracleSql` also call: `graft.UniqueOracles` (the unique
+  * windows), `graft.TextOracles`, `graft.EmbeddingOracles` and
+  * `graft.MediaOracles` (the curation tiers); this tool only draws the
+  * parameters and runs the engine:
   *
   *   sbt "runMain graft.tools.SweepVerify <sfDir> <outDir> <seed> <nDraws>"
   *   python3 tools/check_correctness.py <sfDir> <outDir> --skip-verify
@@ -44,1206 +50,6 @@ object SweepVerify {
 
   private val startGrid = Seq[Option[Long]](Some(0L), Some(3600000L),
     Some(123456L), None)
-
-  // ---- LLM-tier parameterized oracle builders (VERDICT r9 ask #4
-  // extended to the pipeline tier): the fixed CORRECTNESS rows pin one
-  // parameterization per operator (shingleN=3, bands=4×2, k=5, minDf=3,
-  // …); these regenerate the same DuckDB mirrors from ARBITRARY draw
-  // parameters so boundary behavior (n=1 shingles, 1-row bands,
-  // hamming=0, tiny bucket caps) gets differential coverage too. ----
-
-  /** md5-family shingle CTEs for any gram size n (mirrors
-    * TextDedup.shingleHashes(_, n, Md5Hash): left fold
-    * md5(md5(th1||th2)||th3)…, n=1 → the bare token hash).
-    */
-  private def md5ShingleCtesN(n: Int): String = {
-    val fold = (1 until n).foldLeft("th[i]")((acc, j) => s"md5($acc || th[i+$j])")
-    s"""tk AS (SELECT doc_id,
-       |  list_transform(list_filter(str_split_regex(lower(text), '[^\\p{L}\\p{Nd}]+'), x -> x <> ''),
-       |    t -> md5(t)) AS th FROM documents),
-       |sh0 AS (SELECT doc_id, list_distinct(list_transform(
-       |  generate_series(1, greatest(len(th) - ${n - 1}, 0)),
-       |  i -> $fold)) AS sh FROM tk),
-       |s2 AS (SELECT doc_id, sh FROM sh0 WHERE len(sh) > 0)""".stripMargin
-  }
-
-  private def md5JaccardExpr(a: String, b: String): String =
-    s"len(list_filter($a, x -> list_contains($b, x)))::DOUBLE" +
-      s" / (len($a) + len($b) - len(list_filter($a, x -> list_contains($b, x))))"
-
-  /** Parameterized minhash pair CTE chain ending in mp(id_a, id_b,
-    * jaccard) — the docMinhashMd5PairsCtes shape for any draw.
-    */
-  private def minhashCtes(shingleN: Int, bands: Int, r: Int,
-                          threshold: Double, maxBucket: Int): String = {
-    val k = bands * r
-    val sigItems = (0 until k).map(i =>
-      s"list_min(list_transform(sh, h -> md5(h || '#$i')))").mkString(",\n    ")
-    val bandCase = (0 until bands).map { b =>
-      val parts = (1 to r).map(j => s"sig[${b * r + j}]").mkString(" || '|' || ")
-      s"WHEN $b THEN md5($parts || '#$b')"
-    }.mkString(" ")
-    s"""${md5ShingleCtesN(shingleN)},
-       |sig AS (SELECT doc_id, [$sigItems] AS sig FROM s2),
-       |banded AS (SELECT doc_id, band, CASE band $bandCase END AS bh
-       |  FROM sig CROSS JOIN (SELECT unnest([${(0 until bands).mkString(", ")}]) AS band) b),
-       |ok AS (SELECT band, bh FROM banded GROUP BY band, bh
-       |  HAVING count(*) <= $maxBucket AND count(*) > 1),
-       |ib AS (SELECT banded.* FROM banded JOIN ok USING (band, bh)),
-       |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-       |  FROM ib a JOIN ib b ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id),
-       |j AS (SELECT id_a, id_b, ${md5JaccardExpr("sa.sh", "sb.sh")} AS jaccard
-       |  FROM cand JOIN s2 sa ON sa.doc_id = cand.id_a
-       |            JOIN s2 sb ON sb.doc_id = cand.id_b),
-       |mp AS (SELECT id_a, id_b, jaccard FROM j WHERE jaccard >= $threshold)""".stripMargin
-  }
-
-  private def minhashPairsSql(shingleN: Int, bands: Int, r: Int,
-                              threshold: Double, maxBucket: Int): String =
-    s"""WITH ${minhashCtes(shingleN, bands, r, threshold, maxBucket)}
-       |SELECT id_a, id_b, jaccard FROM mp""".stripMargin
-
-  /** Parameterized mirror of `TextDedup.editDistancePairsMd5`: CHAR
-    * tokens (no lowercasing — the character-level contract), md5 n-gram
-    * fold, the minhash band chain, then EXACT integer levenshtein ≤
-    * maxDist (DuckDB full distance = Spark's thresholded distance
-    * whenever it is within the threshold).
-    */
-  private def editPairsSql(shingleN: Int, bands: Int, r: Int,
-                           maxDist: Int, maxBucket: Int): String = {
-    val k = bands * r
-    val fold = (1 until shingleN).foldLeft("th[i]")((acc, j) => s"md5($acc || th[i+$j])")
-    val sigItems = (0 until k).map(i =>
-      s"list_min(list_transform(sh, h -> md5(h || '#$i')))").mkString(",\n    ")
-    val bandCase = (0 until bands).map { b =>
-      val parts = (1 to r).map(j => s"sig[${b * r + j}]").mkString(" || '|' || ")
-      s"WHEN $b THEN md5($parts || '#$b')"
-    }.mkString(" ")
-    s"""WITH tk AS (SELECT doc_id, text,
-       |  list_transform(generate_series(1, length(text)), i -> md5(text[i])) AS th
-       |  FROM documents),
-       |sh0 AS (SELECT doc_id, text, list_distinct(list_transform(
-       |  generate_series(1, greatest(len(th) - ${shingleN - 1}, 0)),
-       |  i -> $fold)) AS sh FROM tk),
-       |s2 AS (SELECT doc_id, text, sh FROM sh0 WHERE len(sh) > 0),
-       |sig AS (SELECT doc_id, [$sigItems] AS sig FROM s2),
-       |banded AS (SELECT doc_id, band, CASE band $bandCase END AS bh
-       |  FROM sig CROSS JOIN (SELECT unnest([${(0 until bands).mkString(", ")}]) AS band) b),
-       |ok AS (SELECT band, bh FROM banded GROUP BY band, bh
-       |  HAVING count(*) <= $maxBucket AND count(*) > 1),
-       |ib AS (SELECT banded.* FROM banded JOIN ok USING (band, bh)),
-       |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-       |  FROM ib a JOIN ib b ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id),
-       |ep AS (SELECT id_a, id_b, dist FROM (
-       |  SELECT id_a, id_b, CAST(levenshtein(ta.text, tb.text) AS INTEGER) AS dist
-       |  FROM cand JOIN s2 ta ON ta.doc_id = cand.id_a
-       |           JOIN s2 tb ON tb.doc_id = cand.id_b)
-       |  WHERE dist <= $maxDist)
-       |SELECT id_a, id_b, dist FROM ep""".stripMargin
-  }
-
-  /** DuckDB mirror of the perceptual-image near-dup pair relation over
-    * the id-derived 9×8 gray-pattern fixture
-    * (Multimodal.withSyntheticPatternImages — the fixture is generated
-    * AT the dHash grid size, so Spark's real decode→hash meets this
-    * pure-integer arithmetic bit-for-bit), with DRAWN hamming radius
-    * and bucket cap.
-    */
-  private def imageHashPairsSql(maxHamming: Int, maxBucket: Int,
-                                baseMod: Long = 32L): String =
-    s"""WITH ${imageHashPairsCtes(maxHamming, maxBucket, baseMod)}
-       |SELECT id_a, id_b, hamming FROM pairs""".stripMargin
-
-  /** The pattern-dhash pair mirror as a reusable CTE chain ending in
-    * `pairs(id_a, id_b, hamming)` (shared with the cross-modal
-    * curation-pipeline mirror, which prepends it as the image gate).
-    */
-  private def imageHashPairsCtes(maxHamming: Int, maxBucket: Int,
-                                 baseMod: Long): String = {
-    def lum(x: Int, y: Int): String = {
-      val k = x * 7 + y * 13 + 3
-      val raw = s"(((doc_id % $baseMod) + 1) * $k) % 251"
-      if (x == 2 && y == 3) s"(CASE WHEN (doc_id // $baseMod) % 3 >= 1 THEN 250 - ($raw) ELSE $raw END)"
-      else if (x == 5 && y == 1) s"(CASE WHEN (doc_id // $baseMod) % 3 = 2 THEN 250 - ($raw) ELSE $raw END)"
-      else s"($raw)"
-    }
-    val dhash = (for (y <- 0 until 8; x <- 0 until 8) yield {
-      val bit = y * 8 + x
-      val mask = if (bit == 63) "(-9223372036854775807 - 1)"
-                 else s"(1::BIGINT << $bit)"
-      s"(CASE WHEN ${lum(x + 1, y)} > ${lum(x, y)} THEN $mask ELSE 0::BIGINT END)"
-    }).mkString(" |\n  ")
-    s"""h AS (SELECT doc_id, $dhash AS dhash FROM documents),
-       |chp AS (SELECT doc_id, dhash, c AS chunk, (dhash >> (c * 16)) & 65535 AS cv
-       |  FROM h CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS c) t),
-       |okp AS (SELECT chunk, cv FROM chp GROUP BY chunk, cv
-       |  HAVING count(*) <= $maxBucket AND count(*) > 1),
-       |ibp AS (SELECT chp.* FROM chp JOIN okp USING (chunk, cv)),
-       |pairs AS (SELECT id_a, id_b, min(hamming) AS hamming FROM (
-       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       |    CAST(bit_count(xor(a.dhash, b.dhash)) AS INTEGER) AS hamming
-       |  FROM ibp a JOIN ibp b ON a.chunk = b.chunk AND a.cv = b.cv
-       |    AND a.doc_id < b.doc_id)
-       |  WHERE hamming <= $maxHamming GROUP BY id_a, id_b)""".stripMargin
-  }
-
-  /** End-to-end mirror of the CROSS-MODAL curation draw: the drawn
-    * image-gate geometry (hamming radius, pattern width) feeding the
-    * drawn text-stage chain — exact dedup over IMAGE survivors, fuzzy
-    * decontamination against the full eval split, cap, pack.
-    */
-  private def mmCurationPipelineSql(mh: Int, bm: Long, shingleN: Int,
-                                    bands: Int, r: Int, threshold: Double,
-                                    maxBucket: Int, evalMod: Int, cap: Int,
-                                    budget: Int): String = {
-    val cross = crossMinhashCtes(shingleN, bands, r, threshold, maxBucket,
-      evalMod, Some("trn AS (SELECT s2.* FROM s2 JOIN dd ON dd.doc_id = s2.doc_id" +
-        s" WHERE s2.doc_id % $evalMod <> 0)"))
-    s"""WITH RECURSIVE ${imageHashPairsCtes(mh, 1000, bm)},
-       |inodes AS (SELECT DISTINCT id FROM (
-       |  SELECT id_a AS id FROM pairs UNION ALL SELECT id_b AS id FROM pairs)),
-       |ieg AS (SELECT id_a AS a, id_b AS b FROM pairs
-       |  UNION ALL SELECT id_b AS a, id_a AS b FROM pairs),
-       |ireach AS (
-       |  SELECT id, id AS r FROM inodes
-       |  UNION
-       |  SELECT ieg.a AS id, ireach.r FROM ieg JOIN ireach ON ireach.id = ieg.b),
-       |icc AS (SELECT id, min(r) AS cluster_id FROM ireach GROUP BY id),
-       |ikept AS (SELECT * FROM documents
-       |  WHERE doc_id NOT IN (SELECT id FROM icc WHERE id <> cluster_id)),
-       |dd AS (SELECT doc_id, text, source FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY text ORDER BY doc_id) AS rn
-       |    FROM ikept) WHERE rn = 1),
-       |$cross,
-       |surv AS (SELECT dd.* FROM dd
-       |  WHERE dd.doc_id % $evalMod <> 0 AND dd.doc_id NOT IN (SELECT id_a FROM mp)),
-       |capped AS (SELECT doc_id, text, source FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY source ORDER BY doc_id) AS rk
-       |    FROM surv) WHERE rk <= $cap),
-       |pt AS (SELECT doc_id, source,
-       |  CAST(len(regexp_extract_all(text, '\\w+|[^\\w\\s]')) AS INTEGER) AS n_tok
-       |  FROM capped)
-       |SELECT doc_id, source, n_tok,
-       |  CAST(coalesce(sum(n_tok) OVER w, 0) AS BIGINT) AS tok_offset,
-       |  CAST(floor(CAST(coalesce(sum(n_tok) OVER w, 0) AS BIGINT) / $budget) AS BIGINT) AS bin_id
-       |FROM pt
-       |WINDOW w AS (PARTITION BY source ORDER BY doc_id
-       |  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)""".stripMargin
-  }
-
-  /** DuckDB mirror of the AUDIO waveform-hash pair relation over the
-    * synthetic-WAV fixture (Multimodal.withSyntheticWavs, 2048 samples,
-    * 32/window), with drawn hamming radius, bucket cap, and pattern-
-    * space width.
-    */
-  private def audioHashPairsSql(maxHamming: Int, maxBucket: Int,
-                                baseMod: Long): String =
-    s"""WITH aw AS (
-       |  SELECT doc_id, k,
-       |    list_sum(list_transform(generate_series(k * 32, k * 32 + 31),
-       |      i -> ((((doc_id % $baseMod) + 1) * (i * 7 + 3)) % 251) - 125))
-       |    + CASE WHEN ((doc_id // $baseMod) % 3 >= 1 AND k = 5)
-       |             OR ((doc_id // $baseMod) % 3 = 2 AND k = 11)
-       |           THEN 40 * 32 ELSE 0 END AS s
-       |  FROM documents CROSS JOIN (SELECT unnest(generate_series(0, 63)) AS k) t),
-       |ah AS (
-       |  SELECT a.doc_id,
-       |    CAST(sum(CASE WHEN b.s > a.s THEN (1::BIGINT << a.k) ELSE 0::BIGINT END) AS BIGINT) AS whash
-       |  FROM aw a JOIN aw b ON b.doc_id = a.doc_id AND b.k = a.k + 1
-       |  WHERE a.k < 63 GROUP BY a.doc_id),
-       |achp AS (SELECT doc_id, whash, c AS chunk, (whash >> (c * 16)) & 65535 AS cv
-       |  FROM ah CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS c) t2),
-       |aokp AS (SELECT chunk, cv FROM achp GROUP BY chunk, cv
-       |  HAVING count(*) <= $maxBucket AND count(*) > 1),
-       |aibp AS (SELECT achp.* FROM achp JOIN aokp USING (chunk, cv)),
-       |apairs AS (SELECT id_a, id_b, min(hamming) AS hamming FROM (
-       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       |    CAST(bit_count(xor(a.whash, b.whash)) AS INTEGER) AS hamming
-       |  FROM aibp a JOIN aibp b ON a.chunk = b.chunk AND a.cv = b.cv
-       |    AND a.doc_id < b.doc_id)
-       |  WHERE hamming <= $maxHamming GROUP BY id_a, id_b)
-       |SELECT id_a, id_b, hamming FROM apairs""".stripMargin
-
-  /** DuckDB mirror of the VIDEO sequence near-dup pair relation
-    * (Multimodal.withSyntheticVideoClips → videoFrameHashes →
-    * TextDedup.frameSequencePairs) with DRAWN clip-family width,
-    * shingle length, Jaccard threshold, and bucket cap: per-frame
-    * dHash from the pattern formula, k-frame VARCHAR shingles,
-    * distinct-shingle overlap verify.
-    */
-  private def videoSeqPairsSql(baseMod: Long, shingleK: Int,
-                               threshold: Double, maxBucket: Int): String = {
-    def lum(x: Int, y: Int): String = {
-      val k = x * 7 + y * 13 + 3
-      val raw = s"(((doc_id % $baseMod) + 1) * ($k + 29 * fe)) % 251"
-      if (x == 2 && y == 3)
-        s"(CASE WHEN (doc_id // $baseMod) % 3 = 1 AND f = 0 THEN 250 - ($raw) ELSE ($raw) END)"
-      else s"($raw)"
-    }
-    val dhash = (for (y <- 0 until 8; x <- 0 until 8) yield {
-      val bit = y * 8 + x
-      val mask = if (bit == 63) "(-9223372036854775807 - 1)"
-                 else s"(1::BIGINT << $bit)"
-      s"(CASE WHEN ${lum(x + 1, y)} > ${lum(x, y)} THEN $mask ELSE 0::BIGINT END)"
-    }).mkString(" |\n  ")
-    val shJoins = (1 until shingleK).map(j =>
-      s"JOIN vh f$j ON f$j.doc_id = f0.doc_id AND f$j.frame_idx = f0.frame_idx + $j")
-      .mkString("\n  ")
-    val shExpr = (0 until shingleK).map(j => s"CAST(f$j.fhash AS VARCHAR)")
-      .mkString(" || ':' || ")
-    s"""WITH vdocs AS (SELECT doc_id,
-  ((doc_id % $baseMod) + 1) % 4 + 5
-    - CASE WHEN (doc_id // $baseMod) % 3 = 2 THEN 1 ELSE 0 END AS nf,
-  CASE WHEN (doc_id // $baseMod) % 3 = 2 THEN 1 ELSE 0 END AS skip
-  FROM documents),
-vfr AS (SELECT doc_id, f, f + skip AS fe
-  FROM vdocs, LATERAL (SELECT unnest(generate_series(0, nf - 1)) AS f) t),
-vh AS (SELECT doc_id, CAST(f AS BIGINT) AS frame_idx, $dhash AS fhash FROM vfr),
-vsh AS (SELECT DISTINCT f0.doc_id, $shExpr AS sh
-  FROM vh f0
-  $shJoins),
-vnk AS (SELECT doc_id, count(*) AS nk FROM vsh GROUP BY doc_id),
-vok AS (SELECT sh FROM vsh GROUP BY sh HAVING count(*) <= $maxBucket AND count(*) > 1),
-vib AS (SELECT vsh.* FROM vsh JOIN vok USING (sh)),
-vcand AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-  CAST(count(DISTINCT a.sh) AS BIGINT) AS shared
-  FROM vib a JOIN vib b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2),
-vpairs AS (SELECT id_a, id_b, shared, na.nk AS n_a, nb.nk AS n_b
-  FROM vcand JOIN vnk na ON na.doc_id = vcand.id_a
-             JOIN vnk nb ON nb.doc_id = vcand.id_b
-  WHERE shared >= 1
-    AND CAST(shared AS DOUBLE) / (na.nk + nb.nk - shared) >= $threshold)
-SELECT id_a, id_b, shared, n_a, n_b FROM vpairs"""
-  }
-
-  /** The asg/aseg/akeys CTE prefix shared by the audio-segment pair and
-    * dropped-bucket mirrors (withSyntheticOffsetWavs → audioSegmentHashes;
-    * fixed hash geometry 2048 samples / 32-window / 16-seg / hop 8) with
-    * DRAWN family width and planted offset.
-    */
-  private def audioSegKeysCtes(baseMod: Long, offsetSamples: Int): String =
-    s"""asg AS (
-       |  SELECT doc_id, k,
-       |    list_sum(list_transform(generate_series(k * 32, k * 32 + 31), i ->
-       |      CASE WHEN (doc_id // $baseMod) % 3 = 2 THEN
-       |        CASE WHEN i < $offsetSamples THEN 0
-       |             ELSE ((((doc_id % $baseMod) + 1) * ((i - $offsetSamples) * 7 + 3)) % 251) - 125 END
-       |      WHEN (doc_id // $baseMod) % 3 = 1 THEN
-       |        ((((doc_id % $baseMod) + 1) * (i * 7 + 3)) % 251) - 125 + 7
-       |      ELSE ((((doc_id % $baseMod) + 1) * (i * 7 + 3)) % 251) - 125 END)) AS s
-       |  FROM documents CROSS JOIN (SELECT unnest(generate_series(0, 63)) AS k) t),
-       |aseg AS (
-       |  SELECT a.doc_id, CAST(g.seg AS BIGINT) AS seg_idx,
-       |    CAST(coalesce(sum(CASE WHEN b.s > a.s THEN (1::BIGINT << g.bit) ELSE 0::BIGINT END),
-       |      0) AS BIGINT) AS shash
-       |  FROM (SELECT s.seg, b.bit FROM (SELECT unnest(generate_series(0, 6)) AS seg) s
-       |        CROSS JOIN (SELECT unnest(generate_series(0, 14)) AS bit) b) g
-       |  JOIN asg a ON a.k = g.seg * 8 + g.bit
-       |  JOIN asg b ON b.doc_id = a.doc_id AND b.k = g.seg * 8 + g.bit + 1
-       |  GROUP BY a.doc_id, g.seg),
-       |akeys AS (SELECT DISTINCT doc_id, shash FROM aseg)""".stripMargin
-
-  /** DuckDB mirror of the SHIFT-TOLERANT audio segment pair relation
-    * (audioSegmentHashes → sharedKeyPairs) with DRAWN family width,
-    * planted offset, match floor, and bucket cap.
-    */
-  private def audioSegPairsSql(baseMod: Long, offsetSamples: Int,
-                               minShared: Int, maxBucket: Int): String =
-    s"""WITH ${audioSegKeysCtes(baseMod, offsetSamples)},
-       |ank AS (SELECT doc_id, count(*) AS nk FROM akeys GROUP BY doc_id),
-       |aok AS (SELECT shash FROM akeys GROUP BY shash
-       |  HAVING count(*) <= $maxBucket AND count(*) > 1),
-       |aib AS (SELECT akeys.* FROM akeys JOIN aok USING (shash)),
-       |acand AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       |    CAST(count(DISTINCT a.shash) AS BIGINT) AS shared
-       |  FROM aib a JOIN aib b ON a.shash = b.shash AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2),
-       |apr AS (SELECT id_a, id_b, shared, na.nk AS n_a, nb.nk AS n_b
-       |  FROM acand JOIN ank na ON na.doc_id = acand.id_a
-       |             JOIN ank nb ON nb.doc_id = acand.id_b
-       |  WHERE shared >= $minShared)
-       |SELECT id_a, id_b, shared, n_a, n_b FROM apr""".stripMargin
-
-  /** DuckDB mirror of sharedKeyPairsWithStats' droppedBuckets over the
-    * segment hashes: one (bucket, size) row per over-cap key value.
-    */
-  private def audioSegDroppedSql(baseMod: Long, offsetSamples: Int,
-                                 maxBucket: Int): String =
-    s"""WITH ${audioSegKeysCtes(baseMod, offsetSamples)}
-       |SELECT CAST(shash AS VARCHAR) AS bucket, count(*) AS size
-       |FROM akeys GROUP BY shash HAVING count(*) > $maxBucket""".stripMargin
-
-  /** Parameterized mirror of `TextDedup.editDecontaminateMd5` over the
-    * doc_id % 10 train/eval split: the editPairsSql hash construction
-    * with BIPARTITE candidates (train × eval sharing a band bucket,
-    * combined occupancy ≤ maxBucket, no per-side > 1 floor), exact
-    * integer lev ≤ maxDist verify, anti-join on contaminated train ids.
-    */
-  private def editDecontamSql(shingleN: Int, bands: Int, r: Int,
-                              maxDist: Int, maxBucket: Int): String = {
-    val k = bands * r
-    val fold = (1 until shingleN).foldLeft("th[i]")((acc, j) => s"md5($acc || th[i+$j])")
-    val sigItems = (0 until k).map(i =>
-      s"list_min(list_transform(sh, h -> md5(h || '#$i')))").mkString(",\n    ")
-    val bandCase = (0 until bands).map { b =>
-      val parts = (1 to r).map(j => s"sig[${b * r + j}]").mkString(" || '|' || ")
-      s"WHEN $b THEN md5($parts || '#$b')"
-    }.mkString(" ")
-    s"""WITH tk AS (SELECT doc_id, text,
-       |  list_transform(generate_series(1, length(text)), i -> md5(text[i])) AS th
-       |  FROM documents),
-       |sh0 AS (SELECT doc_id, text, list_distinct(list_transform(
-       |  generate_series(1, greatest(len(th) - ${shingleN - 1}, 0)),
-       |  i -> $fold)) AS sh FROM tk),
-       |s2 AS (SELECT doc_id, text, sh FROM sh0 WHERE len(sh) > 0),
-       |sig AS (SELECT doc_id, [$sigItems] AS sig FROM s2),
-       |banded AS (SELECT doc_id, band, CASE band $bandCase END AS bh
-       |  FROM sig CROSS JOIN (SELECT unnest([${(0 until bands).mkString(", ")}]) AS band) b),
-       |cnt AS (SELECT band, bh,
-       |    count(*) FILTER (WHERE doc_id % 10 <> 0) AS cl,
-       |    count(*) FILTER (WHERE doc_id % 10 = 0) AS cr
-       |  FROM banded GROUP BY band, bh),
-       |ok AS (SELECT band, bh FROM cnt
-       |  WHERE cl >= 1 AND cr >= 1 AND cl + cr <= $maxBucket),
-       |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-       |  FROM banded a JOIN ok ON a.band = ok.band AND a.bh = ok.bh
-       |  JOIN banded b ON a.band = b.band AND a.bh = b.bh
-       |  WHERE a.doc_id % 10 <> 0 AND b.doc_id % 10 = 0),
-       |ep AS (SELECT id_a FROM (
-       |  SELECT id_a, CAST(levenshtein(ta.text, tb.text) AS INTEGER) AS dist
-       |  FROM cand JOIN s2 ta ON ta.doc_id = cand.id_a
-       |           JOIN s2 tb ON tb.doc_id = cand.id_b)
-       |  WHERE dist <= $maxDist)
-       |SELECT doc_id FROM documents
-       |WHERE doc_id % 10 <> 0 AND doc_id NOT IN (SELECT DISTINCT id_a FROM ep)""".stripMargin
-  }
-
-  /** Parameterized mirror of `TextDedup.crossMinhashPairsMd5` over the
-    * doc_id % evalMod train/eval split — the fuzzy-decontamination
-    * candidate relation with DRAWN geometry: a (band, bucket) is
-    * admitted iff both sides appear AND the combined occupancy is
-    * ≤ maxBucket; candidates are the bipartite product.
-    */
-  private def crossMinhashCtes(shingleN: Int, bands: Int, r: Int,
-                               threshold: Double, maxBucket: Int,
-                               evalMod: Int,
-                               trnCte: Option[String] = None): String = {
-    val k = bands * r
-    val trn = trnCte.getOrElse(
-      s"trn AS (SELECT * FROM s2 WHERE doc_id % $evalMod <> 0)")
-    val sigItems = (0 until k).map(i =>
-      s"list_min(list_transform(sh, h -> md5(h || '#$i')))").mkString(",\n    ")
-    val bandCase = (0 until bands).map { b =>
-      val parts = (1 to r).map(j => s"sig[${b * r + j}]").mkString(" || '|' || ")
-      s"WHEN $b THEN md5($parts || '#$b')"
-    }.mkString(" ")
-    s"""${md5ShingleCtesN(shingleN)},
-       |$trn,
-       |evl AS (SELECT * FROM s2 WHERE doc_id % $evalMod = 0),
-       |sigT AS (SELECT doc_id, [$sigItems] AS sig FROM trn),
-       |sigE AS (SELECT doc_id, [$sigItems] AS sig FROM evl),
-       |bT AS (SELECT doc_id, band, CASE band $bandCase END AS bh
-       |  FROM sigT CROSS JOIN (SELECT unnest([${(0 until bands).mkString(", ")}]) AS band) b),
-       |bE AS (SELECT doc_id, band, CASE band $bandCase END AS bh
-       |  FROM sigE CROSS JOIN (SELECT unnest([${(0 until bands).mkString(", ")}]) AS band) b),
-       |cnt AS (SELECT ct.band, ct.bh, ct.cl, ce.cr FROM
-       |  (SELECT band, bh, count(*) AS cl FROM bT GROUP BY band, bh) ct
-       |  JOIN (SELECT band, bh, count(*) AS cr FROM bE GROUP BY band, bh) ce
-       |    ON ce.band = ct.band AND ce.bh = ct.bh),
-       |okx AS (SELECT band, bh FROM cnt WHERE cl + cr <= $maxBucket),
-       |cand AS (SELECT DISTINCT a.doc_id AS id_a, e.doc_id AS id_b
-       |  FROM bT a JOIN okx USING (band, bh)
-       |       JOIN bE e ON e.band = a.band AND e.bh = a.bh),
-       |j AS (SELECT id_a, id_b, ${md5JaccardExpr("sa.sh", "sb.sh")} AS jaccard
-       |  FROM cand JOIN trn sa ON sa.doc_id = cand.id_a
-       |            JOIN evl sb ON sb.doc_id = cand.id_b),
-       |mp AS (SELECT id_a, id_b, jaccard FROM j WHERE jaccard >= $threshold)""".stripMargin
-  }
-
-  private def crossPairsSql(shingleN: Int, bands: Int, r: Int,
-                            threshold: Double, maxBucket: Int, evalMod: Int): String =
-    s"""WITH ${crossMinhashCtes(shingleN, bands, r, threshold, maxBucket, evalMod)}
-       |SELECT id_a, id_b, jaccard FROM mp""".stripMargin
-
-  /** Mirror of `FuzzyDecontamStream.contaminationLogMd5`'s STREAM cap
-    * semantics: the bucket cap applies to the STATIC EVAL side only
-    * (the stream side's occupancy is unknowable online), so `ok` admits
-    * a bucket iff its eval occupancy is ≤ maxBucket — differential
-    * coverage for exactly the regime where the batch combined-cap and
-    * the stream eval-cap DIVERGE (drawn small caps bind differently).
-    */
-  private def crossPairsStreamSql(shingleN: Int, bands: Int, r: Int,
-                                  threshold: Double, maxBucket: Int,
-                                  evalMod: Int): String = {
-    val base = crossMinhashCtes(shingleN, bands, r, threshold, maxBucket, evalMod)
-    val streamOk =
-      s"okx AS (SELECT band, bh FROM bE GROUP BY band, bh HAVING count(*) <= $maxBucket)"
-    val batchOk = s"okx AS (SELECT band, bh FROM cnt WHERE cl + cr <= $maxBucket)"
-    require(base.contains(batchOk), "crossMinhashCtes drifted from the expected ok CTE")
-    s"""WITH ${base.replace(batchOk, streamOk)}
-       |SELECT id_a, id_b, jaccard FROM mp""".stripMargin
-  }
-
-  private def fuzzyDecontamSql(shingleN: Int, bands: Int, r: Int,
-                               threshold: Double, maxBucket: Int, evalMod: Int): String =
-    s"""WITH ${crossMinhashCtes(shingleN, bands, r, threshold, maxBucket, evalMod)}
-       |SELECT doc_id FROM documents
-       |WHERE doc_id % $evalMod <> 0 AND doc_id NOT IN (SELECT id_a FROM mp)""".stripMargin
-
-  /** End-to-end mirror of the drawn curation composition (the
-    * doc_curation_pipeline oracle with every stage parameter drawn
-    * jointly): exact dedup → cross-pairs with the train side restricted
-    * to dedup survivors → anti-join → per-source cap → packSequences
-    * window.
-    */
-  private def curationPipelineSql(shingleN: Int, bands: Int, r: Int,
-                                  threshold: Double, maxBucket: Int,
-                                  evalMod: Int, cap: Int, budget: Int): String = {
-    val cross = crossMinhashCtes(shingleN, bands, r, threshold, maxBucket,
-      evalMod, Some("trn AS (SELECT s2.* FROM s2 JOIN dd ON dd.doc_id = s2.doc_id" +
-        s" WHERE s2.doc_id % $evalMod <> 0)"))
-    s"""WITH dd AS (SELECT doc_id, text, source FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY text ORDER BY doc_id) AS rn
-       |    FROM documents) WHERE rn = 1),
-       |$cross,
-       |surv AS (SELECT dd.* FROM dd
-       |  WHERE dd.doc_id % $evalMod <> 0 AND dd.doc_id NOT IN (SELECT id_a FROM mp)),
-       |capped AS (SELECT doc_id, text, source FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY source ORDER BY doc_id) AS rk
-       |    FROM surv) WHERE rk <= $cap),
-       |pt AS (SELECT doc_id, source,
-       |  CAST(len(regexp_extract_all(text, '\\w+|[^\\w\\s]')) AS INTEGER) AS n_tok
-       |  FROM capped)
-       |SELECT doc_id, source, n_tok,
-       |  CAST(coalesce(sum(n_tok) OVER w, 0) AS BIGINT) AS tok_offset,
-       |  CAST(floor(CAST(coalesce(sum(n_tok) OVER w, 0) AS BIGINT) / $budget) AS BIGINT) AS bin_id
-       |FROM pt
-       |WINDOW w AS (PARTITION BY source ORDER BY doc_id
-       |  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)""".stripMargin
-  }
-
-  /** Recursive closure over mp → cc(id, cluster_id). */
-  private def clusterTail: String =
-    s"""nodes AS (SELECT DISTINCT id FROM (
-       |  SELECT id_a AS id FROM mp UNION ALL SELECT id_b AS id FROM mp)),
-       |eg AS (SELECT id_a AS a, id_b AS b FROM mp
-       |  UNION ALL SELECT id_b AS a, id_a AS b FROM mp),
-       |reach AS (
-       |  SELECT id, id AS r FROM nodes
-       |  UNION
-       |  SELECT eg.a AS id, reach.r FROM eg JOIN reach ON reach.id = eg.b),
-       |cc AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id)""".stripMargin
-
-  private def clustersSql(shingleN: Int, bands: Int, r: Int,
-                          threshold: Double, maxBucket: Int): String =
-    s"""WITH RECURSIVE ${minhashCtes(shingleN, bands, r, threshold, maxBucket)},
-       |$clusterTail
-       |SELECT id AS doc_id, cluster_id FROM cc""".stripMargin
-
-  private def dedupIdsSql(shingleN: Int, bands: Int, r: Int,
-                          threshold: Double, maxBucket: Int): String =
-    s"""WITH RECURSIVE ${minhashCtes(shingleN, bands, r, threshold, maxBucket)},
-       |$clusterTail
-       |SELECT doc_id FROM documents
-       |WHERE doc_id NOT IN (SELECT id FROM cc WHERE id <> cluster_id)""".stripMargin
-
-  private def ngramPairsSql(shingleN: Int, threshold: Double, maxBucket: Int): String =
-    s"""WITH ${md5ShingleCtesN(shingleN)},
-       |blk AS (SELECT doc_id, sh, list_min(sh) AS block FROM s2),
-       |ok AS (SELECT block FROM blk GROUP BY block
-       |  HAVING count(*) <= $maxBucket AND count(*) > 1),
-       |ib AS (SELECT blk.* FROM blk JOIN ok USING (block)),
-       |j AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       |    ${md5JaccardExpr("a.sh", "b.sh")} AS jaccard
-       |  FROM ib a JOIN ib b ON a.block = b.block AND a.doc_id < b.doc_id)
-       |SELECT id_a, id_b, jaccard FROM j WHERE jaccard >= $threshold""".stripMargin
-
-  /** simhashPairsMd5 mirror for any (maxHamming ≤ 3, maxBucket): the 60-bit
-    * md5 simhash and 4×15-bit chunk buckets are structural (pigeonhole-
-    * complete for hamming ≤ 3); only the verify threshold and cap move.
-    */
-  private def simhashPairsSql(maxHamming: Int, maxBucket: Int): String = {
-    val sums = (0 until 60).map(b => s"sum((hv >> $b) & 1)::BIGINT AS c$b").mkString(", ")
-    val terms = (0 until 60).map(b =>
-      s"CASE WHEN 2*c$b > n THEN (1::BIGINT << $b) ELSE 0::BIGINT END").mkString("\n  + ")
-    s"""WITH t AS (SELECT doc_id,
-       |    list_filter(str_split_regex(lower(text), '[^\\p{L}\\p{Nd}]+'), x -> x <> '') AS toks
-       |  FROM documents),
-       |u AS (SELECT doc_id, unnest(toks) AS tok FROM t),
-       |m AS (SELECT doc_id, md5(tok) AS mh FROM u),
-       |h AS (SELECT doc_id, list_sum(list_transform(generate_series(1, 15),
-       |    i -> (strpos('0123456789abcdef', substr(mh, i, 1)) - 1)::BIGINT * (1::BIGINT << (4*(15-i)))))::BIGINT AS hv
-       |  FROM m),
-       |cc AS (SELECT doc_id, count(*)::BIGINT AS n, $sums FROM h GROUP BY doc_id),
-       |sh AS (SELECT doc_id, $terms AS sim FROM cc),
-       |ch AS (SELECT doc_id, sim, c, (sim >> (c * 15)) & ${(1L << 15) - 1} AS cv
-       |  FROM sh CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS c)),
-       |ok AS (SELECT c, cv FROM ch GROUP BY c, cv
-       |  HAVING count(*) <= $maxBucket AND count(*) > 1),
-       |ib AS (SELECT ch.* FROM ch JOIN ok USING (c, cv)),
-       |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       |    CAST(bit_count(xor(a.sim, b.sim)) AS INTEGER) AS hd
-       |  FROM ib a JOIN ib b ON a.c = b.c AND a.cv = b.cv AND a.doc_id < b.doc_id)
-       |SELECT id_a, id_b, CAST(min(hd) AS INTEGER) AS hamming
-       |FROM p WHERE hd <= $maxHamming GROUP BY id_a, id_b""".stripMargin
-  }
-
-  private def dupSpansSql(k: Int, minCount: Int): String =
-    s"""WITH t AS (SELECT doc_id,
-       |  list_filter(str_split_regex(lower(text), '[^\\p{L}\\p{Nd}]+'), x -> x <> '') AS toks
-       |  FROM documents),
-       |g AS (SELECT doc_id, i, array_to_string(toks[i:i+${k - 1}], ' ') AS gram
-       |      FROM t, unnest(generate_series(1, greatest(len(toks) - ${k - 1}, 0))) AS u(i)),
-       |dup AS (SELECT gram FROM g GROUP BY gram HAVING count(*) >= $minCount),
-       |h AS (SELECT doc_id, i - 1 AS s, i + ${k - 2} AS e FROM g
-       |      WHERE gram IN (SELECT gram FROM dup)),
-       |m AS (SELECT doc_id, s, e,
-       |        CASE WHEN s > coalesce(max(e) OVER (PARTITION BY doc_id ORDER BY s
-       |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1) THEN 1 ELSE 0 END AS brk
-       |      FROM h),
-       |isl AS (SELECT doc_id, s, e, sum(brk) OVER (PARTITION BY doc_id ORDER BY s
-       |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island FROM m)
-       |SELECT doc_id, min(s) AS span_start, max(e) AS span_end,
-       |  max(e) - min(s) + 1 AS span_tokens
-       |FROM isl GROUP BY doc_id, island""".stripMargin
-
-  private def spanRemovalSql(k: Int, minCount: Int): String =
-    s"""WITH t AS (SELECT doc_id,
-       |  list_filter(str_split_regex(lower(text), '[^\\p{L}\\p{Nd}]+'), x -> x <> '') AS toks
-       |  FROM documents),
-       |g AS (SELECT doc_id, i, array_to_string(toks[i:i+${k - 1}], ' ') AS gram
-       |      FROM t, unnest(generate_series(1, greatest(len(toks) - ${k - 1}, 0))) AS u(i)),
-       |dup AS (SELECT gram FROM g GROUP BY gram HAVING count(*) >= $minCount),
-       |h AS (SELECT doc_id, i - 1 AS s, i + ${k - 2} AS e FROM g
-       |      WHERE gram IN (SELECT gram FROM dup)),
-       |m AS (SELECT doc_id, s, e,
-       |        CASE WHEN s > coalesce(max(e) OVER (PARTITION BY doc_id ORDER BY s
-       |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1) THEN 1 ELSE 0 END AS brk
-       |      FROM h),
-       |isl AS (SELECT doc_id, s, e, sum(brk) OVER (PARTITION BY doc_id ORDER BY s
-       |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island FROM m),
-       |sp AS (SELECT doc_id, min(s) AS ss, max(e) AS ee FROM isl GROUP BY doc_id, island),
-       |cov AS (SELECT DISTINCT doc_id, p FROM sp, unnest(generate_series(ss, ee)) AS v(p)),
-       |tok AS (SELECT doc_id, j, toks[j] AS w FROM t, unnest(generate_series(1, len(toks))) AS u(j)),
-       |kept AS (SELECT tok.doc_id, j, w FROM tok LEFT JOIN cov
-       |           ON tok.doc_id = cov.doc_id AND tok.j - 1 = cov.p WHERE cov.p IS NULL),
-       |ktxt AS (SELECT doc_id, string_agg(w, ' ' ORDER BY j) AS clean_text FROM kept GROUP BY doc_id),
-       |ndup AS (SELECT doc_id, count(*) AS n_dup_tokens FROM cov GROUP BY doc_id)
-       |SELECT t.doc_id, len(t.toks) AS n_tokens,
-       |  coalesce(ndup.n_dup_tokens, 0) AS n_dup_tokens,
-       |  coalesce(ktxt.clean_text, '') AS clean_text
-       |FROM t LEFT JOIN ndup ON t.doc_id = ndup.doc_id
-       |       LEFT JOIN ktxt ON t.doc_id = ktxt.doc_id""".stripMargin
-
-  /** The withSyntheticLines framing (header rotation + shared footer) as
-    * CTEs ending in l(doc_id, j, line) / s(doc_id, ls) — shared by the
-    * dup-lines and line-dedup mirrors.
-    */
-  private def syntheticLineCtes: String =
-    """t AS (SELECT doc_id,
-      |  list_filter(str_split_regex(lower(text), '[^\p{L}\p{Nd}]+'), x -> x <> '') AS toks
-      |  FROM documents),
-      |p AS (SELECT doc_id,
-      |  (['subscribe to our newsletter today', 'click here to read more',
-      |    'copyright acme corporation', 'share this article on social media'])[CAST(doc_id % 4 + 1 AS INT)]
-      |  || chr(10) ||
-      |  array_to_string(list_transform(
-      |    generate_series(1, greatest(CAST(ceil(len(toks) / 10.0) AS INT), 1)),
-      |    i -> array_to_string(toks[(i-1)*10+1:(i-1)*10+10], ' ')), chr(10))
-      |  || chr(10) || 'all rights reserved' AS lines_text
-      |  FROM t),
-      |s AS (SELECT doc_id, str_split(lines_text, chr(10)) AS ls FROM p),
-      |l AS (SELECT doc_id, j, ls[j] AS line FROM s, unnest(generate_series(1, len(ls))) AS u(j))""".stripMargin
-
-  // the CTE block is concatenated OUTSIDE the margin template: its body
-  // contains lines starting with '||' (string concat), which a second
-  // stripMargin pass would mangle into single pipes
-  private def dupLinesSql(minDf: Int): String =
-    s"WITH $syntheticLineCtes,\n" +
-      s"""dup AS (SELECT line FROM l GROUP BY line HAVING count(DISTINCT doc_id) >= $minDf)
-         |SELECT doc_id, j - 1 AS pos FROM l WHERE line IN (SELECT line FROM dup)""".stripMargin
-
-  private def lineDedupSql(minDf: Int): String =
-    s"WITH $syntheticLineCtes,\n" +
-      s"""dup AS (SELECT line FROM l GROUP BY line HAVING count(DISTINCT doc_id) >= $minDf),
-         |dr AS (SELECT doc_id, count(*) AS n_dropped FROM l
-         |       WHERE line IN (SELECT line FROM dup) GROUP BY doc_id),
-         |kt AS (SELECT doc_id, string_agg(line, chr(10) ORDER BY j) AS clean_text FROM l
-         |       WHERE line NOT IN (SELECT line FROM dup) GROUP BY doc_id)
-         |SELECT s.doc_id, len(s.ls) AS n_lines, coalesce(dr.n_dropped, 0) AS n_dropped,
-         |  coalesce(kt.clean_text, '') AS clean_text
-         |FROM s LEFT JOIN dr ON s.doc_id = dr.doc_id
-         |       LEFT JOIN kt ON s.doc_id = kt.doc_id""".stripMargin
-
-  private def decontamSql(n: Int, evalMod: Long): String =
-    s"""WITH t AS (SELECT doc_id,
-       |  list_filter(str_split_regex(lower(text), '[^\\p{L}\\p{Nd}]+'), x -> x <> '') AS toks
-       |  FROM documents),
-       |g AS (SELECT doc_id, unnest(list_distinct(list_transform(
-       |    generate_series(1, greatest(len(toks) - ${n - 1}, 0)),
-       |    i -> array_to_string(toks[i:i+${n - 1}], ' ')))) AS gram FROM t),
-       |e AS (SELECT DISTINCT gram, doc_id AS eval_id FROM g WHERE doc_id % $evalMod = 0),
-       |h AS (SELECT g.doc_id,
-       |    count(DISTINCT g.gram) AS n_hit_grams,
-       |    count(DISTINCT e.eval_id) AS n_eval_docs
-       |  FROM g JOIN e USING (gram) WHERE g.doc_id % $evalMod <> 0 GROUP BY g.doc_id)
-       |SELECT d.doc_id,
-       |  coalesce(n_hit_grams, 0) AS n_hit_grams,
-       |  coalesce(n_eval_docs, 0) AS n_eval_docs,
-       |  coalesce(n_hit_grams, 0) > 0 AS contaminated
-       |FROM documents d LEFT JOIN h ON d.doc_id = h.doc_id
-       |WHERE d.doc_id % $evalMod <> 0""".stripMargin
-
-  private def boilerplateSql(n: Int, minDf: Int): String =
-    s"""WITH t AS (SELECT doc_id,
-       |  list_filter(str_split_regex(lower(text), '[^\\p{L}\\p{Nd}]+'), x -> x <> '') AS toks
-       |  FROM documents),
-       |g AS (SELECT doc_id, unnest(list_transform(
-       |    generate_series(1, greatest(len(toks) - ${n - 1}, 0)),
-       |    i -> array_to_string(toks[i:i+${n - 1}], ' '))) AS gram FROM t)
-       |SELECT gram, count(DISTINCT doc_id) AS doc_freq, count(*) AS total_cnt
-       |FROM g GROUP BY gram HAVING count(DISTINCT doc_id) >= $minDf""".stripMargin
-
-  private def packSql(budget: Int): String =
-    s"""WITH t AS (SELECT doc_id, source,
-       |  CAST(len(regexp_extract_all(text, '\\w+|[^\\w\\s]')) AS INTEGER) AS n_tok
-       |  FROM documents)
-       |SELECT doc_id, source, n_tok,
-       |  CAST(coalesce(sum(n_tok) OVER w, 0) AS BIGINT) AS tok_offset,
-       |  CAST(floor(CAST(coalesce(sum(n_tok) OVER w, 0) AS BIGINT) / $budget) AS BIGINT) AS bin_id
-       |FROM t
-       |WINDOW w AS (PARTITION BY source ORDER BY doc_id
-       |  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)""".stripMargin
-
-  private def sampleSql(enPrefix: String, defPrefix: String): String =
-    s"""SELECT doc_id, text, lang, source, n_chars FROM documents
-       |WHERE substr(md5(CAST(doc_id AS VARCHAR) || ':' || text), 1, 4) <
-       |  CASE WHEN lang = 'en' THEN '$enPrefix' ELSE '$defPrefix' END""".stripMargin
-
-  private def exactDedupIdsSql(cols: Seq[String]): String =
-    s"SELECT min(doc_id) AS doc_id FROM documents GROUP BY ${cols.mkString(", ")}"
-
-  /** embeddingNearDupPairs mirror for any (threshold, groups,
-    * planesPerGroup): the plane constants are regenerated from the SAME
-    * seeded generator the engine uses and embedded verbatim.
-    */
-  private def embPairsSql(threshold: Double, groups: Int, ppg: Int): String = {
-    val ps = graft.llm.Similarity.planes(groups * ppg, 64)
-    def codeExpr(g: Int): String = (0 until ppg).map { i =>
-      val arr = ps(g * ppg + i).map(java.lang.Double.toString).mkString("[", ", ", "]")
-      s"""CASE WHEN list_reduce(list_transform(list_zip(v, $arr::DOUBLE[]),
-         |    z -> CAST(z[1] AS DOUBLE) * z[2]), (x, y) -> x + y) >= 0
-         |  THEN ${1L << i}::BIGINT ELSE 0::BIGINT END""".stripMargin
-    }.mkString("\n + ")
-    val codeCase = (0 until groups).map(g => s"WHEN $g THEN ${codeExpr(g)}").mkString("\n  ")
-    val cos =
-      """list_sum(list_transform(list_zip(pa.v, pb.v), z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)))
-        |    / (sqrt(list_sum(list_transform(pa.v, x -> CAST(x AS DOUBLE) * x)))
-        |       * sqrt(list_sum(list_transform(pb.v, x -> CAST(x AS DOUBLE) * x))))""".stripMargin
-    s"""WITH e AS (SELECT vec_id AS id, embedding AS v FROM embeddings),
-       |b AS (SELECT id, band, CASE band $codeCase END AS code
-       |  FROM e CROSS JOIN (SELECT unnest([${(0 until groups).mkString(", ")}]) AS band) g),
-       |ok AS (SELECT band, code FROM b GROUP BY band, code
-       |  HAVING count(*) <= 1000 AND count(*) > 1),
-       |ib AS (SELECT b.* FROM b JOIN ok USING (band, code)),
-       |cand AS (SELECT DISTINCT a.id AS id_a, b2.id AS id_b
-       |  FROM ib a JOIN ib b2 ON a.band = b2.band AND a.code = b2.code AND a.id < b2.id),
-       |s AS (SELECT id_a, id_b, $cos AS cos
-       |  FROM cand JOIN e pa ON pa.id = cand.id_a JOIN e pb ON pb.id = cand.id_b)
-       |SELECT id_a, id_b FROM s WHERE cos >= $threshold""".stripMargin
-  }
-
-  /** pqTopK mirror for any (nSub, codesPerSub, k, refine) at dim=64:
-    * the anchor codebook is derived IN SQL exactly as the engine builds
-    * it (subspace slices of the codesPerSub lowest-vec_id rows); encode
-    * = per-subspace argmin squared L2 (ties to the smallest code), ADC
-    * score = left-fold lut/norm sums in m order — bit-matching
-    * PqEncode/PqLut/PqScore. refine > 0 appends the exact-cosine
-    * re-rank of the top-refine ADC candidates (the two-stage path).
-    */
-  /** CTE chain deriving the (anchor or Lloyd-trained) PQ codebook as
-    * `cbn(m, j, cent, n2)` — `Similarity.trainedCodebook`'s mirror with
-    * unrolled per-subspace Lloyd passes on the sampleN lowest-id rows
-    * (quantized-mean determinism — see the SparkEntry mirror for the
-    * derivation). Shared by the pq AND ivfpq sweep mirrors, so drawn
-    * `lloydIters` sweeps the trained-codebook path in both compositions.
-    */
-  private def codebookCtes(nSub: Int, cps: Int, lloydIters: Int,
-                           sampleN: Int = 512): String = {
-    val subDim = 64 / nSub
-    def sl(v: String) = s"$v[m*$subDim+1 : m*$subDim+$subDim]"
-    def sle(v: String) = s"$v[g.m*$subDim+1 : g.m*$subDim+$subDim]"
-    val train = (0 until lloydIters).map { i =>
-      val prev = if (i == 0) "cb0" else s"cb$i"
-      s"""sd$i AS (SELECT s.vec_id, p.m, p.j,
-         |    list_reduce(list_transform(list_zip(s.embedding[p.m*$subDim+1 : p.m*$subDim+$subDim], p.cent),
-         |      z -> (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE)) * (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE))),
-         |      (x, y) -> x + y) AS d
-         |  FROM samp s CROSS JOIN $prev p),
-         |sasg$i AS (SELECT vec_id, m, j FROM (
-         |  SELECT vec_id, m, j, row_number() OVER (PARTITION BY vec_id, m ORDER BY d ASC, j) AS rn
-         |  FROM sd$i) WHERE rn = 1),
-         |supd$i AS (SELECT m, j, pos,
-         |    CAST(sum(CAST(floor(CAST(x AS DOUBLE) * 1048576.0) AS BIGINT)) AS DOUBLE)
-         |      / (count(*) * 1048576.0) AS mean
-         |  FROM (SELECT g.m, g.j,
-         |      generate_subscripts(${sle("s.embedding")}, 1) AS pos,
-         |      unnest(${sle("s.embedding")}) AS x
-         |    FROM sasg$i g JOIN samp s USING (vec_id))
-         |  GROUP BY m, j, pos),
-         |cbu$i AS (SELECT m, j, list(mean ORDER BY pos) AS cent FROM supd$i GROUP BY m, j),
-         |cb${i + 1} AS (SELECT p.m, p.j, coalesce(u.cent, p.cent) AS cent
-         |  FROM $prev p LEFT JOIN cbu$i u ON u.m = p.m AND u.j = p.j),""".stripMargin
-    }.mkString("\n")
-    val sampCte =
-      if (lloydIters > 0)
-        s"\nsamp AS (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT $sampleN),"
-      else ""
-    s"""a0 AS (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT $cps),
-       |a AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INTEGER) AS j, embedding AS av FROM a0),
-       |cb0 AS (SELECT m, j, ${sl("av")} AS cent
-       |  FROM a CROSS JOIN (SELECT unnest(generate_series(0, ${nSub - 1})) AS m)),$sampCte
-       |$train
-       |cbn AS (SELECT m, j, cent,
-       |    list_reduce(list_transform(cent, x -> CAST(x AS DOUBLE) * x), (x, y) -> x + y) AS n2
-       |  FROM cb$lloydIters)""".stripMargin
-  }
-
-  private def embPqSql(nSub: Int, cps: Int, k: Int, refine: Int,
-                       lloydIters: Int = 0, sampleN: Int = 512): String = {
-    val subDim = 64 / nSub
-    def sl(v: String) = s"$v[m*$subDim+1 : m*$subDim+$subDim]"
-    val core =
-      s"""${codebookCtes(nSub, cps, lloydIters, sampleN)},
-         |c AS (SELECT vec_id AS corpus_id, embedding AS cv FROM embeddings),
-         |enc0 AS (SELECT corpus_id, m, j,
-         |    list_reduce(list_transform(list_zip(${sl("cv")}, cent),
-         |      z -> (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE)) * (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE))),
-         |      (x, y) -> x + y) AS d
-         |  FROM c CROSS JOIN cbn),
-         |codes AS (SELECT corpus_id, m, j AS code FROM (
-         |  SELECT corpus_id, m, j, row_number() OVER (PARTITION BY corpus_id, m ORDER BY d ASC, j) AS rn
-         |  FROM enc0) WHERE rn = 1),
-         |q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 20),
-         |qn AS (SELECT query_id,
-         |    sqrt(list_reduce(list_transform(qv, x -> CAST(x AS DOUBLE) * x), (x, y) -> x + y)) AS qn
-         |  FROM q),
-         |lut AS (SELECT query_id, m, j,
-         |    list_reduce(list_transform(list_zip(${sl("qv")}, cent),
-         |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (x, y) -> x + y) AS dot,
-         |    n2
-         |  FROM q CROSS JOIN cbn),
-         |s0 AS (SELECT query_id, corpus_id,
-         |    list_reduce(list(dot ORDER BY lut.m), (x, y) -> x + y) AS adc,
-         |    list_reduce(list(n2 ORDER BY lut.m), (x, y) -> x + y) AS cn2
-         |  FROM codes JOIN lut ON lut.m = codes.m AND lut.j = codes.code
-         |  GROUP BY query_id, corpus_id),
-         |s AS (SELECT s0.query_id, corpus_id,
-         |    (CASE WHEN cn2 = 0 THEN 0.0 ELSE adc / sqrt(cn2) END) / qn.qn AS sim
-         |  FROM s0 JOIN qn ON qn.query_id = s0.query_id
-         |  WHERE corpus_id <> s0.query_id)""".stripMargin
-    if (refine <= 0)
-      s"""WITH $core
-         |SELECT query_id, corpus_id,
-         |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, corpus_id) AS INTEGER) AS rank
-         |FROM s QUALIFY rank <= $k""".stripMargin
-    else {
-      val cos =
-        """list_reduce(list_transform(list_zip(q.qv, c.cv), z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (x, y) -> x + y)
-          |      / (sqrt(list_reduce(list_transform(q.qv, x -> CAST(x AS DOUBLE) * x), (x, y) -> x + y))
-          |         * sqrt(list_reduce(list_transform(c.cv, x -> CAST(x AS DOUBLE) * x), (x, y) -> x + y)))""".stripMargin
-      s"""WITH $core,
-         |cand AS (SELECT query_id, corpus_id FROM (
-         |  SELECT query_id, corpus_id,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, corpus_id) AS arank
-         |  FROM s) WHERE arank <= $refine),
-         |rr AS (SELECT cand.query_id, cand.corpus_id, $cos AS rsim
-         |  FROM cand JOIN q ON q.query_id = cand.query_id
-         |            JOIN c ON c.corpus_id = cand.corpus_id)
-         |SELECT query_id, corpus_id,
-         |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY rsim DESC, corpus_id) AS INTEGER) AS rank
-         |FROM rr QUALIFY rank <= $k""".stripMargin
-    }
-  }
-
-  private def duckCos(a: String, b: String): String =
-    s"""list_sum(list_transform(list_zip($a, $b), z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)))
-       |    / (sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * x)))
-       |       * sqrt(list_sum(list_transform($b, x -> CAST(x AS DOUBLE) * x))))""".stripMargin
-
-  /** Parametrized mirror of CorpusOps.lmPerplexity's integer sufficient
-    * statistics: train = documents with doc_id % mod <> 0 (the drawn
-    * held-out split), score = every document. Same CTE shapes as the
-    * fixed doc_lm_ppl oracle.
-    */
-  private def docLmPplSql(mod: Int): String = {
-    val tok = """list_filter(str_split_regex(lower(text), '[^\p{L}\p{Nd}]+'), x -> x <> '')"""
-    s"""WITH tt AS (SELECT $tok AS toks FROM documents WHERE doc_id % $mod <> 0),
-       |t AS (SELECT doc_id, $tok AS toks FROM documents),
-       |uni AS (SELECT tok, count(*) AS c1
-       |  FROM (SELECT unnest(toks) AS tok FROM tt) GROUP BY tok),
-       |tbg AS (SELECT list_transform(generate_series(1, greatest(len(toks) - 1, 0)),
-       |    i -> array_to_string(toks[i:i+1], ' ')) AS grams FROM tt),
-       |bi AS (SELECT gr, count(*) AS c12
-       |  FROM (SELECT unnest(grams) AS gr FROM tbg) GROUP BY gr),
-       |bg AS (SELECT doc_id, toks,
-       |  list_transform(generate_series(1, greatest(len(toks) - 1, 0)),
-       |    i -> array_to_string(toks[i:i+1], ' ')) AS grams
-       |  FROM t),
-       |db AS (SELECT doc_id, gr, count(*) AS m
-       |  FROM (SELECT doc_id, unnest(grams) AS gr FROM bg) GROUP BY doc_id, gr),
-       |j AS (SELECT db.doc_id, db.m,
-       |    coalesce(bi.c12, 0) AS c12, coalesce(uni.c1, 0) AS c1
-       |  FROM db LEFT JOIN bi ON db.gr = bi.gr
-       |    LEFT JOIN uni ON str_split(db.gr, ' ')[1] = uni.tok),
-       |a AS (SELECT doc_id, sum(m) AS n_bigrams,
-       |    sum(CASE WHEN c12 = 0 THEN m ELSE 0 END) AS oov_bigrams,
-       |    sum(c1 * m) AS hit_prev, sum(c12 * m) AS hit_bigram
-       |  FROM j GROUP BY doc_id)
-       |SELECT t.doc_id, CAST(len(t.toks) AS BIGINT) AS n_tokens,
-       |  CAST(coalesce(a.n_bigrams, 0) AS BIGINT) AS n_bigrams,
-       |  CAST(coalesce(a.oov_bigrams, 0) AS BIGINT) AS oov_bigrams,
-       |  CAST(coalesce(a.hit_prev, 0) AS BIGINT) AS hit_prev,
-       |  CAST(coalesce(a.hit_bigram, 0) AS BIGINT) AS hit_bigram
-       |FROM t LEFT JOIN a ON t.doc_id = a.doc_id""".stripMargin
-  }
-
-  /** Parametrized mirror of CorpusOps.dsirWeights' integer surface:
-    * target = docs with doc_id % mod = 0, raw pool = the rest, features
-    * = the drawn gram sizes md5-hashed into 16^hexChars buckets. Same
-    * CTE shapes as the fixed doc_dsir oracle.
-    */
-  private def docDsirSql(mod: Int, hexChars: Int, gramNs: Seq[Int]): String = {
-    val tok = """list_filter(str_split_regex(lower(text), '[^\p{L}\p{Nd}]+'), x -> x <> '')"""
-    val grams = gramNs.map { n =>
-      if (n == 1) "toks"
-      else s"list_transform(generate_series(1, greatest(len(toks) - ${n - 1}, 0)), " +
-        s"i -> array_to_string(toks[i:i+${n - 1}], ' '))"
-    }.reduce((a, b) => s"list_concat($a, $b)")
-    s"""WITH t AS (SELECT doc_id, $tok AS toks FROM documents),
-       |g AS (SELECT doc_id, $grams AS grams FROM t),
-       |occ AS (SELECT doc_id, substr(md5(gr), 1, $hexChars) AS bucket
-       |  FROM (SELECT doc_id, unnest(grams) AS gr FROM g)),
-       |tgt AS (SELECT bucket, count(*) AS c_tgt FROM occ
-       |  WHERE doc_id % $mod = 0 GROUP BY bucket),
-       |raw AS (SELECT bucket, count(*) AS c_raw FROM occ
-       |  WHERE doc_id % $mod <> 0 GROUP BY bucket),
-       |db AS (SELECT doc_id, bucket, count(*) AS m FROM occ
-       |  WHERE doc_id % $mod <> 0 GROUP BY doc_id, bucket),
-       |j AS (SELECT db.doc_id, db.m,
-       |    coalesce(tgt.c_tgt, 0) AS c_tgt, coalesce(raw.c_raw, 0) AS c_raw
-       |  FROM db LEFT JOIN tgt ON db.bucket = tgt.bucket
-       |    LEFT JOIN raw ON db.bucket = raw.bucket),
-       |a AS (SELECT doc_id, sum(m) AS n_grams,
-       |    sum(CASE WHEN c_tgt = 0 THEN m ELSE 0 END) AS oov_tgt,
-       |    sum(CASE WHEN c_raw = 0 THEN m ELSE 0 END) AS oov_raw,
-       |    sum(c_tgt * m) AS hit_tgt, sum(c_raw * m) AS hit_raw
-       |  FROM j GROUP BY doc_id)
-       |SELECT t.doc_id, CAST(coalesce(a.n_grams, 0) AS BIGINT) AS n_grams,
-       |  CAST(coalesce(a.oov_tgt, 0) AS BIGINT) AS oov_tgt,
-       |  CAST(coalesce(a.oov_raw, 0) AS BIGINT) AS oov_raw,
-       |  CAST(coalesce(a.hit_tgt, 0) AS BIGINT) AS hit_tgt,
-       |  CAST(coalesce(a.hit_raw, 0) AS BIGINT) AS hit_raw
-       |FROM t LEFT JOIN a ON t.doc_id = a.doc_id
-       |WHERE t.doc_id % $mod <> 0""".stripMargin
-  }
-
-  /** Parametrized mirror of TextSearch.bm25Stats' integer surface:
-    * corpus = docs with doc_id % mod <> 0, queries = the rest, stopword
-    * pruning at the drawn maxDfFrac. Same CTE shapes as the fixed
-    * doc_bm25_stats oracle.
-    */
-  private def docBm25Sql(mod: Int, maxDfFrac: Double): String = {
-    val tok = """list_filter(str_split_regex(lower(text), '[^\p{L}\p{Nd}]+'), x -> x <> '')"""
-    s"""WITH t AS (SELECT doc_id, $tok AS toks FROM documents),
-       |corp AS (SELECT doc_id, len(toks) AS dl, toks FROM t WHERE doc_id % $mod <> 0),
-       |post0 AS (SELECT tok, doc_id, dl, count(*) AS tf
-       |  FROM (SELECT doc_id, dl, unnest(toks) AS tok FROM corp)
-       |  GROUP BY tok, doc_id, dl),
-       |dfa AS (SELECT tok, count(*) AS df_t FROM post0 GROUP BY tok
-       |  HAVING count(*) <= $maxDfFrac * (SELECT count(*) FROM corp)),
-       |qt AS (SELECT DISTINCT doc_id AS query_id, unnest(toks) AS tok
-       |  FROM t WHERE doc_id % $mod = 0),
-       |qtd AS (SELECT qt.query_id, qt.tok, dfa.df_t FROM qt
-       |  JOIN dfa ON qt.tok = dfa.tok)
-       |SELECT qtd.query_id, post0.doc_id,
-       |  CAST(count(*) AS BIGINT) AS n_match,
-       |  CAST(sum(post0.tf) AS BIGINT) AS tf_sum,
-       |  CAST(sum(post0.tf * qtd.df_t) AS BIGINT) AS tfdf_sum,
-       |  CAST(min(post0.dl) AS BIGINT) AS dl
-       |FROM qtd JOIN post0 ON qtd.tok = post0.tok
-       |GROUP BY qtd.query_id, post0.doc_id""".stripMargin
-  }
-
-  /** Parametrized mirror of AnnStream.annStream /
-    * shardedLshBucketHits→annMergeStage (exact-cosine mode): hyperplane
-    * sign-bit buckets re-derived from the SAME deterministic planes,
-    * own + hamming-1 probes, candidates restricted to earlier arrivals
-    * (the id-ordered replay's "so far"), exact-cosine rank ≤ k. The
-    * sharded bridge computes the identical log (disjoint per-bucket
-    * candidates), so both forms share this mirror per draw.
-    */
-  private def embAnnStreamSql(nPlanes: Int, k: Int): String = {
-    val ps = graft.llm.Similarity.planes(nPlanes, 64)
-    def bucketExpr(v: String): String = ps.zipWithIndex.map { case (p, i) =>
-      val arr = p.map(java.lang.Double.toString).mkString("[", ", ", "]")
-      s"""CASE WHEN list_reduce(list_transform(list_zip($v, $arr::DOUBLE[]),
-         |    p -> CAST(p[1] AS DOUBLE) * p[2]), (x, y) -> x + y) >= 0
-         |  THEN (1::BIGINT << $i) ELSE 0::BIGINT END""".stripMargin
-    }.mkString("\n + ")
-    val probes = "b0" +: (0 until nPlanes).map(i => s"xor(b0, ${1L << i}::BIGINT)")
-    s"""WITH c AS (SELECT vec_id AS corpus_id, embedding AS cv,
-       |    ${bucketExpr("embedding")} AS bucket FROM embeddings),
-       |q0 AS (SELECT vec_id AS query_id, embedding AS qv,
-       |    ${bucketExpr("embedding")} AS b0 FROM embeddings),
-       |pr AS (SELECT query_id, qv, unnest([${probes.mkString(", ")}]) AS bucket FROM q0),
-       |s AS (SELECT query_id, corpus_id,
-       |    list_sum(list_transform(list_zip(qv, cv), p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-       |    / (sqrt(list_sum(list_transform(qv, x -> CAST(x AS DOUBLE) * x)))
-       |       * sqrt(list_sum(list_transform(cv, x -> CAST(x AS DOUBLE) * x)))) AS sim
-       |  FROM c JOIN pr USING (bucket) WHERE corpus_id < query_id)
-       |SELECT query_id, corpus_id,
-       |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, corpus_id) AS INTEGER) AS rank
-       |FROM s QUALIFY rank <= $k""".stripMargin
-  }
-
-  /** Parametrized mirror of Bm25IngestStream's earlier-arrivals retrieval
-    * (corpus = id % mod <> 0, queries = id % mod = 0, id-ordered tagged
-    * feed): stored postings = each term's first-by-id `maxDf` docs, a
-    * query sees stored postings with doc_id < query_id, df at probe
-    * counts those same rows, then the consumer-side (query, doc) fold.
-    */
-  private def docBm25IngestSql(mod: Int, maxDf: Int): String = {
-    val tok = "list_filter(str_split_regex(lower(text), '[^\\p{L}\\p{Nd}]+'), x -> x <> '')"
-    s"""WITH t AS (SELECT doc_id, $tok AS toks FROM documents),
-       |corp AS (SELECT doc_id, len(toks) AS dl, toks FROM t WHERE doc_id % $mod <> 0),
-       |post0 AS (SELECT tok, doc_id, dl, count(*) AS tf
-       |  FROM (SELECT doc_id, dl, unnest(toks) AS tok FROM corp)
-       |  GROUP BY tok, doc_id, dl),
-       |kept AS (SELECT * FROM (
-       |  SELECT tok, doc_id, dl, tf,
-       |    row_number() OVER (PARTITION BY tok ORDER BY doc_id) AS rnk
-       |  FROM post0) WHERE rnk <= $maxDf),
-       |qt AS (SELECT DISTINCT doc_id AS query_id, unnest(toks) AS tok
-       |  FROM t WHERE doc_id % $mod = 0),
-       |probe AS (SELECT qt.query_id, k.doc_id, k.tok, k.tf, k.dl,
-       |    count(*) OVER (PARTITION BY qt.query_id, k.tok) AS df_p
-       |  FROM qt JOIN kept k ON k.tok = qt.tok AND k.doc_id < qt.query_id)
-       |SELECT query_id, doc_id,
-       |  CAST(count(*) AS BIGINT) AS n_match,
-       |  CAST(sum(tf) AS BIGINT) AS tf_sum,
-       |  CAST(sum(tf * df_p) AS BIGINT) AS tfdf_sum,
-       |  CAST(min(dl) AS BIGINT) AS dl
-       |FROM probe GROUP BY query_id, doc_id""".stripMargin
-  }
-
-  /** Parametrized mirror of Similarity.semDedup: the ivf centroid chain
-    * (anchor init + `lloydIters` quantized-mean passes) with the FINAL
-    * assignment keeping each row's winning csim, the within-cell ε-pair
-    * self-join RESTRICTED to cells at or under the `maxCell` occupancy
-    * cap (the hot-cell guard — over-cap cells produce no pairs, so
-    * their members all survive), the min-label recursive-CTE closure,
-    * and the keep rank (csim ASC, id ASC per component; rn > 1 dropped).
-    */
-  private def embSemDedupSql(nCells: Int, lloydIters: Int, eps: Double,
-                             maxCell: Int = Int.MaxValue,
-                             srcSql: String =
-                               "SELECT vec_id AS corpus_id, embedding AS cv FROM embeddings",
-                             finalRel: String = "embeddings",
-                             finalIdCol: String = "vec_id"): String = {
-    val chain = (0 until lloydIters).map { i =>
-      s"""asg$i AS (SELECT corpus_id, cv, cell FROM (
-         |  SELECT corpus_id, cv, cell,
-         |    row_number() OVER (PARTITION BY corpus_id ORDER BY csim DESC, cell) AS rn
-         |  FROM (SELECT corpus_id, cv, cell, ${duckCos("cv", "centroid")} AS csim
-         |        FROM c CROSS JOIN cent$i)) WHERE rn = 1),
-         |el$i AS (SELECT cell, generate_subscripts(cv, 1) AS pos, unnest(cv) AS x FROM asg$i),
-         |cm$i AS (SELECT cell, pos,
-         |    CAST(sum(CAST(floor(CAST(x AS DOUBLE) * 1048576.0) AS BIGINT)) AS DOUBLE)
-         |      / (count(*) * 1048576.0) AS m
-         |  FROM el$i GROUP BY cell, pos),
-         |cent${i + 1} AS (SELECT cell, list(m ORDER BY pos) AS centroid FROM cm$i GROUP BY cell),""".stripMargin
-    }.mkString("\n")
-    s"""WITH RECURSIVE c AS ($srcSql),
-       |cent0 AS (SELECT corpus_id::BIGINT AS cell, cv AS centroid
-       |    FROM c ORDER BY corpus_id LIMIT $nCells),
-       |$chain
-       |asg AS (SELECT corpus_id, cv, cell, csim FROM (
-       |  SELECT corpus_id, cv, cell, csim,
-       |    row_number() OVER (PARTITION BY corpus_id ORDER BY csim DESC, cell) AS rn
-       |  FROM (SELECT corpus_id, cv, cell, ${duckCos("cv", "centroid")} AS csim
-       |        FROM c CROSS JOIN cent$lloydIters)) WHERE rn = 1),
-       |ok AS (SELECT cell FROM asg GROUP BY cell HAVING count(*) <= $maxCell),
-       |ep AS (SELECT a.corpus_id AS id_a, b.corpus_id AS id_b
-       |  FROM asg a JOIN asg b ON a.cell = b.cell AND a.corpus_id < b.corpus_id
-       |  JOIN ok ON ok.cell = a.cell
-       |  WHERE ${duckCos("a.cv", "b.cv")} >= $eps),
-       |nodes AS (SELECT DISTINCT id FROM (
-       |  SELECT id_a AS id FROM ep UNION ALL SELECT id_b AS id FROM ep)),
-       |eg AS (SELECT id_a AS a, id_b AS b FROM ep
-       |  UNION ALL SELECT id_b AS a, id_a AS b FROM ep),
-       |reach AS (
-       |  SELECT id, id AS r FROM nodes
-       |  UNION
-       |  SELECT eg.a AS id, reach.r FROM eg JOIN reach ON reach.id = eg.b),
-       |cc AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
-       |rk AS (SELECT cc.cluster_id, cc.id,
-       |    row_number() OVER (PARTITION BY cc.cluster_id ORDER BY asg.csim ASC, cc.id) AS rn
-       |  FROM cc JOIN asg ON cc.id = asg.corpus_id)
-       |SELECT $finalIdCol FROM $finalRel
-       |WHERE $finalIdCol NOT IN (SELECT id FROM rk WHERE rn > 1)""".stripMargin
-  }
-
-  /** Parametrized mirror of Similarity.ivfPqTopK (batch: the 20 lowest-id
-    * queries, candidates <> query) and AnnStream.ivfPqAnnStream (stream:
-    * EVERY vector queries, candidates restricted to earlier arrivals —
-    * the id-ordered replay's "arrived so far"). Anchor centroids = the
-    * nCells lowest-id rows; anchor codebook = subspace slices of the cps
-    * lowest-id rows; cell assignment/probe rank (csim DESC, cell); ADC
-    * scores divided in the engine's exact order ((adc/√cn2)/‖q‖).
-    */
-  private def embIvfPqSql(nCells: Int, nProbe: Int, nSub: Int, cps: Int,
-                          k: Int, stream: Boolean,
-                          lloydIters: Int = 0): String = {
-    val subDim = 64 / nSub
-    def sl(v: String) = s"$v[m*$subDim+1 : m*$subDim+$subDim]"
-    val qFilter = if (stream) "" else " WHERE vec_id < 20"
-    val candRestrict = if (stream) "<" else "<>"
-    s"""WITH ${codebookCtes(nSub, cps, lloydIters)},
-       |centt AS (SELECT vec_id::BIGINT AS cell, embedding AS centroid
-       |    FROM embeddings ORDER BY vec_id LIMIT $nCells),
-       |c AS (SELECT vec_id AS corpus_id, embedding AS cv FROM embeddings),
-       |asg AS (SELECT corpus_id, cell FROM (
-       |  SELECT corpus_id, cell,
-       |    row_number() OVER (PARTITION BY corpus_id ORDER BY csim DESC, cell) AS rn
-       |  FROM (SELECT corpus_id, cell, ${duckCos("cv", "centroid")} AS csim
-       |        FROM c CROSS JOIN centt)) WHERE rn = 1),
-       |enc0 AS (SELECT corpus_id, m, j,
-       |    list_reduce(list_transform(list_zip(${sl("cv")}, cent),
-       |      z -> (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE)) * (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE))),
-       |      (x, y) -> x + y) AS d
-       |  FROM c CROSS JOIN cbn),
-       |codes AS (SELECT corpus_id, m, j AS code FROM (
-       |  SELECT corpus_id, m, j, row_number() OVER (PARTITION BY corpus_id, m ORDER BY d ASC, j) AS rn
-       |  FROM enc0) WHERE rn = 1),
-       |q0 AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings$qFilter),
-       |pr AS (SELECT query_id, cell FROM (
-       |  SELECT query_id, cell,
-       |    row_number() OVER (PARTITION BY query_id ORDER BY csim DESC, cell) AS rn
-       |  FROM (SELECT query_id, cell, ${duckCos("qv", "centroid")} AS csim
-       |        FROM q0 CROSS JOIN centt)) WHERE rn <= $nProbe),
-       |cand AS (SELECT pr.query_id, asg.corpus_id FROM asg JOIN pr USING (cell)
-       |  WHERE asg.corpus_id $candRestrict pr.query_id),
-       |qn AS (SELECT query_id,
-       |    sqrt(list_reduce(list_transform(qv, x -> CAST(x AS DOUBLE) * x), (x, y) -> x + y)) AS qn
-       |  FROM q0),
-       |lut AS (SELECT query_id, m, j,
-       |    list_reduce(list_transform(list_zip(${sl("qv")}, cent),
-       |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (x, y) -> x + y) AS dot,
-       |    n2
-       |  FROM q0 CROSS JOIN cbn),
-       |s0 AS (SELECT cand.query_id, cand.corpus_id,
-       |    list_reduce(list(lut.dot ORDER BY lut.m), (x, y) -> x + y) AS adc,
-       |    list_reduce(list(lut.n2 ORDER BY lut.m), (x, y) -> x + y) AS cn2
-       |  FROM cand JOIN codes ON codes.corpus_id = cand.corpus_id
-       |            JOIN lut ON lut.query_id = cand.query_id AND lut.m = codes.m AND lut.j = codes.code
-       |  GROUP BY cand.query_id, cand.corpus_id),
-       |s AS (SELECT s0.query_id, corpus_id,
-       |    (CASE WHEN cn2 = 0 THEN 0.0 ELSE adc / sqrt(cn2) END) / qn.qn AS sim
-       |  FROM s0 JOIN qn ON qn.query_id = s0.query_id)
-       |SELECT query_id, corpus_id,
-       |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, corpus_id) AS INTEGER) AS rank
-       |FROM s QUALIFY rank <= $k""".stripMargin
-  }
-
-  /** Parameterized mirror of `Similarity.ivfPqTopK(residual = true)`
-    * (lloydIters = 0): the SparkEntry fixed-geometry oracle
-    * (`embIvfPqResidualOracle`) generalized over cells × probes ×
-    * subspaces for randomized draws. Residual anchors are rows
-    * OFFSET nCells LIMIT cps by id, assigned and centroid-subtracted;
-    * scoring reassembles cosine from q·c + Σ lut over the residual
-    * codebook and the per-cell norm correction Σ w.
-    */
-  private def embIvfPqResidualSql(nCells: Int, nProbe: Int, nSub: Int,
-                                  cps: Int, k: Int,
-                                  stream: Boolean = false): String = {
-    val subDim = 64 / nSub
-    def sl(v: String) = s"$v[m*$subDim+1 : m*$subDim+$subDim]"
-    def slq(v: String, m: String) = s"$v[$m*$subDim+1 : $m*$subDim+$subDim]"
-    val qFilter = if (stream) "" else " WHERE vec_id < 20"
-    val candRestrict = if (stream) "<" else "<>"
-    s"""WITH centt AS (SELECT vec_id::BIGINT AS cell, embedding AS centroid
-       |    FROM embeddings ORDER BY vec_id LIMIT $nCells),
-       |cn2t AS (SELECT cell,
-       |    list_reduce(list_transform(centroid, x -> CAST(x AS DOUBLE) * x), (x, y) -> x + y) AS cn2
-       |  FROM centt),
-       |ra AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INTEGER) AS j, embedding AS av
-       |  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT $cps OFFSET $nCells)),
-       |rasg AS (SELECT j, av, centroid FROM (
-       |  SELECT j, av, centroid,
-       |    row_number() OVER (PARTITION BY j ORDER BY csim DESC, cell) AS rn
-       |  FROM (SELECT ra.j, ra.av, centt.cell, centt.centroid,
-       |          ${duckCos("av", "centroid")} AS csim
-       |        FROM ra CROSS JOIN centt)) WHERE rn = 1),
-       |rv AS (SELECT j, list_transform(list_zip(av, centroid),
-       |    z -> CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE)) AS resid FROM rasg),
-       |cb AS (SELECT m, j, ${sl("resid")} AS cent
-       |  FROM rv CROSS JOIN (SELECT unnest(generate_series(0, ${nSub - 1})) AS m)),
-       |rn2 AS (SELECT m, j,
-       |    list_reduce(list_transform(cent, x -> CAST(x AS DOUBLE) * x), (x, y) -> x + y) AS n2
-       |  FROM cb),
-       |w AS (SELECT centt.cell, cb.m, cb.j,
-       |    2.0 * list_reduce(list_transform(list_zip(${slq("centt.centroid", "cb.m")}, cb.cent),
-       |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (x, y) -> x + y) + rn2.n2 AS w
-       |  FROM centt CROSS JOIN cb JOIN rn2 ON rn2.m = cb.m AND rn2.j = cb.j),
-       |c AS (SELECT vec_id AS corpus_id, embedding AS cv FROM embeddings),
-       |asg AS (SELECT corpus_id, cell, cv, centroid FROM (
-       |  SELECT corpus_id, cell, cv, centroid,
-       |    row_number() OVER (PARTITION BY corpus_id ORDER BY csim DESC, cell) AS rn
-       |  FROM (SELECT corpus_id, cell, cv, centroid, ${duckCos("cv", "centroid")} AS csim
-       |        FROM c CROSS JOIN centt)) WHERE rn = 1),
-       |crv AS (SELECT corpus_id, cell, list_transform(list_zip(cv, centroid),
-       |    z -> CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE)) AS rvv FROM asg),
-       |enc0 AS (SELECT corpus_id, cell, cb.m, cb.j,
-       |    list_reduce(list_transform(list_zip(${slq("rvv", "cb.m")}, cb.cent),
-       |      z -> (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE)) * (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE))),
-       |      (x, y) -> x + y) AS d
-       |  FROM crv CROSS JOIN cb),
-       |codes AS (SELECT corpus_id, cell, m, j AS code FROM (
-       |  SELECT corpus_id, cell, m, j, row_number() OVER (PARTITION BY corpus_id, m ORDER BY d ASC, j) AS rn
-       |  FROM enc0) WHERE rn = 1),
-       |q0 AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings$qFilter),
-       |qn AS (SELECT query_id,
-       |    sqrt(list_reduce(list_transform(qv, x -> CAST(x AS DOUBLE) * x), (x, y) -> x + y)) AS qn
-       |  FROM q0),
-       |pr AS (SELECT query_id, cell, qdotc FROM (
-       |  SELECT query_id, cell, qdotc,
-       |    row_number() OVER (PARTITION BY query_id ORDER BY csim DESC, cell) AS rn
-       |  FROM (SELECT query_id, cell, ${duckCos("qv", "centroid")} AS csim,
-       |          list_reduce(list_transform(list_zip(qv, centroid),
-       |            z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (x, y) -> x + y) AS qdotc
-       |        FROM q0 CROSS JOIN centt)) WHERE rn <= $nProbe),
-       |lut AS (SELECT query_id, m, j,
-       |    list_reduce(list_transform(list_zip(${sl("qv")}, cent),
-       |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (x, y) -> x + y) AS dot
-       |  FROM q0 CROSS JOIN cb),
-       |s0 AS (SELECT pr.query_id, codes.corpus_id, pr.cell, pr.qdotc,
-       |    list_reduce(list(lut.dot ORDER BY lut.m), (x, y) -> x + y) AS adc,
-       |    list_reduce(list(w.w ORDER BY w.m), (x, y) -> x + y) AS cw
-       |  FROM pr JOIN codes USING (cell)
-       |       JOIN lut ON lut.query_id = pr.query_id AND lut.m = codes.m AND lut.j = codes.code
-       |       JOIN w ON w.cell = pr.cell AND w.m = codes.m AND w.j = codes.code
-       |  WHERE codes.corpus_id $candRestrict pr.query_id
-       |  GROUP BY pr.query_id, codes.corpus_id, pr.cell, pr.qdotc),
-       |s AS (SELECT s0.query_id, corpus_id,
-       |    CASE WHEN (cn2t.cn2 + cw) <= 0 THEN 0.0
-       |         ELSE (qdotc + adc) / (sqrt(cn2t.cn2 + cw) * qn.qn) END AS sim
-       |  FROM s0 JOIN qn ON qn.query_id = s0.query_id
-       |          JOIN cn2t ON cn2t.cell = s0.cell)
-       |SELECT query_id, corpus_id,
-       |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, corpus_id) AS INTEGER) AS rank
-       |FROM s QUALIFY rank <= $k""".stripMargin
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
@@ -1673,10 +479,7 @@ SELECT id_a, id_b, shared, n_a, n_b FROM vpairs"""
           val gcol = pick(Seq("source", "lang"))
           (graft.llm.CorpusOps.capPerGroup(docs, gcol, "doc_id", cap)
             .select("doc_id", gcol),
-            s"""SELECT doc_id, $gcol FROM (
-               |  SELECT doc_id, $gcol,
-               |    row_number() OVER (PARTITION BY $gcol ORDER BY doc_id) AS rk
-               |  FROM documents) WHERE rk <= $cap""".stripMargin,
+            sourceCapSql(gcol, cap),
             s"${gcol}_c$cap")
         case "emb_ivfpq" =>
           // drawn IVF×PQ composition geometry (anchor centroids + anchor
@@ -1729,7 +532,7 @@ SELECT id_a, id_b, shared, n_a, n_b FROM vpairs"""
             }
           (scored.select("doc_id", "n_tokens", "n_bigrams", "oov_bigrams",
               "hit_prev", "hit_bigram"),
-            docLmPplSql(mod),
+            docLmPplSql(Some(mod)),
             s"m$mod${if (form == "batch") "" else s"_$form"}")
         case "bm25" =>
           // drawn BM25 geometry: query/corpus split × stopword-pruning
@@ -1880,17 +683,6 @@ SELECT id_a, id_b, shared, n_a, n_b FROM vpairs"""
           val bm = pick(Seq(8L, 32L)); val nc = pick(Seq(4, 8, 16))
           val ll = pick(Seq(0, 1)); val epsQ = pick(Seq(0.90625, 0.9375, 0.96875))
           val mc = pick(Seq(20, 1 << 20))
-          def lum(x: Int, y: Int): String = {
-            val k = x * 7 + y * 13 + 3
-            val raw = s"(((doc_id % $bm) + 1) * $k) % 251"
-            if (x == 2 && y == 3)
-              s"(CASE WHEN (doc_id // $bm) % 3 >= 1 THEN 250 - ($raw) ELSE $raw END)"
-            else if (x == 5 && y == 1)
-              s"(CASE WHEN (doc_id // $bm) % 3 = 2 THEN 250 - ($raw) ELSE $raw END)"
-            else s"($raw)"
-          }
-          val vecSql = (for (y <- 0 until 8; x <- 0 until 8)
-            yield s"CAST(${lum(x, y)} AS DOUBLE)").mkString(", ")
           (graft.llm.Similarity.semDedup(
             graft.llm.Multimodal.imageLumaFeatures(
               graft.llm.Multimodal.withSyntheticPatternImages(docs, "doc_id",
@@ -1900,7 +692,7 @@ SELECT id_a, id_b, shared, n_a, n_b FROM vpairs"""
             lloydIters = ll, maxCell = mc)
             .select(col("id").as("doc_id")),
             embSemDedupSql(nc, ll, epsQ, mc,
-              srcSql = s"SELECT doc_id AS corpus_id, [$vecSql] AS cv FROM documents",
+              srcSql = patternVectorSql(bm),
               finalRel = "documents", finalIdCol = "doc_id"),
             s"b${bm}_c${nc}_l${ll}_e${epsQ}_mc$mc")
         case "image_tiles" =>
@@ -1912,46 +704,13 @@ SELECT id_a, id_b, shared, n_a, n_b FROM vpairs"""
           // the 62-doc families), 1000 never does
           val bm = pick(Seq(8L, 32L, 128L)); val ms = pick(Seq(5, 10, 23))
           val mb = pick(Seq(30, 1000))
-          def tlum(px: Int, py: Int): String = {
-            val k = px * 7 + py * 13 + 3
-            val raw = s"((((doc_id % $bm) + 1) * (tx*28 + ty*52 + $k + " +
-              s"CASE WHEN (doc_id // $bm) % 3 = 2 THEN 104 ELSE 0 END)) % 251)"
-            s"($raw + CASE WHEN (doc_id // $bm) % 3 = 1 THEN 4 ELSE 0 END)"
-          }
-          val tsum = (for (py <- 0 until 8; px <- 0 until 8)
-            yield tlum(px, py)).mkString(" + ")
-          val tbits = (for (py <- 0 until 8; px <- 0 until 8) yield {
-            val bit = py * 8 + px
-            val mask = if (bit == 63) "(-9223372036854775807 - 1)"
-                       else s"(1::BIGINT << $bit)"
-            s"(CASE WHEN ${tlum(px, py)} > lmean THEN $mask ELSE 0::BIGINT END)"
-          }).mkString(" |\n  ")
           (graft.llm.TextDedup.sharedKeyPairs(
             graft.llm.Multimodal.imageTileHashes(
               graft.llm.Multimodal.withSyntheticCropImages(docs, "doc_id",
                 baseMod = bm),
               "doc_id"),
             "id", "thash", minShared = ms, maxBucket = mb),
-            s"""WITH tg AS (SELECT doc_id, tx, ty FROM documents
-  CROSS JOIN (SELECT unnest(generate_series(0, 6)) AS tx) a
-  CROSS JOIN (SELECT unnest(generate_series(0, 6)) AS ty) b),
-tm AS (SELECT doc_id, tx, ty, ($tsum) // 64 AS lmean FROM tg),
-th AS (SELECT doc_id, CAST(tx AS BIGINT) AS tile_x, CAST(ty AS BIGINT) AS tile_y,
-  $tbits AS thash FROM tm),
-tkeys AS (SELECT DISTINCT doc_id, thash FROM th),
-tnk AS (SELECT doc_id, count(*) AS nk FROM tkeys GROUP BY doc_id),
-tok AS (SELECT thash FROM tkeys GROUP BY thash
-  HAVING count(*) <= $mb AND count(*) > 1),
-tib AS (SELECT tkeys.* FROM tkeys JOIN tok USING (thash)),
-tcand AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-    CAST(count(DISTINCT a.thash) AS BIGINT) AS shared
-  FROM tib a JOIN tib b ON a.thash = b.thash AND a.doc_id < b.doc_id
-  GROUP BY 1, 2),
-tpr AS (SELECT id_a, id_b, shared, na.nk AS n_a, nb.nk AS n_b
-  FROM tcand JOIN tnk na ON na.doc_id = tcand.id_a
-             JOIN tnk nb ON nb.doc_id = tcand.id_b
-  WHERE shared >= $ms)
-SELECT id_a, id_b, shared, n_a, n_b FROM tpr""",
+            imageTilePairsSql(bm, ms, mb),
             s"b${bm}_ms${ms}_mb$mb")
         case "token_mix" =>
           // drawn default budget × one per-group override × FORM
@@ -1971,15 +730,7 @@ SELECT id_a, id_b, shared, n_a, n_b FROM tpr""",
                 "text", "source", defaultBudget = db,
                 budgetByGroup = Map("src1" -> b1), rangeWidth = rw)
           (mixed,
-            s"""WITH t AS (SELECT doc_id, source,
-               |  CAST(len(regexp_extract_all(text, '\\w+|[^\\w\\s]')) AS INTEGER) AS n_tok
-               |  FROM documents),
-               |c AS (SELECT doc_id, source, n_tok,
-               |  CAST(coalesce(sum(n_tok) OVER (PARTITION BY source ORDER BY doc_id
-               |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS tok_before
-               |  FROM t)
-               |SELECT doc_id, source, n_tok, tok_before FROM c
-               |WHERE tok_before < (CASE source WHEN 'src1' THEN $b1 ELSE $db END)""".stripMargin,
+            tokenMixSql(db, Seq("src1" -> b1)),
             s"d${db}_s1b${b1}_rw$rw")
         case "bpe_encode" =>
           // drawn sample geometry × merge count × encode truncation —
@@ -2007,7 +758,7 @@ SELECT id_a, id_b, shared, n_a, n_b FROM tpr""",
                 org.apache.spark.sql.functions.substring(col("text"), 1, ec), model)))
             .select(col("doc_id"), (col("pos") + 1).cast("long").as("pos"),
               col("col").cast("long").as("token_id")),
-            graft.SparkEntry.docBpeEncodeOracleFor(sd, sc, nm, ec, rel),
+            docBpeEncodeOracleFor(sd, sc, nm, ec, rel),
             s"s${sd}x${sc}_m${nm}_e$ec${if (full) "_full" else ""}")
         case "bpe_bytes" =>
           // the byte-level LOAD path under drawn merge tables × encode
@@ -2018,7 +769,7 @@ SELECT id_a, id_b, shared, n_a, n_b FROM tpr""",
           // 'Ġ t' changes which merge wins inside ' the') and in whether
           // the space-crossing 's Ġ' rule exists
           val tables = Seq(
-            ("fix", graft.SparkEntry.bpeBytesMergesLines),
+            ("fix", bpeBytesMergesLines),
             ("rank", "#v" +: Seq("t he", "h e", "Ġ t", "Ġt he", "e r", "a n")),
             ("nospace", "#v" +: Seq("h e", "i n", "a n", "an d", "r e")))
           val (tag, lines) = pick(tables)
@@ -2030,7 +781,7 @@ SELECT id_a, id_b, shared, n_a, n_b FROM tpr""",
                 org.apache.spark.sql.functions.substring(col("text"), 1, ec), model)))
             .select(col("doc_id"), (col("pos") + 1).cast("long").as("pos"),
               col("col").cast("long").as("token_id")),
-            graft.SparkEntry.docBpeEncodeBytesOracleFor(lines, ec),
+            docBpeEncodeBytesOracleFor(lines, ec),
             s"${tag}_e$ec")
         case "bpe_dist" =>
           // the DISTRIBUTED trainer under drawn sample size × merge
@@ -2054,7 +805,7 @@ SELECT id_a, id_b, shared, n_a, n_b FROM tpr""",
                 org.apache.spark.sql.functions.substring(col("text"), 1, ec), model)))
             .select(col("doc_id"), (col("pos") + 1).cast("long").as("pos"),
               col("col").cast("long").as("token_id")),
-            graft.SparkEntry.docBpeEncodeDistOracleFor(sd, 240, nm, ec,
+            docBpeEncodeDistOracleFor(sd, 240, nm, ec,
               byteLevel = bytes),
             s"s${sd}_m${nm}_e$ec${if (bytes) "_bytes" else ""}")
         case "video_seq" =>
@@ -2183,12 +934,7 @@ SELECT id_a, id_b, shared, n_a, n_b FROM tpr""",
             ("lang", Some("n_chars"), "coalesce(n_chars, 0)", "nchars"),
             ("source", Some("n_chars"), "coalesce(n_chars, 0)", "nchars")))
           (graft.llm.SkewOps.heavyHitters(docs, kc, hk, wc),
-            s"""WITH t AS (SELECT $kc AS key, CAST($wSql AS BIGINT) AS w
-               |  FROM documents),
-               |a AS (SELECT key, CAST(sum(w) AS BIGINT) AS w FROM t GROUP BY key),
-               |tot AS (SELECT CAST(coalesce(sum(w), 0) AS BIGINT) AS total_w FROM t)
-               |SELECT a.key, a.w, tot.total_w FROM a, tot
-               |WHERE a.w * ${hk + 1} > tot.total_w""".stripMargin,
+            heavyHittersSql(kc, wSql, hk),
             s"${kc}_k${hk}_w$wTag")
         case "hot_keys" =>
           // the streaming hot-key alert twin under drawn key × threshold
@@ -2219,13 +965,7 @@ SELECT id_a, id_b, shared, n_a, n_b FROM tpr""",
                   sdf, kc2, "doc_id", thr, wc2))
           }
           (hkOut,
-            s"""WITH t AS (SELECT $kc2 AS key, doc_id AS o,
-               |  CAST($wSql2 AS BIGINT) AS w FROM documents),
-               |r AS (SELECT key, o, w,
-               |  CAST(sum(w) OVER (PARTITION BY key ORDER BY o) AS BIGINT) AS rs
-               |  FROM t)
-               |SELECT key, o AS at_order, rs AS running_w FROM r
-               |WHERE rs - w < $thr AND rs >= $thr""".stripMargin,
+            hotKeysSql(kc2, wSql2, thr),
             s"${kc2}_t${thr}_w${wTag2}_ch$chunk2${if (hkRestart) "_restart" else ""}")
         case "semdedup_stream" =>
           // the STREAMING twin through the replay harness with the same

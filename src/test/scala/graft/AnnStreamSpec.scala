@@ -29,20 +29,13 @@ class AnnStreamSpec extends AnyFunSuite with SparkTestSession {
     Vec(8, at(130)), Vec(9, at(15)), Vec(10, at(42, zw = true)))
 
   test("streamed top-k equals per-prefix batch annTopK for every arrival") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    UniqueStreams.useRocksDBStateStore(spark)
-    val streamed =
-      try
-        Replay.replay(spark, vecs.toDF(), "vec_id", 1, "append")(sdf =>
-          AnnStream.annStream(sdf, "vec_id", "embedding",
-            k = K, nPlanes = PLANES, dim = DIM))
-          .select("query_id", "corpus_id", "rank")
-          .as[(Long, Long, Int)].collect().toSet
-      finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    val streamed = UniqueStreams.withRocksDBStateStore(spark) {
+      Replay.replay(spark, vecs.toDF(), "vec_id", 1, "append")(sdf =>
+        AnnStream.annStream(sdf, "vec_id", "embedding",
+          k = K, nPlanes = PLANES, dim = DIM))
+        .select("query_id", "corpus_id", "rank")
+        .as[(Long, Long, Int)].collect().toSet
+    }
     val expected = vecs.flatMap { q =>
       val prefix = vecs.filter(_.vec_id < q.vec_id)
       if (prefix.isEmpty) Seq.empty
@@ -56,10 +49,7 @@ class AnnStreamSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("pqAnnStream: candidate sets match annStream; chunking-invariant; nulls skipped") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    UniqueStreams.useRocksDBStateStore(spark)
-    try {
+    UniqueStreams.withRocksDBStateStore(spark) {
       val (cb, _) = llm.Similarity.anchorCodebook(vecs.toDF(), "vec_id", "embedding",
         dim = DIM, nSub = 2, codesPerSub = 4)
       def pqRun(chunk: Int) =
@@ -88,17 +78,11 @@ class AnnStreamSpec extends AnyFunSuite with SparkTestSession {
             codesPerSub = 4, k = 100, nPlanes = PLANES, dim = DIM))
         .select("query_id", "corpus_id").as[(Long, Long)].collect().toSeq
       assert(!logN.exists(_._1 == 4L) && !logN.exists(_._2 == 4L))
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
   test("ivfPqAnnStream: per-prefix batch ivfPqTopK equality; chunking-invariant; nulls skipped") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    UniqueStreams.useRocksDBStateStore(spark)
-    try {
+    UniqueStreams.withRocksDBStateStore(spark) {
       val NCELLS = 4; val NPROBE = 2
       // anchors = the 4 lowest-id fixture rows, so every prefix of >= 4
       // rows derives the SAME anchors as the full set — the regime where
@@ -133,17 +117,11 @@ class AnnStreamSpec extends AnyFunSuite with SparkTestSession {
             codebook = cb, codesPerSub = 4, k = 100, nProbe = NPROBE, dim = DIM))
         .select("query_id", "corpus_id").as[(Long, Long)].collect().toSeq
       assert(!logN.exists(_._1 == 6L) && !logN.exists(_._2 == 6L))
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
   test("ivfPqAnnStream residual: per-prefix batch ivfPqTopK(residual) equality; chunking-invariant") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    UniqueStreams.useRocksDBStateStore(spark)
-    try {
+    UniqueStreams.withRocksDBStateStore(spark) {
       val NCELLS = 4; val NPROBE = 2; val CPS = 4
       // the residual model needs NCELLS + CPS = 8 anchor rows, so every
       // prefix of >= 8 rows derives the SAME model as the full set —
@@ -171,17 +149,11 @@ class AnnStreamSpec extends AnyFunSuite with SparkTestSession {
       }.toSet
       assert(expected.nonEmpty, "fixture drift: no prefix candidates at all")
       assert(streamed.filter(_._1 > minFullModelId) === expected)
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
   test("sharded ivfPq bridge: sym-diff-0 vs the monolith, plain and residual") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    UniqueStreams.useRocksDBStateStore(spark)
-    try {
+    UniqueStreams.withRocksDBStateStore(spark) {
       val NCELLS = 4; val NPROBE = 2; val CPS = 4
       val cent = llm.Similarity.anchorCentroids(vecs.toDF(), "vec_id", "embedding",
         dim = DIM, nCells = NCELLS)
@@ -213,17 +185,11 @@ class AnnStreamSpec extends AnyFunSuite with SparkTestSession {
         assert(mono.nonEmpty, s"fixture drift: monolith emitted nothing (residual=$res)")
         assert(sharded === mono, s"sharded bridge diverged from the monolith (residual=$res)")
       }
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
   test("bucket-sharded LSH bridge: sym-diff-0 vs the exact AND pq monoliths") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    UniqueStreams.useRocksDBStateStore(spark)
-    try {
+    UniqueStreams.withRocksDBStateStore(spark) {
       val NPLANES = 3; val CPS = 4
       val (cb, _) = llm.Similarity.anchorCodebook(vecs.toDF(), "vec_id", "embedding",
         dim = DIM, nSub = 2, codesPerSub = CPS)
@@ -251,27 +217,17 @@ class AnnStreamSpec extends AnyFunSuite with SparkTestSession {
         assert(sharded === mono,
           s"bucket-sharded bridge diverged from the monolith (pq=${cbk.isDefined})")
       }
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
   test("empty vector emits nothing and is not indexed") {
     val withNull = vecs.take(3) ++ Seq(Vec(4, null)) ++ Seq(Vec(5, at(5)))
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    UniqueStreams.useRocksDBStateStore(spark)
-    val streamed =
-      try
-        Replay.replay(spark, withNull.toDF(), "vec_id", 1, "append")(sdf =>
-          AnnStream.annStream(sdf, "vec_id", "embedding",
-            k = K, nPlanes = PLANES, dim = DIM))
-          .select("query_id", "corpus_id").as[(Long, Long)].collect().toSeq
-      finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    val streamed = UniqueStreams.withRocksDBStateStore(spark) {
+      Replay.replay(spark, withNull.toDF(), "vec_id", 1, "append")(sdf =>
+        AnnStream.annStream(sdf, "vec_id", "embedding",
+          k = K, nPlanes = PLANES, dim = DIM))
+        .select("query_id", "corpus_id").as[(Long, Long)].collect().toSeq
+    }
     assert(!streamed.exists(_._1 == 4L), "null vector must not query")
     assert(!streamed.exists(_._2 == 4L), "null vector must not be retrieved")
   }
@@ -283,10 +239,7 @@ class AnnStreamSpec extends AnyFunSuite with SparkTestSession {
     // match. Guarded: it scores every candidate 0.0 (rank by id) in BOTH
     // the monolith and the bucket-sharded bridge.
     val withZero = vecs.take(4) ++ Seq(Vec(5, Array(0f, 0f, 0f, 0f)))
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    UniqueStreams.useRocksDBStateStore(spark)
-    try {
+    UniqueStreams.withRocksDBStateStore(spark) {
       val (cb, _) = llm.Similarity.anchorCodebook(vecs.toDF(), "vec_id", "embedding",
         dim = DIM, nSub = 2, codesPerSub = 4)
       val mono = Replay.replay(spark, withZero.toDF(), "vec_id", 1, "append")(sdf =>
@@ -310,9 +263,6 @@ class AnnStreamSpec extends AnyFunSuite with SparkTestSession {
         .as[(Long, Long, Int)].collect()
       assert(sharded.toSet === mono.toSet,
         "zero-norm guard broke monolith/shard parity")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 }

@@ -120,10 +120,7 @@ class AudioOffsetSpec extends AnyFunSuite with SparkTestSession {
         "id", "shash", minShared = 3)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(bp.nonEmpty, "fixture drift: no batch segment pairs")
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    streaming.UniqueStreams.useRocksDBStateStore(spark)
-    try {
+    streaming.UniqueStreams.withRocksDBStateStore(spark) {
       for (chunk <- Seq(7, 200)) {
         val edges = streaming.Replay.replay(spark, ids, "doc_id", chunk,
           "append")(sdf => streaming.NearDupStream.keySetShardedEdges(
@@ -151,9 +148,6 @@ class AudioOffsetSpec extends AnyFunSuite with SparkTestSession {
             "id", "shash", minShared = 3).select("id_a", "id_b"))
         .select("doc_id").as[Long].collect().toSet
       assert(kept === batch, "sharded segment survivors diverged from batch")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 }

@@ -83,10 +83,7 @@ class BpeSpec extends AnyFunSuite with SparkTestSession {
       .as[(Long, Int, Long)].collect().toSet
     assert(seg === got, "segmented diverged under the BPE tokenizer")
     // ingest-point stream twin
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    streaming.UniqueStreams.useRocksDBStateStore(spark)
-    try {
+    streaming.UniqueStreams.withRocksDBStateStore(spark) {
       val streamed = streaming.Replay.replay(spark, df, "doc_id", 2,
           "append")(sdf => streaming.QuotaStream.tokenBudgetStream(sdf,
             "source", "doc_id", "text", defaultBudget = 4L,
@@ -94,9 +91,6 @@ class BpeSpec extends AnyFunSuite with SparkTestSession {
         .select(col("doc_id"), col("n_tok").cast("int"), col("tok_before"))
         .as[(Long, Int, Long)].collect().toSet
       assert(streamed === got, "stream twin diverged under the BPE tokenizer")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 

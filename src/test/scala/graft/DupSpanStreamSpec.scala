@@ -19,16 +19,10 @@ class DupSpanStreamSpec extends AnyFunSuite with SparkTestSession {
 
   private def runStream(docs: Seq[Doc], chunkSize: Int = 1,
                         hashed: Boolean = false): DataFrame = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    UniqueStreams.useRocksDBStateStore(spark)
-    try
+    UniqueStreams.withRocksDBStateStore(spark) {
       Replay.replay(spark, docs.toDF(), "doc_id", chunkSize, "update")(sdf =>
         DupSpanStream.dupSpanStream(sdf, "doc_id", "text", k = K,
           hashedKeys = hashed)).cache()
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
@@ -93,10 +87,7 @@ class DupSpanStreamSpec extends AnyFunSuite with SparkTestSession {
       .selectExpr("doc_id", "text").as[Doc].collect().toSeq
     val expected = TextDedup.duplicateSpans(docs.toDF(), "doc_id", "text", k = 5)
       .as[(Long, Long, Long, Long)].collect().toSet
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    UniqueStreams.useRocksDBStateStore(spark)
-    try {
+    UniqueStreams.withRocksDBStateStore(spark) {
       def run(hashed: Boolean) =
         Replay.replay(spark, docs.toDF(), "doc_id", 10, "update")(sdf =>
           DupSpanStream.dupSpanStream(sdf, "doc_id", "text", k = 5,
@@ -108,22 +99,11 @@ class DupSpanStreamSpec extends AnyFunSuite with SparkTestSession {
       assert(a == expected, "string-key stream diverged from batch")
       assert(b == expected, "hashed-key stream diverged from batch")
       assert(expected.nonEmpty)
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
-  private def withRocks[A](body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    UniqueStreams.useRocksDBStateStore(spark)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  private def withRocks[A](body: => A): A =
+    UniqueStreams.withRocksDBStateStore(spark)(body)
 
   test("sharded two-stage path: gram-sharded hits + doc-keyed merge equal monolith and batch") {
     import org.apache.spark.sql.functions.monotonically_increasing_id
@@ -194,16 +174,10 @@ class DupSpanStreamSpec extends AnyFunSuite with SparkTestSession {
       Doc(4, "four g h i j"),
       Doc(5, "a b c g h i"),
       Doc(6, "six a b c d e g h i j"))
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    UniqueStreams.useRocksDBStateStore(spark)
-    try {
+    UniqueStreams.withRocksDBStateStore(spark) {
       val log = Replay.replayWithRestart(spark, docs.toDF(), "doc_id", 1)(sdf =>
         DupSpanStream.dupSpanStream(sdf, "doc_id", "text", k = K)).cache()
       assert(latest(log) == batchSpans(docs))
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 }

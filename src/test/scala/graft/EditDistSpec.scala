@@ -119,10 +119,7 @@ class EditDistSpec extends AnyFunSuite with SparkTestSession {
     val bp = llm.TextDedup.editDistancePairsMd5(df, "text", "doc_id",
         maxDist = 3, shingleN = 3, bands = 6, rowsPerBand = 1)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    UniqueStreams.useRocksDBStateStore(spark)
-    try {
+    UniqueStreams.withRocksDBStateStore(spark) {
       val edges = Replay.replay(spark, df, "doc_id", 1, "append")(sdf =>
         NearDupStream.editShardedEdges(sdf, "doc_id", "text", maxDist = 3,
           shingleN = 3, bands = 6, rowsPerBand = 1, md5Family = true))
@@ -143,9 +140,6 @@ class EditDistSpec extends AnyFunSuite with SparkTestSession {
             .select("id_a", "id_b"))
         .select("doc_id").as[Long].collect().toSet
       assert(kept === batch, "sharded survivors diverged from batch dedup")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
@@ -158,10 +152,7 @@ class EditDistSpec extends AnyFunSuite with SparkTestSession {
           .select("id_a", "id_b"))
       .select("doc_id").as[Long].collect().toSet
     assert(batch === Set(1L, 5L, 6L, 7L), s"batch fixture drifted: $batch")
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    UniqueStreams.useRocksDBStateStore(spark)
-    try {
+    UniqueStreams.withRocksDBStateStore(spark) {
       def run(chunk: Int) =
         Replay.replay(spark, df, "doc_id", chunk, "update")(sdf =>
           NearDupStream.editNearDupStreamMd5(sdf, "doc_id", "text",
@@ -172,9 +163,6 @@ class EditDistSpec extends AnyFunSuite with SparkTestSession {
           .select("doc_id").as[Long].collect().toSet
       assert(run(1) === batch, "streamed survivors diverged from batch")
       assert(run(3) === batch, "chunk boundaries changed the survivor set")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 }

@@ -56,16 +56,8 @@ class EmbNearDupStreamSpec extends AnyFunSuite with SparkTestSession {
       .filter(col("change") === "keep")
       .select("vec_id").as[Long].collect().toSet
 
-  private def withRocks[A](body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    UniqueStreams.useRocksDBStateStore(spark)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  private def withRocks[A](body: => A): A =
+    UniqueStreams.withRocksDBStateStore(spark)(body)
 
   test("transitive chain: 1~2, 2~3, 1 not~ 3 — 3 still drops to 1's component") {
     val vecs = Seq(Vec(1, at(0)), Vec(2, at(20)), Vec(3, at(40)))

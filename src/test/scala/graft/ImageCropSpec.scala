@@ -173,10 +173,7 @@ class ImageCropSpec extends AnyFunSuite with SparkTestSession {
           llm.Multimodal.imageTileHashes(imgs(ids), "doc_id"),
           "id", "thash", minShared = 10).select("id_a", "id_b"))
       .select("doc_id").as[Long].collect().toSet
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    streaming.UniqueStreams.useRocksDBStateStore(spark)
-    try {
+    streaming.UniqueStreams.withRocksDBStateStore(spark) {
       val edges = streaming.Replay.replay(spark, ids, "doc_id", 40,
         "append")(sdf => streaming.NearDupStream.keySetShardedEdges(
           llm.Multimodal.imageTileKeys(imgs(sdf), "doc_id"),
@@ -192,9 +189,6 @@ class ImageCropSpec extends AnyFunSuite with SparkTestSession {
         .filter(col("change") === "keep")
         .select("doc_id").as[Long].collect().toSet
       assert(kept === batch, "sharded tile survivors diverged from batch")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 }

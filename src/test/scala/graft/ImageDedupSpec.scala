@@ -106,10 +106,7 @@ class ImageDedupSpec extends AnyFunSuite with SparkTestSession {
         chunkBits = 16, maxHamming = 3, maxBucket = 1000)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(bp.nonEmpty, "fixture drift: no batch pairs")
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    streaming.UniqueStreams.useRocksDBStateStore(spark)
-    try {
+    streaming.UniqueStreams.withRocksDBStateStore(spark) {
       for (chunk <- Seq(7, 200)) {
         val edges = streaming.Replay.replay(spark, ids, "doc_id", chunk,
           "append")(sdf => streaming.NearDupStream.hashShardedEdges(
@@ -136,9 +133,6 @@ class ImageDedupSpec extends AnyFunSuite with SparkTestSession {
             .select("id_a", "id_b"))
         .select("doc_id").as[Long].collect().toSet
       assert(kept === batch, "sharded survivors diverged from batch dedup")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 

@@ -16,17 +16,11 @@ class LineDedupStreamSpec extends AnyFunSuite with SparkTestSession {
 
   private def runStream(docs: Seq[Doc], minDf: Int = 3, chunkSize: Int = 1,
                         hashed: Boolean = false): Set[(Long, Long)] = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    UniqueStreams.useRocksDBStateStore(spark)
-    try
+    UniqueStreams.withRocksDBStateStore(spark) {
       Replay.replay(spark, docs.toDF(), "doc_id", chunkSize, "update")(sdf =>
         LineDedupStream.lineDedupStream(sdf, "doc_id", "text", minDf = minDf,
           hashedKeys = hashed))
         .select("doc_id", "pos").as[(Long, Long)].collect().toSet
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
@@ -70,17 +64,11 @@ class LineDedupStreamSpec extends AnyFunSuite with SparkTestSession {
     assert(runStream(docs, chunkSize = 2) == expected)
     assert(runStream(docs, hashed = true) == expected)
     // insert-only: no (doc, pos) appears twice in the raw log
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    UniqueStreams.useRocksDBStateStore(spark)
-    try {
+    UniqueStreams.withRocksDBStateStore(spark) {
       val log = Replay.replay(spark, docs.toDF(), "doc_id", 1, "update")(sdf =>
         LineDedupStream.lineDedupStream(sdf, "doc_id", "text"))
         .select("doc_id", "pos").as[(Long, Long)].collect().toSeq
       assert(log.size == log.toSet.size, "change log must be insert-only")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
@@ -92,17 +80,11 @@ class LineDedupStreamSpec extends AnyFunSuite with SparkTestSession {
     val expected = batchDropped(docs)
     assert(expected.nonEmpty)
     def runSharded(ds: Seq[Doc], chunk: Int, hashed: Boolean = false): Set[(Long, Long)] = {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = spark.conf.getOption(key)
-      UniqueStreams.useRocksDBStateStore(spark)
-      try
+      UniqueStreams.withRocksDBStateStore(spark) {
         Replay.replay(spark, ds.toDF(), "doc_id", chunk, "append")(sdf =>
           LineDedupStream.shardedLineDedupStream(sdf, "doc_id", "text",
             hashedKeys = hashed))
           .select("doc_id", "pos").as[(Long, Long)].collect().toSet
-      finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
       }
     }
     assert(runSharded(docs, 1) == expected)
@@ -130,17 +112,11 @@ class LineDedupStreamSpec extends AnyFunSuite with SparkTestSession {
     val docs = Seq(
       Doc(1, "h\na1"), Doc(2, "h\na2"), Doc(3, "h\na3"),
       Doc(4, "h\na4"), Doc(5, "b\na5"), Doc(6, "b\nh"))
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    UniqueStreams.useRocksDBStateStore(spark)
-    try {
+    UniqueStreams.withRocksDBStateStore(spark) {
       val log = Replay.replayWithRestart(spark, docs.toDF(), "doc_id", 1)(sdf =>
         LineDedupStream.lineDedupStream(sdf, "doc_id", "text"))
         .select("doc_id", "pos").as[(Long, Long)].collect().toSet
       assert(log == batchDropped(docs))
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 }

@@ -48,10 +48,7 @@ class ModelsSpec extends AnyFunSuite with SparkTestSession {
 
   test("a round-tripped model reproduces streaming results exactly " +
       "(the consumer is a pure function of the literals)") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    streaming.UniqueStreams.useRocksDBStateStore(spark)
-    try {
+    streaming.UniqueStreams.withRocksDBStateStore(spark) {
       val cents = Similarity.semDedupCentroids(emb, "vec_id", "embedding",
         dim = 64, nCells = 8, lloydIters = 1)
       val dir = java.nio.file.Files.createTempDirectory("models_rt").toString
@@ -69,9 +66,6 @@ class ModelsSpec extends AnyFunSuite with SparkTestSession {
       }
       assert(survivors(reloaded) === survivors(cents),
         "reloaded centroids changed the streaming survivor set")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 

@@ -31,18 +31,13 @@ class NearDupStreamSpec extends AnyFunSuite with SparkTestSession {
   private val THR = 0.2
 
   private def runStream(docs: Seq[Doc]): org.apache.spark.sql.DataFrame = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    UniqueStreams.useRocksDBStateStore(spark) // transformWithState requires RocksDB
-    try
+    // transformWithState requires RocksDB
+    UniqueStreams.withRocksDBStateStore(spark) {
       // chunkSize=1: one doc per micro-batch — exercises cross-batch state
       Replay.replay(spark, docs.toDF(), "doc_id", 1, "update")(sdf =>
         NearDupStream.nearDupStreamMd5(sdf, "doc_id", "text",
           bands = BANDS, rowsPerBand = RPB, threshold = THR))
         .cache()
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
@@ -99,19 +94,12 @@ class NearDupStreamSpec extends AnyFunSuite with SparkTestSession {
       // re-key arrival order via a fresh monotonically increasing feed id,
       // keeping the ORIGINAL doc_id as the operator's id column
       val reordered = perm.zipWithIndex.map { case (dc, i) => (i.toLong, dc.doc_id, dc.text) }
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = spark.conf.getOption(key)
-      graft.streaming.UniqueStreams.useRocksDBStateStore(spark)
-      val log =
-        try
-          Replay.replay(spark, reordered.toDF("feed_seq", "doc_id", "text"),
-            "feed_seq", 1, "update")(sdf =>
-            NearDupStream.nearDupStreamMd5(sdf, "doc_id", "text",
-              bands = BANDS, rowsPerBand = RPB, threshold = THR))
-        finally prev match {
-          case Some(v) => spark.conf.set(key, v)
-          case None => spark.conf.unset(key)
-        }
+      val log = graft.streaming.UniqueStreams.withRocksDBStateStore(spark) {
+        Replay.replay(spark, reordered.toDF("feed_seq", "doc_id", "text"),
+          "feed_seq", 1, "update")(sdf =>
+          NearDupStream.nearDupStreamMd5(sdf, "doc_id", "text",
+            bands = BANDS, rowsPerBand = RPB, threshold = THR))
+      }
       assert(survivors(log) === expected, s"order ${perm.map(_.doc_id)} diverged")
     }
   }
@@ -134,16 +122,8 @@ class NearDupStreamSpec extends AnyFunSuite with SparkTestSession {
     assert(perDoc.values.forall(_ <= 2))
   }
 
-  private def withRocks[A](body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    UniqueStreams.useRocksDBStateStore(spark)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  private def withRocks[A](body: => A): A =
+    UniqueStreams.withRocksDBStateStore(spark)(body)
 
   test("sharded two-stage path: stage-A edges equal batch pairs, stage-B survivors equal batch") {
     val docs = Seq(
@@ -182,19 +162,12 @@ class NearDupStreamSpec extends AnyFunSuite with SparkTestSession {
     // maxBucket-th arrival and later arrivals are no longer indexed
     val cap = 3
     val fam = (1L to 6L).map(i => Doc(i, words(0, 12)))
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    UniqueStreams.useRocksDBStateStore(spark)
-    val log =
-      try
-        Replay.replay(spark, fam.toDF(), "doc_id", 1, "update")(sdf =>
-          NearDupStream.nearDupStreamMd5(sdf, "doc_id", "text",
-            bands = BANDS, rowsPerBand = RPB, threshold = THR, maxBucket = cap))
-          .cache()
-      finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    val log = UniqueStreams.withRocksDBStateStore(spark) {
+      Replay.replay(spark, fam.toDF(), "doc_id", 1, "update")(sdf =>
+        NearDupStream.nearDupStreamMd5(sdf, "doc_id", "text",
+          bands = BANDS, rowsPerBand = RPB, threshold = THR, maxBucket = cap))
+        .cache()
+    }
     val sat = log.filter(col("change") === "saturated")
       .select("doc_id", "canonical", "bucket")
       .as[(Long, Long, String)].collect()
@@ -219,22 +192,15 @@ class NearDupStreamSpec extends AnyFunSuite with SparkTestSession {
       (2L, null),                  // null text — must not NPE the processor
       (null, words(0, 10)),        // null id — no identity, dropped pre-state
       (3L, words(0, 10)))
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    UniqueStreams.useRocksDBStateStore(spark)
-    val log =
-      try
-        Replay.replay(spark,
-          rows.toDF("doc_id", "text").withColumn("feed_seq",
-            monotonically_increasing_id()),
-          "feed_seq", 1, "update")(sdf =>
-          NearDupStream.nearDupStreamMd5(sdf, "doc_id", "text",
-            bands = BANDS, rowsPerBand = RPB, threshold = THR))
-          .cache()
-      finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    val log = UniqueStreams.withRocksDBStateStore(spark) {
+      Replay.replay(spark,
+        rows.toDF("doc_id", "text").withColumn("feed_seq",
+          monotonically_increasing_id()),
+        "feed_seq", 1, "update")(sdf =>
+        NearDupStream.nearDupStreamMd5(sdf, "doc_id", "text",
+          bands = BANDS, rowsPerBand = RPB, threshold = THR))
+        .cache()
+    }
     // null-text doc is kept (never a pair candidate — batch parity),
     // null-id row produced no verdict, and the duplicate pair still folds
     assert(survivors(log) === Set(1L, 2L))

@@ -118,10 +118,7 @@ class QualityClfSpec extends AnyFunSuite with SparkTestSession {
     val batch = llm.CorpusOps.qualityClfScore(docs, "doc_id", "text", model)
       .as[(Long, Long, Long, Long, Long, Long, Double, Boolean)]
       .collect().map(r => r._1 -> r).toMap
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    streaming.UniqueStreams.useRocksDBStateStore(spark)
-    try {
+    streaming.UniqueStreams.withRocksDBStateStore(spark) {
       def check(chunk: Int): Unit = {
         val st = streaming.Replay.replay(spark, docs, "doc_id", chunk,
             "update")(sdf =>
@@ -144,9 +141,6 @@ class QualityClfSpec extends AnyFunSuite with SparkTestSession {
       }
       check(100)
       check(500)
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 }

@@ -13,16 +13,8 @@ class QuotaStreamSpec extends AnyFunSuite with SparkTestSession {
 
   private val rows = (1L to 40L).map(i => (i, s"s${(i % 3).toInt}", s"t$i"))
 
-  private def withRocks[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    UniqueStreams.useRocksDBStateStore(spark)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  private def withRocks[T](body: => T): T =
+    UniqueStreams.withRocksDBStateStore(spark)(body)
 
   test("ordered feed: admissions equal batch capPerGroup across chunk " +
       "sizes and survive kill/restart without double admission") {

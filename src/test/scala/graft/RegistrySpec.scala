@@ -39,6 +39,15 @@ class RegistrySpec extends AnyFunSuite {
     }
   }
 
+  test("no bench row shadows a checked row except mm_features") {
+    // `queries ++ benchQueries` lets a bench row silently replace the
+    // checked row of the same name; mm_features' production float path
+    // replaces its integer-lane checked twin on purpose
+    val shadowed = SparkEntry.queries.keySet & SparkEntry.benchQueries.keySet
+    assert(shadowed == Set("mm_features"),
+      s"bench rows shadowing checked rows: ${shadowed.toSeq.sorted}")
+  }
+
   test("no orphan oracle: every oracle key is a registered query") {
     val orphans = oracles.keySet -- registry.keySet
     assert(orphans.isEmpty, s"oracles without a query: ${orphans.toSeq.sorted}")

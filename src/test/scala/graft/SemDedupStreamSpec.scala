@@ -12,16 +12,8 @@ import graft.streaming.{Replay, SemDedupStream, UniqueStreams}
 class SemDedupStreamSpec extends AnyFunSuite with SparkTestSession {
   import spark.implicits._
 
-  private def withRocks[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    UniqueStreams.useRocksDBStateStore(spark)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  private def withRocks[T](body: => T): T =
+    UniqueStreams.withRocksDBStateStore(spark)(body)
 
   private def survivors(log: org.apache.spark.sql.DataFrame): Set[Long] =
     log.groupBy(col("vec_id"))

@@ -118,10 +118,7 @@ class SkewOpsSpec extends AnyFunSuite with SparkTestSession {
 
   private def replayAlerts(thr: Long, chunk: Int, weightCol: Option[String],
                            restart: Boolean): Set[(String, Long, Long)] = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    streaming.UniqueStreams.useRocksDBStateStore(spark)
-    try {
+    streaming.UniqueStreams.withRocksDBStateStore(spark) {
       val out =
         if (restart)
           streaming.Replay.replayWithRestart(spark, docs, "doc_id", chunk)(sdf =>
@@ -130,9 +127,6 @@ class SkewOpsSpec extends AnyFunSuite with SparkTestSession {
           streaming.Replay.replay(spark, docs, "doc_id", chunk, "append")(sdf =>
             streaming.HotKeyStream.hotKeyAlerts(sdf, "lang", "doc_id", thr, weightCol))
       out.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
@@ -170,17 +164,11 @@ class SkewOpsSpec extends AnyFunSuite with SparkTestSession {
       (5L, "b", 10L), (6L, "b", 0L)).toDF("o", "s", "w")
     val exp = batchAlerts(rows, "s", "o", 10L, Some("w"))
     assert(exp === Set(("a", 3L, 10L), ("b", 5L, 10L)))
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    streaming.UniqueStreams.useRocksDBStateStore(spark)
-    try {
+    streaming.UniqueStreams.withRocksDBStateStore(spark) {
       val got = streaming.Replay.replay(spark, rows, "o", 2, "append")(sdf =>
           streaming.HotKeyStream.hotKeyAlerts(sdf, "s", "o", 10L, Some("w")))
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
       assert(got === exp)
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 }

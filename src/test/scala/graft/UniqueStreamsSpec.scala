@@ -399,10 +399,8 @@ class UniqueStreamsSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("everStreamTws (transformWithState) matches everStream; TTL state path runs") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    UniqueStreams.useRocksDBStateStore(spark) // transformWithState requires RocksDB
-    try {
+    // transformWithState requires RocksDB
+    UniqueStreams.withRocksDBStateStore(spark) {
       for ((ttl, name) <- Seq((None, "tws_plain"),
         (Some(java.time.Duration.ofMinutes(10)), "tws_ttl"))) {
         val ms = MemoryStream[Login]
@@ -430,18 +428,12 @@ class UniqueStreamsSpec extends AnyFunSuite with SparkTestSession {
         assert(out.filter(_._1 == "insert").map(_._2).toSet === Set(1, 2, 3, 4, 5), name)
         assert(out.filter(_._1 == "expire").map(_._2).toSet === Set(1, 2), name)
       }
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
   test("everStream runs on the RocksDB state store backend") {
     import scala.jdk.CollectionConverters._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    UniqueStreams.useRocksDBStateStore(spark)
-    try {
+    UniqueStreams.withRocksDBStateStore(spark) {
       val ms = MemoryStream[Login]
       val q = startQuery(UniqueStreams.everStream(ms.toDF(), Seq("ip")),
         "ever_rocks_s", OutputMode.Update())
@@ -454,9 +446,6 @@ class UniqueStreamsSpec extends AnyFunSuite with SparkTestSession {
       q.stop()
       assert(out === Set(("insert", 1), ("insert", 2), ("expire", 1)))
       assert(usedRocks, "expected RocksDB state store metrics in query progress")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 

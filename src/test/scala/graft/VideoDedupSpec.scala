@@ -204,10 +204,7 @@ class VideoDedupSpec extends AnyFunSuite with SparkTestSession {
         "id", "frame_idx", "fhash", shingleK = 2, threshold = 0.5)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(bp.nonEmpty, "fixture drift: no batch pairs")
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    streaming.UniqueStreams.useRocksDBStateStore(spark)
-    try {
+    streaming.UniqueStreams.withRocksDBStateStore(spark) {
       for (chunk <- Seq(7, 200)) {
         val edges = streaming.Replay.replay(spark, ids, "doc_id", chunk,
           "append")(sdf => streaming.NearDupStream.videoShardedEdges(
@@ -234,9 +231,6 @@ class VideoDedupSpec extends AnyFunSuite with SparkTestSession {
             .select("id_a", "id_b"))
         .select("doc_id").as[Long].collect().toSet
       assert(kept === batch, "sharded video survivors diverged from batch")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 

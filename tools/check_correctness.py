@@ -5,10 +5,12 @@ sf, then compare each query's parquet output against its DuckDB oracle
   python3 tools/check_correctness.py [sfdir] [outdir] [--skip-verify]
   python3 tools/check_correctness.py [sfdir] [outdir] --compare-oracles OLD.json
 
---compare-oracles runs no Spark: it runs every key shared by OLD.json and
-<outdir>/oracle_sql.json on the same DuckDB tables and reports, per key,
-whether the two results are identical (same columns, dtypes and sorted
-rows). A full oracle_sql.json is written by any graft.Verify run, e.g.
+--compare-oracles runs no Spark: for every key shared by OLD.json and
+<outdir>/oracle_sql.json it reports whether the two results are identical
+(same columns, dtypes and sorted rows) on the same DuckDB tables. A key
+whose SQL text is byte-identical on both sides is reported as
+sql_text_same without running it; every other distinct SQL text runs once.
+A full oracle_sql.json is written by any graft.Verify run, e.g.
   SPARK_GRAFT_VERIFY_ONLY=ever_current sbt "runMain graft.Verify <sfdir> <outdir>"
 """
 import sys, os, json, subprocess, glob
@@ -65,17 +67,28 @@ for p in glob.glob(f"{sfdir}/*.parquet"):
 if old_oracles is not None:
     old = json.load(open(old_oracles))
     shared = sorted(set(old) & set(oracle))
+    # byte-identical SQL text needs no run; each distinct changed text runs
+    # once, its frame shared by every key that uses it
+    frames = {}
+
+    def run(sql):
+        if sql not in frames:
+            frames[sql] = con.sql(sql).df()
+        return frames[sql]
+
     results = {}
     for name in shared:
         row = {"sql_text_same": old[name] == oracle[name]}
-        try:
-            new_df = con.sql(oracle[name]).df()
-            row["rows"] = len(new_df)
-            row.update(compare_frames(new_df, con.sql(old[name]).df()))
-        except Exception as e:
-            row["oracle_error"] = str(e)[:300]
+        if not row["sql_text_same"]:
+            try:
+                new_df = run(oracle[name])
+                row["rows"] = len(new_df)
+                row.update(compare_frames(new_df, run(old[name])))
+            except Exception as e:
+                row["oracle_error"] = str(e)[:300]
         results[name] = row
-    ok = all(r.get("hash_match") and r.get("schema_match") for r in results.values())
+    ok = all(r["sql_text_same"] or (r.get("hash_match") and r.get("schema_match"))
+             for r in results.values())
     changed = [k for k, r in results.items() if not r["sql_text_same"]]
     print(json.dumps(results, indent=2, default=str))
     print(json.dumps({
