@@ -2,10 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Per-round benchmark: runs every registered query against
-  * SPARK_GRAFT_SF_DIR and prints ONE JSON line. Failures are recorded in
-  * an `errors` map (query timing reported as -1), never as a
-  * plausible-looking duration.
+/** Per-round benchmark: runs every `SparkEntry.registry` row marked
+  * `bench` against SPARK_GRAFT_SF_DIR and prints ONE JSON line. Failures
+  * are recorded in an `errors` map (query timing reported as -1), never
+  * as a plausible-looking duration.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -50,16 +50,13 @@ object Bench {
         System.err.println(s"[bench] warm-up failed (continuing): ${e.getMessage}")
     }
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // Benchmark = production paths: registered queries plus the xxhash64
-    // production variants (benchQueries), MINUS the verification mirrors —
-    // `_md5` twins exist only to make pipelines DuckDB-checkable and
-    // `_replay` harnesses measure a driver-fed MemoryStream, not the
-    // engine (streaming throughput is tools/StreamBench's job).
+    // Benchmark = production paths: the registry rows marked `bench`, each
+    // with its own build (the verification mirrors are not marked).
     // optional subset for targeted re-measurement (comma-separated names);
     // the driver's per-round run sets no filter and measures everything
     val onlyQ = sys.env.get("SPARK_GRAFT_BENCH_QUERIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val registry = (SparkEntry.queries ++ SparkEntry.benchQueries)
+    val registry = SparkEntry.registry
     // a misspelled filter entry must fail loudly, not silently benchmark nothing
     onlyQ.foreach { qs =>
       val unknown = qs -- registry.keySet
@@ -67,9 +64,9 @@ object Bench {
         s"SPARK_GRAFT_BENCH_QUERIES names unknown queries: ${unknown.toSeq.sorted.mkString(", ")}; " +
           s"known: ${registry.keySet.toSeq.sorted.mkString(", ")}")
     }
-    val benchable = registry
-      .filterNot { case (n, _) => n.endsWith("_md5") || n.endsWith("_replay") }
-      .filter { case (n, _) => onlyQ.forall(_.contains(n)) }
+    val benchable = registry.collect {
+      case (n, e) if e.bench && onlyQ.forall(_.contains(n)) => n -> e.build
+    }
     // Noise-proofing: a single-shot measurement on a shared/contended box has
     // twice produced a false-alarm official record (r3, r5 — the code was
     // exonerated by idle re-runs both times). Each query therefore runs REPS

@@ -7,7 +7,7 @@ import TextOracles.{ccSurvivorsSql, components}
   * stream), one builder per operator family.
   *
   * This is the only definition of these oracles: the fixed registry rows
-  * in `SparkEntry.oracleSql` call the builders at their pinned parameters
+  * in `SparkEntry.registry` call the builders at their pinned parameters
   * (8 planes, 16 cells × 4 probes, 8 × 16 PQ codebook, k = 10, …), and
   * `tools.SweepVerify` calls them at seeded random draws. Every builder
   * reads the `embeddings(vec_id, embedding)` table at dim 64; hyperplane

@@ -7,7 +7,7 @@ import TextOracles.{components, curationStagesSql}
   * curation pipeline), one builder per operator family.
   *
   * This is the only definition of these oracles: the fixed registry rows
-  * in `SparkEntry.oracleSql` call the builders at their pinned parameters
+  * in `SparkEntry.registry` call the builders at their pinned parameters
   * (pattern width 32, hamming 3 / 2, bucket cap 1000, …), and
   * `tools.SweepVerify` calls them at seeded random draws. Each fixture is
   * generated from doc_id by an integer formula, so every builder

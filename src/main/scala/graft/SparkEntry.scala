@@ -25,91 +25,195 @@ object SparkEntry {
     UniqueOps.everCurrent(Tables.events(spark, "/root/testdata/sf0.001"),
       Seq("user_id"), "event_id")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** A row's build: its query over a session and a scale-factor dir. */
+  type Build = (SparkSession, String) => DataFrame
+
+  /** How a row's output is checked. */
+  sealed trait Check
+
+  /** Hash-compared against `sql`, DuckDB SQL over the same parquet tables.
+    * The compared output is the row's own build, or `lane` when the row's
+    * build is not checkable and a second build computes the same result
+    * on a checkable surface (mm_features' integer lane).
+    */
+  final case class Oracle(sql: String, lane: Option[Build] = None) extends Check
+
+  /** No oracle: DuckDB cannot compute the row's xxhash64 keys or its
+    * ln/exp scores, so the named oracle-checked row, the same pipeline on a
+    * checkable surface, carries the hash check; the sbt recall and
+    * ground-truth suites (LlmOpsSpec, TextSearchSpec, CorpusOpsSpec) pin
+    * the rest.
+    */
+  final case class CheckedBy(row: String) extends Check
+
+  /** One registry row: its build, its check, and whether `graft.Bench`
+    * measures it. The rows Bench skips are the verification mirrors: the
+    * `_md5` rows exist only to make a pipeline DuckDB-checkable, and the
+    * `_replay` rows measure a driver-fed MemoryStream, not the engine
+    * (streaming throughput is tools/StreamBench's job).
+    */
+  final case class Entry(build: Build, check: Check, bench: Boolean)
+
+  // the three row forms: a checked row Bench measures, a verification
+  // mirror it skips, and a production row checked through `twin`
+  private def checked(sql: String)(build: Build) = Entry(build, Oracle(sql), bench = true)
+  private def mirror(sql: String)(build: Build) = Entry(build, Oracle(sql), bench = false)
+  private def production(twin: String)(build: Build) = Entry(build, CheckedBy(twin), bench = true)
+
+  /** Rows with an oracle: name -> the build the oracle checks. */
+  def queries: Map[String, Build] =
+    registry.collect { case (n, Entry(b, Oracle(_, lane), _)) => n -> lane.getOrElse(b) }
+
+  /** Rows whose own build is not the oracle-checked one: the production
+    * paths whose check another row carries, and mm_features' float path.
+    */
+  def benchQueries: Map[String, Build] =
+    registry.collect { case (n, Entry(b, CheckedBy(_) | Oracle(_, Some(_)), _)) => n -> b }
+
+  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
+    * the same parquet tables.
+    */
+  def oracleSql: Map[String, String] =
+    registry.collect { case (n, Entry(_, Oracle(sql, _), _)) => n -> sql }
+
+  import UniqueOracles._
+  import TextOracles._
+  import EmbeddingOracles._
+  import MediaOracles._
+  private val user = Seq("user_id")
+
+  /** The query registry, one row per name: every operator from SURVEY.md §2
+    * and the curation tier, each with its oracle, then the production rows
+    * checked through another row.
+    */
+  lazy val registry: Map[String, Entry] = Map(
     // 1. unique:ever
-    "ever_current" -> ((s, d) =>
+    "ever_current" -> checked(everSql(user, "current"))((s, d) =>
       UniqueOps.everCurrent(ev(s, d), Seq("user_id"), "event_id")),
-    "ever_expired" -> ((s, d) =>
+    "ever_expired" -> checked(everSql(user, "expired"))((s, d) =>
       UniqueOps.ever(ev(s, d), Seq("user_id"), "event_id").expired),
-    "ever_multikey" -> ((s, d) =>
+    "ever_multikey" -> checked(everSql(Seq("user_id", "event_type"), "current"))((s, d) =>
       UniqueOps.everCurrent(ev(s, d), Seq("user_id", "event_type"), "event_id")),
-    "ever_all" -> ((s, d) =>
+    "ever_all" -> checked(everSql(user, "all"))((s, d) =>
       UniqueOps.ever(ev(s, d), Seq("user_id"), "event_id").all),
     // 2. unique:first
-    "first_current" -> ((s, d) =>
+    "first_current" -> checked(firstSql(user))((s, d) =>
       UniqueOps.first(ev(s, d), Seq("user_id"), "event_id").current),
     // 3. unique:time (7-day sliding horizon)
-    "time_current" -> ((s, d) =>
+    "time_current" -> checked(timeSql(user, WEEK, "current"))((s, d) =>
       UniqueOps.time(ev(s, d), Seq("user_id"), "event_id", "ts", WEEK).current),
-    "time_expired" -> ((s, d) =>
+    "time_expired" -> checked(timeSql(user, WEEK, "expired"))((s, d) =>
       UniqueOps.time(ev(s, d), Seq("user_id"), "event_id", "ts", WEEK).expired),
     // 4. unique:timeBatch (1-day tumbling, epoch-aligned)
-    "timebatch_current" -> ((s, d) =>
+    // timeBatch/firstTimeBatch anchor the epoch grid (start 0);
+    // externalTimeBatch anchors at min(ts) (start None)
+    "timebatch_current" -> checked(
+      timeBatchSql(user, DAY, Some(0L), keepFirst = false, replaceTs = false, "current")
+    )((s, d) =>
       UniqueOps.timeBatch(ev(s, d), Seq("user_id"), "event_id", "ts", DAY).current),
-    "timebatch_expired" -> ((s, d) =>
+    "timebatch_expired" -> checked(
+      timeBatchSql(user, DAY, Some(0L), keepFirst = false, replaceTs = false, "expired")
+    )((s, d) =>
       UniqueOps.timeBatch(ev(s, d), Seq("user_id"), "event_id", "ts", DAY).expired),
     // 8. unique:firstTimeBatch — expired mirrors the base-class flush
     //    (UniqueLengthBatchWindowProcessor.java:166-197; the first* subclass
     //    only flips the insert direction)
-    "firsttimebatch_current" -> ((s, d) =>
+    "firsttimebatch_current" -> checked(
+      timeBatchSql(user, DAY, Some(0L), keepFirst = true, replaceTs = false, "current")
+    )((s, d) =>
       UniqueOps.firstTimeBatch(ev(s, d), Seq("user_id"), "event_id", "ts", DAY).current),
-    "firsttimebatch_expired" -> ((s, d) =>
+    "firsttimebatch_expired" -> checked(
+      timeBatchSql(user, DAY, Some(0L), keepFirst = true, replaceTs = false, "expired")
+    )((s, d) =>
       UniqueOps.firstTimeBatch(ev(s, d), Seq("user_id"), "event_id", "ts", DAY).expired),
     // 9. unique:externalTimeBatch (6-hour tumbling, anchored at min(ts) —
     //    the reference default, UniqueExternalTimeBatchWindowProcessor.java:346-347)
-    "externaltimebatch_current" -> ((s, d) =>
+    "externaltimebatch_current" -> checked(
+      timeBatchSql(user, H6, None, keepFirst = false, replaceTs = false, "current")
+    )((s, d) =>
       UniqueOps.externalTimeBatch(ev(s, d), Seq("user_id"), "event_id", "ts", H6).current),
-    "externaltimebatch_replacets" -> ((s, d) =>
+    "externaltimebatch_replacets" -> checked(
+      timeBatchSql(user, H6, None, keepFirst = false, replaceTs = true, "current")
+    )((s, d) =>
       UniqueOps.externalTimeBatch(ev(s, d), Seq("user_id"), "event_id", "ts", H6,
         replaceTsWithBatchEnd = true).current),
-    "externaltimebatch_expired" -> ((s, d) =>
+    "externaltimebatch_expired" -> checked(
+      timeBatchSql(user, H6, None, keepFirst = false, replaceTs = false, "expired")
+    )((s, d) =>
       UniqueOps.externalTimeBatch(ev(s, d), Seq("user_id"), "event_id", "ts", H6).expired),
     // 5. unique:length (last 100 distinct keys by recency)
-    "length_current" -> ((s, d) =>
+    "length_current" -> checked(lengthSql(user, 100, "current"))((s, d) =>
       UniqueOps.length(ev(s, d), Seq("user_id"), "event_id", 100).current),
-    "length_expired" -> ((s, d) =>
+    "length_expired" -> checked(lengthSql(user, 100, "expired"))((s, d) =>
       UniqueOps.length(ev(s, d), Seq("user_id"), "event_id", 100).expired),
     // 6. unique:lengthBatch (flush at 40 distinct keys)
-    "lengthbatch_current" -> ((s, d) =>
+    "lengthbatch_current" -> checked(
+      lengthBatchSql(user, 40, latest = true, expiredOnly = false)
+    )((s, d) =>
       UniqueOps.lengthBatch(ev(s, d), Seq("user_id"), "event_id", 40).current),
-    "lengthbatch_expired" -> ((s, d) =>
+    "lengthbatch_expired" -> checked(
+      lengthBatchSql(user, 40, latest = true, expiredOnly = true)
+    )((s, d) =>
       UniqueOps.lengthBatch(ev(s, d), Seq("user_id"), "event_id", 40).expired),
     // 7. unique:firstLengthBatch
-    "firstlengthbatch_current" -> ((s, d) =>
+    "firstlengthbatch_current" -> checked(
+      lengthBatchSql(user, 40, latest = false, expiredOnly = false)
+    )((s, d) =>
       UniqueOps.firstLengthBatch(ev(s, d), Seq("user_id"), "event_id", 40).current),
-    "firstlengthbatch_expired" -> ((s, d) =>
+    "firstlengthbatch_expired" -> checked(
+      lengthBatchSql(user, 40, latest = false, expiredOnly = true)
+    )((s, d) =>
       UniqueOps.firstLengthBatch(ev(s, d), Seq("user_id"), "event_id", 40).expired),
     // 10. unique:timeLengthBatch (1-day OR 50 distinct keys); expired =
     //    previous batches re-emitted on flush
     //    (UniqueTimeLengthBatchWindowProcessor.java:304-336)
-    "timelengthbatch_current" -> ((s, d) =>
+    "timelengthbatch_current" -> checked(timeLengthBatchSql(user, DAY, 50, "current"))((s, d) =>
       UniqueOps.timeLengthBatch(ev(s, d), Seq("user_id"), "event_id", "ts", DAY, 50).current),
-    "timelengthbatch_expired" -> ((s, d) =>
+    "timelengthbatch_expired" -> checked(timeLengthBatchSql(user, DAY, 50, "expired"))((s, d) =>
       UniqueOps.timeLengthBatch(ev(s, d), Seq("user_id"), "event_id", "ts", DAY, 50).expired),
     // 11. unique:deduplicate (1-day interval)
-    "deduplicate" -> ((s, d) =>
+    "deduplicate" -> checked(deduplicateSql(user, DAY))((s, d) =>
       UniqueOps.deduplicate(ev(s, d), Seq("user_id"), "event_id", "ts", DAY).current),
     // hot-key-safe twin: same semantics, chunked stitch instead of a
     // per-key fold — verified against the same oracle
-    "deduplicate_salted" -> ((s, d) =>
+    "deduplicate_salted" -> checked(deduplicateSql(user, DAY))((s, d) =>
       UniqueOps.deduplicateSalted(ev(s, d), Seq("user_id"), "event_id", "ts", DAY).current),
     // Join of a unique window with a dimension table
     // (UniqueEverWindowTestCase.java:221-263 analog on orders ⨝ customer)
-    "join_windows" -> ((s, d) =>
+    "join_windows" -> checked(
+      """SELECT c.c_custkey, c.c_name, o.o_orderkey, o.o_totalprice, o.o_orderdate FROM (
+        |  SELECT * FROM (
+        |    SELECT *, row_number() OVER (PARTITION BY o_custkey ORDER BY o_orderkey DESC) AS rn
+        |    FROM orders) WHERE rn = 1) o
+        |JOIN customer c ON o.o_custkey = c.c_custkey""".stripMargin
+    )((s, d) =>
       UniqueOps.everCurrent(Tables.orders(s, d), Seq("o_custkey"), "o_orderkey")
         .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
         .select("c_custkey", "c_name", "o_orderkey", "o_totalprice", "o_orderdate")),
     // Aggregation over window contents
     // (UniqueLengthBatchWindowTestCase.java:244-258 analog; FP-safe aggs)
-    "agg_over_window" -> ((s, d) =>
+    "agg_over_window" -> checked(
+      s"""SELECT event_type, count(*) AS cnt, min(value) AS min_value,
+        |  max(value) AS max_value, CAST(sum(event_id) AS BIGINT) AS sum_seq
+        |FROM (${everSql(user, "current")}) GROUP BY event_type""".stripMargin
+    )((s, d) =>
       UniqueOps.everCurrent(ev(s, d), Seq("user_id"), "event_id")
         .groupBy("event_type")
         .agg(count(lit(1)).as("cnt"), min("value").as("min_value"),
           max("value").as("max_value"), sum("event_id").as("sum_seq"))),
     // Composite: unique window + snowflake joins + aggregation (the full
     // query surface a reference user composes; FP-safe aggs)
-    "window_star_agg" -> ((s, d) =>
+    "window_star_agg" -> checked(
+      """SELECT r_name, count(*) AS cnt, min(o_totalprice) AS min_price,
+        |  max(o_totalprice) AS max_price
+        |FROM (SELECT * FROM (
+        |    SELECT *, row_number() OVER (PARTITION BY o_custkey ORDER BY o_orderkey DESC) AS rn
+        |    FROM orders) WHERE rn = 1) o
+        |JOIN customer c ON o.o_custkey = c.c_custkey
+        |JOIN nation n ON c.c_nationkey = n.n_nationkey
+        |JOIN region r ON n.n_regionkey = r.r_regionkey
+        |GROUP BY r_name""".stripMargin
+    )((s, d) =>
       UniqueOps.everCurrent(Tables.orders(s, d), Seq("o_custkey"), "o_orderkey")
         .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
         .join(Tables.table(s, d, "nation"), col("c_nationkey") === col("n_nationkey"))
@@ -118,16 +222,16 @@ object SparkEntry {
         .agg(count(lit(1)).as("cnt"), min("o_totalprice").as("min_price"),
           max("o_totalprice").as("max_price"))),
     // ---- LLM-data-pipeline tier (graft.llm) ----
-    "doc_exact_dedup" -> ((s, d) =>
+    "doc_exact_dedup" -> checked(exactDedupSql)((s, d) =>
       llm.TextDedup.exactDedup(Tables.documents(s, d), Seq("text"), "doc_id")),
-    "doc_text_stats" -> ((s, d) =>
+    "doc_text_stats" -> checked(docTextStatsSql)((s, d) =>
       llm.TextAnalysis.tokenCounts(Tables.documents(s, d), "text")
         .select("doc_id", "ws_tokens", "bpeish_tokens")),
-    "doc_quality" -> ((s, d) =>
+    "doc_quality" -> checked(docQualitySql)((s, d) =>
       llm.TextAnalysis.qualityColumns(Tables.documents(s, d), "text")
         .select("doc_id", "n_tokens", "alpha_ratio", "punct_ratio",
           "stopword_ratio", "mean_token_len", "quality_score")),
-    "doc_langid" -> ((s, d) =>
+    "doc_langid" -> checked(docLangIdSql)((s, d) =>
       Tables.documents(s, d)
         .select(col("doc_id"), col("lang"),
           llm.TextAnalysis.langId(col("text")).as("pred_lang"))),
@@ -137,7 +241,8 @@ object SparkEntry {
     // pin both count tables, both probe joins, and the per-doc folds;
     // the ppl double itself is ln/exp (not correctly-rounded across
     // engines) and is spec-pinned instead, like the ANN sim column.
-    "doc_lm_ppl" -> ((s, d) => {
+    // self-trained: the model's train split is every document
+    "doc_lm_ppl" -> checked(docLmPplSql(None))((s, d) => {
       val docs = Tables.documents(s, d)
       llm.CorpusOps.lmPerplexity(docs, "text", "doc_id", docs, "text")
         .select("doc_id", "n_tokens", "n_bigrams", "oov_bigrams",
@@ -151,7 +256,7 @@ object SparkEntry {
     // bucket chain, both corpus count relations, both probe joins, and
     // the per-doc folds; the ln-based logw and the Gumbel top-k selection
     // (dsirSelect) are fixture-pinned in CorpusOpsSpec instead.
-    "doc_dsir_md5" -> ((s, d) => {
+    "doc_dsir_md5" -> mirror(docDsirSql(10, 2, Seq(1, 2)))((s, d) => {
       val docs = Tables.documents(s, d)
       val model = llm.CorpusOps.dsirTrain(
         docs.filter(col("doc_id") % 10 === 0), "text",
@@ -167,7 +272,7 @@ object SparkEntry {
     // Same verification policy as doc_dsir_md5: the integer sufficient
     // statistics are the hashed surface; the closed-form double score +
     // pred are pinned by the plain-Scala re-derivation in LlmOpsSpec.
-    "doc_quality_clf_md5" -> ((s, d) => {
+    "doc_quality_clf_md5" -> mirror(docQualityClfSql)((s, d) => {
       val docs = Tables.documents(s, d)
       val model = llm.CorpusOps.qualityClfTrain(
         docs.filter(col("lang") === "en"),
@@ -179,7 +284,7 @@ object SparkEntry {
     }),
     // ... and its stream-static deployment twin (score the crawl as it
     // streams past the static model), sharing the batch mirror
-    "doc_quality_clf_stream_replay" -> ((s, d) => {
+    "doc_quality_clf_stream_replay" -> mirror(docQualityClfSql)((s, d) => {
       streaming.UniqueStreams.withRocksDBStateStore(s) {
         val docs = Tables.documents(s, d)
         val model = llm.CorpusOps.qualityClfTrain(
@@ -193,7 +298,7 @@ object SparkEntry {
             "hit_pos", "hit_neg")
       }
     }),
-    "doc_fingerprint_md5" -> ((s, d) =>
+    "doc_fingerprint_md5" -> mirror(docFingerprintSql)((s, d) =>
       llm.TextAnalysis.fingerprintMd5(Tables.documents(s, d), "text")
         .select("doc_id", "fp_min_gram_md5", "fp_full_md5")),
     // BM25 sparse retrieval: queries = the doc_id%10 eval split probing
@@ -204,7 +309,7 @@ object SparkEntry {
     // stopword pruning, and both probe joins; the ln-based idf, score
     // fold, and ranking (bm25TopK) are pinned by an independent
     // plain-Scala re-derivation in TextSearchSpec instead.
-    "doc_bm25_stats" -> ((s, d) => {
+    "doc_bm25_stats" -> checked(docBm25Sql(10, 0.5))((s, d) => {
       val docs = Tables.documents(s, d)
       val idx = llm.TextSearch.bm25Index(
         docs.filter(col("doc_id") % 10 =!= 0), "doc_id", "text")
@@ -216,15 +321,15 @@ object SparkEntry {
     }),
     // md5-family twins of the xxhash64 near-dup pipelines: identical LSH /
     // banding / Jaccard semantics, DuckDB-computable hashes — these carry
-    // the hash-level verification; the xxhash64 production variants (in
-    // `benchQueries`) are the throughput path.
-    "doc_minhash_pairs_md5" -> ((s, d) =>
+    // the hash-level verification; the xxhash64 production rows at the
+    // end of the table are the throughput path.
+    "doc_minhash_pairs_md5" -> mirror(minhashPairsSql(3, 4, 2, 0.2, 1000))((s, d) =>
       llm.TextDedup.minhashPairsMd5(Tables.documents(s, d), "text", "doc_id")),
     // CROSS-CORPUS near-dup pairs (fuzzy decontamination's candidate
     // relation): synthetic train/eval split by doc_id % 10, candidates
     // only ACROSS the split — the banded bipartite join, never the
     // self-join square
-    "doc_fuzzy_pairs_md5" -> ((s, d) => {
+    "doc_fuzzy_pairs_md5" -> mirror(crossPairsSql(3, 4, 2, 0.2, 1000, 10))((s, d) => {
       val docs = Tables.documents(s, d)
       llm.TextDedup.crossMinhashPairsMd5(
         docs.filter(col("doc_id") % 10 =!= 0),
@@ -238,7 +343,7 @@ object SparkEntry {
     // twin (doc_fuzzy_pairs_capped_stream_replay) can only cap the
     // static EVAL side — the two policies diverge here by design, and
     // each hash-matches its OWN DuckDB mirror
-    "doc_fuzzy_pairs_capped_md5" -> ((s, d) => {
+    "doc_fuzzy_pairs_capped_md5" -> mirror(crossPairsSql(1, 2, 1, 0.1, 40, 10))((s, d) => {
       val docs = Tables.documents(s, d)
       llm.TextDedup.crossMinhashPairsMd5(
         docs.filter(col("doc_id") % 10 =!= 0),
@@ -250,7 +355,7 @@ object SparkEntry {
     // docs surviving after dropping everything with an exact-Jaccard-
     // verified near-dup in eval (the paraphrased/partial-overlap tail
     // that exact n-gram decontam — doc_decontam — cannot catch)
-    "doc_fuzzy_decontam_md5" -> ((s, d) => {
+    "doc_fuzzy_decontam_md5" -> mirror(fuzzyDecontamSql(3, 4, 2, 0.2, 1000, 10))((s, d) => {
       val docs = Tables.documents(s, d)
       llm.TextDedup.fuzzyDecontaminateMd5(
         docs.filter(col("doc_id") % 10 =!= 0),
@@ -261,7 +366,7 @@ object SparkEntry {
     // within 5 edits of an eval doc (closes the intra-word-edit gap
     // both exact-n-gram and token-Jaccard decontam leave; same banded
     // char-5-gram geometry as doc_editdist_pairs_md5, bipartite)
-    "doc_editdist_decontam_md5" -> ((s, d) => {
+    "doc_editdist_decontam_md5" -> mirror(editDecontamSql(5, 4, 4, 5, 1000))((s, d) => {
       val docs = Tables.documents(s, d)
       llm.TextDedup.editDecontaminateMd5(
         docs.filter(col("doc_id") % 10 =!= 0),
@@ -271,28 +376,34 @@ object SparkEntry {
     }),
     // per-source document cap (RefinedWeb-style per-domain quota): at
     // most 10 docs per source, priority = ascending doc_id
-    "doc_source_cap" -> ((s, d) =>
+    "doc_source_cap" -> checked(sourceCapSql("source", 10))((s, d) =>
       llm.CorpusOps.capPerGroup(Tables.documents(s, d), "source", "doc_id", 10)
         .select("doc_id", "source")),
     // TOKEN-BUDGET corpus mixing — the data-mixture sampling stage:
     // per-source token quotas (budgets chosen so all three regimes land
     // at sf0.01: default 500 cuts every ~1300-token source mid-way,
     // src1's 700 cuts later, src7's 100000 never bites)
-    "doc_token_mix" -> ((s, d) =>
+    // token-budget mixing: the per-source running-sum cut, greedy fill
+    // (the crossing doc is admitted); all four rows share it
+    "doc_token_mix" -> checked(tokenMixSql(500, Seq("src1" -> 700, "src7" -> 100000)))((s, d) =>
       llm.CorpusOps.mixByTokenBudget(Tables.documents(s, d), "doc_id", "text",
         "source", defaultBudget = 500L,
         budgetByGroup = Map("src1" -> 700L, "src7" -> 100000L))),
     // ... and its HOT-SOURCE-SAFE segmented-prefix-sum form (same greedy
     // fill, same mirror; rangeWidth 64 forces many occupied ranges per
     // source at sf0.01 so the range-offset chain is genuinely exercised)
-    "doc_token_mix_segmented" -> ((s, d) =>
+    "doc_token_mix_segmented" -> checked(
+      tokenMixSql(500, Seq("src1" -> 700, "src7" -> 100000))
+    )((s, d) =>
       llm.CorpusOps.mixByTokenBudgetSegmented(Tables.documents(s, d),
         "doc_id", "text", "source", defaultBudget = 500L,
         budgetByGroup = Map("src1" -> 700L, "src7" -> 100000L),
         rangeWidth = 64L)),
     // ... and its INGEST-POINT streaming twin (one long of token state
     // per group; ordered feed == batch admission set, shared mirror)
-    "doc_token_mix_stream_replay" -> ((s, d) => {
+    "doc_token_mix_stream_replay" -> mirror(
+      tokenMixSql(500, Seq("src1" -> 700, "src7" -> 100000))
+    )((s, d) => {
       streaming.UniqueStreams.withRocksDBStateStore(s) {
         streaming.Replay.replay(s, Tables.documents(s, d), "doc_id", 100,
           "append")(sdf =>
@@ -303,7 +414,9 @@ object SparkEntry {
             col("n_tok").cast("int").as("n_tok"), col("tok_before"))
       }
     }),
-    "doc_token_mix_restart_stream_replay" -> ((s, d) => {
+    "doc_token_mix_restart_stream_replay" -> mirror(
+      tokenMixSql(500, Seq("src1" -> 700, "src7" -> 100000))
+    )((s, d) => {
       streaming.UniqueStreams.withRocksDBStateStore(s) {
         streaming.Replay.replayWithRestart(s, Tables.documents(s, d), "doc_id",
           100)(sdf =>
@@ -318,7 +431,7 @@ object SparkEntry {
     // ingest point (admit a source's first `cap` arrivals, O(1)/arrival,
     // one long of state per group). Fed in doc_id order the admissions
     // equal the batch cap exactly, so the row shares its mirror.
-    "doc_source_cap_stream_replay" -> ((s, d) => {
+    "doc_source_cap_stream_replay" -> mirror(sourceCapSql("source", 10))((s, d) => {
       streaming.UniqueStreams.withRocksDBStateStore(s) {
         streaming.Replay.replay(s, Tables.documents(s, d), "doc_id", 1000,
           "append")(sdf =>
@@ -328,7 +441,7 @@ object SparkEntry {
     }),
     // ... and its kill/restart form (the admission counters restore from
     // RocksDB — a re-fed batch must not re-admit past the quota)
-    "doc_source_cap_restart_stream_replay" -> ((s, d) => {
+    "doc_source_cap_restart_stream_replay" -> mirror(sourceCapSql("source", 10))((s, d) => {
       streaming.UniqueStreams.withRocksDBStateStore(s) {
         streaming.Replay.replayWithRestart(s, Tables.documents(s, d), "doc_id",
           200)(sdf =>
@@ -343,17 +456,21 @@ object SparkEntry {
     // full key-distribution shuffle. k=6 puts the sf0.01 lang boundary in
     // play: threshold 500/7 ≈ 71.4 admits en(218)/zh(75)/es(73) and
     // excludes de(70)/fr(64)
-    "doc_heavy_hitters" -> ((s, d) =>
+    "doc_heavy_hitters" -> checked(heavyHittersSql("lang", "1", 6))((s, d) =>
       llm.SkewOps.heavyHitters(Tables.documents(s, d), "lang", k = 6)),
     // ... and the WEIGHTED form (which sources own the most characters —
     // the tokens/bytes question): k=19 sets the threshold at W/20, one
     // average source-share, so only the above-average-weight sources pass
-    "doc_heavy_hitters_weighted" -> ((s, d) =>
+    "doc_heavy_hitters_weighted" -> checked(
+      heavyHittersSql("source", "coalesce(n_chars, 0)", 19)
+    )((s, d) =>
       llm.SkewOps.heavyHitters(Tables.documents(s, d), "source", k = 19,
         weightCol = Some("n_chars"))),
     // ... the BATCH threshold-crossing twin (backtest an alert threshold
     // on a finished corpus: one window pass, same mirror as the stream)
-    "doc_hot_keys" -> ((s, d) =>
+    // hot-key alerts at threshold 70: the batch twin and both stream
+    // rows share the first running-sum crossing per key
+    "doc_hot_keys" -> checked(hotKeysSql("lang", "1", 70))((s, d) =>
       llm.SkewOps.hotKeyCrossings(Tables.documents(s, d), "lang", "doc_id",
         threshold = 70L)),
     // STREAMING hot-key alerting — the ingest-point twin: one append-only
@@ -362,7 +479,7 @@ object SparkEntry {
     // each crossing arrival equal the batch running-sum mirror. T=70 puts
     // the sf0.01 boundary in play: de's 70th (last) arrival fires exactly
     // at the threshold; fr (64 total) never fires
-    "doc_hot_keys_stream_replay" -> ((s, d) => {
+    "doc_hot_keys_stream_replay" -> mirror(hotKeysSql("lang", "1", 70))((s, d) => {
       streaming.UniqueStreams.withRocksDBStateStore(s) {
         streaming.Replay.replay(s, Tables.documents(s, d), "doc_id", 100,
           "append")(sdf =>
@@ -372,31 +489,31 @@ object SparkEntry {
     // ... and its kill/restart form (the running counters restore from
     // RocksDB — a re-fed batch must re-emit its alerts identically and a
     // restored counter must not re-fire)
-    "doc_hot_keys_restart_stream_replay" -> ((s, d) => {
+    "doc_hot_keys_restart_stream_replay" -> mirror(hotKeysSql("lang", "1", 70))((s, d) => {
       streaming.UniqueStreams.withRocksDBStateStore(s) {
         streaming.Replay.replayWithRestart(s, Tables.documents(s, d), "doc_id",
           100)(sdf =>
             streaming.HotKeyStream.hotKeyAlerts(sdf, "lang", "doc_id", 70L))
       }
     }),
-    "doc_simhash_md5" -> ((s, d) =>
+    "doc_simhash_md5" -> mirror(simhashSql)((s, d) =>
       llm.TextDedup.simhashDfMd5(Tables.documents(s, d), "doc_id", "text")
         .withColumnRenamed("id", "doc_id")),
-    "doc_ngram_pairs_md5" -> ((s, d) =>
+    "doc_ngram_pairs_md5" -> mirror(ngramPairsSql(3, 0.1, 200))((s, d) =>
       llm.TextDedup.ngramJaccardPairsMd5(Tables.documents(s, d), "text", "doc_id")),
-    "doc_simhash_pairs_md5" -> ((s, d) =>
+    "doc_simhash_pairs_md5" -> mirror(simhashPairsSql(3, 1000))((s, d) =>
       llm.TextDedup.simhashPairsMd5(Tables.documents(s, d), "text", "doc_id")),
     // pairs → transitive clusters (distributed min-label CC): the step
     // that turns pairwise near-dup evidence into dedup groups. md5 family
     // so the WHOLE chain — shingle → minhash → LSH → Jaccard → connected
     // components — is DuckDB-checkable (recursive-CTE closure oracle).
-    "doc_neardup_clusters_md5" -> ((s, d) =>
+    "doc_neardup_clusters_md5" -> mirror(clustersSql(3, 4, 2, 0.2, 1000))((s, d) =>
       llm.TextDedup.nearDupClusters(
         llm.TextDedup.minhashPairsMd5(Tables.documents(s, d), "text", "doc_id"))
         .withColumnRenamed("id", "doc_id")),
     // ... and clusters → the surviving corpus (canonical = min doc_id per
     // cluster): the end-to-end "remove near-duplicates" deliverable
-    "doc_neardup_dedup_md5" -> ((s, d) =>
+    "doc_neardup_dedup_md5" -> mirror(dedupIdsSql(3, 4, 2, 0.2, 1000, cols = DOCSQL))((s, d) =>
       llm.TextDedup.dedupByPairs(Tables.documents(s, d), "doc_id",
         llm.TextDedup.minhashPairsMd5(Tables.documents(s, d), "text", "doc_id"))),
     // EDIT-DISTANCE (Levenshtein) near-dup — the CHARACTER-level dedup
@@ -405,12 +522,12 @@ object SparkEntry {
     // (bands=4×4 — 322 candidates at sf0.01, of which 24 verify), exact
     // integer lev ≤ 5 verify on both engines (Spark's thresholded
     // Ukkonen band, DuckDB's full levenshtein — same integer).
-    "doc_editdist_pairs_md5" -> ((s, d) =>
+    "doc_editdist_pairs_md5" -> mirror(editPairsSql(5, 4, 4, 5, 1000))((s, d) =>
       llm.TextDedup.editDistancePairsMd5(Tables.documents(s, d), "text",
         "doc_id", maxDist = 5, shingleN = 5, bands = 4, rowsPerBand = 4)),
     // ... → min-id connected-component dedup over that relation (the
     // dedupByPairs policy, recursive-CTE-mirrored)
-    "doc_editdist_dedup_md5" -> ((s, d) => {
+    "doc_editdist_dedup_md5" -> mirror(editDedupSql(5, 4, 4, 5, 1000, cols = DOCSQL))((s, d) => {
       val docs = Tables.documents(s, d)
       llm.TextDedup.dedupByPairs(docs, "doc_id",
         llm.TextDedup.editDistancePairsMd5(docs, "text", "doc_id",
@@ -420,7 +537,9 @@ object SparkEntry {
     // STREAMING incremental edit-distance dedup: same banded index +
     // union-find change log as nearDupStreamMd5 with the exact-lev
     // verify; final survivors hash-match the batch CC oracle.
-    "doc_editdist_stream_replay" -> ((s, d) => {
+    "doc_editdist_stream_replay" -> mirror(
+      editDedupSql(5, 4, 4, 5, 1000, cols = DOCSQL)
+    )((s, d) => {
       streaming.UniqueStreams.withRocksDBStateStore(s) {
         val docs = Tables.documents(s, d)
         val log = streaming.Replay.replay(s, docs, "doc_id", 1000, "update")(sdf =>
@@ -439,7 +558,9 @@ object SparkEntry {
     // batch's edges (marker-before-edges per doc: the edges of doc i
     // involve only earlier arrivals, fed after i's marker). Survivors
     // share the batch CC oracle, like the monolith row.
-    "doc_editdist_sharded_stream_replay" -> ((s, d) => {
+    "doc_editdist_sharded_stream_replay" -> mirror(
+      editDedupSql(5, 4, 4, 5, 1000, cols = DOCSQL)
+    )((s, d) => {
       streaming.UniqueStreams.withRocksDBStateStore(s) {
         val docs = Tables.documents(s, d)
         val edges = streaming.Replay.replay(s, docs, "doc_id", 100, "append")(sdf =>
@@ -460,7 +581,9 @@ object SparkEntry {
     }),
     // ... and its kill/restart form (offset recovery + RocksDB restore
     // of the band index / text payloads / union-find / seq states)
-    "doc_editdist_restart_stream_replay" -> ((s, d) => {
+    "doc_editdist_restart_stream_replay" -> mirror(
+      editDedupSql(5, 4, 4, 5, 1000, cols = DOCSQL)
+    )((s, d) => {
       streaming.UniqueStreams.withRocksDBStateStore(s) {
         val docs = Tables.documents(s, d)
         val log = streaming.Replay.replayWithRestart(s, docs, "doc_id", 200)(sdf =>
@@ -472,19 +595,19 @@ object SparkEntry {
         docs.join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
       }
     }),
-    "emb_knn_brute" -> ((s, d) => {
+    "emb_knn_brute" -> checked(embKnnBruteSql)((s, d) => {
       val emb = Tables.embeddings(s, d)
       // sim column excluded: engines agree on double-precision RANKS, but
       // the sim doubles themselves are representation-sensitive
       llm.Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 20), "vec_id", "embedding", 10)
         .select("query_id", "corpus_id", "rank")
     }),
-    "emb_ann_lsh" -> ((s, d) => {
+    "emb_ann_lsh" -> checked(embAnnStreamSql(8, 10, stream = false))((s, d) => {
       val emb = Tables.embeddings(s, d)
       llm.Similarity.annTopK(emb, emb.filter(col("vec_id") < 20), "vec_id", "embedding", 10)
         .select("query_id", "corpus_id", "rank")
     }),
-    "emb_ann_ivf" -> ((s, d) => {
+    "emb_ann_ivf" -> checked(embIvfSql)((s, d) => {
       val emb = Tables.embeddings(s, d)
       llm.Similarity.ivfTopK(emb, emb.filter(col("vec_id") < 20), "vec_id", "embedding", 10,
           lloydIters = 1)
@@ -493,7 +616,7 @@ object SparkEntry {
     // product-quantization ADC retrieval (the memory-scale ANN path):
     // anchor codebook → PqEncode codes → per-query PqLut → PqScore
     // ranking; the mirror derives the identical anchor constants in SQL
-    "emb_ann_pq" -> ((s, d) => {
+    "emb_ann_pq" -> checked(embPqSql(8, 16, 10, 0))((s, d) => {
       val emb = Tables.embeddings(s, d)
       llm.Similarity.pqTopK(emb, emb.filter(col("vec_id") < 20), "vec_id", "embedding", 10)
         .select("query_id", "corpus_id", "rank")
@@ -502,7 +625,7 @@ object SparkEntry {
     // over the 512 lowest-id sample rows refines the anchors; the mirror
     // unrolls the identical quantized-mean pass in SQL, so the trained
     // retrieval log is hash-exact too (recall lift pinned by LlmOpsSpec)
-    "emb_ann_pq_trained" -> ((s, d) => {
+    "emb_ann_pq_trained" -> checked(embPqSql(8, 16, 10, 0, lloydIters = 1))((s, d) => {
       val emb = Tables.embeddings(s, d)
       llm.Similarity.pqTopK(emb, emb.filter(col("vec_id") < 20), "vec_id", "embedding", 10,
           lloydIters = 1)
@@ -510,7 +633,7 @@ object SparkEntry {
     }),
     // the composed 100 TB ANN shape: IVF bounds which cells a query
     // touches, PQ bounds the bytes per touched row — one select
-    "emb_ann_ivfpq" -> ((s, d) => {
+    "emb_ann_ivfpq" -> checked(embIvfPqSql(16, 4, 8, 16, 10, stream = false))((s, d) => {
       val emb = Tables.embeddings(s, d)
       llm.Similarity.ivfPqTopK(emb, emb.filter(col("vec_id") < 20), "vec_id", "embedding", 10)
         .select("query_id", "corpus_id", "rank")
@@ -520,7 +643,7 @@ object SparkEntry {
     // distribution (recall lift pinned by LlmOpsSpec); the mirror
     // re-derives the residual anchors (rows 17–32 by id, assigned and
     // centroid-subtracted) and the per-cell norm-correction tables in SQL
-    "emb_ann_ivfpq_residual" -> ((s, d) => {
+    "emb_ann_ivfpq_residual" -> checked(embIvfPqResidualSql(16, 4, 8, 16, 10))((s, d) => {
       val emb = Tables.embeddings(s, d)
       llm.Similarity.ivfPqTopK(emb, emb.filter(col("vec_id") < 20), "vec_id", "embedding", 10,
           residual = true)
@@ -531,7 +654,7 @@ object SparkEntry {
     // runs the short-band (4-plane) low-similarity configuration; cosine
     // itself is excluded from the compared columns (double-representation
     // -sensitive, same policy as the knn/ann sim column).
-    "emb_neardup_pairs" -> ((s, d) =>
+    "emb_neardup_pairs" -> checked(embPairsSql(0.4, 8, 4))((s, d) =>
       llm.Similarity.embeddingNearDupPairs(Tables.embeddings(s, d), "vec_id", "embedding",
         threshold = 0.4, groups = 8, planesPerGroup = 4)
         .select("id_a", "id_b")),
@@ -539,7 +662,7 @@ object SparkEntry {
     // analog of doc_neardup_clusters_md5; until now only the streaming
     // replay carried this closure check). Same recursive-CTE oracle as the
     // stream row — batch and stream must agree on the cluster structure.
-    "emb_neardup_clusters" -> ((s, d) =>
+    "emb_neardup_clusters" -> checked(embClustersSql(0.4, 8, 4))((s, d) =>
       llm.TextDedup.nearDupClusters(
         llm.Similarity.embeddingNearDupPairs(Tables.embeddings(s, d), "vec_id", "embedding",
           threshold = 0.4, groups = 8, planesPerGroup = 4)
@@ -549,7 +672,7 @@ object SparkEntry {
     // dedup deliverable: canonical = min vec_id per cosine-connected
     // component). vec_id only — the embedding floats are representation-
     // sensitive across engines, same policy as the knn/ann sim column.
-    "emb_neardup_dedup" -> ((s, d) => {
+    "emb_neardup_dedup" -> checked(embDedupSql(0.4, 8, 4))((s, d) => {
       val emb = Tables.embeddings(s, d)
       llm.TextDedup.dedupByPairs(emb, "vec_id",
         llm.Similarity.embeddingNearDupPairs(emb, "vec_id", "embedding",
@@ -565,7 +688,7 @@ object SparkEntry {
     // first-class). The mirror re-derives centroids, assignment csims,
     // the ε-pair relation, the recursive-CTE closure, and the keep rank
     // entirely in SQL.
-    "emb_semdedup" -> ((s, d) =>
+    "emb_semdedup" -> checked(embSemDedupSql(16, 1, 0.3))((s, d) =>
       llm.Similarity.semDedup(Tables.embeddings(s, d), "vec_id", "embedding",
         dim = 64, eps = 0.3, nCells = 16, lloydIters = 1)),
     // ... and the HOT-CELL-CAPPED form at a geometry where the cap BITES
@@ -575,12 +698,12 @@ object SparkEntry {
     // capped vs 196 uncapped). The mirror re-derives the occupancy
     // relation and the ok-cell filter in SQL on top of the uncapped
     // chain — the doc_fuzzy_pairs_capped* pattern applied to SemDeDup.
-    "emb_semdedup_capped" -> ((s, d) =>
+    "emb_semdedup_capped" -> checked(embSemDedupSql(4, 1, 0.3125, 130))((s, d) =>
       llm.Similarity.semDedup(Tables.embeddings(s, d), "vec_id", "embedding",
         dim = 64, eps = 0.3125, nCells = 4, lloydIters = 1, maxCell = 130)),
     // the cap's "no silent caps" telemetry, hash-verified itself: the
     // dropped-cell relation (cell id + occupancy) at the same geometry
-    "emb_semdedup_dropped_cells" -> ((s, d) =>
+    "emb_semdedup_dropped_cells" -> checked(embSemDedupDroppedCellsSql(4, 1, 130))((s, d) =>
       llm.Similarity.semDedupStats(Tables.embeddings(s, d), "vec_id",
         "embedding", dim = 64, eps = 0.3125, nCells = 4, lloydIters = 1,
         maxCell = 130).droppedCells
@@ -592,7 +715,7 @@ object SparkEntry {
     // re-derives). Replay the embeddings in vec_id order; the change
     // log's final verdicts must reduce to EXACTLY the batch survivor
     // set, so this row shares the emb_semdedup DuckDB mirror.
-    "emb_semdedup_stream_replay" -> ((s, d) => {
+    "emb_semdedup_stream_replay" -> mirror(embSemDedupSql(16, 1, 0.3))((s, d) => {
       streaming.UniqueStreams.withRocksDBStateStore(s) {
         val emb = Tables.embeddings(s, d)
         val cents = llm.Similarity.semDedupCentroids(emb, "vec_id",
@@ -612,7 +735,7 @@ object SparkEntry {
     // final count, so the stream saturates at the crossing arrival —
     // telemetry row, retroactive re-promotion of dropped members, cell
     // state FREED — and still hash-matches the capped batch mirror.
-    "emb_semdedup_capped_stream_replay" -> ((s, d) => {
+    "emb_semdedup_capped_stream_replay" -> mirror(embSemDedupSql(4, 1, 0.3125, 130))((s, d) => {
       streaming.UniqueStreams.withRocksDBStateStore(s) {
         val emb = Tables.embeddings(s, d)
         val cents = llm.Similarity.semDedupCentroids(emb, "vec_id",
@@ -632,7 +755,7 @@ object SparkEntry {
     // recovery plus RocksDB restore of all five states (members,
     // union-find forest, keeper summaries, occupancy, seq) — and the
     // accumulated log must still reduce to the batch survivor set.
-    "emb_semdedup_restart_stream_replay" -> ((s, d) => {
+    "emb_semdedup_restart_stream_replay" -> mirror(embSemDedupSql(16, 1, 0.3))((s, d) => {
       streaming.UniqueStreams.withRocksDBStateStore(s) {
         val emb = Tables.embeddings(s, d)
         val cents = llm.Similarity.semDedupCentroids(emb, "vec_id",
@@ -646,20 +769,28 @@ object SparkEntry {
           .select("vec_id")
       }
     }),
-    "mm_features" -> ((s, d) =>
-      llm.Multimodal.extractFeaturesChecked(
-        llm.Multimodal.withSyntheticMedia(Tables.documents(s, d), "doc_id", "text",
-          mirrorableDims = true),
-        "doc_id")),
+    // the benchmarked build is the production float-feature path; the
+    // oracle checks the integer-lane build of the same features
+    "mm_features" -> Entry(
+      (s, d) =>
+        llm.Multimodal.extractFeatures(
+          llm.Multimodal.withSyntheticMedia(Tables.documents(s, d), "doc_id", "text"),
+          "doc_id"),
+      Oracle(featuresSql, lane = Some((s, d) =>
+        llm.Multimodal.extractFeaturesChecked(
+          llm.Multimodal.withSyntheticMedia(Tables.documents(s, d), "doc_id", "text",
+            mirrorableDims = true),
+          "doc_id"))),
+      bench = true),
     // real encode→decode→bilinear-resize→PNG→decode round-trip over
     // id-derived solid-color BMPs: the oracle predicts dims + the single
     // surviving color without touching pixels (constant-image resampling
     // is exact)
-    "mm_resize" -> ((s, d) =>
+    "mm_resize" -> checked(resizeSql)((s, d) =>
       llm.Multimodal.resizeChecked(Tables.documents(s, d), "doc_id", 16, 16)),
     // frame-sampling fan-out plan over id-derived synthetic video meta
     // (n_frames = doc_id % 40 + 1, every 7th frame)
-    "mm_frames" -> ((s, d) =>
+    "mm_frames" -> checked(framesSql)((s, d) =>
       llm.Multimodal.sampleFrames(
         llm.Multimodal.withSyntheticVideoMeta(
           Tables.documents(s, d).select(col("doc_id")), "doc_id"),
@@ -670,7 +801,7 @@ object SparkEntry {
     // size, so the decode path is pixel-exact and the oracle re-derives
     // the hash with pure integer arithmetic — see
     // withSyntheticPatternImages' scaladoc for the pattern contract)
-    "mm_phash" -> ((s, d) =>
+    "mm_phash" -> checked(phashSql)((s, d) =>
       llm.Multimodal.imageHashes(
         llm.Multimodal.withSyntheticPatternImages(Tables.documents(s, d), "doc_id"),
         "doc_id")
@@ -681,7 +812,7 @@ object SparkEntry {
     // oracle row (the dHash of THIS fixture goes through a real 8×8→9×8
     // bilinear upsample, so only ahash is selected here; mm_phash pins
     // dhash on its own grid)
-    "mm_ahash" -> ((s, d) =>
+    "mm_ahash" -> checked(ahashSql)((s, d) =>
       llm.Multimodal.imageHashes(
         llm.Multimodal.withSyntheticPatternImages(Tables.documents(s, d),
           "doc_id", gridW = 8, gridH = 8),
@@ -690,14 +821,16 @@ object SparkEntry {
     // ... → banded-hamming candidate pairs over the dhash (4×16-bit
     // chunks, pigeonhole-exact at radius 3, capped buckets) with the
     // codegen'd bit_count verify
-    "mm_image_neardup_pairs" -> ((s, d) =>
+    "mm_image_neardup_pairs" -> checked(imageHashPairsSql(3, 1000))((s, d) =>
       llm.TextDedup.hammingHashPairs(
         llm.Multimodal.imageHashes(
           llm.Multimodal.withSyntheticPatternImages(Tables.documents(s, d), "doc_id"),
           "doc_id"),
         "id", "dhash", chunkBits = 16, maxHamming = 3, maxBucket = 1000)),
     // ... → min-id connected-component image dedup over that relation
-    "mm_image_dedup" -> ((s, d) => {
+    "mm_image_dedup" -> checked(
+      ccSurvivorsSql(imageHashPairsCtes(3, 1000, 32), "pairs")
+    )((s, d) => {
       val docs = Tables.documents(s, d)
       llm.TextDedup.dedupByPairs(docs, "doc_id",
         llm.TextDedup.hammingHashPairs(
@@ -711,7 +844,7 @@ object SparkEntry {
     // 16 merges on the bounded 4-doc sample, encode each doc's first
     // 120 chars with the native expression, emit the INTEGER token-id
     // sequence (the oracle re-derives training AND encoding in SQL)
-    "doc_bpe_encode" -> ((s, d) => {
+    "doc_bpe_encode" -> checked(docBpeEncodeOracleFor(4, 240, 16, 120))((s, d) => {
       val docs = Tables.documents(s, d)
       val model = llm.Bpe.train(docs, "doc_id", "text", numMerges = 16,
         sampleDocs = 4, sampleChars = 240)
@@ -725,7 +858,7 @@ object SparkEntry {
     // input, with nothing but the per-round 1-row argmax and the
     // base alphabet ever reaching the driver); the oracle re-derives
     // the whole per-doc training state machine + encoding in SQL
-    "doc_bpe_encode_dist" -> ((s, d) => {
+    "doc_bpe_encode_dist" -> checked(docBpeEncodeDistOracleFor(64, 240, 16, 120))((s, d) => {
       val docs = Tables.documents(s, d)
       val model = llm.Bpe.trainDistributed(docs, "doc_id", "text",
         numMerges = 16, sampleDocs = 64, sampleChars = 240)
@@ -742,7 +875,9 @@ object SparkEntry {
     // boundary — over the bytes→unicode alphabet with the full
     // 256-token base vocabulary. The mirror is docBpeDistCtes in byte
     // mode (space→Ġ mapping, alphabet base ids).
-    "doc_bpe_train_bytes" -> ((s, d) => {
+    "doc_bpe_train_bytes" -> checked(
+      docBpeEncodeDistOracleFor(64, 240, 12, 120, byteLevel = true)
+    )((s, d) => {
       val docs = Tables.documents(s, d)
       val model = llm.Bpe.trainByteLevel(docs, "doc_id", "text",
         numMerges = 12, sampleDocs = 64, sampleChars = 240)
@@ -760,7 +895,9 @@ object SparkEntry {
     // path is pinned against an independent reference implementation
     // in BpeByteLevelSpec instead. The mirror re-derives the 256-token
     // alphabet, the id contract, and the min-rank encode in SQL.
-    "doc_bpe_encode_bytes" -> ((s, d) => {
+    "doc_bpe_encode_bytes" -> checked(
+      docBpeEncodeBytesOracleFor(bpeBytesMergesLines, 120)
+    )((s, d) => {
       val model = llm.Bpe.fromMergesByteLevel(
         llm.Bpe.parseMergesLines(TextOracles.bpeBytesMergesLines), None,
         pretokenize = false)
@@ -772,7 +909,7 @@ object SparkEntry {
     // ... and the quota tier denominated in REAL tokens: mixByTokenBudget
     // with the deployed BPE tokenizer (budgets in BPE tokens, not regex
     // matches) — truncated text keeps the SQL mirror's recursion bounded
-    "doc_token_mix_bpe" -> ((s, d) => {
+    "doc_token_mix_bpe" -> checked(docTokenMixBpeSql)((s, d) => {
       val docs = Tables.documents(s, d)
       val model = llm.Bpe.train(docs, "doc_id", "text", numMerges = 16,
         sampleDocs = 4, sampleChars = 240)
@@ -786,7 +923,7 @@ object SparkEntry {
     // gradient-sign waveform hash over the id-derived 16-bit PCM WAV
     // fixture (lossless round-trip — the oracle re-derives the window
     // sums by integer arithmetic; see withSyntheticWavs' contract)
-    "mm_audio_hash" -> ((s, d) =>
+    "mm_audio_hash" -> checked(audioHashSql)((s, d) =>
       llm.Multimodal.audioHashes(
         llm.Multimodal.withSyntheticWavs(Tables.documents(s, d), "doc_id"),
         "doc_id")
@@ -794,14 +931,16 @@ object SparkEntry {
     // ... → banded-hamming pairs over the waveform hash (the SAME
     // hammingHashPairs core as text simhash and image dHash — the hash
     // column is the whole interface)
-    "mm_audio_neardup_pairs" -> ((s, d) =>
+    "mm_audio_neardup_pairs" -> checked(audioHashPairsSql(2, 1000, 32))((s, d) =>
       llm.TextDedup.hammingHashPairs(
         llm.Multimodal.audioHashes(
           llm.Multimodal.withSyntheticWavs(Tables.documents(s, d), "doc_id"),
           "doc_id"),
         "id", "whash", chunkBits = 16, maxHamming = 2, maxBucket = 1000)),
     // ... → min-id CC audio dedup
-    "mm_audio_dedup" -> ((s, d) => {
+    "mm_audio_dedup" -> checked(
+      ccSurvivorsSql(audioHashPairsCtes(2, 1000, 32), "apairs", "a")
+    )((s, d) => {
       val docs = Tables.documents(s, d)
       llm.TextDedup.dedupByPairs(docs, "doc_id",
         llm.TextDedup.hammingHashPairs(
@@ -815,7 +954,9 @@ object SparkEntry {
     // dhash chunks (stage A per-chunk hamming edges — 8-byte payloads —
     // + the shared ids-only union-find stage B); survivors hash-match
     // the batch CC mirror
-    "mm_image_dedup_stream_replay" -> ((s, d) => {
+    "mm_image_dedup_stream_replay" -> mirror(
+      ccSurvivorsSql(imageHashPairsCtes(3, 1000, 32), "pairs")
+    )((s, d) => {
       streaming.UniqueStreams.withRocksDBStateStore(s) {
         val docs = Tables.documents(s, d)
         val edges = streaming.Replay.replay(s, docs.select("doc_id"),
@@ -845,7 +986,10 @@ object SparkEntry {
     // policy). eps=0.94 splits the fixture's regimes (within-family
     // cosine ≥ 0.957, cross-family ≤ 0.921); the mirror re-derives the
     // luma vectors and the whole centroid/closure/keep-rank chain
-    "mm_image_semdedup" -> ((s, d) => {
+    "mm_image_semdedup" -> checked(
+      embSemDedupSql(8, 1, 0.94, srcSql = patternVectorSql(32),
+      finalRel = "documents", finalIdCol = "doc_id")
+    )((s, d) => {
       val docs = Tables.documents(s, d)
       // localCheckpoint: semDedup consumes its corpus in up to 4 jobs
       // (see the caller contract in semDedupStats) — without this the
@@ -868,7 +1012,7 @@ object SparkEntry {
     // control, +8px scroll = the crop the tile tier catches at
     // hop-multiple offsets); pure integer mirror — the oracle
     // re-derives every tile's mean and bits from the formula
-    "mm_image_tile_hash" -> ((s, d) =>
+    "mm_image_tile_hash" -> checked(imageTileHashSql)((s, d) =>
       llm.Multimodal.imageTileHashes(
         llm.Multimodal.withSyntheticCropImages(Tables.documents(s, d), "doc_id"),
         "doc_id")
@@ -878,7 +1022,7 @@ object SparkEntry {
     // ... → shared-key pairs on tile-hash values, ≥ 10 shared tiles
     // (the crop variant shares 22 of its 26 distinct tiles; unrelated
     // families share 0)
-    "mm_image_crop_pairs" -> ((s, d) =>
+    "mm_image_crop_pairs" -> checked(imageTilePairsSql(32, 10, 1000))((s, d) =>
       llm.TextDedup.sharedKeyPairs(
         llm.Multimodal.imageTileHashes(
           llm.Multimodal.withSyntheticCropImages(Tables.documents(s, d), "doc_id"),
@@ -886,7 +1030,9 @@ object SparkEntry {
         "id", "thash", minShared = 10)),
     // ... → tile-level CC DEDUP, completing the crop-tolerant rung
     // (hash → pairs → dedup like every other near-dup family)
-    "mm_image_crop_dedup" -> ((s, d) => {
+    "mm_image_crop_dedup" -> checked(
+      ccSurvivorsSql(imageTilePairsCtes(32, 10, 1000), "tpr", "tl")
+    )((s, d) => {
       val docs = Tables.documents(s, d)
       llm.TextDedup.dedupByPairs(docs, "doc_id",
         llm.TextDedup.sharedKeyPairs(
@@ -899,7 +1045,9 @@ object SparkEntry {
     // ... and its STREAMING twin over the stateless tile-key-set
     // projection (imageTileKeys → the generic keySetShardedEdges +
     // shared union-find; same batch CC mirror)
-    "mm_image_crop_dedup_stream_replay" -> ((s, d) => {
+    "mm_image_crop_dedup_stream_replay" -> mirror(
+      ccSurvivorsSql(imageTilePairsCtes(32, 10, 1000), "tpr", "tl")
+    )((s, d) => {
       streaming.UniqueStreams.withRocksDBStateStore(s) {
         val docs = Tables.documents(s, d)
         val edges = streaming.Replay.replay(s, docs.select("doc_id"),
@@ -928,7 +1076,7 @@ object SparkEntry {
     // matching via shingled frame-hash n-grams — alignment-free, so the
     // planted TRIMMED clips (v=2: the original minus its first frame)
     // still pair, which position-aligned frame comparison cannot do
-    "mm_video_hash" -> ((s, d) =>
+    "mm_video_hash" -> checked(videoHashSql)((s, d) =>
       llm.Multimodal.videoFrameHashes(
         llm.Multimodal.withSyntheticVideoClips(Tables.documents(s, d), "doc_id"),
         "doc_id")
@@ -936,14 +1084,16 @@ object SparkEntry {
           col("frame_idx").cast("long").as("frame_idx"), col("fhash"))),
     // ... → distinct 2-frame shingles, bucket-capped shared-key join,
     // distinct-shingle Jaccard ≥ 0.5 verify
-    "mm_video_neardup_pairs" -> ((s, d) =>
+    "mm_video_neardup_pairs" -> checked(videoSeqPairsSql(32, 2, 0.5, 1000))((s, d) =>
       llm.TextDedup.frameSequencePairs(
         llm.Multimodal.videoFrameHashes(
           llm.Multimodal.withSyntheticVideoClips(Tables.documents(s, d), "doc_id"),
           "doc_id"),
         "id", "frame_idx", "fhash", shingleK = 2, threshold = 0.5)),
     // ... → min-id CC video dedup
-    "mm_video_dedup" -> ((s, d) => {
+    "mm_video_dedup" -> checked(
+      ccSurvivorsSql(videoSeqPairsCtes(32, 2, 0.5, 1000), "vpairs", "v")
+    )((s, d) => {
       val docs = Tables.documents(s, d)
       llm.TextDedup.dedupByPairs(docs, "doc_id",
         llm.TextDedup.frameSequencePairs(
@@ -959,7 +1109,7 @@ object SparkEntry {
     // that the whole-file hash provably misses (AudioOffsetSpec pins
     // hamming 20 ≫ radius) and the segment tier catches (6/7 segments
     // re-align at the hop-multiple offset)
-    "mm_audio_seg_hash" -> ((s, d) =>
+    "mm_audio_seg_hash" -> checked(audioSegHashSql)((s, d) =>
       llm.Multimodal.audioSegmentHashes(
         llm.Multimodal.withSyntheticOffsetWavs(Tables.documents(s, d), "doc_id"),
         "doc_id")
@@ -967,7 +1117,7 @@ object SparkEntry {
           col("seg_idx").cast("long").as("seg_idx"), col("shash"))),
     // ... → shared-key pairs on segment-hash VALUES (not positions —
     // that is what buys the shift tolerance), ≥ 3 shared segments
-    "mm_audio_offset_pairs" -> ((s, d) =>
+    "mm_audio_offset_pairs" -> checked(audioSegPairsSql(32, 256, 3, 1000))((s, d) =>
       llm.TextDedup.sharedKeyPairs(
         llm.Multimodal.audioSegmentHashes(
           llm.Multimodal.withSyntheticOffsetWavs(Tables.documents(s, d), "doc_id"),
@@ -979,7 +1129,7 @@ object SparkEntry {
     // 15-48 docs at sf0.01, so maxBucket=16 drops 23 buckets and
     // shrinks the pair set 4908 → 3075. Two rows pin both sides —
     // the surviving pairs under the binding cap...
-    "mm_audio_offset_pairs_capped" -> ((s, d) =>
+    "mm_audio_offset_pairs_capped" -> checked(audioSegPairsSql(32, 256, 3, 16))((s, d) =>
       llm.TextDedup.sharedKeyPairs(
         llm.Multimodal.audioSegmentHashes(
           llm.Multimodal.withSyntheticOffsetWavs(Tables.documents(s, d), "doc_id"),
@@ -988,7 +1138,7 @@ object SparkEntry {
     // ...and the dropped-bucket telemetry relation itself, hash-verified
     // (the emb_semdedup_dropped_cells pattern applied to the shared-key
     // core: one (bucket = key value, size) row per over-cap bucket)
-    "mm_audio_seg_dropped_buckets" -> ((s, d) =>
+    "mm_audio_seg_dropped_buckets" -> checked(audioSegDroppedSql(32, 256, 16))((s, d) =>
       llm.TextDedup.sharedKeyPairsWithStats(
         llm.Multimodal.audioSegmentHashes(
           llm.Multimodal.withSyntheticOffsetWavs(Tables.documents(s, d), "doc_id"),
@@ -998,7 +1148,9 @@ object SparkEntry {
     // segment-level CC DEDUP — completes the audio-segment rung
     // (hash → pairs → dedup, like every other near-dup family): min-id
     // connected components over the shift-tolerant pair relation
-    "mm_audio_seg_dedup" -> ((s, d) => {
+    "mm_audio_seg_dedup" -> checked(
+      ccSurvivorsSql(audioSegPairsCtes(32, 256, 3, 1000), "apr")
+    )((s, d) => {
       val docs = Tables.documents(s, d)
       llm.TextDedup.dedupByPairs(docs, "doc_id",
         llm.TextDedup.sharedKeyPairs(
@@ -1014,7 +1166,9 @@ object SparkEntry {
     // edges (keySetShardedEdges — the generic key-set stage the video
     // tier already runs); the shared ids-only union-find stage B
     // reduces to the batch CC survivors (same mirror)
-    "mm_audio_seg_dedup_stream_replay" -> ((s, d) => {
+    "mm_audio_seg_dedup_stream_replay" -> mirror(
+      ccSurvivorsSql(audioSegPairsCtes(32, 256, 3, 1000), "apr")
+    )((s, d) => {
       streaming.UniqueStreams.withRocksDBStateStore(s) {
         val docs = Tables.documents(s, d)
         val edges = streaming.Replay.replay(s, docs.select("doc_id"),
@@ -1041,7 +1195,9 @@ object SparkEntry {
     // the audio wiring is the same two-stage bridge: per-chunk hamming
     // edges + the shared ids-only union-find); survivors hash-match the
     // batch mm_audio_dedup CC mirror
-    "mm_audio_dedup_stream_replay" -> ((s, d) => {
+    "mm_audio_dedup_stream_replay" -> mirror(
+      ccSurvivorsSql(audioHashPairsCtes(2, 1000, 32), "apairs", "a")
+    )((s, d) => {
       streaming.UniqueStreams.withRocksDBStateStore(s) {
         val docs = Tables.documents(s, d)
         val edges = streaming.Replay.replay(s, docs.select("doc_id"),
@@ -1067,7 +1223,9 @@ object SparkEntry {
     // halfway chunk boundary and restarted from its checkpoint (offset
     // recovery + RocksDB restore of the chunk-bucket member maps); the
     // accumulated edges must still reduce to the same batch survivors
-    "mm_audio_dedup_restart_stream_replay" -> ((s, d) => {
+    "mm_audio_dedup_restart_stream_replay" -> mirror(
+      ccSurvivorsSql(audioHashPairsCtes(2, 1000, 32), "apairs", "a")
+    )((s, d) => {
       streaming.UniqueStreams.withRocksDBStateStore(s) {
         val docs = Tables.documents(s, d)
         val edges = streaming.Replay.replayWithRestart(s, docs.select("doc_id"),
@@ -1095,7 +1253,9 @@ object SparkEntry {
     // per shingle-code shard, and emits Jaccard-verified edges; the
     // shared ids-only union-find stage B reduces to the batch CC
     // survivors (same mirror as mm_video_dedup)
-    "mm_video_dedup_stream_replay" -> ((s, d) => {
+    "mm_video_dedup_stream_replay" -> mirror(
+      ccSurvivorsSql(videoSeqPairsCtes(32, 2, 0.5, 1000), "vpairs", "v")
+    )((s, d) => {
       streaming.UniqueStreams.withRocksDBStateStore(s) {
         val docs = Tables.documents(s, d)
         val edges = streaming.Replay.replay(s, docs.select("doc_id"),
@@ -1121,7 +1281,9 @@ object SparkEntry {
     // checkpoint (offset recovery + RocksDB restore of the shard member
     // maps, including every stored shingle-set payload); the accumulated
     // edges must still reduce to the same batch CC survivors
-    "mm_video_dedup_restart_stream_replay" -> ((s, d) => {
+    "mm_video_dedup_restart_stream_replay" -> mirror(
+      ccSurvivorsSql(videoSeqPairsCtes(32, 2, 0.5, 1000), "vpairs", "v")
+    )((s, d) => {
       streaming.UniqueStreams.withRocksDBStateStore(s) {
         val docs = Tables.documents(s, d)
         val edges = streaming.Replay.replayWithRestart(s, docs.select("doc_id"),
@@ -1148,7 +1310,9 @@ object SparkEntry {
     // (offset recovery + RocksDB restore of the per-key shard member
     // maps, including every stored key-array payload); the accumulated
     // edges must still reduce to the same batch CC survivors
-    "mm_audio_seg_dedup_restart_stream_replay" -> ((s, d) => {
+    "mm_audio_seg_dedup_restart_stream_replay" -> mirror(
+      ccSurvivorsSql(audioSegPairsCtes(32, 256, 3, 1000), "apr")
+    )((s, d) => {
       streaming.UniqueStreams.withRocksDBStateStore(s) {
         val docs = Tables.documents(s, d)
         val edges = streaming.Replay.replayWithRestart(s, docs.select("doc_id"),
@@ -1170,7 +1334,9 @@ object SparkEntry {
           .select("doc_id")
       }
     }),
-    "mm_image_crop_dedup_restart_stream_replay" -> ((s, d) => {
+    "mm_image_crop_dedup_restart_stream_replay" -> mirror(
+      ccSurvivorsSql(imageTilePairsCtes(32, 10, 1000), "tpr", "tl")
+    )((s, d) => {
       streaming.UniqueStreams.withRocksDBStateStore(s) {
         val docs = Tables.documents(s, d)
         val edges = streaming.Replay.replayWithRestart(s, docs.select("doc_id"),
@@ -1194,15 +1360,17 @@ object SparkEntry {
     }),
     // ---- corpus-curation tier (llm.CorpusOps): the filter / packing /
     // decontamination layer between dedup and training ----
-    "doc_repetition" -> ((s, d) =>
+    "doc_repetition" -> checked(docRepetitionSql)((s, d) =>
       llm.CorpusOps.repetitionColumns(Tables.documents(s, d), "doc_id", "text")),
-    "doc_boilerplate_phrases" -> ((s, d) =>
+    "doc_boilerplate_phrases" -> checked(boilerplateSql(3, 5))((s, d) =>
       llm.CorpusOps.boilerplatePhrases(Tables.documents(s, d), "doc_id", "text",
         n = 3, minDf = 5)),
-    "doc_decontam" -> ((s, d) =>
+    "doc_decontam" -> checked(decontamSql(5, 50))((s, d) =>
       llm.CorpusOps.decontaminate(Tables.documents(s, d), "doc_id", "text",
         evalMod = 50L, n = 5)),
-    "doc_pack" -> ((s, d) =>
+    // the streaming operator's per-shard running fold in id order IS the
+    // batch window
+    "doc_pack" -> checked(packSql(512))((s, d) =>
       llm.CorpusOps.packSequences(Tables.documents(s, d), "doc_id", "text",
         "source", budget = 512)),
     // END-TO-END curation composition — the four pipeline stages CHAINED
@@ -1213,7 +1381,9 @@ object SparkEntry {
     // stage's input is the previous stage's OUTPUT, so the mirror pins
     // the stage boundaries (schemas, survivor sets), not just each
     // operator in isolation.
-    "doc_curation_pipeline_md5" -> ((s, d) => {
+    "doc_curation_pipeline_md5" -> mirror(
+      curationPipelineSql(3, 4, 2, 0.2, 1000, 10, 10, 512)
+    )((s, d) => {
       val docs = Tables.documents(s, d)
       val deduped = llm.TextDedup.exactDedup(docs, Seq("text"), "doc_id")
       val train = deduped.filter(col("doc_id") % 10 =!= 0)
@@ -1232,7 +1402,9 @@ object SparkEntry {
     // gate prepended, so the mirror pins the MODALITY BOUNDARY (which
     // doc ids the image stage hands to the text stages), not just each
     // tier in isolation.
-    "mm_curation_pipeline_md5" -> ((s, d) => {
+    "mm_curation_pipeline_md5" -> mirror(
+      mmCurationPipelineSql(3, 32, 3, 4, 2, 0.2, 1000, 10, 10, 512)
+    )((s, d) => {
       val docs = Tables.documents(s, d)
       val imgKept = llm.TextDedup.dedupByPairs(docs, "doc_id",
         llm.TextDedup.hammingHashPairs(
@@ -1248,26 +1420,27 @@ object SparkEntry {
       val capped = llm.CorpusOps.capPerGroup(decontamed, "source", "doc_id", 10)
       llm.CorpusOps.packSequences(capped, "doc_id", "text", "source", budget = 512)
     }),
-    "doc_sample_md5" -> ((s, d) =>
+    "doc_sample_md5" -> mirror(sampleSql("1999", "3333"))((s, d) =>
       llm.CorpusOps.sampleByHash(Tables.documents(s, d), "doc_id", "text", "lang",
         Map("en" -> "1999"), defaultPrefix = "3333")),
-    "doc_pii_redact" -> ((s, d) =>
+    "doc_pii_redact" -> checked(docPiiRedactSql)((s, d) =>
       llm.CorpusOps.redactPii(
         llm.CorpusOps.withSyntheticPii(Tables.documents(s, d), "doc_id", "text"),
         "doc_id", "pii_text")),
     // CCNet-style line dedup over the deterministically multi-lined
-    // corpus (string keys for DuckDB parity; xxhash64 twin in benchQueries)
-    "doc_line_dedup" -> ((s, d) =>
+    // corpus (string keys for DuckDB parity; xxhash64 row doc_line_dedup_xx)
+    "doc_line_dedup" -> checked(lineDedupSql(3))((s, d) =>
       llm.CorpusOps.lineDedup(
         llm.CorpusOps.withSyntheticLines(Tables.documents(s, d), "doc_id", "text"),
         "doc_id", "lines_text", minDf = 3)),
     // the dropped-line relation + its streaming twin (insert-only change
     // log with retroactive promotion), both on the same oracle
-    "doc_dup_lines" -> ((s, d) =>
+    // (0-based (doc, pos) of every line appearing in >= 3 distinct docs)
+    "doc_dup_lines" -> checked(dupLinesSql(3))((s, d) =>
       llm.CorpusOps.duplicateLines(
         llm.CorpusOps.withSyntheticLines(Tables.documents(s, d), "doc_id", "text"),
         "doc_id", "lines_text", minDf = 3)),
-    "doc_dup_lines_stream_replay" -> ((s, d) => {
+    "doc_dup_lines_stream_replay" -> mirror(dupLinesSql(3))((s, d) => {
       streaming.UniqueStreams.withRocksDBStateStore(s) {
         streaming.Replay.replay(s,
           llm.CorpusOps.withSyntheticLines(Tables.documents(s, d), "doc_id", "text")
@@ -1282,7 +1455,7 @@ object SparkEntry {
     // the scale-out path past the monolith's single-task stage): the
     // accumulated insert-only log must equal the same dropped-line
     // relation, so it shares doc_dup_lines' oracle
-    "doc_dup_lines_sharded_stream_replay" -> ((s, d) => {
+    "doc_dup_lines_sharded_stream_replay" -> mirror(dupLinesSql(3))((s, d) => {
       streaming.UniqueStreams.withRocksDBStateStore(s) {
         streaming.Replay.replay(s,
           llm.CorpusOps.withSyntheticLines(Tables.documents(s, d), "doc_id", "text")
@@ -1295,17 +1468,18 @@ object SparkEntry {
     }),
     // ---- duplicated-span detection/removal (ExactSubstr-style dedup,
     // Lee et al. 2021; llm.TextDedup.duplicateSpans) — string gram keys
-    // here for DuckDB parity, xxhash64 production twins in benchQueries
-    "doc_dup_spans" -> ((s, d) =>
+    // here for DuckDB parity, xxhash64 production rows `*_xx`
+    // the streaming replays' final (max-upd_seq) spans share the oracle
+    "doc_dup_spans" -> checked(dupSpansSql(5, 2))((s, d) =>
       llm.TextDedup.duplicateSpans(Tables.documents(s, d), "doc_id", "text",
         k = 5, minCount = 2)),
-    "doc_dup_span_removal" -> ((s, d) =>
+    "doc_dup_span_removal" -> checked(spanRemovalSql(5, 2))((s, d) =>
       llm.TextDedup.removeDuplicateSpans(Tables.documents(s, d), "doc_id", "text",
         k = 5, minCount = 2)),
     // streaming incremental span detection: final (max-upd_seq) spans per
     // doc after replaying the corpus must hash-match the SAME DuckDB
     // oracle as the batch row — retroactive promotions included
-    "doc_dup_spans_stream_replay" -> ((s, d) => {
+    "doc_dup_spans_stream_replay" -> mirror(dupSpansSql(5, 2))((s, d) => {
       streaming.UniqueStreams.withRocksDBStateStore(s) {
         val log = streaming.Replay.replay(s, Tables.documents(s, d), "doc_id",
           100, "update")(sdf =>
@@ -1318,7 +1492,7 @@ object SparkEntry {
     // replayed through stage B (per-doc span merge) — the deployment
     // bridge the sharded pair documents, closed end-to-end at oracle
     // level. Final (max per-doc upd_seq) spans share the batch oracle.
-    "doc_dup_spans_sharded_stream_replay" -> ((s, d) => {
+    "doc_dup_spans_sharded_stream_replay" -> mirror(dupSpansSql(5, 2))((s, d) => {
       streaming.UniqueStreams.withRocksDBStateStore(s) {
         val hits = streaming.Replay.replay(s, Tables.documents(s, d), "doc_id",
           100, "append")(sdf =>
@@ -1335,17 +1509,23 @@ object SparkEntry {
     // the streaming tier's hash-level verification against the SAME
     // DuckDB oracles as the batch twins (the reference's test suite is
     // all streaming, UniqueTimeWindowTestCase.java:65-206).
-    "ever_stream_replay" -> ((s, d) =>
+    // streaming replays verify against the batch twins' semantics:
+    // everStream's accumulated CHANGE LOG holds every event once as
+    // 'insert' plus every replaced event again as 'expire' (the batch
+    // ever_current/ever_expired split, log-shaped); lengthBatchStream's
+    // inserts are exactly the flushed batches; timeBatchStream's append
+    // output is every CLOSED window, i.e. timebatch_expired's row set.
+    "ever_stream_replay" -> mirror(everStreamSql(user))((s, d) =>
       streaming.Replay.replay(s, ev(s, d), "event_id", 2000, "update")(sdf =>
         streaming.UniqueStreams.everStream(sdf, Seq("user_id"), Some("event_id")))),
     // composite-key streaming state (the struct-key analog of ever_multikey)
-    "ever_multikey_stream_replay" -> ((s, d) =>
+    "ever_multikey_stream_replay" -> mirror(everStreamSql(Seq("user_id", "event_type")))((s, d) =>
       streaming.Replay.replay(s, ev(s, d), "event_id", 2000, "update")(sdf =>
         streaming.UniqueStreams.everStream(sdf, Seq("user_id", "event_type"),
           Some("event_id")))),
     // the transformWithState backend, same oracle as ever_stream_replay
     // (requires the RocksDB provider — set for the run, then restored)
-    "ever_tws_stream_replay" -> ((s, d) => {
+    "ever_tws_stream_replay" -> mirror(everStreamSql(user))((s, d) => {
       streaming.UniqueStreams.withRocksDBStateStore(s) {
         streaming.Replay.replay(s, ev(s, d), "event_id", 2000, "update")(sdf =>
           streaming.UniqueStreams.everStreamTws(sdf, Seq("user_id"), Some("event_id")))
@@ -1356,7 +1536,7 @@ object SparkEntry {
     // from its checkpoint (offsets + keyed state restored). The
     // accumulated change log must hash-match the SAME oracle as the
     // uninterrupted ever_stream_replay.
-    "ever_restart_stream_replay" -> ((s, d) =>
+    "ever_restart_stream_replay" -> mirror(everStreamSql(user))((s, d) =>
       streaming.Replay.replayWithRestart(s, ev(s, d), "event_id", 2000)(sdf =>
         streaming.UniqueStreams.everStream(sdf, Seq("user_id"), Some("event_id")))),
     // the BOUNDED-state ever variant: keys idle longer than ttl (event
@@ -1370,19 +1550,39 @@ object SparkEntry {
     // (everStreamTws ttl) is wall-clock-driven (TimeMode.ProcessingTime)
     // and thus not replayable — this event-time row is its deterministic
     // analog; the TWS path stays sbt-pinned.
-    "ever_ttl_stream_replay" -> ((s, d) =>
+    // everStreamTtl change log: every event 'insert'; a replaced row
+    // 'expire' iff its key SURVIVED to the replacement — i.e. the
+    // chunk-boundary watermark before the successor's chunk (the ts at
+    // rank (chunk//500)*500; no-data micro-batches apply it) had not
+    // passed ts+ttl. Silently evicted keys emit nothing.
+    "ever_ttl_stream_replay" -> mirror(
+      s"""WITH r AS (SELECT *, epoch_ms(CAST(ts AS TIMESTAMP)) AS ms,
+        |    row_number() OVER (ORDER BY event_id) AS rn FROM events),
+        |nxt AS (SELECT *, lead(rn) OVER (PARTITION BY user_id ORDER BY event_id) AS rn2 FROM r),
+        |exp AS (SELECT nxt.event_id FROM nxt
+        |  LEFT JOIN r wb ON wb.rn = ((nxt.rn2 - 1) // 500) * 500
+        |  WHERE nxt.rn2 IS NOT NULL AND (wb.ms IS NULL OR wb.ms <= nxt.ms + $H12))
+        |SELECT $EVSQL, 'insert' AS change FROM events
+        |UNION ALL
+        |SELECT $EVSQL, 'expire' AS change FROM events
+        |WHERE event_id IN (SELECT event_id FROM exp)""".stripMargin
+    )((s, d) =>
       streaming.Replay.replay(s, ev(s, d), "event_id", 500, "update")(sdf =>
         streaming.UniqueStreams.everStreamTtl(sdf, Seq("user_id"), "ts",
           ttlMs = H12, seqCol = Some("event_id")))),
     // the FULL change log, expires included: each flush re-emits the
     // previous batch tagged "expire" — verified against the expired-batch
     // oracle union'd with the insert form (VERDICT r6 ask #4)
-    "lengthbatch_stream_replay" -> ((s, d) =>
+    // full change log: every flushed batch 'insert'; every flushed batch
+    // with a successor re-emitted 'expire' at the next flush
+    "lengthbatch_stream_replay" -> mirror(lengthBatchStreamSql(user, 40, latest = true))((s, d) =>
       streaming.Replay.replay(s, ev(s, d), "event_id", 2000, "update")(sdf =>
         streaming.UniqueStreams.lengthBatchStream(sdf, Seq("user_id"), "event_id", 40))),
     // fed in ts order (the operator is an order-insensitive windowed agg;
     // ts-ordered feeding keeps the watermark monotone so nothing is late)
-    "timebatch_stream_replay" -> ((s, d) =>
+    "timebatch_stream_replay" -> mirror(
+      timeBatchSql(user, DAY, Some(0L), keepFirst = false, replaceTs = false, "expired")
+    )((s, d) =>
       streaming.Replay.replay(s, ev(s, d), "ts", 2000, "append")(sdf =>
         streaming.UniqueStreams.timeBatchStream(sdf, Seq("user_id"), "event_id", "ts", DAY))),
     // OUT-OF-ORDER stress (VERDICT r7 stretch #8): same operator, same
@@ -1394,7 +1594,9 @@ object SparkEntry {
     // windows must hash-match the in-order oracle (end-of-stream slack
     // past the last day boundary is >23h at every sf, far above the 2h
     // delay, so the emitted window set is unchanged).
-    "timebatch_ooo_stream_replay" -> ((s, d) => {
+    "timebatch_ooo_stream_replay" -> mirror(
+      timeBatchSql(user, DAY, Some(0L), keepFirst = false, replaceTs = false, "expired")
+    )((s, d) => {
       val OOO = 7200000L // 2h disorder bound == watermark delay
       val fed = ev(s, d).withColumn("__ooo_ord",
         unix_millis(col("ts")) + pmod(xxhash64(col("event_id")), lit(OOO)))
@@ -1402,28 +1604,45 @@ object SparkEntry {
         streaming.UniqueStreams.timeBatchStream(sdf.drop("__ooo_ord"), Seq("user_id"),
           "event_id", "ts", DAY, delayMs = OOO))
     }),
-    "firsttimebatch_stream_replay" -> ((s, d) =>
+    // append output = closed windows only (the last window is still open)
+    "firsttimebatch_stream_replay" -> mirror(
+      timeBatchSql(user, DAY, Some(0L), keepFirst = true, replaceTs = false, "expired")
+    )((s, d) =>
       streaming.Replay.replay(s, ev(s, d), "ts", 2000, "append")(sdf =>
         streaming.UniqueStreams.timeBatchStream(sdf, Seq("user_id"), "event_id", "ts", DAY,
           keepFirst = true))),
-    "firstlengthbatch_stream_replay" -> ((s, d) =>
+    "firstlengthbatch_stream_replay" -> mirror(
+      lengthBatchStreamSql(user, 40, latest = false)
+    )((s, d) =>
       streaming.Replay.replay(s, ev(s, d), "event_id", 2000, "update")(sdf =>
         streaming.UniqueStreams.lengthBatchStream(sdf, Seq("user_id"), "event_id", 40,
           keepFirst = true))),
     // The events table's ts is monotone in event_id (checked per-sf), so
     // event_id-ordered feeding keeps the watermark monotone for the
     // event-time operators below — nothing is dropped as late.
-    "first_stream_replay" -> ((s, d) =>
+    // firstStream emits exactly the first-per-key rows (state = seen flag)
+    "first_stream_replay" -> mirror(firstSql(user))((s, d) =>
       streaming.Replay.replay(s, ev(s, d), "event_id", 2000, "update")(sdf =>
         streaming.UniqueStreams.firstStream(sdf, Seq("user_id"), "event_id"))),
-    "length_stream_replay" -> ((s, d) =>
+    // lengthStream's accumulated log: every event 'insert' once; every
+    // event that left the window (replaced or LRU-evicted) 'expire' once
+    // — i.e. everything outside the final window (= length_current).
+    "length_stream_replay" -> mirror(lengthStreamSql(user, 100))((s, d) =>
       streaming.Replay.replay(s, ev(s, d), "event_id", 2000, "update")(sdf =>
         streaming.UniqueStreams.lengthStream(sdf, Seq("user_id"), "event_id", 100))),
-    "time_stream_replay" -> ((s, d) =>
+    // timeStream's log: every event 'insert'; every replaced event
+    // 'expire' (exactly once — replacement or prior eviction); plus the
+    // latest-per-key rows whose event-time timeout (ts + window) fired,
+    // i.e. STRICTLY before the final watermark = max event-time ms
+    // (FlatMapGroupsWithStateExec fires timeouts with
+    // timeoutTimestamp < eviction watermark; the post-data no-data
+    // micro-batch applies the last watermark).
+    "time_stream_replay" -> mirror(timeStreamSql(user, WEEK))((s, d) =>
       streaming.Replay.replay(s, ev(s, d), "event_id", 2000, "update")(sdf =>
         streaming.UniqueStreams.timeStream(sdf, Seq("user_id"), "ts", WEEK,
           seqCol = Some("event_id")))),
-    "deduplicate_stream_replay" -> ((s, d) =>
+    // deduplicateStreamExact matches the batch fold bit-for-bit
+    "deduplicate_stream_replay" -> mirror(deduplicateSql(user, DAY))((s, d) =>
       streaming.Replay.replay(s, ev(s, d), "event_id", 2000, "update")(sdf =>
         streaming.UniqueStreams.deduplicateStreamExact(sdf, Seq("user_id"), "event_id",
           "ts", DAY))),
@@ -1434,7 +1653,7 @@ object SparkEntry {
     // the operator gets a real hash oracle. events.ts is strictly
     // monotone in event_id (TestDataCanarySpec pins feed order), the
     // monotone-stream regime the rotation contract is stated for.
-    "deduplicate_bloom_stream_replay" -> ((s, d) =>
+    "deduplicate_bloom_stream_replay" -> mirror(deduplicateBloomSql(user, DAY))((s, d) =>
       streaming.Replay.replay(s, ev(s, d), "event_id", 2000, "update")(sdf =>
         streaming.UniqueStreams.deduplicateStreamBloom(sdf, Seq("user_id"), "ts", DAY,
           numShards = 8, bitsPerShard = 1 << 20, seqCol = Some("event_id")))),
@@ -1445,14 +1664,20 @@ object SparkEntry {
     // make the run deterministic, so green is stable, not statistical)
     // the admitted set is EXACTLY first-per-key: the approximate
     // operator shares the exact `first` oracle.
-    "first_bloom_stream_replay" -> ((s, d) =>
+    "first_bloom_stream_replay" -> mirror(firstSql(user))((s, d) =>
       streaming.Replay.replay(s, ev(s, d), "event_id", 2000, "update")(sdf =>
         streaming.UniqueStreams.firstStreamBloom(sdf, Seq("user_id"),
           numShards = 8, bitsPerShard = 1 << 20, seqCol = Some("event_id")))),
     // FULL change log (insert + the previous flushed batch re-emitted as
     // expire on each flush — VERDICT r10 ask #5); the oracle unions the
     // flushed-batch insert set with its all-but-last-flushed expire set
-    "timelengthbatch_stream_replay" -> ((s, d) =>
+    // timeLengthBatchStream emits a batch when a later event crosses its
+    // time boundary (any batch before the last) or when the 50th distinct
+    // key length-flushes it — the final batch appears iff length-flushed.
+    // Full change log: every flushed batch 'insert'; every flushed batch
+    // except the LAST FLUSHED re-emitted 'expire' (with its own
+    // batch_start_ms) when the next flush happens.
+    "timelengthbatch_stream_replay" -> mirror(tlbStreamSql(user, DAY, 50))((s, d) =>
       streaming.Replay.replay(s, ev(s, d), "event_id", 2000, "update")(sdf =>
         streaming.UniqueStreams.timeLengthBatchStream(sdf, Seq("user_id"), "event_id",
           "ts", DAY, 50))),
@@ -1461,13 +1686,22 @@ object SparkEntry {
     // time batches, first-per-key, full insert+expire log (the append-mode
     // firsttimebatch_stream_replay above pins the windowed-agg production
     // shape; this row pins the expired stream)
-    "firsttimebatch_changelog_stream_replay" -> ((s, d) =>
+    // pure time batches (n unreachable), keepFirst: flushed = every
+    // non-empty batch before the last (the final batch never flushes —
+    // nothing crosses its boundary); expire = flushed minus the last
+    // flushed batch
+    "firsttimebatch_changelog_stream_replay" -> mirror(
+      tlbStreamSql(user, DAY, Int.MaxValue, keepFirst = true)
+    )((s, d) =>
       streaming.Replay.replay(s, ev(s, d), "event_id", 2000, "update")(sdf =>
         streaming.UniqueStreams.timeLengthBatchStream(sdf, Seq("user_id"), "event_id",
           "ts", DAY, Int.MaxValue, keepFirst = true))),
     // the no-time.out form (timeOutMs=0): batches close only when a later
     // event crosses the boundary
-    "externaltimebatch_stream_replay" -> ((s, d) =>
+    // externalTimeBatchStream (no time.out): every non-final non-empty
+    // batch closes when a later event crosses its end — exactly the
+    // batch operator's expired set, tagged with the batch END time.
+    "externaltimebatch_stream_replay" -> mirror(etbStreamSql(user, H6))((s, d) =>
       streaming.Replay.replay(s, ev(s, d), "event_id", 2000, "update")(sdf =>
         streaming.UniqueStreams.externalTimeBatchStream(sdf, Seq("user_id"), "event_id",
           "ts", H6, timeOutMs = 0L)).drop("flush_kind")),
@@ -1478,7 +1712,21 @@ object SparkEntry {
     // foreachBatch spec in UniqueStreamsSpec; this row hash-verifies the
     // in-query stream-static form: everStream(orders) ⨝ broadcast(customer)
     // emitting the joined change log).
-    "join_windows_stream_replay" -> ((s, d) => {
+    // everStream(orders by custkey) ⨝ customer change log: every order
+    // 'insert' once; every replaced order (non-latest per custkey at end
+    // of stream) 'expire' once — each joined to its customer row
+    "join_windows_stream_replay" -> mirror(
+      """SELECT c_custkey, c_name, o_orderkey, o_totalprice, o_orderdate,
+        |  'insert' AS change
+        |FROM orders JOIN customer ON o_custkey = c_custkey
+        |UNION ALL
+        |SELECT c_custkey, c_name, o_orderkey, o_totalprice, o_orderdate,
+        |  'expire' AS change
+        |FROM (SELECT *, row_number() OVER (PARTITION BY o_custkey
+        |        ORDER BY o_orderkey DESC) AS rn FROM orders)
+        |JOIN customer ON o_custkey = c_custkey
+        |WHERE rn > 1""".stripMargin
+    )((s, d) => {
       val cust = Tables.customer(s, d)
       streaming.Replay.replay(s, Tables.orders(s, d), "o_orderkey", 2000, "update")(sdf =>
         streaming.UniqueStreams.everStream(sdf, Seq("o_custkey"), Some("o_orderkey"))
@@ -1494,7 +1742,7 @@ object SparkEntry {
     // minima under the id-ordered feed. Verified against the SAME
     // recursive-CTE closure oracle as doc_neardup_clusters_md5, closing
     // the canonical-at-emission-time asymmetry.
-    "doc_neardup_clusters_stream_replay" -> ((s, d) => {
+    "doc_neardup_clusters_stream_replay" -> mirror(clustersSql(3, 4, 2, 0.2, 1000))((s, d) => {
       streaming.UniqueStreams.withRocksDBStateStore(s) {
         val log = streaming.Replay.replay(s, Tables.documents(s, d), "doc_id", 1000,
           "update")(sdf => streaming.NearDupStream.nearDupStreamMd5(sdf, "doc_id", "text"))
@@ -1516,7 +1764,28 @@ object SparkEntry {
     // per nation matching o_custkey; customer side: the live latest order
     // per custkey). Window keys differ from the join attribute on the
     // customer side, like the reference's symbol==company condition.
-    "join_two_windows_stream_replay" -> ((s, d) => {
+    // two-window event-by-event join. A joined row emits on exactly one
+    // side, decided by arrival order on the 2c / 2o+1 interleave: the
+    // order side emits (o, c) when c arrived first (c_custkey <=
+    // o_orderkey) and is still its nation's live window-B occupant at
+    // o's arrival; the customer side emits when o arrived first
+    // (o_orderkey < c_custkey) and is still its custkey's live window-A
+    // occupant at c's arrival.
+    "join_two_windows_stream_replay" -> mirror(
+      """SELECT o.o_orderkey, o.o_custkey, o.o_totalprice, c.c_name, c.c_nationkey
+        |FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
+        |WHERE c.c_custkey <= o.o_orderkey
+        |  AND NOT EXISTS (SELECT 1 FROM customer c2
+        |    WHERE c2.c_nationkey = c.c_nationkey
+        |      AND c2.c_custkey > c.c_custkey AND c2.c_custkey <= o.o_orderkey)
+        |UNION ALL
+        |SELECT o.o_orderkey, o.o_custkey, o.o_totalprice, c.c_name, c.c_nationkey
+        |FROM customer c JOIN orders o ON o.o_custkey = c.c_custkey
+        |WHERE o.o_orderkey < c.c_custkey
+        |  AND NOT EXISTS (SELECT 1 FROM orders o2
+        |    WHERE o2.o_custkey = o.o_custkey
+        |      AND o2.o_orderkey > o.o_orderkey AND o2.o_orderkey < c.c_custkey)""".stripMargin
+    )((s, d) => {
       val a = Tables.orders(s, d).select(
         lit("O").as("side"), (col("o_orderkey") * 2 + 1).as("__g"),
         col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
@@ -1569,7 +1838,7 @@ object SparkEntry {
     // the LLM tier's streaming twin: exact dedup as an infinite stream —
     // firstStream keyed on the content column is exactly exactDedup's
     // min_by(doc_id) when fed in doc_id order (same oracle)
-    "doc_exact_dedup_stream_replay" -> ((s, d) =>
+    "doc_exact_dedup_stream_replay" -> mirror(exactDedupSql)((s, d) =>
       streaming.Replay.replay(s, Tables.documents(s, d), "doc_id", 1000, "update")(sdf =>
         streaming.UniqueStreams.firstStream(sdf, Seq("text"), "doc_id"))),
     // continuous sequence packing: per-shard running token offsets folded
@@ -1579,7 +1848,7 @@ object SparkEntry {
     // STATIC pre-trained bigram model (stream-static joins + one updating
     // per-doc aggregation — the CCNet deployment shape). Same integer
     // surface as the batch row, so it shares its oracle (docLmPplSql).
-    "doc_lm_ppl_stream_replay" -> ((s, d) => {
+    "doc_lm_ppl_stream_replay" -> mirror(docLmPplSql(None))((s, d) => {
       val docs = Tables.documents(s, d)
       val model = llm.CorpusOps.lmTrain(docs, "text")
       streaming.Replay.replay(s, docs, "doc_id", 100, "update")(sdf =>
@@ -1594,7 +1863,7 @@ object SparkEntry {
     // docDsirSql. (The replay feeds whole docs per chunk, so each
     // doc's gram rows land in one micro-batch; the updating aggregation
     // itself is straddle-safe by construction, like doc_lm_ppl's.)
-    "doc_dsir_stream_replay" -> ((s, d) => {
+    "doc_dsir_stream_replay" -> mirror(docDsirSql(10, 2, Seq(1, 2)))((s, d) => {
       val docs = Tables.documents(s, d)
       val model = llm.CorpusOps.dsirTrain(
         docs.filter(col("doc_id") % 10 === 0), "text",
@@ -1610,7 +1879,7 @@ object SparkEntry {
     // STATIC pre-built index (stateless stream-static joins + one
     // updating (query, doc) aggregation — the search deployment shape).
     // Same integer surface as the batch row, so it shares docBm25Sql.
-    "doc_bm25_stream_replay" -> ((s, d) => {
+    "doc_bm25_stream_replay" -> mirror(docBm25Sql(10, 0.5))((s, d) => {
       val docs = Tables.documents(s, d)
       val idx0 = llm.TextSearch.bm25Index(
         docs.filter(col("doc_id") % 10 =!= 0), "doc_id", "text")
@@ -1632,7 +1901,7 @@ object SparkEntry {
     // (query, doc) aggregation restores to the pre-batch version, so the
     // final statistics are identical and the row shares docBm25Sql
     // (the repo's standard restart coverage, like doc_neardup_restart).
-    "doc_bm25_restart_stream_replay" -> ((s, d) => {
+    "doc_bm25_restart_stream_replay" -> mirror(docBm25Sql(10, 0.5))((s, d) => {
       val docs = Tables.documents(s, d)
       val idx0 = llm.TextSearch.bm25Index(
         docs.filter(col("doc_id") % 10 =!= 0), "doc_id", "text")
@@ -1656,7 +1925,7 @@ object SparkEntry {
     // (row_number ≤ maxDf per token) and the at-probe df in SQL. The
     // per-(query, doc) fold of the emitted per-token rows is the
     // consumer-side contract (as in doc_bm25_stream_replay's ranking).
-    "doc_bm25_index_stream_replay" -> ((s, d) => {
+    "doc_bm25_index_stream_replay" -> mirror(docBm25IngestSql(10, 250))((s, d) => {
       streaming.UniqueStreams.withRocksDBStateStore(s) {
         val tagged = Tables.documents(s, d).select(col("doc_id"), col("text"),
           (col("doc_id") % 10 === 0).as("is_query"))
@@ -1673,7 +1942,7 @@ object SparkEntry {
     // recovered from the checkpoint — the RocksDB df/postings state must
     // restore exactly for the later queries' probes to match (append-mode
     // emissions are final, so the row shares the ingestion mirror).
-    "doc_bm25_index_restart_stream_replay" -> ((s, d) => {
+    "doc_bm25_index_restart_stream_replay" -> mirror(docBm25IngestSql(10, 250))((s, d) => {
       streaming.UniqueStreams.withRocksDBStateStore(s) {
         val tagged = Tables.documents(s, d).select(col("doc_id"), col("text"),
           (col("doc_id") % 10 === 0).as("is_query"))
@@ -1694,7 +1963,7 @@ object SparkEntry {
     // replay while completed docs score identically (the window key is
     // constant within a doc and merely partitions the doc set) — each
     // row shares its unwindowed sibling's batch mirror.
-    "doc_lm_ppl_windowed_stream_replay" -> ((s, d) => {
+    "doc_lm_ppl_windowed_stream_replay" -> mirror(docLmPplSql(None))((s, d) => {
       val docs = Tables.documents(s, d)
       val model = llm.CorpusOps.lmTrain(docs, "text")
       streaming.Replay.replay(s,
@@ -1705,7 +1974,7 @@ object SparkEntry {
         .select("doc_id", "n_tokens", "n_bigrams", "oov_bigrams",
           "hit_prev", "hit_bigram")
     }),
-    "doc_dsir_windowed_stream_replay" -> ((s, d) => {
+    "doc_dsir_windowed_stream_replay" -> mirror(docDsirSql(10, 2, Seq(1, 2)))((s, d) => {
       val docs = Tables.documents(s, d)
       val model = llm.CorpusOps.dsirTrain(
         docs.filter(col("doc_id") % 10 === 0), "text",
@@ -1720,7 +1989,7 @@ object SparkEntry {
         .select("doc_id", "n_grams", "oov_tgt", "oov_raw",
           "hit_tgt", "hit_raw")
     }),
-    "doc_bm25_windowed_stream_replay" -> ((s, d) => {
+    "doc_bm25_windowed_stream_replay" -> mirror(docBm25Sql(10, 0.5))((s, d) => {
       val docs = Tables.documents(s, d)
       val idx0 = llm.TextSearch.bm25Index(
         docs.filter(col("doc_id") % 10 =!= 0), "doc_id", "text")
@@ -1739,7 +2008,7 @@ object SparkEntry {
     // rows but the WATERMARK itself (a restart that lost it would
     // re-admit or drop rows differently) — the one recovery surface the
     // unwindowed restart rows don't exercise. Shares the batch mirror.
-    "doc_dsir_windowed_restart_stream_replay" -> ((s, d) => {
+    "doc_dsir_windowed_restart_stream_replay" -> mirror(docDsirSql(10, 2, Seq(1, 2)))((s, d) => {
       val docs = Tables.documents(s, d)
       val model = llm.CorpusOps.dsirTrain(
         docs.filter(col("doc_id") % 10 === 0), "text",
@@ -1754,7 +2023,7 @@ object SparkEntry {
         .select("doc_id", "n_grams", "oov_tgt", "oov_raw",
           "hit_tgt", "hit_raw")
     }),
-    "doc_pack_stream_replay" -> ((s, d) =>
+    "doc_pack_stream_replay" -> mirror(packSql(512))((s, d) =>
       streaming.UniqueStreams.withRocksDBStateStore(s) {
         streaming.Replay.replay(s, Tables.documents(s, d), "doc_id", 100, "update")(sdf =>
           streaming.PackStream.packStream(sdf, "doc_id", "text", "source", budget = 512))
@@ -1777,7 +2046,7 @@ object SparkEntry {
     // ANN oracle with that restriction — every arrival's retrieval
     // result, not just a fixed query set. sim excluded like emb_ann_lsh
     // (ranks compared; the doubles are representation-sensitive).
-    "emb_ann_stream_replay" -> ((s, d) => {
+    "emb_ann_stream_replay" -> mirror(embAnnStreamSql(8, 10))((s, d) => {
       streaming.UniqueStreams.withRocksDBStateStore(s) {
         streaming.Replay.replay(s, Tables.embeddings(s, d), "vec_id", 1000,
           "append")(sdf => streaming.AnnStream.annStream(sdf, "vec_id", "embedding"))
@@ -1788,7 +2057,7 @@ object SparkEntry {
     // (probe fan-out to own + hamming-1 shards, insert into own), stage B
     // is the query-keyed top-k merge; per-bucket candidates are disjoint
     // so the merged log equals the monolith's — same DuckDB mirror.
-    "emb_ann_sharded_lsh_stream_replay" -> ((s, d) => {
+    "emb_ann_sharded_lsh_stream_replay" -> mirror(embAnnStreamSql(8, 10))((s, d) => {
       streaming.UniqueStreams.withRocksDBStateStore(s) {
         val hits = streaming.Replay.replay(s, Tables.embeddings(s, d),
           "vec_id", 1000, "append")(sdf =>
@@ -1802,7 +2071,7 @@ object SparkEntry {
     // member state must restore exactly for later probes' candidate sets
     // to match (append emissions are final, so the accumulated hit log —
     // and therefore the merged output — shares the monolith mirror)
-    "emb_ann_sharded_lsh_restart_stream_replay" -> ((s, d) => {
+    "emb_ann_sharded_lsh_restart_stream_replay" -> mirror(embAnnStreamSql(8, 10))((s, d) => {
       streaming.UniqueStreams.withRocksDBStateStore(s) {
         val hits = streaming.Replay.replayWithRestart(s, Tables.embeddings(s, d),
           "vec_id", 1000)(sdf =>
@@ -1815,7 +2084,7 @@ object SparkEntry {
     // the stateful index stores 8-int PQ codes instead of raw vectors
     // (32× smaller state); the mirror computes the identical ADC scores
     // over earlier arrivals, so the full retrieval log hash-matches
-    "emb_ann_pq_stream_replay" -> ((s, d) => {
+    "emb_ann_pq_stream_replay" -> mirror(embPqStreamSql)((s, d) => {
       streaming.UniqueStreams.withRocksDBStateStore(s) {
         val (cb, _) = llm.Similarity.anchorCodebook(Tables.embeddings(s, d),
           "vec_id", "embedding", dim = 64, nSub = 8, codesPerSub = 16)
@@ -1827,7 +2096,7 @@ object SparkEntry {
     // ... bucket-sharded PQ twin: byte-packed-code state per LSH shard,
     // probe rows carry the arrival's ADC LUT — same mirror as the
     // pq monolith above (disjoint per-bucket candidates, exact merge)
-    "emb_ann_pq_sharded_stream_replay" -> ((s, d) => {
+    "emb_ann_pq_sharded_stream_replay" -> mirror(embPqStreamSql)((s, d) => {
       streaming.UniqueStreams.withRocksDBStateStore(s) {
         val (cb, _) = llm.Similarity.anchorCodebook(Tables.embeddings(s, d),
           "vec_id", "embedding", dim = 64, nSub = 8, codesPerSub = 16)
@@ -1846,7 +2115,9 @@ object SparkEntry {
     // The mirror is the batch ivfPq mirror with every vector as a query
     // and candidates restricted to earlier arrivals, so the full
     // retrieval log hash-matches.
-    "emb_ann_ivfpq_stream_replay" -> ((s, d) => {
+    "emb_ann_ivfpq_stream_replay" -> mirror(
+      embIvfPqSql(16, 4, 8, 16, 10, stream = true)
+    )((s, d) => {
       streaming.UniqueStreams.withRocksDBStateStore(s) {
         val emb = Tables.embeddings(s, d)
         val cent = llm.Similarity.anchorCentroids(emb, "vec_id", "embedding",
@@ -1864,7 +2135,9 @@ object SparkEntry {
     // top-k merge in stage B, bridged by a replayable hit log exactly
     // like doc_dup_spans_sharded_stream_replay) — same config, same
     // DuckDB mirror as the monolith row
-    "emb_ann_ivfpq_sharded_stream_replay" -> ((s, d) => {
+    "emb_ann_ivfpq_sharded_stream_replay" -> mirror(
+      embIvfPqSql(16, 4, 8, 16, 10, stream = true)
+    )((s, d) => {
       streaming.UniqueStreams.withRocksDBStateStore(s) {
         val emb = Tables.embeddings(s, d)
         val cent = llm.Similarity.anchorCentroids(emb, "vec_id", "embedding",
@@ -1882,7 +2155,9 @@ object SparkEntry {
     // ... and its RESIDUAL form: state codes are v − centroid(own cell),
     // scored with the per-cell norm-correction tables — the streaming
     // analog of emb_ann_ivfpq_residual, same deployed-literal contract
-    "emb_ann_ivfpq_residual_stream_replay" -> ((s, d) => {
+    "emb_ann_ivfpq_residual_stream_replay" -> mirror(
+      embIvfPqResidualSql(16, 4, 8, 16, 10, stream = true)
+    )((s, d) => {
       streaming.UniqueStreams.withRocksDBStateStore(s) {
         val emb = Tables.embeddings(s, d)
         val model = llm.Similarity.residualPqModel(emb, "vec_id", "embedding",
@@ -1901,7 +2176,7 @@ object SparkEntry {
     // batch cross-pairs relation (caps unbound at this geometry, where
     // the eval-side-only online cap and the batch combined cap admit
     // identical bucket sets)
-    "doc_fuzzy_pairs_stream_replay" -> ((s, d) => {
+    "doc_fuzzy_pairs_stream_replay" -> mirror(crossPairsSql(3, 4, 2, 0.2, 1000, 10))((s, d) => {
       val docs = Tables.documents(s, d)
       // Stats form: the persisted eval index is released once the replay
       // has drained (the sink table is materialized by then)
@@ -1922,7 +2197,9 @@ object SparkEntry {
     // bucket (41 eval members > 40) while the batch twin's combined cap
     // drops four, so the two logs differ by design; this row pins the
     // eval-side-only policy against its own DuckDB mirror
-    "doc_fuzzy_pairs_capped_stream_replay" -> ((s, d) => {
+    "doc_fuzzy_pairs_capped_stream_replay" -> mirror(
+      crossPairsStreamSql(1, 2, 1, 0.1, 40, 10)
+    )((s, d) => {
       val docs = Tables.documents(s, d)
       var cs: streaming.FuzzyDecontamStream.ContaminationStream = null
       try
@@ -1940,7 +2217,9 @@ object SparkEntry {
     // RESTART harness: the cell→id-list and id→codes MapStates must
     // restore from the checkpoint such that the accumulated retrieval
     // log equals the uninterrupted replay's (shared oracle)
-    "emb_ann_ivfpq_residual_restart_stream_replay" -> ((s, d) => {
+    "emb_ann_ivfpq_residual_restart_stream_replay" -> mirror(
+      embIvfPqResidualSql(16, 4, 8, 16, 10, stream = true)
+    )((s, d) => {
       streaming.UniqueStreams.withRocksDBStateStore(s) {
         val emb = Tables.embeddings(s, d)
         val model = llm.Similarity.residualPqModel(emb, "vec_id", "embedding",
@@ -1958,7 +2237,7 @@ object SparkEntry {
     // over those edges — later demotions connect superseded roots onward
     // — must equal the recursive-CTE closure over the emb_neardup_pairs
     // relation, min label per component.
-    "emb_neardup_clusters_stream_replay" -> ((s, d) => {
+    "emb_neardup_clusters_stream_replay" -> mirror(embClustersSql(0.4, 8, 4))((s, d) => {
       streaming.UniqueStreams.withRocksDBStateStore(s) {
         val log = streaming.Replay.replay(s, Tables.embeddings(s, d), "vec_id", 1000,
           "update")(sdf => streaming.NearDupStream.embNearDupStream(sdf, "vec_id",
@@ -1977,7 +2256,7 @@ object SparkEntry {
     // emb_neardup_pairs oracle checks (groups=8, planesPerGroup=4,
     // threshold=0.4 — the low-similarity configuration this corpus
     // needs, see emb_neardup_pairs).
-    "emb_neardup_stream_replay" -> ((s, d) => {
+    "emb_neardup_stream_replay" -> mirror(embDedupSql(0.4, 8, 4))((s, d) => {
       streaming.UniqueStreams.withRocksDBStateStore(s) {
         val emb = Tables.embeddings(s, d)
         val log = streaming.Replay.replay(s, emb, "vec_id", 1000, "update")(sdf =>
@@ -1989,7 +2268,10 @@ object SparkEntry {
           .select("vec_id")
       }
     }),
-    "doc_neardup_stream_replay" -> ((s, d) => {
+    // the streaming operator's final survivors = the batch CC survivors
+    "doc_neardup_stream_replay" -> mirror(
+      dedupIdsSql(3, 4, 2, 0.2, 1000, cols = DOCSQL)
+    )((s, d) => {
       streaming.UniqueStreams.withRocksDBStateStore(s) { // transformWithState backend
         val docs = Tables.documents(s, d)
         val log = streaming.Replay.replay(s, docs, "doc_id", 1000, "update")(sdf =>
@@ -2008,7 +2290,9 @@ object SparkEntry {
     // single-component summaries, payload store, union-find forest, seq
     // counter) — and the accumulated change log must still reduce to the
     // batch survivor set (same closure oracle as the uninterrupted row).
-    "doc_neardup_restart_stream_replay" -> ((s, d) => {
+    "doc_neardup_restart_stream_replay" -> mirror(
+      dedupIdsSql(3, 4, 2, 0.2, 1000, cols = DOCSQL)
+    )((s, d) => {
       streaming.UniqueStreams.withRocksDBStateStore(s) {
         val docs = Tables.documents(s, d)
         val log = streaming.Replay.replayWithRestart(s, docs, "doc_id", 100)(sdf =>
@@ -2019,7 +2303,40 @@ object SparkEntry {
         docs.join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
       }
     }),
-    "externaltimebatch_timeout_replay" -> ((s, d) => {
+    // marker-driven time.out replay. Emission model (matching the
+    // reference's TIMER + boundary branches exactly):
+    //  - marker after event c idle-flushes the open grid window w(c) =
+    //    c's window: latest-per-key among w's events with event_id <= c;
+    //    'timeout' for the window's first idle flush, 'append' after
+    //    (the batch merged with rows already sent). Always dirty — the
+    //    cutoff event c itself arrived since any previous emit.
+    //  - a window w with later events beyond it closes: 'close' if never
+    //    idle-flushed; 'append' (full merged batch) if idle-flushed AND
+    //    events arrived after the last marker; NOTHING if all its rows
+    //    were already sent (appendToOutputChunk's currentEvents>0 guard,
+    //    UniqueExternalTimeBatchWindowProcessor.java:412).
+    //  - the final window never closes (only marker emissions).
+    "externaltimebatch_timeout_replay" -> mirror(
+      s"""WITH evw AS (SELECT *, epoch_ms(ts) // $H6 AS w FROM events),
+        |mk AS (SELECT event_id AS c, epoch_ms(ts) // $H6 AS w FROM events
+        |       QUALIFY row_number() OVER (ORDER BY event_id) % 2500 = 0),
+        |mk2 AS (SELECT c, w, c = min(c) OVER (PARTITION BY w) AS isf FROM mk),
+        |me AS (SELECT m.c, CASE WHEN m.isf THEN 'timeout' ELSE 'append' END AS fk, e.*,
+        |         row_number() OVER (PARTITION BY m.c, e.user_id ORDER BY e.event_id DESC) AS rn
+        |       FROM mk2 m JOIN evw e ON e.w = m.w AND e.event_id <= m.c),
+        |lastc AS (SELECT w, max(c) AS lc FROM mk GROUP BY w),
+        |cl AS (SELECT wi.w, CASE WHEN l.lc IS NULL THEN 'close' ELSE 'append' END AS fk
+        |       FROM (SELECT w, max(event_id) AS maxid FROM evw GROUP BY w) wi
+        |       LEFT JOIN lastc l ON wi.w = l.w
+        |       WHERE wi.w < (SELECT max(w) FROM evw)
+        |         AND (l.lc IS NULL OR wi.maxid > l.lc)),
+        |ce AS (SELECT c.fk, e.*,
+        |         row_number() OVER (PARTITION BY e.w, e.user_id ORDER BY e.event_id DESC) AS rn
+        |       FROM cl c JOIN evw e ON e.w = c.w)
+        |SELECT $EVSQL, fk AS flush_kind, (w + 1) * $H6 AS batch_end_ms FROM me WHERE rn = 1
+        |UNION ALL
+        |SELECT $EVSQL, fk AS flush_kind, (w + 1) * $H6 AS batch_end_ms FROM ce WHERE rn = 1""".stripMargin
+    )((s, d) => {
       val events = ev(s, d)
       val tagged = events
         .withColumn("__ord", col("event_id") * 2)
@@ -2037,24 +2354,14 @@ object SparkEntry {
           "ts", H6, timeOutMs = 0L, startMs = Some(0L), flushMarkerCol = Some("__flush")))
         .drop("__ord", "__flush")
     }),
-  )
-
-  /** Production variants benchmarked but NOT oracle-checked: DuckDB cannot
-    * compute xxhash64, so their verification is carried by (a) the
-    * hash-checked md5-family twins above — same pipeline, same semantics,
-    * different base hash — and (b) the sbt recall/ground-truth suites
-    * (LlmOpsSpec). Kept out of `queries` so CORRECTNESS reports contain no
-    * unverifiable rows; Bench runs `queries ++ benchQueries` minus the
-    * `_md5`/`_replay` verification mirrors.
-    */
-  def benchQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "doc_minhash_pairs" -> ((s, d) =>
+    // ---- production rows: xxhash64 keys or ln/exp scores DuckDB cannot
+    // compute, each checked through the named row's pipeline ----
+    "doc_minhash_pairs" -> production("doc_minhash_pairs_md5")((s, d) =>
       llm.TextDedup.minhashPairs(Tables.documents(s, d), "text", "doc_id",
         threshold = 0.2)),
     // production edit-distance dedup: native xxhash64 char-shingle
-    // banding end-to-end + thresholded-lev verify + CC (the md5 twin
-    // carries the oracle check)
-    "doc_editdist_dedup" -> ((s, d) => {
+    // banding end-to-end + thresholded-lev verify + CC
+    "doc_editdist_dedup" -> production("doc_editdist_dedup_md5")((s, d) => {
       val docs = Tables.documents(s, d)
       llm.TextDedup.dedupByPairs(docs, "doc_id",
         llm.TextDedup.editDistancePairs(docs, "text", "doc_id",
@@ -2063,8 +2370,8 @@ object SparkEntry {
     }),
     // production CHARACTER-level cross-corpus decontamination: xxhash64
     // char-shingle banding, bipartite candidates, thresholded-lev
-    // verify, anti-join (doc_editdist_decontam_md5 carries the oracle)
-    "doc_editdist_decontam" -> ((s, d) => {
+    // verify, anti-join
+    "doc_editdist_decontam" -> production("doc_editdist_decontam_md5")((s, d) => {
       val docs = Tables.documents(s, d)
       llm.TextDedup.editDecontaminate(
         docs.filter(col("doc_id") % 10 =!= 0),
@@ -2074,8 +2381,7 @@ object SparkEntry {
     }),
     // production quality classifier: xxhash64 bucketing, finer feature
     // space (4 hex chars), full train → score with the double log-odds
-    // (doc_quality_clf_md5 carries the integer-surface oracle)
-    "doc_quality_clf" -> ((s, d) => {
+    "doc_quality_clf" -> production("doc_quality_clf_md5")((s, d) => {
       val docs = Tables.documents(s, d)
       val model = llm.CorpusOps.qualityClfTrain(
         docs.filter(col("lang") === "en"),
@@ -2084,10 +2390,9 @@ object SparkEntry {
       llm.CorpusOps.qualityClfScore(docs, "doc_id", "text", model)
     }),
     // production BM25: the full index → score → rank path with the
-    // ln-idf fold and per-query window (doc_bm25_stats carries the
-    // oracle check on the integer join surface; score/rank re-derived
-    // in TextSearchSpec)
-    "doc_bm25_topk" -> ((s, d) => {
+    // ln-idf fold and per-query window (score and rank re-derived in
+    // TextSearchSpec)
+    "doc_bm25_topk" -> production("doc_bm25_stats")((s, d) => {
       val docs = Tables.documents(s, d)
       val idx = llm.TextSearch.bm25Index(
         docs.filter(col("doc_id") % 10 =!= 0), "doc_id", "text")
@@ -2097,9 +2402,9 @@ object SparkEntry {
         "query_id", "text", idx, k = 10)
     }),
     // production DSIR: xxhash64 bucketing end-to-end, and the full
-    // train → weigh → Gumbel-top-k selection (the md5 stats twin carries
-    // the oracle check; selection determinism is spec-pinned)
-    "doc_dsir_select" -> ((s, d) => {
+    // train → weigh → Gumbel-top-k selection (selection determinism is
+    // spec-pinned)
+    "doc_dsir_select" -> production("doc_dsir_md5")((s, d) => {
       val docs = Tables.documents(s, d)
       val model = llm.CorpusOps.dsirTrain(
         docs.filter(col("doc_id") % 10 === 0), "text",
@@ -2108,39 +2413,37 @@ object SparkEntry {
         docs.filter(col("doc_id") % 10 =!= 0), "doc_id", "text", model,
         k = 100)
     }),
-    "doc_simhash" -> ((s, d) =>
+    "doc_simhash" -> production("doc_simhash_md5")((s, d) =>
       llm.TextDedup.simhashDf(Tables.documents(s, d), "doc_id", "text")
         .withColumnRenamed("id", "doc_id")),
-    "doc_ngram_pairs" -> ((s, d) =>
+    "doc_ngram_pairs" -> production("doc_ngram_pairs_md5")((s, d) =>
       llm.TextDedup.ngramJaccardPairs(Tables.documents(s, d), "text", "doc_id",
         threshold = 0.1)),
-    "doc_simhash_pairs" -> ((s, d) =>
+    "doc_simhash_pairs" -> production("doc_simhash_pairs_md5")((s, d) =>
       llm.TextDedup.simhashPairs(Tables.documents(s, d), "text", "doc_id")),
-    // production CC clustering over the xxhash64 minhash pairs (the md5
-    // twin carries the oracle check)
-    "doc_neardup_clusters" -> ((s, d) =>
+    // production CC clustering over the xxhash64 minhash pairs
+    "doc_neardup_clusters" -> production("doc_neardup_clusters_md5")((s, d) =>
       llm.TextDedup.nearDupClusters(
         llm.TextDedup.minhashPairs(Tables.documents(s, d), "text", "doc_id",
           threshold = 0.2))),
-    "doc_fingerprint" -> ((s, d) =>
+    "doc_fingerprint" -> production("doc_fingerprint_md5")((s, d) =>
       llm.TextAnalysis.fingerprint(Tables.documents(s, d), "text")
         .select("doc_id", "fp_min_gram", "fp_full")),
     // production line dedup: xxhash64 line keys (CCNet dedups on hashes)
-    "doc_line_dedup_xx" -> ((s, d) =>
+    "doc_line_dedup_xx" -> production("doc_line_dedup")((s, d) =>
       llm.CorpusOps.lineDedup(
         llm.CorpusOps.withSyntheticLines(Tables.documents(s, d), "doc_id", "text"),
         "doc_id", "lines_text", minDf = 3, hashedKeys = true)),
     // production span dedup: 8-byte xxhash64 gram keys in the shuffle
-    // instead of gram strings (the `queries` twins carry the oracle)
-    "doc_dup_spans_xx" -> ((s, d) =>
+    // instead of gram strings
+    "doc_dup_spans_xx" -> production("doc_dup_spans")((s, d) =>
       llm.TextDedup.duplicateSpans(Tables.documents(s, d), "doc_id", "text",
         k = 5, minCount = 2, hashedKeys = true)),
-    "doc_dup_span_removal_xx" -> ((s, d) =>
+    "doc_dup_span_removal_xx" -> production("doc_dup_span_removal")((s, d) =>
       llm.TextDedup.removeDuplicateSpans(Tables.documents(s, d), "doc_id", "text",
         k = 5, minCount = 2, hashedKeys = true)),
-    // production fuzzy decontamination: xxhash64 shingles (the md5 twin
-    // carries the oracle check)
-    "doc_fuzzy_decontam" -> ((s, d) => {
+    // production fuzzy decontamination: xxhash64 shingles
+    "doc_fuzzy_decontam" -> production("doc_fuzzy_decontam_md5")((s, d) => {
       val docs = Tables.documents(s, d)
       llm.TextDedup.fuzzyDecontaminate(
         docs.filter(col("doc_id") % 10 =!= 0),
@@ -2148,9 +2451,8 @@ object SparkEntry {
         .select("doc_id")
     }),
     // production curation composition: the doc_curation_pipeline_md5
-    // chain with xxhash64 fuzzy decontamination (the md5 twin carries
-    // the end-to-end oracle check)
-    "doc_curation_pipeline" -> ((s, d) => {
+    // chain with xxhash64 fuzzy decontamination
+    "doc_curation_pipeline" -> production("doc_curation_pipeline_md5")((s, d) => {
       val docs = Tables.documents(s, d)
       val deduped = llm.TextDedup.exactDedup(docs, Seq("text"), "doc_id")
       val dec = llm.TextDedup.fuzzyDecontaminate(
@@ -2159,403 +2461,5 @@ object SparkEntry {
       val capped = llm.CorpusOps.capPerGroup(dec, "source", "doc_id", 10)
       llm.CorpusOps.packSequences(capped, "doc_id", "text", "source", budget = 512)
     }),
-    // production float-feature path (the `queries` entry is the
-    // integer-lane checked twin); same key so the bench metric keeps
-    // measuring the production shape across rounds
-    "mm_features" -> ((s, d) =>
-      llm.Multimodal.extractFeatures(
-        llm.Multimodal.withSyntheticMedia(Tables.documents(s, d), "doc_id", "text"),
-        "doc_id")),
   )
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted keys get a rows-only check.
-    */
-  def oracleSql: Map[String, String] = {
-    import UniqueOracles._
-    import TextOracles._
-    import EmbeddingOracles._
-    import MediaOracles._
-    val user = Seq("user_id")
-    Map(
-      "ever_current" -> everSql(user, "current"),
-      "ever_expired" -> everSql(user, "expired"),
-      "ever_multikey" -> everSql(Seq("user_id", "event_type"), "current"),
-      "ever_all" -> everSql(user, "all"),
-      "first_current" -> firstSql(user),
-      "time_current" -> timeSql(user, WEEK, "current"),
-      "time_expired" -> timeSql(user, WEEK, "expired"),
-      // timeBatch/firstTimeBatch anchor the epoch grid (start 0);
-      // externalTimeBatch anchors at min(ts) (start None)
-      "timebatch_current" ->
-        timeBatchSql(user, DAY, Some(0L), keepFirst = false, replaceTs = false, "current"),
-      "timebatch_expired" ->
-        timeBatchSql(user, DAY, Some(0L), keepFirst = false, replaceTs = false, "expired"),
-      "firsttimebatch_current" ->
-        timeBatchSql(user, DAY, Some(0L), keepFirst = true, replaceTs = false, "current"),
-      "firsttimebatch_expired" ->
-        timeBatchSql(user, DAY, Some(0L), keepFirst = true, replaceTs = false, "expired"),
-      "externaltimebatch_current" ->
-        timeBatchSql(user, H6, None, keepFirst = false, replaceTs = false, "current"),
-      "externaltimebatch_replacets" ->
-        timeBatchSql(user, H6, None, keepFirst = false, replaceTs = true, "current"),
-      "externaltimebatch_expired" ->
-        timeBatchSql(user, H6, None, keepFirst = false, replaceTs = false, "expired"),
-      "length_current" -> lengthSql(user, 100, "current"),
-      "length_expired" -> lengthSql(user, 100, "expired"),
-      "lengthbatch_current" -> lengthBatchSql(user, 40, latest = true, expiredOnly = false),
-      "lengthbatch_expired" -> lengthBatchSql(user, 40, latest = true, expiredOnly = true),
-      "firstlengthbatch_current" -> lengthBatchSql(user, 40, latest = false, expiredOnly = false),
-      "firstlengthbatch_expired" -> lengthBatchSql(user, 40, latest = false, expiredOnly = true),
-      "timelengthbatch_current" -> timeLengthBatchSql(user, DAY, 50, "current"),
-      "timelengthbatch_expired" -> timeLengthBatchSql(user, DAY, 50, "expired"),
-      "deduplicate" -> deduplicateSql(user, DAY),
-      "deduplicate_salted" -> deduplicateSql(user, DAY),
-      "join_windows" ->
-        """SELECT c.c_custkey, c.c_name, o.o_orderkey, o.o_totalprice, o.o_orderdate FROM (
-          |  SELECT * FROM (
-          |    SELECT *, row_number() OVER (PARTITION BY o_custkey ORDER BY o_orderkey DESC) AS rn
-          |    FROM orders) WHERE rn = 1) o
-          |JOIN customer c ON o.o_custkey = c.c_custkey""".stripMargin,
-      "agg_over_window" ->
-        s"""SELECT event_type, count(*) AS cnt, min(value) AS min_value,
-           |  max(value) AS max_value, CAST(sum(event_id) AS BIGINT) AS sum_seq
-           |FROM (${everSql(user, "current")}) GROUP BY event_type""".stripMargin,
-      "window_star_agg" ->
-        """SELECT r_name, count(*) AS cnt, min(o_totalprice) AS min_price,
-          |  max(o_totalprice) AS max_price
-          |FROM (SELECT * FROM (
-          |    SELECT *, row_number() OVER (PARTITION BY o_custkey ORDER BY o_orderkey DESC) AS rn
-          |    FROM orders) WHERE rn = 1) o
-          |JOIN customer c ON o.o_custkey = c.c_custkey
-          |JOIN nation n ON c.c_nationkey = n.n_nationkey
-          |JOIN region r ON n.n_regionkey = r.r_regionkey
-          |GROUP BY r_name""".stripMargin,
-      "doc_exact_dedup" -> exactDedupSql,
-      // firstStream keyed on text, fed in doc_id order = exactDedup
-      "doc_exact_dedup_stream_replay" -> exactDedupSql,
-      "doc_text_stats" -> docTextStatsSql,
-      "doc_quality" -> docQualitySql,
-      "doc_langid" -> docLangIdSql,
-      // self-trained: the model's train split is every document
-      "doc_lm_ppl" -> docLmPplSql(None),
-      "doc_lm_ppl_stream_replay" -> docLmPplSql(None),
-      "doc_lm_ppl_windowed_stream_replay" -> docLmPplSql(None),
-      "doc_dsir_windowed_stream_replay" -> docDsirSql(10, 2, Seq(1, 2)),
-      "doc_dsir_windowed_restart_stream_replay" -> docDsirSql(10, 2, Seq(1, 2)),
-      "doc_bm25_windowed_stream_replay" -> docBm25Sql(10, 0.5),
-      "doc_quality_clf_md5" -> docQualityClfSql,
-      "doc_quality_clf_stream_replay" -> docQualityClfSql,
-      "doc_dsir_md5" -> docDsirSql(10, 2, Seq(1, 2)),
-      "doc_dsir_stream_replay" -> docDsirSql(10, 2, Seq(1, 2)),
-      "doc_bm25_stats" -> docBm25Sql(10, 0.5),
-      "doc_bm25_stream_replay" -> docBm25Sql(10, 0.5),
-      "doc_bm25_index_stream_replay" -> docBm25IngestSql(10, 250),
-      "doc_bm25_index_restart_stream_replay" -> docBm25IngestSql(10, 250),
-      "doc_bm25_restart_stream_replay" -> docBm25Sql(10, 0.5),
-      "doc_repetition" -> docRepetitionSql,
-      "doc_boilerplate_phrases" -> boilerplateSql(3, 5),
-      "doc_decontam" -> decontamSql(5, 50),
-      // the streaming operator's per-shard running fold in id order IS the
-      // batch window
-      "doc_pack" -> packSql(512),
-      "doc_pack_stream_replay" -> packSql(512),
-      // the four-stage curation chain, mirrored end to end (each stage
-      // consumes the previous stage's output)
-      "doc_curation_pipeline_md5" -> curationPipelineSql(3, 4, 2, 0.2, 1000, 10, 10, 512),
-      "mm_curation_pipeline_md5" ->
-        mmCurationPipelineSql(3, 32, 3, 4, 2, 0.2, 1000, 10, 10, 512),
-      "doc_sample_md5" -> sampleSql("1999", "3333"),
-      // dropped-line relation (and its streaming replays): 0-based (doc,
-      // pos) of every line appearing in >= 3 distinct docs
-      "doc_dup_lines" -> dupLinesSql(3),
-      "doc_dup_lines_stream_replay" -> dupLinesSql(3),
-      "doc_dup_lines_sharded_stream_replay" -> dupLinesSql(3),
-      "doc_line_dedup" -> lineDedupSql(3),
-      // the streaming replays' final (max-upd_seq) spans share the oracle
-      "doc_dup_spans" -> dupSpansSql(5, 2),
-      "doc_dup_spans_stream_replay" -> dupSpansSql(5, 2),
-      "doc_dup_spans_sharded_stream_replay" -> dupSpansSql(5, 2),
-      "doc_dup_span_removal" -> spanRemovalSql(5, 2),
-      "doc_pii_redact" -> docPiiRedactSql,
-      "doc_minhash_pairs_md5" -> minhashPairsSql(3, 4, 2, 0.2, 1000),
-      "doc_fuzzy_pairs_md5" -> crossPairsSql(3, 4, 2, 0.2, 1000, 10),
-      "doc_fuzzy_decontam_md5" -> fuzzyDecontamSql(3, 4, 2, 0.2, 1000, 10),
-      // stream-static replay shares the batch cross-pairs mirror: with
-      // neither cap binding (50 eval docs, cap 1000) the admitted bucket
-      // sets coincide, and the replay feeds every train doc
-      "doc_fuzzy_pairs_stream_replay" -> crossPairsSql(3, 4, 2, 0.2, 1000, 10),
-      // cap-BINDING geometry (at sf0.01 the hottest shared bucket holds
-      // ~355 train + ~41 eval members): the two cap policies diverge by
-      // design, so each row gets its OWN mirror — combined occupancy
-      // (batch) vs eval-side only (stream)
-      "doc_fuzzy_pairs_capped_md5" -> crossPairsSql(1, 2, 1, 0.1, 40, 10),
-      "doc_fuzzy_pairs_capped_stream_replay" -> crossPairsStreamSql(1, 2, 1, 0.1, 40, 10),
-      "doc_source_cap" -> sourceCapSql("source", 10),
-      // token-budget mixing: the per-source running-sum cut, greedy fill
-      // (the crossing doc is admitted); all four rows share it
-      "doc_token_mix" -> tokenMixSql(500, Seq("src1" -> 700, "src7" -> 100000)),
-      "doc_token_mix_segmented" -> tokenMixSql(500, Seq("src1" -> 700, "src7" -> 100000)),
-      "doc_token_mix_stream_replay" -> tokenMixSql(500, Seq("src1" -> 700, "src7" -> 100000)),
-      "doc_token_mix_restart_stream_replay" ->
-        tokenMixSql(500, Seq("src1" -> 700, "src7" -> 100000)),
-      // ordered-feed admissions equal the batch cap, so both stream rows
-      // share the batch mirror
-      "doc_source_cap_stream_replay" -> sourceCapSql("source", 10),
-      "doc_source_cap_restart_stream_replay" -> sourceCapSql("source", 10),
-      "doc_heavy_hitters" -> heavyHittersSql("lang", "1", 6),
-      "doc_heavy_hitters_weighted" -> heavyHittersSql("source", "coalesce(n_chars, 0)", 19),
-      // hot-key alerts at threshold 70: the batch twin and both stream
-      // rows share the first running-sum crossing per key
-      "doc_hot_keys" -> hotKeysSql("lang", "1", 70),
-      "doc_hot_keys_stream_replay" -> hotKeysSql("lang", "1", 70),
-      "doc_hot_keys_restart_stream_replay" -> hotKeysSql("lang", "1", 70),
-      "doc_neardup_clusters_md5" -> clustersSql(3, 4, 2, 0.2, 1000),
-      "doc_neardup_dedup_md5" -> dedupIdsSql(3, 4, 2, 0.2, 1000, cols = DOCSQL),
-      "doc_editdist_pairs_md5" -> editPairsSql(5, 4, 4, 5, 1000),
-      "doc_editdist_dedup_md5" -> editDedupSql(5, 4, 4, 5, 1000, cols = DOCSQL),
-      "doc_editdist_decontam_md5" -> editDecontamSql(5, 4, 4, 5, 1000),
-      // the stream converges to the same min-id CC survivor set
-      "doc_editdist_stream_replay" -> editDedupSql(5, 4, 4, 5, 1000, cols = DOCSQL),
-      "doc_editdist_restart_stream_replay" -> editDedupSql(5, 4, 4, 5, 1000, cols = DOCSQL),
-      "doc_editdist_sharded_stream_replay" -> editDedupSql(5, 4, 4, 5, 1000, cols = DOCSQL),
-      // the streaming operator's final survivors = the batch CC survivors
-      "doc_neardup_stream_replay" -> dedupIdsSql(3, 4, 2, 0.2, 1000, cols = DOCSQL),
-      "doc_neardup_restart_stream_replay" -> dedupIdsSql(3, 4, 2, 0.2, 1000, cols = DOCSQL),
-      // ... and its emitted union-find edges reproduce the batch clusters
-      "doc_neardup_clusters_stream_replay" -> clustersSql(3, 4, 2, 0.2, 1000),
-      "doc_simhash_md5" -> simhashSql,
-      "doc_ngram_pairs_md5" -> ngramPairsSql(3, 0.1, 200),
-      "doc_simhash_pairs_md5" -> simhashPairsSql(3, 1000),
-      "emb_ann_lsh" -> embAnnStreamSql(8, 10, stream = false),
-      "emb_ann_ivf" -> embIvfSql,
-      "emb_ann_pq" -> embPqSql(8, 16, 10, 0),
-      "emb_ann_pq_trained" -> embPqSql(8, 16, 10, 0, lloydIters = 1),
-      "emb_ann_ivfpq" -> embIvfPqSql(16, 4, 8, 16, 10, stream = false),
-      "emb_ann_ivfpq_residual" -> embIvfPqResidualSql(16, 4, 8, 16, 10),
-      "emb_neardup_pairs" -> embPairsSql(0.4, 8, 4),
-      // batch clusters/dedup share the stream rows' closure oracles: the
-      // batch CC and the streaming union-find must reduce to the same sets
-      "emb_neardup_clusters" -> embClustersSql(0.4, 8, 4),
-      "emb_neardup_dedup" -> embDedupSql(0.4, 8, 4),
-      "emb_semdedup" -> embSemDedupSql(16, 1, 0.3),
-      "emb_semdedup_capped" -> embSemDedupSql(4, 1, 0.3125, 130),
-      "emb_semdedup_dropped_cells" -> embSemDedupDroppedCellsSql(4, 1, 130),
-      // the streaming twin converges to the batch survivor set (same
-      // centroid chain, same ε-relation, same keep policy), so all three
-      // stream rows share the batch mirrors
-      "emb_semdedup_stream_replay" -> embSemDedupSql(16, 1, 0.3),
-      "emb_semdedup_capped_stream_replay" -> embSemDedupSql(4, 1, 0.3125, 130),
-      "emb_semdedup_restart_stream_replay" -> embSemDedupSql(16, 1, 0.3),
-      "emb_neardup_stream_replay" -> embDedupSql(0.4, 8, 4),
-      "emb_neardup_clusters_stream_replay" -> embClustersSql(0.4, 8, 4),
-      "emb_ann_stream_replay" -> embAnnStreamSql(8, 10),
-      "emb_ann_sharded_lsh_stream_replay" -> embAnnStreamSql(8, 10),
-      "emb_ann_sharded_lsh_restart_stream_replay" -> embAnnStreamSql(8, 10),
-      "emb_ann_pq_stream_replay" -> embPqStreamSql,
-      "emb_ann_pq_sharded_stream_replay" -> embPqStreamSql,
-      "emb_ann_ivfpq_stream_replay" -> embIvfPqSql(16, 4, 8, 16, 10, stream = true),
-      // the cell-sharded two-stage bridge computes the same retrieval
-      // log as the monolith, so it shares the monolith's mirror
-      "emb_ann_ivfpq_sharded_stream_replay" -> embIvfPqSql(16, 4, 8, 16, 10, stream = true),
-      "emb_ann_ivfpq_residual_stream_replay" ->
-        embIvfPqResidualSql(16, 4, 8, 16, 10, stream = true),
-      "emb_ann_ivfpq_residual_restart_stream_replay" ->
-        embIvfPqResidualSql(16, 4, 8, 16, 10, stream = true),
-      "mm_features" -> featuresSql,
-      "doc_bpe_encode" -> docBpeEncodeOracleFor(4, 240, 16, 120),
-      "doc_bpe_encode_dist" -> docBpeEncodeDistOracleFor(64, 240, 16, 120),
-      "doc_bpe_encode_bytes" -> docBpeEncodeBytesOracleFor(bpeBytesMergesLines, 120),
-      "doc_bpe_train_bytes" ->
-        docBpeEncodeDistOracleFor(64, 240, 12, 120, byteLevel = true),
-      "doc_token_mix_bpe" -> docTokenMixBpeSql,
-      "mm_phash" -> phashSql,
-      "mm_ahash" -> ahashSql,
-      "mm_audio_hash" -> audioHashSql,
-      "mm_audio_neardup_pairs" -> audioHashPairsSql(2, 1000, 32),
-      "mm_audio_dedup" -> ccSurvivorsSql(audioHashPairsCtes(2, 1000, 32), "apairs", "a"),
-      "mm_image_neardup_pairs" -> imageHashPairsSql(3, 1000),
-      "mm_image_dedup" -> ccSurvivorsSql(imageHashPairsCtes(3, 1000, 32), "pairs"),
-      "mm_image_dedup_stream_replay" -> ccSurvivorsSql(imageHashPairsCtes(3, 1000, 32), "pairs"),
-      // imageLumaFeatures over the 8×8 pattern → semDedup at eps 0.94
-      "mm_image_semdedup" -> embSemDedupSql(8, 1, 0.94, srcSql = patternVectorSql(32),
-        finalRel = "documents", finalIdCol = "doc_id"),
-      "mm_image_tile_hash" -> imageTileHashSql,
-      "mm_image_crop_pairs" -> imageTilePairsSql(32, 10, 1000),
-      "mm_image_crop_dedup" -> ccSurvivorsSql(imageTilePairsCtes(32, 10, 1000), "tpr", "tl"),
-      "mm_image_crop_dedup_stream_replay" ->
-        ccSurvivorsSql(imageTilePairsCtes(32, 10, 1000), "tpr", "tl"),
-      "mm_image_crop_dedup_restart_stream_replay" ->
-        ccSurvivorsSql(imageTilePairsCtes(32, 10, 1000), "tpr", "tl"),
-      "mm_video_hash" -> videoHashSql,
-      "mm_video_dedup_stream_replay" ->
-        ccSurvivorsSql(videoSeqPairsCtes(32, 2, 0.5, 1000), "vpairs", "v"),
-      "mm_video_dedup_restart_stream_replay" ->
-        ccSurvivorsSql(videoSeqPairsCtes(32, 2, 0.5, 1000), "vpairs", "v"),
-      "mm_video_neardup_pairs" -> videoSeqPairsSql(32, 2, 0.5, 1000),
-      "mm_video_dedup" -> ccSurvivorsSql(videoSeqPairsCtes(32, 2, 0.5, 1000), "vpairs", "v"),
-      "mm_audio_seg_hash" -> audioSegHashSql,
-      "mm_audio_offset_pairs" -> audioSegPairsSql(32, 256, 3, 1000),
-      // cap-BINDING geometry: maxBucket 16 drops segment-hash buckets
-      "mm_audio_offset_pairs_capped" -> audioSegPairsSql(32, 256, 3, 16),
-      "mm_audio_seg_dropped_buckets" -> audioSegDroppedSql(32, 256, 16),
-      "mm_audio_seg_dedup" -> ccSurvivorsSql(audioSegPairsCtes(32, 256, 3, 1000), "apr"),
-      "mm_audio_seg_dedup_stream_replay" ->
-        ccSurvivorsSql(audioSegPairsCtes(32, 256, 3, 1000), "apr"),
-      "mm_audio_seg_dedup_restart_stream_replay" ->
-        ccSurvivorsSql(audioSegPairsCtes(32, 256, 3, 1000), "apr"),
-      "mm_audio_dedup_stream_replay" ->
-        ccSurvivorsSql(audioHashPairsCtes(2, 1000, 32), "apairs", "a"),
-      "mm_audio_dedup_restart_stream_replay" ->
-        ccSurvivorsSql(audioHashPairsCtes(2, 1000, 32), "apairs", "a"),
-      "mm_resize" -> resizeSql,
-      "mm_frames" -> framesSql,
-      // streaming replays verify against the batch twins' semantics:
-      // everStream's accumulated CHANGE LOG holds every event once as
-      // 'insert' plus every replaced event again as 'expire' (the batch
-      // ever_current/ever_expired split, log-shaped); lengthBatchStream's
-      // inserts are exactly the flushed batches; timeBatchStream's append
-      // output is every CLOSED window, i.e. timebatch_expired's row set.
-      "ever_stream_replay" -> everStreamSql(user),
-      "ever_multikey_stream_replay" -> everStreamSql(Seq("user_id", "event_type")),
-      "ever_tws_stream_replay" -> everStreamSql(user),
-      // restarted replay == uninterrupted replay (checkpoint recovery)
-      "ever_restart_stream_replay" -> everStreamSql(user),
-      // everStreamTtl change log: every event 'insert'; a replaced row
-      // 'expire' iff its key SURVIVED to the replacement — i.e. the
-      // chunk-boundary watermark before the successor's chunk (the ts at
-      // rank (chunk//500)*500; no-data micro-batches apply it) had not
-      // passed ts+ttl. Silently evicted keys emit nothing.
-      "ever_ttl_stream_replay" ->
-        s"""WITH r AS (SELECT *, epoch_ms(CAST(ts AS TIMESTAMP)) AS ms,
-           |    row_number() OVER (ORDER BY event_id) AS rn FROM events),
-           |nxt AS (SELECT *, lead(rn) OVER (PARTITION BY user_id ORDER BY event_id) AS rn2 FROM r),
-           |exp AS (SELECT nxt.event_id FROM nxt
-           |  LEFT JOIN r wb ON wb.rn = ((nxt.rn2 - 1) // 500) * 500
-           |  WHERE nxt.rn2 IS NOT NULL AND (wb.ms IS NULL OR wb.ms <= nxt.ms + $H12))
-           |SELECT $EVSQL, 'insert' AS change FROM events
-           |UNION ALL
-           |SELECT $EVSQL, 'expire' AS change FROM events
-           |WHERE event_id IN (SELECT event_id FROM exp)""".stripMargin,
-      // full change log: every flushed batch 'insert'; every flushed batch
-      // with a successor re-emitted 'expire' at the next flush
-      "lengthbatch_stream_replay" -> lengthBatchStreamSql(user, 40, latest = true),
-      "timebatch_stream_replay" ->
-        timeBatchSql(user, DAY, Some(0L), keepFirst = false, replaceTs = false, "expired"),
-      // bounded-disorder feed, same closed-window semantics → same oracle
-      "timebatch_ooo_stream_replay" ->
-        timeBatchSql(user, DAY, Some(0L), keepFirst = false, replaceTs = false, "expired"),
-      "firstlengthbatch_stream_replay" -> lengthBatchStreamSql(user, 40, latest = false),
-      // append output = closed windows only (the last window is still open)
-      "firsttimebatch_stream_replay" ->
-        timeBatchSql(user, DAY, Some(0L), keepFirst = true, replaceTs = false, "expired"),
-      // firstStream emits exactly the first-per-key rows (state = seen flag)
-      "first_stream_replay" -> firstSql(user),
-      // Bloom-backed approximate first, generously sized: exact at gate
-      // scales (deterministic seeds), so it shares the exact oracle
-      "first_bloom_stream_replay" -> firstSql(user),
-      // lengthStream's accumulated log: every event 'insert' once; every
-      // event that left the window (replaced or LRU-evicted) 'expire' once
-      // — i.e. everything outside the final window (= length_current).
-      "length_stream_replay" -> lengthStreamSql(user, 100),
-      // timeStream's log: every event 'insert'; every replaced event
-      // 'expire' (exactly once — replacement or prior eviction); plus the
-      // latest-per-key rows whose event-time timeout (ts + window) fired,
-      // i.e. STRICTLY before the final watermark = max event-time ms
-      // (FlatMapGroupsWithStateExec fires timeouts with
-      // timeoutTimestamp < eviction watermark; the post-data no-data
-      // micro-batch applies the last watermark).
-      "time_stream_replay" -> timeStreamSql(user, WEEK),
-      // deduplicateStreamExact matches the batch fold bit-for-bit
-      "deduplicate_stream_replay" -> deduplicateSql(user, DAY),
-      "deduplicate_bloom_stream_replay" -> deduplicateBloomSql(user, DAY),
-      // timeLengthBatchStream emits a batch when a later event crosses its
-      // time boundary (any batch before the last) or when the 50th distinct
-      // key length-flushes it — the final batch appears iff length-flushed.
-      // Full change log: every flushed batch 'insert'; every flushed batch
-      // except the LAST FLUSHED re-emitted 'expire' (with its own
-      // batch_start_ms) when the next flush happens.
-      "timelengthbatch_stream_replay" -> tlbStreamSql(user, DAY, 50),
-      // pure time batches (n unreachable), keepFirst: flushed = every
-      // non-empty batch before the last (the final batch never flushes —
-      // nothing crosses its boundary); expire = flushed minus the last
-      // flushed batch
-      "firsttimebatch_changelog_stream_replay" ->
-        tlbStreamSql(user, DAY, Int.MaxValue, keepFirst = true),
-      // externalTimeBatchStream (no time.out): every non-final non-empty
-      // batch closes when a later event crosses its end — exactly the
-      // batch operator's expired set, tagged with the batch END time.
-      "externaltimebatch_stream_replay" -> etbStreamSql(user, H6),
-      // everStream(orders by custkey) ⨝ customer change log: every order
-      // 'insert' once; every replaced order (non-latest per custkey at end
-      // of stream) 'expire' once — each joined to its customer row
-      "join_windows_stream_replay" ->
-        """SELECT c_custkey, c_name, o_orderkey, o_totalprice, o_orderdate,
-          |  'insert' AS change
-          |FROM orders JOIN customer ON o_custkey = c_custkey
-          |UNION ALL
-          |SELECT c_custkey, c_name, o_orderkey, o_totalprice, o_orderdate,
-          |  'expire' AS change
-          |FROM (SELECT *, row_number() OVER (PARTITION BY o_custkey
-          |        ORDER BY o_orderkey DESC) AS rn FROM orders)
-          |JOIN customer ON o_custkey = c_custkey
-          |WHERE rn > 1""".stripMargin,
-      // two-window event-by-event join. A joined row emits on exactly one
-      // side, decided by arrival order on the 2c / 2o+1 interleave: the
-      // order side emits (o, c) when c arrived first (c_custkey <=
-      // o_orderkey) and is still its nation's live window-B occupant at
-      // o's arrival; the customer side emits when o arrived first
-      // (o_orderkey < c_custkey) and is still its custkey's live window-A
-      // occupant at c's arrival.
-      "join_two_windows_stream_replay" ->
-        """SELECT o.o_orderkey, o.o_custkey, o.o_totalprice, c.c_name, c.c_nationkey
-          |FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
-          |WHERE c.c_custkey <= o.o_orderkey
-          |  AND NOT EXISTS (SELECT 1 FROM customer c2
-          |    WHERE c2.c_nationkey = c.c_nationkey
-          |      AND c2.c_custkey > c.c_custkey AND c2.c_custkey <= o.o_orderkey)
-          |UNION ALL
-          |SELECT o.o_orderkey, o.o_custkey, o.o_totalprice, c.c_name, c.c_nationkey
-          |FROM customer c JOIN orders o ON o.o_custkey = c.c_custkey
-          |WHERE o.o_orderkey < c.c_custkey
-          |  AND NOT EXISTS (SELECT 1 FROM orders o2
-          |    WHERE o2.o_custkey = o.o_custkey
-          |      AND o2.o_orderkey > o.o_orderkey AND o2.o_orderkey < c.c_custkey)""".stripMargin,
-      // marker-driven time.out replay. Emission model (matching the
-      // reference's TIMER + boundary branches exactly):
-      //  - marker after event c idle-flushes the open grid window w(c) =
-      //    c's window: latest-per-key among w's events with event_id <= c;
-      //    'timeout' for the window's first idle flush, 'append' after
-      //    (the batch merged with rows already sent). Always dirty — the
-      //    cutoff event c itself arrived since any previous emit.
-      //  - a window w with later events beyond it closes: 'close' if never
-      //    idle-flushed; 'append' (full merged batch) if idle-flushed AND
-      //    events arrived after the last marker; NOTHING if all its rows
-      //    were already sent (appendToOutputChunk's currentEvents>0 guard,
-      //    UniqueExternalTimeBatchWindowProcessor.java:412).
-      //  - the final window never closes (only marker emissions).
-      "externaltimebatch_timeout_replay" ->
-        s"""WITH evw AS (SELECT *, epoch_ms(ts) // $H6 AS w FROM events),
-           |mk AS (SELECT event_id AS c, epoch_ms(ts) // $H6 AS w FROM events
-           |       QUALIFY row_number() OVER (ORDER BY event_id) % 2500 = 0),
-           |mk2 AS (SELECT c, w, c = min(c) OVER (PARTITION BY w) AS isf FROM mk),
-           |me AS (SELECT m.c, CASE WHEN m.isf THEN 'timeout' ELSE 'append' END AS fk, e.*,
-           |         row_number() OVER (PARTITION BY m.c, e.user_id ORDER BY e.event_id DESC) AS rn
-           |       FROM mk2 m JOIN evw e ON e.w = m.w AND e.event_id <= m.c),
-           |lastc AS (SELECT w, max(c) AS lc FROM mk GROUP BY w),
-           |cl AS (SELECT wi.w, CASE WHEN l.lc IS NULL THEN 'close' ELSE 'append' END AS fk
-           |       FROM (SELECT w, max(event_id) AS maxid FROM evw GROUP BY w) wi
-           |       LEFT JOIN lastc l ON wi.w = l.w
-           |       WHERE wi.w < (SELECT max(w) FROM evw)
-           |         AND (l.lc IS NULL OR wi.maxid > l.lc)),
-           |ce AS (SELECT c.fk, e.*,
-           |         row_number() OVER (PARTITION BY e.w, e.user_id ORDER BY e.event_id DESC) AS rn
-           |       FROM cl c JOIN evw e ON e.w = c.w)
-           |SELECT $EVSQL, fk AS flush_kind, (w + 1) * $H6 AS batch_end_ms FROM me WHERE rn = 1
-           |UNION ALL
-           |SELECT $EVSQL, fk AS flush_kind, (w + 1) * $H6 AS batch_end_ms FROM ce WHERE rn = 1""".stripMargin,
-      "doc_fingerprint_md5" -> docFingerprintSql,
-      "emb_knn_brute" -> embKnnBruteSql,
-    )
-  }
 }

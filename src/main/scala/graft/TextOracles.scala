@@ -5,7 +5,7 @@ package graft
   * streaming twins), one builder per operator family.
   *
   * This is the only definition of these oracles: the fixed registry rows
-  * in `SparkEntry.oracleSql` call the builders at their pinned parameters
+  * in `SparkEntry.registry` call the builders at their pinned parameters
   * (shingleN = 3, bands 4×2, threshold 0.2, the doc_id % 10 eval split,
   * …), and `tools.SweepVerify` calls them at seeded random draws. Rows
   * with no sweep family (quality, langid, pii, …) are single builders

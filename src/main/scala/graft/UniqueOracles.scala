@@ -4,7 +4,7 @@ package graft
   * per family, parameterized by keys, window, length and output variant.
   *
   * This is the only definition of these oracles: the fixed registry rows
-  * in `SparkEntry.oracleSql` call the builders at their pinned parameters
+  * in `SparkEntry.registry` call the builders at their pinned parameters
   * (user_id key, DAY/WEEK/H6 windows, n = 40/50/100), and
   * `tools.SweepVerify` calls them at seeded random draws. Every builder
   * reads the `events` table and projects [[EVSQL]].

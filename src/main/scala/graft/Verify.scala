@@ -1,8 +1,10 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Driver-run correctness dump: the output of every registry row with an
+  * oracle (SparkEntry.queries) → parquet, plus oracle_sql.json, for the
+  * driver's DuckDB compare; errors.json and timings.json (each row's wall
+  * seconds, slowest first) beside them. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -20,6 +22,7 @@ object Verify {
     // only evidence in an unharvested stderr. Persist failures as
     // errors.json beside the outputs so the record explains its own gaps.
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    val seconds = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     // local-iteration subset: SPARK_GRAFT_VERIFY_ONLY=q1,q2 runs just those
     // queries (the driver never sets it, so its runs stay exhaustive)
     val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
@@ -36,12 +39,14 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
+      val t0 = System.nanoTime()
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case scala.util.control.NonFatal(e) =>
         errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(500)
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
+      seconds(name) = math.round((System.nanoTime() - t0) / 1e6) / 1e3
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -60,6 +65,8 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val errJson = errors.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
+    Files.writeString(Paths.get(s"$outDir/timings.json"),
+      seconds.toSeq.sortBy(-_._2).map { case (k, v) => s"${q(k)}: $v" }.mkString("{", ",", "}"))
     if (errors.nonEmpty)
       System.err.println(s"[verify] ${errors.size} queries failed; see $outDir/errors.json")
     spark.stop()

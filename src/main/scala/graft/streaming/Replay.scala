@@ -2,8 +2,12 @@ package graft.streaming
 
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SQLContext, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.streaming.operators.stateful.StateStoreWriter
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
+import org.apache.spark.sql.execution.streaming.state.{StateStore, StateStoreId,
+  StateStoreProviderId}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming-vs-batch replay harness: feed a batch table through a
   * Structured Streaming operator via MemoryStream in arrival (seq) order,
@@ -20,6 +24,27 @@ import org.apache.spark.sql.functions.col
 object Replay {
 
   private val counter = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  /** Stop `q` and unload its state-store providers now instead of at the
+    * maintenance thread's next pass (up to a minute later), so a stopped
+    * replay holds no RocksDB instance and its checkpoint can be deleted
+    * without that pass failing on the missing files. Only this query's
+    * providers are unloaded; other live queries keep theirs.
+    */
+  private def stopAndUnload(q: StreamingQuery): Unit = {
+    q.stop()
+    Option(q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution)
+      .foreach(_.executedPlan.foreach {
+        case op: StateStoreWriter =>
+          for (info <- op.stateInfo; p <- 0 until info.numPartitions;
+               store <- op.stateStoreNames) {
+            val id = StateStoreProviderId(
+              StateStoreId(info.checkpointLocation, info.operatorId, p, store), info.queryRunId)
+            if (StateStore.isLoaded(id)) StateStore.doMaintenanceAndUnload(id)
+          }
+        case _ =>
+      })
+  }
 
   /** Run `build(stream)` over `input` fed in `seqCol` order in chunks of
     * `chunkSize` (each chunk = one micro-batch), wait for completion, and
@@ -41,7 +66,7 @@ object Replay {
         stream.addData(chunk.toSeq)
         q.processAllAvailable()
       }
-    finally q.stop()
+    finally stopAndUnload(q)
     spark.table(sink)
   }
 
@@ -84,12 +109,12 @@ object Replay {
         stream.addData(chunk.toSeq)
         q.processAllAvailable()
         if (i + 1 == restartAfter) {
-          q.stop()      // kill mid-replay ...
-          q = start()   // ... and recover from the checkpoint
+          stopAndUnload(q) // kill mid-replay ...
+          q = start()      // ... and recover from the checkpoint
         }
       }
     finally {
-      q.stop()
+      stopAndUnload(q)
       FileUtils.deleteQuietly(new java.io.File(ckpt))
     }
     spark.createDataFrame(
@@ -128,7 +153,7 @@ object Replay {
         q.processAllAvailable()
       }
     finally {
-      q.stop()
+      stopAndUnload(q)
       FileUtils.deleteQuietly(new java.io.File(ckpt))
     }
   }

@@ -17,14 +17,13 @@ object PlanAudit {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // EVERY registered production path, derived from the registry so the
-    // dump can never go stale: xxhash64 twins come from benchQueries (the
-    // _md5 mirrors share their plan shape); _replay harnesses are
-    // driver-fed streams with no meaningful batch plan
-    val registry = graft.SparkEntry.queries ++ graft.SparkEntry.benchQueries
-    val headline = registry.keys.toSeq
-      .filterNot(n => n.endsWith("_replay") || n.endsWith("_md5")).sorted
-    val excluded = (registry.keys.toSet -- headline).toSeq.sorted
+    // EVERY production path Bench measures, read from the registry so the
+    // dump can never go stale: the _md5 mirrors share their production
+    // row's plan shape and the _replay harnesses are driver-fed streams
+    // with no meaningful batch plan, so neither is marked for the bench
+    val registry = graft.SparkEntry.registry
+    val headline = registry.collect { case (n, e) if e.bench => n }.toSeq.sorted
+    val excluded = (registry.keySet -- headline).toSeq.sorted
     val sb = new StringBuilder
     sb.append("# PLANS — physical-plan audit (generated by graft.tools.PlanAudit)\n\n")
     sb.append(s"Source sf dir: `$sfDir`. Regenerate: `sbt \"runMain graft.tools.PlanAudit\"`.\n")
@@ -35,11 +34,11 @@ object PlanAudit {
     sb.append("summary, not the raw projection — see lengthBatchIntervals' scaladoc),\n")
     sb.append("filters/pruning pushed into the parquet scan, broadcast for dimension\n")
     sb.append("joins.\n\n")
-    sb.append(s"Covers every `queries ++ benchQueries` entry except the streaming\n")
-    sb.append(s"replay harnesses and md5 verification mirrors (no distinct batch\n")
-    sb.append(s"plan): ${excluded.mkString("`", "`, `", "`")}.\n")
+    sb.append(s"Covers every registry row Bench measures; the streaming replay\n")
+    sb.append(s"harnesses and md5 verification mirrors (no distinct batch plan)\n")
+    sb.append(s"are left out: ${excluded.mkString("`", "`, `", "`")}.\n")
     headline.foreach { name =>
-      val df = registry(name)(spark, sfDir)
+      val df = registry(name).build(spark, sfDir)
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       sb.append(s"\n## $name\n\n```\n$plan```\n")

@@ -23,7 +23,7 @@ import java.nio.file.{Files, Paths}
   * GENERATED FROM THE SAME PARAMETERS — the same layout `graft.Verify`
   * produces, so the standard compare closes the loop. The oracles come
   * from the one definition per tier that the fixed registry rows in
-  * `SparkEntry.oracleSql` also call: `graft.UniqueOracles` (the unique
+  * `SparkEntry.registry` also call: `graft.UniqueOracles` (the unique
   * windows), `graft.TextOracles`, `graft.EmbeddingOracles` and
   * `graft.MediaOracles` (the curation tiers); this tool only draws the
   * parameters and runs the engine:

@@ -9,7 +9,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{CreateFlag, FileContext, Options, Path}
 import org.apache.hadoop.fs.local.LocalFs
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.spark.sql.execution.streaming.state.StateStore
+import org.apache.spark.sql.execution.streaming.state.{StateStore, StateStoreProviderId}
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,8 +18,9 @@ import graft.streaming.{ForkFreeLocalFs, Replay, UniqueStreams}
 /** The state-store hook (`UniqueStreams.useRocksDBStateStore`): its fork-free
   * local file system leaves exactly the files, bytes, `.crc` checksums and
   * permissions Hadoop's `LocalFs` leaves; the save-and-restore helper puts
-  * every key back; and a changelog-checkpointed restart past a snapshot
-  * replays to the uninterrupted output.
+  * every key back; a changelog-checkpointed restart past a snapshot
+  * replays to the uninterrupted output; and a stopped replay leaves no
+  * state-store provider loaded.
   */
 class StateStoreHookSpec extends AnyFunSuite with SparkTestSession {
   import spark.implicits._
@@ -146,11 +147,9 @@ class StateStoreHookSpec extends AnyFunSuite with SparkTestSession {
             .foreach(n => replays.add(n.longValue))
         }
     }
-    val intervalKey = "spark.sql.streaming.stateStore.maintenanceInterval"
-    // the maintenance thread uploads queued snapshots; restart it on a short
-    // interval so the version-10 snapshot is on disk before the restart
-    StateStore.stopMaintenanceTask()
-    spark.conf.set(intervalKey, "100ms")
+    // the version-10 snapshot is uploaded before the restart by the
+    // maintenance pass Replay runs as it unloads the stopped query's
+    // providers, so the test needs no maintenance thread of its own
     spark.streams.addListener(listener)
     try UniqueStreams.withRocksDBStateStore(spark) {
       val straight = log(Replay.replay(spark, events, "seq", 20, "update")(sdf =>
@@ -160,11 +159,7 @@ class StateStoreHookSpec extends AnyFunSuite with SparkTestSession {
       assert(straight.count(_._1 == "insert") === 480)
       assert(straight.count(_._1 == "expire") === 480 - 37)
       assert(restarted === straight)
-    } finally {
-      spark.streams.removeListener(listener)
-      StateStore.stopMaintenanceTask()
-      spark.conf.unset(intervalKey)
-    }
+    } finally spark.streams.removeListener(listener)
     val deadline = System.nanoTime + 30e9.toLong
     while (!replays.asScala.exists(_ > 0) && System.nanoTime < deadline) Thread.sleep(100)
     val partitions = spark.conf.get("spark.sql.shuffle.partitions").toLong
@@ -172,5 +167,35 @@ class StateStoreHookSpec extends AnyFunSuite with SparkTestSession {
     // from a snapshot: 2 changelog files a partition; without one: 12
     assert(replayed > 0 && replayed < 12 * partitions,
       s"recovery replayed $replayed changelog files over $partitions partitions")
+  }
+
+  /** The state-store providers loaded in this JVM (StateStore keeps the
+    * map private). */
+  private def loadedProviders: Set[StateStoreProviderId] = {
+    val m = StateStore.getClass.getDeclaredMethod("loadedProviders")
+    m.setAccessible(true)
+    val loaded = m.invoke(StateStore)
+      .asInstanceOf[scala.collection.mutable.HashMap[StateStoreProviderId, _]]
+    loaded.synchronized(loaded.keySet.toSet)
+  }
+
+  test("a stopped replay leaves none of its state-store providers loaded") {
+    val events = (1 to 200).map(i => (i.toLong, s"k${i % 23}")).toDF("seq", "key")
+    val runs = new java.util.concurrent.ConcurrentLinkedQueue[java.util.UUID]()
+    val listener = new StreamingQueryListener {
+      def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = runs.add(e.runId)
+      def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+      def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    try UniqueStreams.withRocksDBStateStore(spark) {
+      val out = Replay.replayWithRestart(spark, events, "seq", 20)(sdf =>
+        UniqueStreams.everStream(sdf, Seq("key"), Some("seq")))
+      // every event inserted, every replaced one expired: the state was used
+      assert(out.count() === 200 + 200 - 23)
+    } finally spark.streams.removeListener(listener)
+    assert(runs.size === 2, "a restarted replay runs the query twice")
+    val left = loadedProviders.filter(id => runs.contains(id.queryRunId))
+    assert(left.isEmpty, s"providers still loaded: $left")
   }
 }
