@@ -85,6 +85,10 @@ object Bench {
     val smallSec = 0.3
     val smallReps = math.max(reps,
       sys.env.getOrElse("SPARK_GRAFT_BENCH_SMALL_REPS", "5").toInt)
+    // persisted RDDs a query left registered (max over its runs), counted
+    // before the cache is cleared: the "no cache entry outlives its query"
+    // check, in the full record only
+    val leftover = scala.collection.mutable.LinkedHashMap.empty[String, Int]
     val results = benchable.toSeq.sortBy(_._1).map { case (name, fn) =>
       def runOnce(): Double = {
         val t0 = System.nanoTime()
@@ -103,10 +107,11 @@ object Bench {
             false
           }
         val elapsed = (System.nanoTime() - t0) / 1e9
-        // isolate queries: operators that persist intermediates (lengthBatch
-        // expired, minhash/simhash/ngram pipelines) would otherwise accumulate
+        // isolate queries: operators that persist intermediates (the
+        // minhash/simhash/ngram pipelines) would otherwise accumulate
         // cache entries across the whole bench session, stealing memory from
         // later queries. Cleared AFTER timing, so intra-query reuse still counts.
+        leftover(name) = leftover.getOrElse(name, 0) max spark.sparkContext.getPersistentRDDs.size
         spark.catalog.clearCache()
         if (ok) elapsed else -1.0
       }
@@ -122,8 +127,9 @@ object Bench {
     val qs = results.map { case (k, (v, _)) => s""""${esc(k)}":$v""" }.mkString("{", ",", "}")
     val qsAll = results.map { case (k, (_, ts)) => s""""${esc(k)}":[${ts.mkString(",")}]""" }.mkString("{", ",", "}")
     val es = errors.map { case (k, v) => s""""${esc(k)}":"${esc(v)}"""" }.mkString("{", ",", "}")
+    val cl = leftover.map { case (k, v) => s""""${esc(k)}":$v""" }.mkString("{", ",", "}")
     val total = results.collect { case (_, (v, _)) if v >= 0 => v }.sum
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_all":$qsAll,"reps":$reps,"errors":$es,"sf":"${esc(sfDir)}"}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_all":$qsAll,"cache_leftover":$cl,"reps":$reps,"errors":$es,"sf":"${esc(sfDir)}"}"""
     // the full record (all repetitions) goes to the file; stdout gets a
     // COMPACT line as the very LAST thing printed. The driver tail-captures
     // only the final ~2 KB of stdout and has three times truncated the full

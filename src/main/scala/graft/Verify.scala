@@ -4,7 +4,8 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: the output of every registry row with an
   * oracle (SparkEntry.queries) → parquet, plus oracle_sql.json, for the
   * driver's DuckDB compare; errors.json and timings.json (each row's wall
-  * seconds, slowest first) beside them. */
+  * seconds `s`, slowest first, and `cache_leftover`, the persisted RDDs
+  * it left registered before the cache is cleared) beside them. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -23,6 +24,7 @@ object Verify {
     // errors.json beside the outputs so the record explains its own gaps.
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val seconds = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    val leftover = scala.collection.mutable.LinkedHashMap.empty[String, Int]
     // local-iteration subset: SPARK_GRAFT_VERIFY_ONLY=q1,q2 runs just those
     // queries (the driver never sets it, so its runs stay exhaustive)
     val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
@@ -47,6 +49,8 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       seconds(name) = math.round((System.nanoTime() - t0) / 1e6) / 1e3
+      leftover(name) = spark.sparkContext.getPersistentRDDs.size
+      spark.catalog.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -66,7 +70,9 @@ object Verify {
     val errJson = errors.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
     Files.writeString(Paths.get(s"$outDir/timings.json"),
-      seconds.toSeq.sortBy(-_._2).map { case (k, v) => s"${q(k)}: $v" }.mkString("{", ",", "}"))
+      seconds.toSeq.sortBy(-_._2).map { case (k, v) =>
+        s"""${q(k)}: {"s": $v, "cache_leftover": ${leftover(k)}}"""
+      }.mkString("{", ",", "}"))
     if (errors.nonEmpty)
       System.err.println(s"[verify] ${errors.size} queries failed; see $outDir/errors.json")
     spark.stop()

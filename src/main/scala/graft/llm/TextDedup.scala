@@ -174,23 +174,32 @@ object TextDedup {
   }
 
   /** Streaming index codes for the EDIT-DISTANCE near-dup operator
-    * (graft.streaming.NearDupStream.editNearDupStream): the
-    * [[indexCols]] band-code pipeline over CHARACTER shingles
-    * ([[charTokens]], the [[editDistancePairs]] candidate relation).
-    * Codes only — the streaming payload is the raw text itself (the
-    * exact-lev verify needs the string, not a hash set). Docs shorter
-    * than `shingleN` chars get an empty code array (never candidates,
-    * matching the batch empty-shingle drop).
+    * (graft.streaming.NearDupStream.editNearDupStream): `df` plus a
+    * `codes` column, the [[indexCols]] band-code pipeline over CHARACTER
+    * shingles of `textCol` ([[charTokens]], the [[editDistancePairs]]
+    * candidate relation). Codes only — the streaming payload is the raw
+    * text itself (the exact-lev verify needs the string, not a hash set).
+    * Docs shorter than `shingleN` chars get an empty code array (never
+    * candidates, matching the batch empty-shingle drop).
+    *
+    * The shingle hashes, the signature and the codes are successive
+    * projections, as in the batch twin [[editDistancePairsStats]]: the
+    * md5 family's hash folds are higher-order functions without codegen,
+    * and as one nested column every band's `slice` would re-evaluate the
+    * whole signature (and the signature the shingle hashes once per
+    * minhash row) per document.
     */
-  private[graft] def editIndexCols(textCol: Column, shingleN: Int, bands: Int,
-                                   rowsPerBand: Int, md5Family: Boolean): Column = {
+  private[graft] def withEditCodes(df: DataFrame, textCol: String, shingleN: Int,
+                                   bands: Int, rowsPerBand: Int,
+                                   md5Family: Boolean): DataFrame = {
     val fam: HashFamily = if (md5Family) Md5Hash else XxHash
-    val sh = array_distinct(charShingleHashes(textCol, shingleN, fam))
-    val sig = minhashFromBaseHashes(sh, bands * rowsPerBand, fam)
-    val codes = array((0 until bands).map(b =>
-      concat(lit(s"$b:"),
-        fam.band(slice(sig, b * rowsPerBand + 1, rowsPerBand), b).cast("string"))): _*)
-    when(size(sh) === 0, array().cast("array<string>")).otherwise(codes)
+    df.withColumn("__sh", array_distinct(charShingleHashes(col(textCol), shingleN, fam)))
+      .withColumn("__sig", minhashFromBaseHashes(col("__sh"), bands * rowsPerBand, fam))
+      .withColumn("codes", when(size(col("__sh")) === 0, array().cast("array<string>"))
+        .otherwise(array((0 until bands).map(b =>
+          concat(lit(s"$b:"), fam.band(slice(col("__sig"), b * rowsPerBand + 1, rowsPerBand), b)
+            .cast("string"))): _*)))
+      .drop("__sh", "__sig")
   }
 
   /** Exact duplicates: keep the lowest-id row per identical value of

@@ -10,19 +10,10 @@ import org.apache.spark.sql.functions._
   * (UniqueEverWindowProcessor.java:143-169). `all` tags rows with a
   * `change` column instead of Siddhi's event-type enum.
   */
-final case class UniqueResult(current: DataFrame, expired: DataFrame,
-                              cached: Seq[DataFrame] = Nil) {
+final case class UniqueResult(current: DataFrame, expired: DataFrame) {
   def all: DataFrame =
     current.withColumn("change", lit("insert"))
       .unionByName(expired.withColumn("change", lit("expire")))
-
-  /** Release the operator-internal persisted frames (`cached`) once the
-    * outputs have been consumed. Blocking=false; a later re-consumption of
-    * `current`/`expired` stays CORRECT (recomputes instead of reusing the
-    * cache). The scoped alternative to a session-wide
-    * `spark.catalog.clearCache()` in long-lived sessions.
-    */
-  def unpersist(): Unit = cached.foreach(_.unpersist(false))
 }
 
 /** Batch (deterministic, oracle-testable) semantics of the 11 `unique:`
@@ -422,7 +413,6 @@ object UniqueOps {
     validate(df, keys, seqCol, n = Some(n))
     val kWidth = keys.length
     val intervals: DataFrame = lengthBatchIntervals(df, keys, seqCol, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     def cur(): DataFrame = {
       val s = col(seqCol).cast("long")
       // bucketed range join: W ≈ mean interval width (computed in-plan, no
@@ -446,13 +436,15 @@ object UniqueOps {
       rowPerGroup(tagged, col("__batch_id") +: keys.map(col), seqCol, !keepFirst)
         .withColumnRenamed("__batch_id", "batch_id")
     }
-    // both outputs consume the SAME persisted interval frame (it is tiny —
-    // one row per batch); long-lived sessions reclaim with
-    // UniqueResult.unpersist() once done
+    // no persist: within one output's plan every consumer of `intervals`
+    // (the bucket width, the interval buckets, the last batch id) reads
+    // the one phase-A exchange through Spark's exchange reuse — phase A
+    // runs once per output, only the small phase-B fold repeats — and the
+    // operator leaves no cache entry behind
     val lastBatch = intervals.agg(max(col("__batch_id")).as("__last"))
     val expired = cur().crossJoin(broadcast(lastBatch))
       .filter(col("batch_id") < col("__last")).drop("__last")
-    UniqueResult(cur(), expired, cached = Seq(intervals))
+    UniqueResult(cur(), expired)
   }
 
   def firstLengthBatch(df: DataFrame, keys: Seq[String], seqCol: String, n: Int): UniqueResult =

@@ -199,12 +199,11 @@ object NearDupStream {
                         rowsPerBand: Int, maxBucket: Int,
                         md5Family: Boolean): DataFrame = {
     require(maxDist >= 0, s"maxDist must be non-negative, got $maxDist")
-    val txt = coalesce(col(textCol), lit(""))
-    val codes = graft.llm.TextDedup.editIndexCols(txt, shingleN, bands,
-      rowsPerBand, md5Family)
-    val prepared = sdf.select(col(idCol).cast("long").as("id"),
-      txt.as("payload"), codes.as("codes"))
-      .where(col("id").isNotNull)
+    val prepared = graft.llm.TextDedup.withEditCodes(
+      sdf.select(col(idCol).cast("long").as("id"),
+        coalesce(col(textCol), lit("")).as("payload"))
+        .where(col("id").isNotNull),
+      "payload", shingleN, bands, rowsPerBand, md5Family)
     val kd = maxDist
     val sn = shingleN
     buildCore[String, String](prepared, idCol, maxBucket,
@@ -562,13 +561,16 @@ object NearDupStream {
                        rowsPerBand: Int = 4, maxBucket: Int = 1000,
                        md5Family: Boolean = false): DataFrame = {
     require(maxDist >= 0, s"maxDist must be non-negative, got $maxDist")
-    val txt = coalesce(col(textCol), lit(""))
-    val codes = graft.llm.TextDedup.editIndexCols(txt, shingleN, bands,
-      rowsPerBand, md5Family)
-    val prepared = sdf.select(col(idCol).cast("long").as("id"),
-      txt.as("payload"), codes.as("codes"))
-      .where(col("id").isNotNull)
-      .select(explode(col("codes")).as("code"), col("id"), col("payload"), col("codes"))
+    // explode_outer + a filter on the code, not explode: explode makes the
+    // optimizer infer `size(codes) > 0` and push it below the projections,
+    // which inlines the whole codes chain into one interpreted predicate
+    val prepared = graft.llm.TextDedup.withEditCodes(
+      sdf.select(col(idCol).cast("long").as("id"),
+        coalesce(col(textCol), lit("")).as("payload"))
+        .where(col("id").isNotNull),
+      "payload", shingleN, bands, rowsPerBand, md5Family)
+      .select(explode_outer(col("codes")).as("code"), col("id"), col("payload"), col("codes"))
+      .where(col("code").isNotNull)
     val kd = maxDist
     shardedEdgesCore[String, String](prepared, maxBucket,
       extract = _.getString(2),

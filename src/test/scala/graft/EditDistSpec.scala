@@ -165,4 +165,44 @@ class EditDistSpec extends AnyFunSuite with SparkTestSession {
       assert(run(3) === batch, "chunk boundaries changed the survivor set")
     }
   }
+
+  test("withEditCodes: one shingle-hash fold per document in a stream's optimized plan; " +
+      "codes equal the nested single-column form") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayDistinct, ZipWith}
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import llm.TextDedup._
+    implicit val sqlc: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val df = docs.toDF("doc_id", "text")
+    // a streaming input: the optimizer infers a filter for the sharded
+    // stage's explode there, and pushing it down must not inline the chain
+    val sdf = MemoryStream[(Long, String)].toDF().toDF("doc_id", "text")
+    for ((fam, md5) <- Seq[(HashFamily, Boolean)]((Md5Hash, true), (XxHash, false))) {
+      val (n, bands, rows) = (3, 4, 2)
+      val sharded = NearDupStream.editShardedEdges(sdf, "doc_id", "text", maxDist = 3,
+        shingleN = n, bands = bands, rowsPerBand = rows, md5Family = md5)
+      // the batch-only operation check would refuse to optimize a stream
+      val check = "spark.sql.streaming.unsupportedOperationCheck"
+      val plans = try {
+        spark.conf.set(check, "false")
+        Seq(withEditCodes(sdf, "text", n, bands, rows, md5), sharded)
+          .map(_.queryExecution.optimizedPlan)
+      } finally spark.conf.unset(check)
+      for (plan <- plans) {
+        val exprs = plan.flatMap(_.expressions)
+        def count(pf: PartialFunction[Any, Unit]) = exprs.map(_.collect(pf).size).sum
+        assert(count { case _: ArrayDistinct => } === 1, s"md5=$md5: shingle set evaluated more than once\n$plan")
+        // the md5 shingle hash folds n-1 zip_withs once; xx has a native kernel
+        assert(count { case _: ZipWith => } === (if (md5) n - 1 else 0), s"md5=$md5:\n$plan")
+      }
+      val sh = array_distinct(charShingleHashes(col("text"), n, fam))
+      val sig = minhashFromBaseHashes(sh, bands * rows, fam)
+      val nested = when(size(sh) === 0, array().cast("array<string>"))
+        .otherwise(array((0 until bands).map(b => concat(lit(s"$b:"),
+          fam.band(slice(sig, b * rows + 1, rows), b).cast("string"))): _*))
+      val got = withEditCodes(df, "text", n, bands, rows, md5)
+        .select("doc_id", "codes").as[(Long, Seq[String])].collect().toMap
+      val want = df.select(col("doc_id"), nested).as[(Long, Seq[String])].collect().toMap
+      assert(got === want, s"md5=$md5: codes changed")
+    }
+  }
 }

@@ -97,17 +97,17 @@ class UniqueOpsSpec extends AnyFunSuite with SparkTestSession {
     assert(r.current.select("batch_id").distinct().count() === 3)
   }
 
-  test("lengthBatch releases its persisted interval frame via UniqueResult.unpersist") {
+  test("lengthBatch leaves no cache entry; expired reuses its phase-A exchange") {
     val df = cse(("IBM", 700.0, 1), ("WSO2", 60.5, 2), ("IBM", 700.0, 3),
       ("WSO2", 60.5, 4), ("IBM", 700.0, 5), ("WSO2", 60.5, 6))
+    val before = spark.sparkContext.getPersistentRDDs.size
     val r = UniqueOps.lengthBatch(df, Seq("symbol"), "seq", 2)
-    r.current.count(); r.expired.count()
-    assert(r.cached.nonEmpty &&
-      r.cached.forall(_.storageLevel != org.apache.spark.storage.StorageLevel.NONE),
-      "interval frame must be cached while outputs are consumed")
-    r.unpersist()
-    assert(r.cached.forall(_.storageLevel == org.apache.spark.storage.StorageLevel.NONE),
-      "unpersist() must release the interval frame")
+    r.current.collect(); r.expired.collect()
+    assert(spark.sparkContext.getPersistentRDDs.size === before,
+      "lengthBatch must not leave a persisted RDD behind")
+    // the interval frame's consumers share its one phase-A exchange
+    val plan = r.expired.queryExecution.executedPlan.toString
+    assert(plan.contains("ReusedExchange"), s"no reused exchange in the expired plan:\n$plan")
   }
 
   // ---- unique:lengthBatch(symbol, 4) aggregation: first flush sums
