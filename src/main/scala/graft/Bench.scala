@@ -85,12 +85,14 @@ object Bench {
     val smallSec = 0.3
     val smallReps = math.max(reps,
       sys.env.getOrElse("SPARK_GRAFT_BENCH_SMALL_REPS", "5").toInt)
-    // persisted RDDs a query left registered (max over its runs), counted
-    // before the cache is cleared: the "no cache entry outlives its query"
-    // check, in the full record only
+    // persisted RDDs a query registered and left registered (max over its
+    // runs), counted before the cache is cleared, so an entry an earlier
+    // run left is not charged again: the "no cache entry outlives its
+    // query" check, in the full record only
     val leftover = scala.collection.mutable.LinkedHashMap.empty[String, Int]
     val results = benchable.toSeq.sortBy(_._1).map { case (name, fn) =>
       def runOnce(): Double = {
+        val persisted = spark.sparkContext.getPersistentRDDs.keySet
         val t0 = System.nanoTime()
         val ok =
           // noop sink, NOT count(): a bare count(*) lets Catalyst prune
@@ -111,7 +113,8 @@ object Bench {
         // minhash/simhash/ngram pipelines) would otherwise accumulate
         // cache entries across the whole bench session, stealing memory from
         // later queries. Cleared AFTER timing, so intra-query reuse still counts.
-        leftover(name) = leftover.getOrElse(name, 0) max spark.sparkContext.getPersistentRDDs.size
+        leftover(name) = leftover.getOrElse(name, 0) max
+          (spark.sparkContext.getPersistentRDDs.keySet -- persisted).size
         spark.catalog.clearCache()
         if (ok) elapsed else -1.0
       }

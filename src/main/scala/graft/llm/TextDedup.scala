@@ -147,60 +147,63 @@ object TextDedup {
       }
   }
 
-  /** Per-doc near-dup INDEX columns — the same tokenize → shingle-hash →
-    * minhash → band-hash pipeline as `minhashPairsStats`, exposed as two
-    * plain columns for the STREAMING operator
-    * (graft.streaming.NearDupStream): `sh` (distinct shingle hashes, cast
-    * to strings so both hash families share one state layout) and
-    * `codes` (one "band:bandHash" string per LSH band — the keys of the
-    * streaming band-code index). Runs fully distributed as Catalyst
-    * expressions BEFORE the stateful stage, so the state operator does
-    * index lookups only. Docs with no shingles get empty arrays (the
-    * batch pipelines drop them pre-banding; the streaming operator must
-    * still emit a verdict for them).
+  /** Per-doc near-dup INDEX columns for the STREAMING operator
+    * (graft.streaming.NearDupStream): `df` plus `sh` (distinct
+    * token-shingle hashes of `textCol`, cast to strings so both hash
+    * families share one state layout) and `codes` (one "band:bandHash"
+    * string per LSH band — the keys of the streaming band-code index),
+    * the same tokenize → shingle-hash → minhash → band-hash pipeline as
+    * `minhashPairsStats`. Runs fully distributed as Catalyst expressions
+    * BEFORE the stateful stage, so the state operator does index lookups
+    * only. Docs with no shingles get empty arrays (the batch pipelines
+    * drop them pre-banding; the streaming operator must still emit a
+    * verdict for them).
     */
-  private[graft] def indexCols(textCol: Column, shingleN: Int, bands: Int,
-                               rowsPerBand: Int, md5Family: Boolean): (Column, Column) = {
+  private[graft] def withIndexCols(df: DataFrame, textCol: String, shingleN: Int,
+                                   bands: Int, rowsPerBand: Int,
+                                   md5Family: Boolean): DataFrame = {
     val fam: HashFamily = if (md5Family) Md5Hash else XxHash
-    val sh = array_distinct(shingleHashes(tokenize(textCol), shingleN, fam))
-    val sig = minhashFromBaseHashes(sh, bands * rowsPerBand, fam)
-    val codes = array((0 until bands).map(b =>
-      concat(lit(s"$b:"),
-        fam.band(slice(sig, b * rowsPerBand + 1, rowsPerBand), b).cast("string"))): _*)
-    val shStr = sh.cast("array<string>")
-    val emptyStr = array().cast("array<string>")
-    (when(size(sh) === 0, emptyStr).otherwise(shStr),
-      when(size(sh) === 0, emptyStr).otherwise(codes))
+    withBandCodes(df, shingleHashes(tokenize(col(textCol)), shingleN, fam),
+      bands, rowsPerBand, fam)
+      .withColumn("sh", col("__sh").cast("array<string>"))
+      .drop("__sh")
   }
 
   /** Streaming index codes for the EDIT-DISTANCE near-dup operator
     * (graft.streaming.NearDupStream.editNearDupStream): `df` plus a
-    * `codes` column, the [[indexCols]] band-code pipeline over CHARACTER
-    * shingles of `textCol` ([[charTokens]], the [[editDistancePairs]]
-    * candidate relation). Codes only — the streaming payload is the raw
-    * text itself (the exact-lev verify needs the string, not a hash set).
-    * Docs shorter than `shingleN` chars get an empty code array (never
-    * candidates, matching the batch empty-shingle drop).
-    *
-    * The shingle hashes, the signature and the codes are successive
-    * projections, as in the batch twin [[editDistancePairsStats]]: the
-    * md5 family's hash folds are higher-order functions without codegen,
-    * and as one nested column every band's `slice` would re-evaluate the
-    * whole signature (and the signature the shingle hashes once per
-    * minhash row) per document.
+    * `codes` column, the [[withIndexCols]] band-code pipeline over
+    * CHARACTER shingles of `textCol` ([[charTokens]], the
+    * [[editDistancePairs]] candidate relation). Codes only — the
+    * streaming payload is the raw text itself (the exact-lev verify needs
+    * the string, not a hash set). Docs shorter than `shingleN` chars get
+    * an empty code array (never candidates, matching the batch
+    * empty-shingle drop).
     */
   private[graft] def withEditCodes(df: DataFrame, textCol: String, shingleN: Int,
                                    bands: Int, rowsPerBand: Int,
                                    md5Family: Boolean): DataFrame = {
     val fam: HashFamily = if (md5Family) Md5Hash else XxHash
-    df.withColumn("__sh", array_distinct(charShingleHashes(col(textCol), shingleN, fam)))
+    withBandCodes(df, charShingleHashes(col(textCol), shingleN, fam), bands, rowsPerBand, fam)
+      .drop("__sh")
+  }
+
+  /** `df` plus `__sh` (the distinct `shingles`) and `codes` (empty when
+    * there are none). The shingle hashes, the signature and the codes are
+    * successive projections, as in the batch pipelines: the md5 family's
+    * hash folds are higher-order functions without codegen, and as one
+    * nested column every band's `slice` would re-evaluate the whole
+    * signature (and the signature the shingle hashes once per minhash
+    * row) per document.
+    */
+  private def withBandCodes(df: DataFrame, shingles: Column, bands: Int, rowsPerBand: Int,
+                            fam: HashFamily): DataFrame =
+    df.withColumn("__sh", array_distinct(shingles))
       .withColumn("__sig", minhashFromBaseHashes(col("__sh"), bands * rowsPerBand, fam))
       .withColumn("codes", when(size(col("__sh")) === 0, array().cast("array<string>"))
         .otherwise(array((0 until bands).map(b =>
           concat(lit(s"$b:"), fam.band(slice(col("__sig"), b * rowsPerBand + 1, rowsPerBand), b)
             .cast("string"))): _*)))
-      .drop("__sh", "__sig")
-  }
+      .drop("__sig")
 
   /** Exact duplicates: keep the lowest-id row per identical value of
     * `exactCols` (a hash-groupBy — one shuffle, partial-aggregable).

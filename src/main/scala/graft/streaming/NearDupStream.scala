@@ -15,7 +15,7 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   *
   * Architecture (design-for-scale split):
   *  - The per-doc heavy work — tokenize → shingle hashes → minhash
-  *    signature → band codes (`TextDedup.indexCols`) — runs DISTRIBUTED
+  *    signature → band codes (`TextDedup.withIndexCols`) — runs DISTRIBUTED
   *    as pure Catalyst expressions before the stateful stage.
   *  - The stateful stage is `transformWithState` (Spark 4 arbitrary
   *    state, RocksDB-backed — call `UniqueStreams.useRocksDBStateStore`
@@ -256,11 +256,11 @@ object NearDupStream {
     // pairing them; the stream treats them as shingle-less "keep"s), and a
     // null id has no usable identity — drop it before the state stage, the
     // same rows the batch pipeline's id-keyed joins would never emit
-    val (sh, codes) = graft.llm.TextDedup.indexCols(
-      coalesce(col(textCol), lit("")), shingleN, bands, rowsPerBand, md5Family)
-    val prepared = sdf.select(col(idCol).cast("long").as("id"),
-      sh.as("sh"), codes.as("codes"))
-      .where(col("id").isNotNull)
+    val prepared = graft.llm.TextDedup.withIndexCols(
+      sdf.select(col(idCol).cast("long").as("id"), coalesce(col(textCol), lit("")).as("text"))
+        .where(col("id").isNotNull),
+      "text", shingleN, bands, rowsPerBand, md5Family)
+      .select("id", "sh", "codes")
     val thr = threshold
     buildCore[Array[String], Set[String]](prepared, idCol, maxBucket,
       extract = r => r.getSeq[String](1).toArray,
@@ -524,12 +524,14 @@ object NearDupStream {
                    shingleN: Int = 3, bands: Int = 8, rowsPerBand: Int = 4,
                    threshold: Double = 0.5, maxBucket: Int = 1000,
                    md5Family: Boolean = false): DataFrame = {
-    val (sh, codes) = graft.llm.TextDedup.indexCols(
-      coalesce(col(textCol), lit("")), shingleN, bands, rowsPerBand, md5Family)
-    val prepared = sdf.select(col(idCol).cast("long").as("id"),
-      sh.as("payload"), codes.as("codes"))
-      .where(col("id").isNotNull)
-      .select(explode(col("codes")).as("code"), col("id"), col("payload"), col("codes"))
+    // explode_outer + a filter on the code, as in editShardedEdges
+    val prepared = graft.llm.TextDedup.withIndexCols(
+      sdf.select(col(idCol).cast("long").as("id"), coalesce(col(textCol), lit("")).as("text"))
+        .where(col("id").isNotNull),
+      "text", shingleN, bands, rowsPerBand, md5Family)
+      .select(explode_outer(col("codes")).as("code"), col("id"), col("sh").as("payload"),
+        col("codes"))
+      .where(col("code").isNotNull)
     val thr = threshold
     shardedEdgesCore[Array[String], Set[String]](prepared, maxBucket,
       extract = _.getSeq[String](2).toArray,

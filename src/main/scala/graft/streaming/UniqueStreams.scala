@@ -102,7 +102,8 @@ object UniqueStreams {
     * documents exactly this OOM risk on its ever window and offers no
     * fix (UniqueEverWindowProcessor.java:66-69, "events... will not be
     * removed"); Spark's pluggable state store is the engine-level answer
-    * (SURVEY.md §7.4.4). Call before starting queries.
+    * (SURVEY.md §7.4.4). Call before the session's first query (see the
+    * last setting below), or at least before starting the stream.
     *
     * Two more settings cut the fixed cost every micro-batch pays for its
     * checkpoint files (offsets and commit log on the driver, state on
@@ -116,6 +117,23 @@ object UniqueStreams {
     *    a `readlink` per link-status lookup, tens of milliseconds per
     *    checkpoint file; the fork-free one leaves the same files,
     *    checksums and permissions.
+    *
+    * And one setting cuts the fixed cost of every micro-batch's tasks:
+    * session artifact isolation (`spark.sql.artifact.isolation.enabled`,
+    * on by default) goes off. Under it each task runs under the session's
+    * own executor class loader, which asks the driver's RPC file server
+    * for every class its parent lacks and remembers no miss; since the
+    * compiled-class cache is per class loader, the executors compile
+    * every generated class again, each Janino name lookup an RPC round
+    * trip. Off, tasks use the executor's default class loader and a
+    * generated class compiles once per JVM. Nothing here adds session
+    * artifacts (jars, classes), so isolation has nothing to isolate.
+    * Spark reads this key once per session, at its first SQL execution,
+    * and a stream query runs in a clone of the session made when it
+    * starts, which reads it then. So a call before the session's first
+    * query covers all its work; a later call still covers every stream
+    * started after it, but the session's own batch queries (a replay's
+    * input collect and sink read) keep the isolation they started with.
     */
   def useRocksDBStateStore(spark: org.apache.spark.sql.SparkSession): Unit =
     rocksDBStateStoreConf.foreach { case (k, v) => spark.conf.set(k, v) }
@@ -124,7 +142,8 @@ object UniqueStreams {
     "spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
-    "fs.AbstractFileSystem.file.impl" -> classOf[ForkFreeLocalFs].getName)
+    "fs.AbstractFileSystem.file.impl" -> classOf[ForkFreeLocalFs].getName,
+    "spark.sql.artifact.isolation.enabled" -> "false")
 
   /** Run `body` under `useRocksDBStateStore`, then give every key it sets
     * back its previous value, or unset it if it had none.

@@ -209,4 +209,51 @@ class NearDupStreamSpec extends AnyFunSuite with SparkTestSession {
       .as[(String, Long)].collect().toSeq
     assert(r3 === Seq(("drop", 1L)))
   }
+
+  test("withIndexCols: one shingle-hash fold per document in a stream's optimized plan; " +
+      "sh and codes equal the nested single-column form") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayDistinct, ZipWith}
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import llm.TextDedup._
+    implicit val sqlc: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val df = Seq(Doc(1, words(0, 10)), Doc(2, words(5, 15)), Doc(3, ""), Doc(4, "zz yy"),
+      Doc(5, words(2, 12))).toDF()
+    // a streaming input: the optimizer infers a filter for the sharded
+    // stage's explode there, and pushing it down must not inline the chain
+    val sdf = MemoryStream[(Long, String)].toDF().toDF("doc_id", "text")
+    for ((fam, md5) <- Seq[(HashFamily, Boolean)]((Md5Hash, true), (XxHash, false))) {
+      val (n, bands, rows) = (3, 4, 2)
+      val ops = Seq(withIndexCols(sdf, "text", n, bands, rows, md5),
+        NearDupStream.shardedEdges(sdf, "doc_id", "text", shingleN = n, bands = bands,
+          rowsPerBand = rows, md5Family = md5)) ++
+        (if (md5) Seq(NearDupStream.nearDupStreamMd5(sdf, "doc_id", "text", shingleN = n,
+          bands = bands, rowsPerBand = rows)) else Nil)
+      // the batch-only operation check would refuse to optimize a stream
+      val check = "spark.sql.streaming.unsupportedOperationCheck"
+      val plans = try {
+        spark.conf.set(check, "false")
+        ops.map(_.queryExecution.optimizedPlan)
+      } finally spark.conf.unset(check)
+      for (plan <- plans) {
+        val exprs = plan.flatMap(_.expressions)
+        def count(pf: PartialFunction[Any, Unit]) = exprs.map(_.collect(pf).size).sum
+        assert(count { case _: ArrayDistinct => } === 1, s"md5=$md5: shingle set evaluated more than once\n$plan")
+        // the md5 shingle hash folds n-1 zip_withs once; xx has a native kernel
+        assert(count { case _: ZipWith => } === (if (md5) n - 1 else 0), s"md5=$md5:\n$plan")
+      }
+      val sh = array_distinct(shingleHashes(tokenize(col("text")), n, fam))
+      val sig = minhashFromBaseHashes(sh, bands * rows, fam)
+      val empty = array().cast("array<string>")
+      val nestedSh = when(size(sh) === 0, empty).otherwise(sh.cast("array<string>"))
+      val nestedCodes = when(size(sh) === 0, empty)
+        .otherwise(array((0 until bands).map(b => concat(lit(s"$b:"),
+          fam.band(slice(sig, b * rows + 1, rows), b).cast("string"))): _*))
+      val got = withIndexCols(df, "text", n, bands, rows, md5)
+        .select("doc_id", "sh", "codes").as[(Long, Seq[String], Seq[String])].collect().toSet
+      val want = df.select(col("doc_id"), nestedSh, nestedCodes)
+        .as[(Long, Seq[String], Seq[String])].collect().toSet
+      assert(got === want, s"md5=$md5: index columns changed")
+      assert(got.count(_._3.isEmpty) === 2, "fixture drift: two shingle-less docs")
+    }
+  }
 }

@@ -9,7 +9,9 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{CreateFlag, FileContext, Options, Path}
 import org.apache.hadoop.fs.local.LocalFs
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.state.{StateStore, StateStoreProviderId}
+import org.apache.spark.sql.functions.udf
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,13 +21,16 @@ import graft.streaming.{ForkFreeLocalFs, Replay, UniqueStreams}
   * local file system leaves exactly the files, bytes, `.crc` checksums and
   * permissions Hadoop's `LocalFs` leaves; the save-and-restore helper puts
   * every key back; a changelog-checkpointed restart past a snapshot
-  * replays to the uninterrupted output; and a stopped replay leaves no
-  * state-store provider loaded.
+  * replays to the uninterrupted output; a stopped replay leaves no
+  * state-store provider loaded; and streams started after the hook run
+  * their tasks under the executor's own class loader, so a repeated
+  * replay compiles no generated class.
   */
 class StateStoreHookSpec extends AnyFunSuite with SparkTestSession {
   import spark.implicits._
 
   private val fsKey = "fs.AbstractFileSystem.file.impl"
+  private val isolationKey = "spark.sql.artifact.isolation.enabled"
 
   private def fileContext(forkFree: Boolean): FileContext = {
     val conf = new Configuration()
@@ -105,24 +110,27 @@ class StateStoreHookSpec extends AnyFunSuite with SparkTestSession {
   test("useRocksDBStateStore sets all three keys; withRocksDBStateStore " +
       "restores a pre-set value and unsets a key that had none") {
     val keys = Seq("spark.sql.streaming.stateStore.providerClass",
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", fsKey)
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", fsKey,
+      isolationKey)
     val saved = keys.map(k => k -> spark.conf.getOption(k))
     try {
       val hdfs = "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
       spark.conf.set(keys(0), hdfs)
       spark.conf.set(keys(1), "false")
       spark.conf.unset(fsKey)
+      spark.conf.set(isolationKey, "true")
+      val before = Seq(Some(hdfs), Some("false"), None, Some("true"))
       val inside = UniqueStreams.withRocksDBStateStore(spark) {
         keys.map(k => spark.conf.getOption(k))
       }
       assert(inside === Seq(
         Some("org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"),
-        Some("true"), Some(classOf[ForkFreeLocalFs].getName)))
-      assert(keys.map(k => spark.conf.getOption(k)) === Seq(Some(hdfs), Some("false"), None))
+        Some("true"), Some(classOf[ForkFreeLocalFs].getName), Some("false")))
+      assert(keys.map(k => spark.conf.getOption(k)) === before)
       intercept[IllegalStateException](UniqueStreams.withRocksDBStateStore(spark) {
         throw new IllegalStateException("body failed")
       })
-      assert(keys.map(k => spark.conf.getOption(k)) === Seq(Some(hdfs), Some("false"), None))
+      assert(keys.map(k => spark.conf.getOption(k)) === before)
     } finally saved.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
@@ -197,5 +205,63 @@ class StateStoreHookSpec extends AnyFunSuite with SparkTestSession {
     assert(runs.size === 2, "a restarted replay runs the query twice")
     val left = loadedProviders.filter(id => runs.contains(id.queryRunId))
     assert(left.isEmpty, s"providers still loaded: $left")
+  }
+
+  /** The class name of each task's context class loader. */
+  private val loader = udf(() => Thread.currentThread.getContextClassLoader.getClass.getName)
+
+  /** On a new session set up by `setUp`, an everStream replay whose
+    * output carries each task's context class loader, run twice. Returns
+    * the loaders seen and the Janino compiles the second replay added. */
+  private def twoReplaysOnNewSession(setUp: SparkSession => Unit): (Set[String], Long) = {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val fresh = spark.newSession()
+    setUp(fresh)
+    val events = fresh.createDataFrame((1 to 120).map(i => (i.toLong, s"k${i % 17}")))
+      .toDF("seq", "key")
+    def run(): Set[String] =
+      Replay.replay(fresh, events, "seq", 20, "update")(sdf =>
+        UniqueStreams.everStream(sdf, Seq("key"), Some("seq")).withColumn("loader", loader()))
+        .select("loader").distinct().as[String].collect().toSet
+    val first = run()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val second = run()
+    (first ++ second, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled)
+  }
+
+  private val executorLoader = "org.apache.spark.executor.ExecutorClassLoader"
+
+  test("the hook before a new session's first query: stream tasks run outside " +
+      "ExecutorClassLoader and a second identical replay compiles no class") {
+    // "true" is Spark's default; this build's JVMs start with isolation off
+    val (loaders, compiles) = twoReplaysOnNewSession { s =>
+      s.conf.set(isolationKey, "true")
+      UniqueStreams.useRocksDBStateStore(s)
+    }
+    assert(loaders.nonEmpty && !loaders.contains(executorLoader), s"task loaders: $loaders")
+    assert(compiles === 0, "the second replay compiled generated code again")
+  }
+
+  test("contrast: isolation on at a new session's first query puts stream tasks " +
+      "under ExecutorClassLoader, and a second identical replay compiles again") {
+    val (loaders, compiles) = twoReplaysOnNewSession { s =>
+      UniqueStreams.useRocksDBStateStore(s)
+      s.conf.set(isolationKey, "true")
+    }
+    assert(loaders === Set(executorLoader))
+    assert(compiles > 0)
+  }
+
+  test("the hook after a session's first query: its batch queries stay isolated, " +
+      "streams started later are not") {
+    var batchLoaders = Set.empty[String]
+    val (loaders, _) = twoReplaysOnNewSession { s =>
+      s.conf.set(isolationKey, "true")
+      s.range(0, 4, 1, 4).select(loader()).as[String].collect()
+      UniqueStreams.useRocksDBStateStore(s)
+      batchLoaders = s.range(0, 4, 1, 4).select(loader()).as[String].collect().toSet
+    }
+    assert(batchLoaders === Set(executorLoader))
+    assert(loaders.nonEmpty && !loaders.contains(executorLoader), s"task loaders: $loaders")
   }
 }
