@@ -50,7 +50,8 @@ object SparkEntry {
     * measures it. The rows Bench skips are the verification mirrors: the
     * `_md5` rows exist only to make a pipeline DuckDB-checkable, and the
     * `_replay` rows measure a driver-fed MemoryStream, not the engine
-    * (streaming throughput is tools/StreamBench's job).
+    * (streaming throughput is the `unique_stream` benchmark workload's
+    * job).
     */
   final case class Entry(build: Build, check: Check, bench: Boolean)
 
@@ -1887,7 +1888,7 @@ object SparkEntry {
       // serving deployment persists it once, bucketed by term) — pin it
       // here so the replay's per-micro-batch stream-static joins don't
       // re-run the tokenize/explode/aggregate lineage chunk × corpus
-      // times (StreamBench's scoring arm does the same)
+      // times
       val idx = idx0.copy(postings = idx0.postings.localCheckpoint(true))
       streaming.Replay.replay(s,
         docs.filter(col("doc_id") % 10 === 0)

@@ -31,8 +31,7 @@ object Verify {
     val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     // a misspelled name must fail loudly, not run zero queries and write
-    // an empty output dir (same contract as SPARK_GRAFT_SCALE_QUERIES /
-    // SPARK_GRAFT_BENCH_QUERIES)
+    // an empty output dir (same contract as SPARK_GRAFT_BENCH_QUERIES)
     only.foreach { qs =>
       val unknown = qs -- SparkEntry.queries.keySet
       require(unknown.isEmpty,

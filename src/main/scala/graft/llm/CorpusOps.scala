@@ -108,8 +108,9 @@ object CorpusOps {
     * the join becomes a gram-key-partitioned shuffle join whose train
     * side is ONLY (id, gram) pairs after column pruning — the payload
     * columns (text and everything else) never enter the exchange
-    * (asserted by `LlmOpsSpec`'s plan test; measured in ScaleBench
-    * `decontam_large_eval`). Identical output either way.
+    * (asserted by `CorpusOpsSpec` "decontaminate past the broadcast
+    * regime"; priced at 10× in BASELINE.md "Decontamination past the
+    * broadcast regime at 10×"). Identical output either way.
     */
   def decontaminate(df: DataFrame, idCol: String, textCol: String,
                     evalMod: Long = 50, n: Int = 5,
@@ -328,16 +329,16 @@ object CorpusOps {
     * Rounds 12-13 hand-built this same two-level shape — first as a
     * mapPartitions pre-cap (blocked column pruning; paid a row-encoder
     * pass; +52% on the sf0.1 gate), then as a native stateful
-    * predicate — and the 10× hot-group probe (ScaleBench
-    * `source_cap_hotgroup`, one group = 50% of rows) measured BOTH
+    * predicate — and the 10× hot-group probe (one group = 50% of rows;
+    * BASELINE.md "capPerGroup hot-group probe") measured BOTH
     * redundant: the bare window already shuffles the identical
     * partitions × cap × groups row count (1,101 rows vs 25,000+ for
     * the hot group) because the optimizer provides the pre-filter
     * natively, in whole-stage codegen, sharing the window's own sort.
     * Per the project's first design rule — don't hand-schedule what
     * the optimizer already does — the hand-built levels are deleted;
-    * the A/B against an `InferWindowGroupLimit`-excluded run stays in
-    * ScaleBench as the regression guard for the native rule.
+    * `LlmOpsSpec` "capPerGroup plan: partial WindowGroupLimit runs below
+    * the exchange" is the regression guard for the native rule.
     */
   def capPerGroup(df: DataFrame, groupCol: String, orderCol: String,
                   cap: Int): DataFrame = {
@@ -905,8 +906,8 @@ object CorpusOps {
     * doc_id + the integer sufficient statistics + `logw` — plus
     * `gumbel_key`, the perturbed key the top-k ordered on. Selection
     * pipelines audit WHY a document was drawn (weight vs noise), so the
-    * key is part of the contract, not an implementation leak;
-    * `ScaleBench`'s dsir arm aggregates over it deliberately.
+    * key is part of the contract, not an implementation leak; the
+    * `doc_dsir_select` bench row writes it.
     */
   def dsirSelect(docs: DataFrame, idCol: String, textCol: String,
                  model: DsirModel, k: Int, seed: String = "dsir"): DataFrame = {

@@ -272,8 +272,9 @@ object UniqueOps {
       lengthBatchSummary(df, keys, seqCol, n, numChunks), keys.length, n)
 
   /** Phase A alone (parallel chunk compression) — split out so the
-    * serial share of phase B is separately measurable (ScaleBench
-    * `lengthbatch_phaseb`). Output: the compressed (seq, keys…) summary.
+    * serial share of phase B is separately measurable (last measured at
+    * 10×: BASELINE.md "lengthBatch phase-B serial share at 10×"). Output:
+    * the compressed (seq, keys…) summary.
     *
     * On the phase-B PARALLEL-PREFIX question (VERDICT r9 ask #8): the
     * automaton's per-segment state does NOT compose cheaply. A segment's

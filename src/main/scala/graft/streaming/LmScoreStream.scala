@@ -74,8 +74,10 @@ object LmScoreStream {
     * aggregation rows once the watermark passes its end — state is
     * bounded by the docs in the watermark horizon, not the docs ever
     * seen (continuous ingestion over unbounded doc ids no longer grows
-    * state forever; `StreamBench`'s `scoring_windowed` section records
-    * the flat-vs-linear state-rows trajectory).
+    * state forever; `CorpusOpsSpec` "lmScoreStreamWindowed: parity with
+    * batch AND state evicts below the watermark" asserts the eviction, and
+    * BASELINE.md "Watermark-bounded scoring streams" records the
+    * flat-vs-linear state-rows trajectory).
     *
     * Results for completed documents are IDENTICAL to the unwindowed
     * form whenever all of a document's rows carry one event time (the

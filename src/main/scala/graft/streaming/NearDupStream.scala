@@ -513,8 +513,10 @@ object NearDupStream {
     * all the comparison work, parallelized; stage B touches a few
     * longs per edge. Spark 4.1 does not chain two update-mode
     * `transformWithState` operators in one query, so the two stages run
-    * as two queries bridged by an edge sink/source (measured in
-    * `ScaleBench` `neardup_sharded`; a production deployment bridges
+    * as two queries bridged by an edge sink/source (BASELINE.md
+    * "Band-sharded near-dup path" keeps the 10× measurement;
+    * `NearDupStreamSpec` "sharded two-stage path" pins parity; a
+    * production deployment bridges
     * through a replayable log, e.g. the files/kafka sink-source pair).
     * The bucket cap matches the monolith (a full bucket stops indexing;
     * arrivals still verify against stored members), so below cap the

@@ -4,6 +4,38 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+/** One Bloom shard of [[UniqueStreams.firstStreamBloom]]'s fixed-size
+  * state: the bitset plus an admitted-count (telemetry for the ε
+  * estimate; not consulted on the hot path).
+  */
+case class BloomShard(bits: Array[Byte], inserted: Long)
+
+/** One rotating two-bank shard of
+  * [[UniqueStreams.deduplicateStreamBloom]]: `epoch` is the interval
+  * bucket `cur` covers; `prev` covers `epoch − 1`; together they span at
+  * least one full interval behind any event in `epoch`.
+  */
+case class BloomDedupShard(epoch: Long, cur: Array[Byte], prev: Array[Byte])
+
+/** Keyed state for the global-order operators (public top-level: the kryo
+  * encoder rejects non-public classes).
+  */
+case class GlobalState(
+    order: List[(String, Row)],          // insertion-ordered live window (length)
+    batchKeys: Set[String],              // distinct keys in the filling batch
+    pending: List[Row],                  // filling batch's rows
+    prevBatch: List[Row],                // last flushed batch (expired on next flush)
+    batchId: Long,
+    latched: Boolean,                    // timeLengthBatch post-flush drop latch
+    prevBatchId: Long = 0L)              // time-batch id of prevBatch (timeLengthBatch)
+
+/** State for externalTimeBatch-with-time.out (public for kryo). */
+case class EtbState(
+    endTimeMs: Long,                     // current batch's event-time end (exclusive)
+    batch: List[(String, Row)],          // latest-per-key contents, insertion order
+    sentIdle: Boolean,                   // an idle time.out flush already emitted this batch
+    dirty: Boolean)                      // events arrived since the last emit
+
 /** Structured-Streaming implementations of the `unique:` operators
   * (SURVEY.md §7.2 steps 3-4).
   *
@@ -24,38 +56,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * collision-free across column boundaries (JSON escaping), the
   * streaming analog of the batch structs (SURVEY.md §1.4).
   */
-/** Keyed state for the global-order operators (public top-level: the kryo
-  * encoder rejects non-public classes).
-  */
-/** One Bloom shard of [[UniqueStreams.firstStreamBloom]]'s fixed-size
-  * state: the bitset plus an admitted-count (telemetry for the ε
-  * estimate; not consulted on the hot path).
-  */
-case class BloomShard(bits: Array[Byte], inserted: Long)
-
-/** One rotating two-bank shard of
-  * [[UniqueStreams.deduplicateStreamBloom]]: `epoch` is the interval
-  * bucket `cur` covers; `prev` covers `epoch − 1`; together they span at
-  * least one full interval behind any event in `epoch`.
-  */
-case class BloomDedupShard(epoch: Long, cur: Array[Byte], prev: Array[Byte])
-
-case class GlobalState(
-    order: List[(String, Row)],          // insertion-ordered live window (length)
-    batchKeys: Set[String],              // distinct keys in the filling batch
-    pending: List[Row],                  // filling batch's rows
-    prevBatch: List[Row],                // last flushed batch (expired on next flush)
-    batchId: Long,
-    latched: Boolean,                    // timeLengthBatch post-flush drop latch
-    prevBatchId: Long = 0L)              // time-batch id of prevBatch (timeLengthBatch)
-
-/** State for externalTimeBatch-with-time.out (public for kryo). */
-case class EtbState(
-    endTimeMs: Long,                     // current batch's event-time end (exclusive)
-    batch: List[(String, Row)],          // latest-per-key contents, insertion order
-    sentIdle: Boolean,                   // an idle time.out flush already emitted this batch
-    dirty: Boolean)                      // events arrived since the last emit
-
 object UniqueStreams {
 
   private def jsonKey(keys: Seq[String]): Column =

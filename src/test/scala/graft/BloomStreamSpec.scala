@@ -16,7 +16,8 @@ import graft.streaming.UniqueStreams
   * or across micro-batches), exact parity with the exact operator when
   * the filter is generously sized (deterministic — fixed hash seeds),
   * graceful degradation (false-positive DROPS, never duplicate passes)
-  * when deliberately undersized, and replay-chunking invariance.
+  * when deliberately undersized, replay-chunking invariance, and state
+  * that stays at one row per shard while the exact operator's grows.
   */
 class BloomStreamSpec extends AnyFunSuite with SparkTestSession {
   import spark.implicits._
@@ -173,5 +174,30 @@ class BloomStreamSpec extends AnyFunSuite with SparkTestSession {
     val exact = rows.groupBy(r => (r.ip, r.ts)).map { case (k, rs) => (k._1, k._2, rs.map(_.seq).min) }.toSet
     assert(got.toSet === exact)
     assert(got.length === 7 * 20)
+  }
+
+  test("fixed state: firstStreamBloom holds at most numShards state rows " +
+      "while exact firstStream holds one per distinct key") {
+    // every key distinct, four micro-batches: the regime where the exact
+    // operator's state grows one row per event
+    val rows = (0 until 800).map(i => login(i, s"u$i", i))
+    def stateRowsPerBatch(name: String)(op: DataFrame => DataFrame): Seq[Long] = {
+      val ms = MemoryStream[Login]
+      val q = startQuery(op(ms.toDF()), name)
+      try rows.grouped(200).map { chunk =>
+        ms.addData(chunk: _*)
+        q.processAllAvailable()
+        q.recentProgress.filter(_.numInputRows > 0).last
+          .stateOperators.map(_.numRowsTotal).sum
+      }.toList
+      finally q.stop()
+    }
+    val bloom = stateRowsPerBatch("bloom_state")(df =>
+      UniqueStreams.firstStreamBloom(df, Seq("ip"),
+        numShards = 8, bitsPerShard = 1 << 16, seqCol = Some("seq")))
+    assert(bloom.forall(r => r >= 1 && r <= 8), s"Bloom state rows per batch: $bloom")
+    val exact = stateRowsPerBatch("exact_state")(df =>
+      UniqueStreams.firstStream(df, Seq("ip")))
+    assert(exact === Seq(200L, 400L, 600L, 800L))
   }
 }

@@ -694,15 +694,16 @@ class LlmOpsSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("ivfTopK recall@20 floor — the quality gate a refactor must not break") {
-    // Deterministic planted-clique corpus (the ScaleBench §round-6
-    // construction at spec scale): 5 copies of the 500 sf0.001 vectors,
+    // Deterministic planted-clique corpus (the BASELINE.md "Round-6: 10×
+    // scale measurement" construction at spec scale): 5 copies of the 500 sf0.001 vectors,
     // one coordinate scaled per copy, so each original vector becomes a
     // near-identical 5-clique (the high-similarity regime) while the
     // truth tail holds genuine low-similarity neighbors. Everything is
     // seed-free and the Lloyd pass is fixed-point-deterministic, so the
     // measured recall is STABLE — this is a gate, not a flaky sample:
     // measured 0.735 at 64 cells / 8 probes (~1/8 of the corpus scanned
-    // per query; the ScaleBench 10× config, which measured 0.757 there).
+    // per query; the 10× config, which measured 0.757 there: BASELINE.md
+    // "Round-6 builder bench record").
     // Floor 0.70: any dip below is a real quality change in cell
     // assignment/Lloyd/probing, not sampling noise.
     val copies = 5

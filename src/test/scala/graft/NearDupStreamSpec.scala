@@ -30,19 +30,25 @@ class NearDupStreamSpec extends AnyFunSuite with SparkTestSession {
   private val RPB = 1
   private val THR = 0.2
 
-  private def runStream(docs: Seq[Doc]): org.apache.spark.sql.DataFrame = {
+  /** md5Family = false runs the xxhash64 production form. */
+  private def runStream(docs: Seq[Doc],
+                        md5Family: Boolean = true): org.apache.spark.sql.DataFrame = {
     // transformWithState requires RocksDB
     UniqueStreams.withRocksDBStateStore(spark) {
       // chunkSize=1: one doc per micro-batch — exercises cross-batch state
       Replay.replay(spark, docs.toDF(), "doc_id", 1, "update")(sdf =>
-        NearDupStream.nearDupStreamMd5(sdf, "doc_id", "text",
+        if (md5Family) NearDupStream.nearDupStreamMd5(sdf, "doc_id", "text",
+          bands = BANDS, rowsPerBand = RPB, threshold = THR)
+        else NearDupStream.nearDupStream(sdf, "doc_id", "text",
           bands = BANDS, rowsPerBand = RPB, threshold = THR))
         .cache()
     }
   }
 
-  private def batchPairs(docs: Seq[Doc]) =
-    llm.TextDedup.minhashPairsMd5(docs.toDF(), "text", "doc_id",
+  private def batchPairs(docs: Seq[Doc], md5Family: Boolean = true) =
+    if (md5Family) llm.TextDedup.minhashPairsMd5(docs.toDF(), "text", "doc_id",
+      bands = BANDS, rowsPerBand = RPB, threshold = THR)
+    else llm.TextDedup.minhashPairs(docs.toDF(), "text", "doc_id",
       bands = BANDS, rowsPerBand = RPB, threshold = THR)
 
   private def survivors(log: org.apache.spark.sql.DataFrame): Set[Long] =
@@ -112,14 +118,17 @@ class NearDupStreamSpec extends AnyFunSuite with SparkTestSession {
       Doc(6, "completely unrelated content here nothing shared with anyone at all"),
       Doc(7, ""), // no shingles → always kept, never indexed
       Doc(8, "zz yy"))  // < shingleN tokens → no shingles
-    val batchKept = llm.TextDedup.dedupByPairs(docs.toDF(), "doc_id", batchPairs(docs))
-      .select("doc_id").as[Long].collect().toSet
-    val log = runStream(docs)
-    assert(survivors(log) === batchKept)
-    // every doc got a verdict, and each doc emits at most keep + one demotion
-    val perDoc = log.groupBy("doc_id").count().as[(Long, Long)].collect().toMap
-    assert(perDoc.keySet === docs.map(_.doc_id).toSet)
-    assert(perDoc.values.forall(_ <= 2))
+    for (md5 <- Seq(true, false)) {
+      val batchKept = llm.TextDedup.dedupByPairs(docs.toDF(), "doc_id", batchPairs(docs, md5))
+        .select("doc_id").as[Long].collect().toSet
+      assert(batchKept.size < docs.size, s"md5Family=$md5: the fixture pairs nothing")
+      val log = runStream(docs, md5)
+      assert(survivors(log) === batchKept, s"md5Family=$md5")
+      // every doc got a verdict, and each doc emits at most keep + one demotion
+      val perDoc = log.groupBy("doc_id").count().as[(Long, Long)].collect().toMap
+      assert(perDoc.keySet === docs.map(_.doc_id).toSet)
+      assert(perDoc.values.forall(_ <= 2))
+    }
   }
 
   private def withRocks[A](body: => A): A =

@@ -1,6 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{Encoders, Row}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.streaming.{Replay, SemDedupStream, UniqueStreams}
 
@@ -72,6 +74,27 @@ class SemDedupStreamSpec extends AnyFunSuite with SparkTestSession {
         "saturation must not be silent")
       assert(survivors(log) === batchCapped,
         "saturated streamed survivors diverged from the capped batch operator")
+      // the saturated cell frees its members, at least one state row each,
+      // so the capped query ends more than `cap` rows below the uncapped
+      // one; had it kept its first `cap` members, the gap would be only the
+      // rows of the hot cell's |cell| - cap later arrivals
+      def finalStateRows(maxCell: Int): Long = {
+        val ms = MemoryStream[Row](Encoders.row(emb.schema), spark.sqlContext)
+        val q = SemDedupStream.semDedupStream(ms.toDF(), "vec_id", "embedding",
+            dim = 64, eps = 0.3, centroids = cents, maxCell = maxCell)
+          .writeStream.format("memory").queryName(s"sd_state_$maxCell")
+          .outputMode("update").start()
+        try {
+          emb.orderBy("vec_id").collect().grouped(13).foreach { chunk =>
+            ms.addData(chunk.toSeq)
+            q.processAllAvailable()
+          }
+          q.recentProgress.filter(_.numInputRows > 0).last
+            .stateOperators.map(_.numRowsTotal).sum
+        } finally q.stop()
+      }
+      val (capped, uncapped) = (finalStateRows(cap), finalStateRows(Int.MaxValue))
+      assert(capped < uncapped - cap, s"capped state $capped rows, uncapped $uncapped")
     }
   }
 
